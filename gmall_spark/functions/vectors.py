@@ -10,9 +10,12 @@ the sf0.001 cProfile measured cosine/dot/norm at ~27 s cumulative
 (~100 round-trips per cosine, 63 calls). When callers pass COLUMN
 NAMES (every registered call site does), the identical fold is now
 built as ONE SQL string parsed server-side (F.expr) and the Column
-object memoized per (applicationId, names) — immutable expression
-trees, the queries._T_PLANS argument at expression grain; no data
-cached. Column arguments still take the original HOF-builder path.
+object memoized per (applicationId, names) in the session-memo
+registry (gmall_spark.fixtures_audit) — immutable expression trees,
+the queries._t plan-memo argument at expression grain; no data
+cached. Names are backtick-quoted in the SQL, so a column called
+``null`` or ``true`` stays a column reference, not a literal. Column
+arguments still take the original HOF-builder path.
 The parsed SQL is the IDENTICAL sequential fold (same transform/
 zip_with/aggregate, same casts, same fold order), so results are
 bit-identical (pinned in tests/test_ann_width.py).
@@ -20,20 +23,14 @@ bit-identical (pinned in tests/test_ann_width.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-_FOLD_COLS: dict[tuple, Column] = {}
-
-
-def _tok() -> str:
-    from pyspark.sql import SparkSession
-
-    return SparkSession.getActiveSession().sparkContext.applicationId
+from gmall_spark import fixtures_audit
 
 
 def _dbl(name: str) -> str:
-    return f"transform({name}, x -> CAST(x AS DOUBLE))"
+    return f"transform(`{name}`, x -> CAST(x AS DOUBLE))"
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -48,12 +45,8 @@ def _norm_sql(a: str) -> str:
 
 
 def _named(kind: str, sql: str, *names: str) -> Column:
-    key = (_tok(), kind) + names
-    c = _FOLD_COLS.get(key)
-    if c is None:
-        c = F.expr(sql)
-        _FOLD_COLS[key] = c
-    return c
+    key = ("fold_cols", kind, *names)
+    return fixtures_audit.memo(SparkSession.getActiveSession(), key, lambda: F.expr(sql))
 
 
 def _d(arr: Column) -> Column:

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from gmall_spark import persist
+from gmall_spark import fixtures_audit
 from gmall_spark.functions.text import canonical_hash
 
 NGRAM_N = 5
@@ -271,9 +271,6 @@ def _bucket_pair_expr(max_bucket: int | None):
 # per build (bands × rows_per_band casts/lits/structs), 24 calls per
 # bench run. Immutable expression tree, memoized per (applicationId,
 # bands, k); no data cached.
-_BAND_COLS: dict[tuple[str, int, int], Column] = {}
-
-
 def band_signatures(
     signatures: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
 ) -> DataFrame:
@@ -286,13 +283,8 @@ def band_signatures(
     the batch candidate generation and the incremental (streaming)
     signature store.
     """
-    ckey = (
-        signatures.sparkSession.sparkContext.applicationId,
-        bands,
-        k,
-    )
-    ecol = _BAND_COLS.get(ckey)
-    if ecol is None:
+
+    def build() -> Column:
         rows_per_band = k // bands
         band_cols = []
         for bi in range(bands):
@@ -309,8 +301,9 @@ def band_signatures(
                     F.concat(*parts).alias("band_hash"),
                 )
             )
-        ecol = F.explode(F.array(*band_cols)).alias("b")
-        _BAND_COLS[ckey] = ecol
+        return F.explode(F.array(*band_cols)).alias("b")
+
+    ecol = fixtures_audit.memo(signatures.sparkSession, ("band_cols", bands, k), build)
     return (
         signatures.select("doc_id", ecol)
         .select(
@@ -498,7 +491,7 @@ def simhash_near_dup_pairs(
     assert SIMHASH_BITS % chunks == 0
     bits_per = SIMHASH_BITS // chunks
     mask = (1 << bits_per) - 1
-    fp = persist.register(
+    fp = (
         simhash_fingerprints(docs, id_col, text_col)
         .select("doc_id", "simhash")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -646,7 +639,7 @@ def simhash64_near_dup_pairs(
     """
     from gmall_spark.functions.text import simhash64_fingerprints
 
-    fp = persist.register(
+    fp = (
         simhash64_fingerprints(docs, id_col, text_col)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -771,10 +764,10 @@ def minhash_lsh_dedup(
     Verification broadcasts the tiny candidate set against the per-doc
     shingle arrays (``jaccard_for_arrays``), so the corpus is never
     shuffled at any stage of the pipeline. Call
-    :func:`release_persisted` (or ``queries.clear_cache``) to free the
-    cached shingle relation in a long-lived session.
+    ``queries.clear_cache`` to free the cached shingle relation in a
+    long-lived session.
     """
-    with_arr = persist.register(
+    with_arr = (
         docs.select(
             F.col(id_col).alias("doc_id"), shingle_array(text_col, n).alias("shingles")
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -815,7 +808,7 @@ def cross_corpus_near_dups(
     """
 
     def _prep(df):
-        arr = persist.register(
+        arr = (
             df.select(
                 F.col(id_col).alias("doc_id"),
                 shingle_array(text_col, n).alias("shingles"),
@@ -950,11 +943,7 @@ def containment_pairs_rare_blocking(
     :func:`minhash_lsh_dedup`'s shingle arrays; ``clear_cache()``
     frees it in long-lived sessions.
     """
-    sh = persist.register(
-        word_shingles(docs, id_col, text_col, n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    sh = word_shingles(docs, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
     return containment_pairs_from_shingles(sh, max_df=max_df, num=num, den=den)
 
 
@@ -1034,8 +1023,3 @@ def containment_pairs_from_shingles(
             6,
         ).alias("jaccard"),
     )
-
-
-def release_persisted() -> None:
-    """Back-compat alias for :func:`gmall_spark.persist.release_all`."""
-    persist.release_all()

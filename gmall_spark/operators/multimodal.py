@@ -1005,8 +1005,6 @@ def image_near_dup_groups(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    from gmall_spark import persist as _persist
-
     # the banding recall guarantee is the pigeonhole over 4 bands: up
     # to max_hamming touched bands still leave one clean band ONLY
     # while max_hamming < 4 — a larger radius would silently drop true
@@ -1019,13 +1017,13 @@ def image_near_dup_groups(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
             "bands instead"
         )
 
-    fp = _persist.register(
+    fp = (
         hashes.filter(
             F.col("decode_ok") & F.col("dhash_hex").isNotNull()
         ).persist(StorageLevel.MEMORY_AND_DISK)
     )
     # exact tier: one row per distinct fingerprint
-    d = _persist.register(
+    d = (
         fp.groupBy("dhash_hex")
         .agg(
             F.min("doc_id").alias("fp_min"),
@@ -1647,14 +1645,12 @@ def audio_near_dup_groups(
     persist the codec re-ran once per subtree."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
-    ok = _persist.register(
+    ok = (
         fps.filter(F.col("decode_ok") & (F.size("pair_hashes") > 0))
         .select("doc_id", "fp_hex", "pair_hashes")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    d = _persist.register(
+    d = (
         ok.groupBy("fp_hex")
         .agg(
             F.min("doc_id").alias("fp_min"),

@@ -171,13 +171,11 @@ def copurchase_pairs(op: DataFrame, top: int = COPURCHASE_TOP) -> DataFrame:
     desc, part ids) keeps the output fixed-size at any scale."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     # ONE pass over the membership relation: every statistic (pair
     # counts, part marginals, order count) derives from the persisted
     # basket rollup — op would otherwise be scanned+shuffled three
     # times (measured 2x slower)
-    baskets = _persist.register(
+    baskets = (
         op.groupBy("o")
         .agg(F.array_sort(F.collect_list("p")).alias("ps"))
         .persist(StorageLevel.MEMORY_AND_DISK)

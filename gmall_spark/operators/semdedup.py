@@ -51,15 +51,13 @@ def semantic_dedup_pairs(
     """
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     centroids = centroids or ivf.train_centroids(
         embeddings, n_lists, iters, id_col=id_col, vec_col=vec_col
     )
     # persisted (r13): the (vec_id, list_id) assignment feeds BOTH
     # sides of the within-cluster self-join — without the persist the
     # centroid-assignment Arrow pass ran once per side
-    index = _persist.register(
+    index = (
         ivf.build_index(embeddings, centroids, id_col, vec_col)
         .select("vec_id", "list_id")
         .persist(StorageLevel.MEMORY_AND_DISK)

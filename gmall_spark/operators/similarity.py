@@ -349,10 +349,9 @@ def embedding_near_dup_lsh(
     no-self-join shape as the MinHash LSH — one shuffle to bucket,
     one to dedup candidates, never corpus².
     """
-    from gmall_spark import persist
 
     dim = dim or infer_dim(embeddings, vec_col)
-    banded = persist.register(
+    banded = (
         _table_buckets(
             embeddings, "vid", n_tables, planes_per_table, dim, id_col, vec_col
         ).persist()
@@ -714,8 +713,6 @@ def bitext_margin_top1(
             )
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     s = src.select(F.col(id_col).alias("src_id"), F.col(vec_col).alias("sv"))
     t = tgt.select(F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("tv"))
     # persisted (r13): the scored pair relation feeds THREE subtrees
@@ -733,7 +730,7 @@ def bitext_margin_top1(
         F.round(cosine("sv", "tv"), 6).alias("cos6"),
     )
     if max_pairs is not None and n_src * n_tgt <= BITEXT_PERSIST_MAX_PAIRS:
-        pairs = _persist.register(scored.persist(StorageLevel.MEMORY_AND_DISK))
+        pairs = scored.persist(StorageLevel.MEMORY_AND_DISK)
     else:
         pairs = scored
 
@@ -829,7 +826,6 @@ def bitext_margin_top1_ann(
     """
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
     from gmall_spark.operators import ivf as _ivf
 
     if nprobe is None:
@@ -842,7 +838,7 @@ def bitext_margin_top1_ann(
     # keeps the docs-join subtree from re-evaluating once per role
     # (4 evaluations -> 2 builds; measured 5.1 -> ~2 s at sf0.1).
     def _ranked(side: DataFrame) -> DataFrame:
-        return _persist.register(
+        return (
             side.select(
                 F.col(id_col).alias("vec_id"),
                 F.col(vec_col).alias("embedding"),
@@ -885,9 +881,7 @@ def bitext_margin_top1_ann(
     # persisted (r13): it feeds BOTH the sx neighborhood fold and the
     # final margin join — each re-ran the probe-join + scoring +
     # window without it (back has a single consumer).
-    cand = _persist.register(
-        _topk(_index(rt), _probes(rs)).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    cand = _topk(_index(rt), _probes(rs)).persist(StorageLevel.MEMORY_AND_DISK)
     back = _topk(_index(rs), _probes(rt))
 
     def _nn_sum(topk: DataFrame, out_id: str, out_sum: str, out_k: str) -> DataFrame:

@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gmall_spark import fixtures_audit
+
 # frozen TLD wheel (u % 5): index 4 is the two-level public suffix
 TLDS = ("com", "org", "net", "io", "co.uk")
 
@@ -85,24 +87,18 @@ def _tld_case_col(u: Column) -> Column:
 # (measured in the sf0.001 cProfile: 13.7 s + 9.9 s cumulative). The
 # select lists are pure functions of their parameters, so the built
 # Column objects are memoized per (applicationId, params) — immutable
-# expression trees, the queries._T_PLANS argument at expression
+# expression trees, the queries._t plan-memo argument at expression
 # grain; no data cached.
-_URL_COLS: dict[str, object] = {}
-_CANON_COLS: dict[tuple, list] = {}
-
-
-def _app_token(df: DataFrame) -> str:
-    return df.sparkSession.sparkContext.applicationId
-
-
 def synth_url(docs: DataFrame) -> DataFrame:
     """(doc_id, ...) → (doc_id, url): deterministic messy URL; pure
     per-row concat expressions. Identity from u = doc_id % 40, noise
     from doc_id (docstring table)."""
-    tok = _app_token(docs)
-    cached = _URL_COLS.get(tok)
-    if cached is not None:
-        return docs.select("*", cached)
+    return docs.select(
+        "*", fixtures_audit.memo(docs.sparkSession, ("url_col",), _synth_url_col)
+    )
+
+
+def _synth_url_col() -> Column:
     d = F.col("doc_id")
     u = d % 40
     sch_base = F.when(u % 2 == 0, F.lit("https")).otherwise(F.lit("http"))
@@ -149,8 +145,7 @@ def synth_url(docs: DataFrame) -> DataFrame:
     url = F.concat(
         sch_raw, F.lit("://"), host_raw, port, path, F.lit("?"), query, frag
     )
-    _URL_COLS[tok] = url.alias("url")
-    return docs.select("*", _URL_COLS[tok])
+    return url.alias("url")
 
 
 def synth_url_oracle_expr(id_col: str = "doc_id") -> str:
@@ -252,10 +247,17 @@ def canonicalize(
     from synthesis. ``passthrough`` columns ride along unchanged (the
     rollups group provenance against document attributes without a
     join back)."""
-    ckey = (_app_token(urls), url_col, tuple(passthrough))
-    cached = _CANON_COLS.get(ckey)
-    if cached is not None:
-        return urls.select(*cached)
+    passthrough = tuple(passthrough)
+    return urls.select(
+        *fixtures_audit.memo(
+            urls.sparkSession,
+            ("canon_cols", url_col, passthrough),
+            lambda: _canonical_cols(url_col, passthrough),
+        )
+    )
+
+
+def _canonical_cols(url_col: str, passthrough: tuple[str, ...]) -> list:
     url = F.col(url_col)
     proto = F.lower(F.parse_url(url, F.lit("PROTOCOL")))
     # userinfo stripped before host/port extraction: 'User:pw@Host'
@@ -303,7 +305,7 @@ def canonicalize(
             qcanon != F.lit(""), F.concat(F.lit("?"), qcanon)
         ).otherwise(F.lit("")),
     )
-    _CANON_COLS[ckey] = [
+    return [
         "doc_id",
         F.length(url).cast("bigint").alias("n_raw_chars"),
         canonical.alias("url_canonical"),
@@ -323,4 +325,3 @@ def canonicalize(
         F.md5(canonical).alias("url_md5"),
         *passthrough,
     ]
-    return urls.select(*_CANON_COLS[ckey])

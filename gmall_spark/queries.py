@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gmall_spark import fixtures_audit
 from gmall_spark import oracles as O
 from gmall_spark.operators.dedup import dedup_first, latest_by_key
 from gmall_spark.plans import ads, dim, dwd, dws, traffic, user
@@ -45,49 +46,31 @@ def query(name: str, oracle: str | None = None):
 # PER _t CALL at sf0.1, and a query builds 2–6 base scans per
 # invocation (the bench pays that once per repeat). DataFrames are
 # immutable, so reusing the object is free and changes nothing
-# downstream — the exact argument _TOPIC_DB_PLANS already records.
-# NO DATA is cached: this memoizes the analyzed plan only; every
-# action still computes from the parquet inputs. Keyed by
-# applicationId (not id(spark) — ADVICE r3) + sf_dir + table;
-# cleared by clear_cache like the other per-session state.
-_T_PLANS: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# downstream. NO DATA is cached: this memoizes the analyzed plan only;
+# every action still computes from the parquet inputs.
+@fixtures_audit.memoized("t_plan")
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Heavy tables get their scan parallelism normalized (the driver's
     # single-row-group files would otherwise pin all per-row derivation
     # to ONE task until the first shuffle); see session.parallel_scan.
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _T_PLANS.get(key)
-    if df is None:
-        df = parallel_scan(
-            spark,
-            spark.read.parquet(f"{sf_dir}/{name}.parquet"),
-            name in HEAVY_TABLES,
-        )
-        _T_PLANS[key] = df
-    return df
+    return parallel_scan(
+        spark,
+        spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+        name in HEAVY_TABLES,
+    )
 
 
-# DWD materialization cache: the reference computes each DWD fact once
+# DWD materialization: the reference computes each DWD fact once
 # (a Kafka dwd_* topic) and 11 DWS jobs consume it; the analog here is
 # persisting the DWD DataFrame per (session, sf_dir) so DWS/ADS queries
 # in the same process share one computation instead of re-deriving the
 # CDC envelope each time. Correctness is unaffected (plans are pure).
-# Keyed by applicationId, not id(spark): object ids can be reused after
-# a session is collected, inheriting stale entries (ADVICE r3).
-_MATERIALIZED: dict[tuple[str, str, str], DataFrame] = {}
-
-
 _INLINE_CONF = "spark.sql.optimizer.collapseProjectAlwaysInline"
 
 
 def _materialized(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _MATERIALIZED.get(key)
-    if df is None:
+    def persist_eagerly() -> DataFrame:
         df = build().persist()
-        _MATERIALIZED[key] = df
         # Materialize eagerly with forced Project collapsing: the CDC
         # envelope builds map(k1,v1,...)[k] chains that CollapseProject
         # normally refuses to inline (the map column is referenced 10+
@@ -105,71 +88,24 @@ def _materialized(name: str, spark: SparkSession, sf_dir: str, build) -> DataFra
             df.count()
         finally:
             spark.conf.set(_INLINE_CONF, prev)
-    return df
+        return df
+
+    return fixtures_audit.memo(spark, ("dwd", sf_dir, name), persist_eagerly)
 
 
 def clear_cache() -> None:
-    """Unpersist and drop every materialized DWD DataFrame.
+    """Drop every session memo and release the executor storage behind
+    it (see fixtures_audit.clear).
 
     Long-lived services (a REPL, a query server) should call this when
     a scale-factor directory's data changes or to release executor
     storage memory; tests and the bench run fine without it because
     the session dies with the process.
     """
-    from gmall_spark.operators import llm_dedup
-
-    llm_dedup.release_persisted()
-    from gmall_spark import queries_llm, session
-
-    queries_llm._CENTROIDS.clear()
-    queries_llm._EMB_DIM.clear()
-    queries_llm._DOC_COUNTS.clear()
-    queries_llm._BITEXT_COUNTS.clear()
-    queries_llm._HASHED_WTS.clear()
-    queries_llm._DEDUP_GROUPS.clear()
-    queries_llm._PQ_BOOKS.clear()
-    queries_llm._SQ_STATS.clear()
-    queries_llm._KNN_EDGES.clear()
-    queries_llm._LM_SCORES.clear()
-    queries_llm._CONTAIN_PAIRS.clear()
-    queries_llm._BOILER_CLEAN.clear()
-    queries_llm._CURATION_V2.clear()
-    queries_llm._CURATION_V4.clear()
-    queries_llm._CURATION_V5.clear()
-    queries_llm._XMATCH.clear()
-    queries_llm.governance._GOV_GATE.clear()
-    queries_llm.governance._LEDGER_FIX.clear()
-    queries_llm.ann_eval._JL_EXPRS.clear()
-    # r14 Column memos (expression objects only, no data)
-    from gmall_spark.operators import weburl as _weburl
-
-    _weburl._URL_COLS.clear()
-    _weburl._CANON_COLS.clear()
-    llm_dedup._BAND_COLS.clear()
-    queries_llm._DSIR_WEIGHTS.clear()
-    queries_llm._PQ_RESIDUAL_BOOKS.clear()
-    queries_llm._SHOT_BOUNDS.clear()
-    queries_llm._FROZEN_LM.clear()
-    queries_llm._FROZEN_KN.clear()
-    queries_llm.incontext._SEM_CHAIN.clear()
-    # scan-fanout decisions are keyed by file paths; the driver
-    # regenerates testdata at the same paths between rounds (ADVICE r3)
-    session._SCAN_DECISIONS.clear()
-    _TOPIC_DB_PLANS.clear()
-    _T_PLANS.clear()
-    _EVENTS_PLANS.clear()
-    _SUPPLIER_COUNTS.clear()
-    while _MATERIALIZED:
-        _, df = _MATERIALIZED.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
+    fixtures_audit.clear()
 
 
-_TOPIC_DB_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
+@fixtures_audit.memoized("topic_db")
 def _topic_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deliberately NOT persisted: every consumer filters on `table`,
     # and Catalyst folds that filter into each union branch (constant-
@@ -183,16 +119,11 @@ def _topic_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "materialize dwd_order_detail" line item was plan construction,
     # not execution). DataFrames are immutable, so reusing the object
     # is free and changes nothing downstream.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TOPIC_DB_PLANS.get(key)
-    if df is None:
-        df = cdc_gen.topic_db(
-            _t(spark, sf_dir, "orders"),
-            _t(spark, sf_dir, "lineitem"),
-            _t(spark, sf_dir, "customer"),
-        )
-        _TOPIC_DB_PLANS[key] = df
-    return df
+    return cdc_gen.topic_db(
+        _t(spark, sf_dir, "orders"),
+        _t(spark, sf_dir, "lineitem"),
+        _t(spark, sf_dir, "customer"),
+    )
 
 
 def _dwd_order_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,11 +135,9 @@ def _dwd_order_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# events PLAN memo (r13): same argument and lifecycle as _T_PLANS —
-# the dtype probe (`raw.dtypes`) additionally crossed py4j per call.
-_EVENTS_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
+# events PLAN memo (r13): same argument as _t — the dtype probe
+# (`raw.dtypes`) additionally crossed py4j per call.
+@fixtures_audit.memoized("events")
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with a normalized microsecond TimestampType ``ts``.
 
@@ -220,17 +149,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond TimestampType; the session timezone is UTC, so the
     NTZ cast keeps the same wall-clock values DuckDB reads.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EVENTS_PLANS.get(key)
-    if df is None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = parallel_scan(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
-        if dict(raw.dtypes)["ts"] == "bigint":  # nanos behind the legacy flag
-            df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            df = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        _EVENTS_PLANS[key] = df
-    return df
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = parallel_scan(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
+    if dict(raw.dtypes)["ts"] == "bigint":  # nanos behind the legacy flag
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def _page_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3651,9 +3574,6 @@ def q_events_value_mad_outliers(spark, sf_dir):
     )
 
 
-_SUPPLIER_COUNTS: dict[tuple[str, str], int] = {}
-
-
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived partsupp relation — the Spark twin of
     oracles.SQL_PARTSUPP (see its comment): 4 deterministic suppliers
@@ -3664,11 +3584,11 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-row projection + 4-way explode over the part table
     (dim-sized at any SF)."""
     part = _t(spark, sf_dir, "part")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    ns = _SUPPLIER_COUNTS.get(key)
-    if ns is None:
-        ns = _t(spark, sf_dir, "supplier").count()
-        _SUPPLIER_COUNTS[key] = ns
+    ns = fixtures_audit.memo(
+        spark,
+        ("supplier_count", sf_dir),
+        lambda: _t(spark, sf_dir, "supplier").count(),
+    )
     base = part.select(
         "p_partkey", F.explode(F.sequence(F.lit(0), F.lit(3))).alias("i")
     )

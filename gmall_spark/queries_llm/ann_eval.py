@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from gmall_spark.operators import (
     similarity,
 )
+from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
 from gmall_spark.queries_llm.prelude import _emb, _oracle_dim_check
 
@@ -161,14 +162,12 @@ def q_similarity_eval_dim_truncation(spark, sf_dir):
     operator on sliced vectors."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     emb = _emb(spark, sf_dir)
     qs = emb.filter(F.col("vec_id") < 5)
     # bf (the full-width ground truth, ≤ 5·k rows) feeds every arm's
     # left join — persist it so the cross-join+window subtree runs
     # once, not once per arm (r13; guide §2.4 "share one computation")
-    bf = _persist.register(
+    bf = (
         similarity.brute_force_topk(emb, qs, k=10)
         .select("query_id", "neighbor_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -215,12 +214,8 @@ JL_DIMS = (32, 16)
 # coordinate is now ONE SQL string parsed server-side (F.expr — the
 # JVM parser costs microseconds where the same tree via py4j costs
 # milliseconds), and the built Column objects are memoized per
-# (applicationId, d, dim) — immutable expression trees, the _T_PLANS
-# argument at expression grain; no data cached. Cleared by
-# queries.clear_cache.
-_JL_EXPRS: dict[tuple[str, int, int], list] = {}
-
-
+# (applicationId, d, dim) — immutable expression trees, the queries._t
+# plan-memo argument at expression grain; no data cached.
 def _jl_project_exprs(d: int, dim: int) -> list:
     """``d`` projected coordinates as sequential zip_with folds over
     md5-derived +/-1 sign rows (similarity._plane_coefs, salt 'jl:').
@@ -231,27 +226,27 @@ def _jl_project_exprs(d: int, dim: int) -> list:
     rejected — identical executor time, but the d·dim-node expression
     trees blew up Catalyst analysis; see functions/vectors.py note.
     r14: the SAME fold is now built as one parsed SQL string per
-    coordinate and memoized — see _JL_EXPRS above. The parsed
+    coordinate and memoized — see the note above. The parsed
     expression is the identical sequential fold: same transform/
     zip_with/aggregate, same casts, same fold order.)"""
     from pyspark.sql import SparkSession
 
-    tok = SparkSession.getActiveSession().sparkContext.applicationId
-    key = (tok, d, dim)
-    cached = _JL_EXPRS.get(key)
-    if cached is None:
-        cached = []
+    def build() -> list:
+        exprs = []
         for j, row in enumerate(similarity._plane_coefs(d, dim, salt="jl:")):
             arr = "array(" + ", ".join(f"{float(c)!r}D" for c in row) + ")"
-            cached.append(
+            exprs.append(
                 F.expr(
                     "aggregate(zip_with(transform(embedding,"
                     f" x -> CAST(x AS DOUBLE)), {arr}, (x, c) -> x * c),"
                     " 0.0D, (a, x) -> a + x)"
                 ).alias(f"p{j}")
             )
-        _JL_EXPRS[key] = cached
-    return cached
+        return exprs
+
+    return fixtures_audit.memo(
+        SparkSession.getActiveSession(), ("jl_exprs", d, dim), build
+    )
 
 
 def _jl_bf_oracle(d: int | None, dim: int, k: int = 10) -> str:
@@ -326,13 +321,11 @@ def q_similarity_eval_jl_projection(spark, sf_dir):
     cross-engine."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     emb = _emb(spark, sf_dir)
     dim = _oracle_dim_check(spark, sf_dir)
     # bf (≤ 5·k rows) feeds both arms' left joins — persist it so the
     # full-width cross-join+window subtree runs once, not per arm (r13)
-    bf = _persist.register(
+    bf = (
         similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
         .select("query_id", "neighbor_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -342,7 +335,7 @@ def q_similarity_eval_jl_projection(spark, sf_dir):
     # persisted widest-projection pass serves every arm via slice
     # (3.7 -> ~2 s: the gemm-free fold runs once, not per arm)
     wide = max(JL_DIMS)
-    proj_wide = _persist.register(
+    proj_wide = (
         emb.select("vec_id", *_jl_project_exprs(wide, dim))
         .select(
             "vec_id",
@@ -449,19 +442,18 @@ def q_similarity_eval_jl_rerank(spark, sf_dir):
     O(C·queries) — the whole point of the architecture."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
     from gmall_spark.functions.vectors import cosine as _cos
 
     emb = _emb(spark, sf_dir)
     dim = _oracle_dim_check(spark, sf_dir)
     # bf (≤ 5·k rows) feeds both depth arms' left joins — persist it
     # so the full-width cross-join+window subtree runs once (r13)
-    bf = _persist.register(
+    bf = (
         similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
         .select("query_id", "neighbor_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    proj = _persist.register(
+    proj = (
         emb.select("vec_id", *_jl_project_exprs(JL_RERANK_DIM, dim))
         .select(
             "vec_id",

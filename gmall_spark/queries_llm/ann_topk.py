@@ -15,11 +15,9 @@ from gmall_spark.operators import (
 from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
 from gmall_spark.queries_llm.prelude import (
-    _SQ_STATS,
     _emb,
     _knn_edges,
     _oracle_dim_check,
-    _session_token,
     _trained_books,
     _trained_centroids,
 )
@@ -132,21 +130,17 @@ def q_similarity_sq_topk(spark, sf_dir):
     from gmall_spark.operators import sq
 
     emb = _emb(spark, sf_dir)
-    key = (_session_token(spark), sf_dir)
-    if key not in _SQ_STATS:
-        with fixtures_audit.timed("sq_stats"):
-            dim = _oracle_dim_check(spark, sf_dir)
-            row = sq.train_minmax(emb, dim).collect()[0]
-            _SQ_STATS[key] = (
-                [float(v) for v in row["mins"]],
-                [float(v) for v in row["steps"]],
-            )
+
+    def train():
+        row = sq.train_minmax(emb, _oracle_dim_check(spark, sf_dir)).collect()[0]
+        return ([float(v) for v in row["mins"]], [float(v) for v in row["steps"]])
+
     return sq.sq_topk(
         emb,
         emb.filter(F.col("vec_id") < 5),
         k=10,
         dim=_oracle_dim_check(spark, sf_dir),
-        stats=_SQ_STATS[key],
+        stats=fixtures_audit.memo(spark, ("sq_stats", sf_dir), train, timed=True),
     )
 
 
@@ -201,9 +195,6 @@ def q_similarity_ivfpq_topk(spark, sf_dir):
     )
 
 
-_PQ_RESIDUAL_BOOKS: dict[tuple[str, str], list] = {}
-
-
 from gmall_spark.ann_oracles import ivfpq_residual_topk_oracle  # noqa: E402
 
 
@@ -224,19 +215,21 @@ def q_similarity_ivfpq_residual_topk(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     cents = _trained_centroids(spark, sf_dir)
-    key = (_session_token(spark), sf_dir)
-    if key not in _PQ_RESIDUAL_BOOKS:
-        with fixtures_audit.timed("pq_residual_books"):
-            _PQ_RESIDUAL_BOOKS[key] = pq.train_codebooks_residual(
-                emb, cents, _oracle_dim_check(spark, sf_dir)
-            )
+    books = fixtures_audit.memo(
+        spark,
+        ("pq_residual_books", sf_dir),
+        lambda: pq.train_codebooks_residual(
+            emb, cents, _oracle_dim_check(spark, sf_dir)
+        ),
+        timed=True,
+    )
     return pq.ivfpq_topk(
         emb,
         emb.filter(F.col("vec_id") < 5),
         k=10,
         dim=_oracle_dim_check(spark, sf_dir),
         centroids=cents,
-        books=_PQ_RESIDUAL_BOOKS[key],
+        books=books,
         by_residual=True,
     )
 

@@ -15,17 +15,16 @@ from gmall_spark.operators import (
     nb,
     similarity,
 )
+from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
 from gmall_spark.queries_llm.prelude import (
     CONTAM_GRAM_N,
     SQL_BANDED,
-    _DOC_COUNTS,
     _docs,
     _dsir_weights,
     _emb,
     _frozen_lm_scores,
     _lm_scores,
-    _session_token,
     _xmatch,
 )
 
@@ -266,11 +265,7 @@ def q_llm_negative_samples(spark, sf_dir):
     )
     # corpus size memoized per (session, sf_dir) — same convention as
     # the supplier-count/kNN fixtures (one tiny job, not one per call)
-    nkey = (_session_token(spark), sf_dir)
-    n = _DOC_COUNTS.get(nkey)
-    if n is None:
-        n = ranked.count()
-        _DOC_COUNTS[nkey] = n
+    n = fixtures_audit.memo(spark, ("doc_count", sf_dir), ranked.count)
     md = F.md5(F.col("doc_id").cast("string"))
     h = ranked.select(
         "doc_id",

@@ -18,13 +18,11 @@ from gmall_spark.functions import text as TX
 from gmall_spark.queries import _t, query
 from gmall_spark.queries_llm.prelude import (
     SQL_MINHASH,
-    _CURATION_V2,
     _SQL_GROUP_CTES,
     _boiler_clean,
     _contain_pairs,
     _docs,
     _lm_scores,
-    _session_token,
     _transitive_groups,
     _xmatch,
 )
@@ -194,6 +192,7 @@ _SQL_CURATION_V2 = _replace_must_hit(
 
 
 @query("llm_corpus_curation_v2", _SQL_CURATION_V2)
+@fixtures_audit.memoized("curation_v2", timed=True)
 def q_llm_corpus_curation_v2(spark, sf_dir):
     """Curation v1 + this round's stages composed in: the held-out
     reference subset and every corpus doc near-duplicating it (X47)
@@ -204,20 +203,16 @@ def q_llm_corpus_curation_v2(spark, sf_dir):
     materialization every v3 evaluation re-derived v1 + the decontam
     cross-join + the LM join (VERDICT r6 'composition queries
     recompute every stage they compose')."""
-    key = (_session_token(spark), sf_dir)
-    if key not in _CURATION_V2:
-        with fixtures_audit.timed("curation_v2"):
-            v1 = q_llm_corpus_curation(spark, sf_dir)
-            xmatch = _xmatch(spark, sf_dir)
-            scores = _lm_scores(spark, sf_dir).select("doc_id", "bigram_logprob")
-            _CURATION_V2[key] = (
-                v1.filter(F.col("doc_id") % 20 != 0)
-                .join(xmatch, "doc_id", "anti")
-                .join(scores, "doc_id")
-                .select("doc_id", "lang_pred", "n_words", "bigram_logprob")
-                .localCheckpoint(eager=True)
-            )
-    return _CURATION_V2[key]
+    v1 = q_llm_corpus_curation(spark, sf_dir)
+    xmatch = _xmatch(spark, sf_dir)
+    scores = _lm_scores(spark, sf_dir).select("doc_id", "bigram_logprob")
+    return (
+        v1.filter(F.col("doc_id") % 20 != 0)
+        .join(xmatch, "doc_id", "anti")
+        .join(scores, "doc_id")
+        .select("doc_id", "lang_pred", "n_words", "bigram_logprob")
+        .localCheckpoint(eager=True)
+    )
 
 
 @query("llm_corpus_curation_v3", None)  # oracle attached post-registration

@@ -486,12 +486,8 @@ def q_layout_range_plan_from_sketch(spark, sf_dir):
     boundary table."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     e = _t(spark, sf_dir, "events")
-    hist = _persist.register(
-        _sketches.value_hist(e).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    hist = _sketches.value_hist(e).persist(StorageLevel.MEMORY_AND_DISK)
     bounds = _sketches.hist_range_plan(hist, RANGE_PARTS)
     return _sketches.hist_range_audit(hist, bounds, RANGE_PARTS)
 

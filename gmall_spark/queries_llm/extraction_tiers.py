@@ -378,13 +378,11 @@ def _semantic_decontam_flags(spark, sf_dir) -> DataFrame:
     verified."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     emb = _emb(spark, sf_dir)
     # persisted (r13): the (vec_id, list_id) assignment feeds BOTH the
     # reference and the corpus side of the blocking join — without the
     # persist the centroid-assignment Arrow pass ran once per side
-    index = _persist.register(
+    index = (
         ivf.build_index(emb, _trained_centroids(spark, sf_dir))
         .select("vec_id", "list_id")
         .persist(StorageLevel.MEMORY_AND_DISK)

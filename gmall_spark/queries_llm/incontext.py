@@ -59,11 +59,8 @@ from gmall_spark.queries_llm.prelude import (
     _emb,
     _knn_edges,
     _oracle_dim_check,
-    _session_token,
     _trained_centroids,
 )
-
-_SEM_CHAIN: dict[tuple[str, str], DataFrame] = {}
 
 _CHAIN_SCHEMA = (
     "list_id long, ordering string, chain_pos long, doc_id long, "
@@ -177,23 +174,20 @@ def chain_pack(
     )
 
 
+@fixtures_audit.memoized("sem_chain", timed=True)
 def _sem_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (session, sf_dir): the chained+packed table under both
     orderings — feeds the X244 packing query and the X245 affinity
-    report (two consumers, one walk; the _LM_SCORES fixture
+    report (two consumers, one walk; the _lm_scores fixture
     lifecycle)."""
-    key = (_session_token(spark), sf_dir)
-    if key not in _SEM_CHAIN:
-        with fixtures_audit.timed("sem_chain"):
-            emb = _emb(spark, sf_dir)
-            _oracle_dim_check(spark, sf_dir)
-            _SEM_CHAIN[key] = chain_pack(
-                _docs(spark, sf_dir),
-                emb,
-                _trained_centroids(spark, sf_dir),
-                _knn_edges(spark, sf_dir, PR_KNN_K),
-            ).localCheckpoint(eager=True)
-    return _SEM_CHAIN[key]
+    emb = _emb(spark, sf_dir)
+    _oracle_dim_check(spark, sf_dir)
+    return chain_pack(
+        _docs(spark, sf_dir),
+        emb,
+        _trained_centroids(spark, sf_dir),
+        _knn_edges(spark, sf_dir, PR_KNN_K),
+    ).localCheckpoint(eager=True)
 
 
 # --- oracle ---------------------------------------------------------------

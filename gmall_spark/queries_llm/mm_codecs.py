@@ -731,14 +731,12 @@ def q_similarity_eval_ivf_nprobe_sweep(spark, sf_dir):
 
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     emb = _emb(spark, sf_dir)
     qs = emb.filter(_F.col("vec_id") < 5)
     cents = _trained_centroids(spark, sf_dir)
     # bf (≤ 5·k rows) feeds all four nprobe arms' left joins — persist
     # it so the cross-join+window subtree runs once, not 4x (r13)
-    bf = _persist.register(
+    bf = (
         similarity.brute_force_topk(emb, qs, k=10)
         .select("query_id", "neighbor_id")
         .persist(StorageLevel.MEMORY_AND_DISK)

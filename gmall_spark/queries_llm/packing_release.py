@@ -18,11 +18,9 @@ from gmall_spark.operators import unigram as _uni
 from gmall_spark.queries import ORACLES as _OR
 from gmall_spark.queries_llm.prelude import (
     SQL_MINHASH,
-    _CURATION_V4,
     _SQL_GROUP_CTES,
     _docs,
     _emb,
-    _session_token,
     _transitive_groups,
 )
 from gmall_spark.queries_llm.curation import (
@@ -546,9 +544,7 @@ def q_text_char_chisq_gibberish(spark, sf_dir):
     # 36-replace counting projection runs once, not per consumer
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
-    dc = _persist.register(dc.persist(StorageLevel.MEMORY_AND_DISK))
+    dc = dc.persist(StorageLevel.MEMORY_AND_DISK)
     corp = dc.groupBy("c").agg(F.sum("cnt").alias("corp_c"))
     tot = corp.agg(F.sum("corp_c").alias("corp_t"))
     exp = (
@@ -868,6 +864,7 @@ JOIN ({_OR["llm_corpus_curation_v3"]}) v ON v.doc_id = p.doc_id
 
 
 @query("llm_corpus_curation_v4", None)  # oracle attached below
+@fixtures_audit.memoized("curation_v4", timed=True)
 def q_llm_corpus_curation_v4(spark, sf_dir):
     """Corpus curation v4 (X188): the r8 capstone composition — the
     v3 release set additionally gated by the X187 gibberish
@@ -883,37 +880,33 @@ def q_llm_corpus_curation_v4(spark, sf_dir):
     stage fixture like v2/v3's: the funnel (X193) composes it, and a
     release manifest is materialized once in any real pipeline; the
     build is line-itemed in the bench fixtures map."""
-    key = (_session_token(spark), sf_dir)
-    if key not in _CURATION_V4:
-        with fixtures_audit.timed("curation_v4"):
-            kept = q_llm_corpus_curation_v3(spark, sf_dir).select(
-                "doc_id", "lang_pred", "bucket"
-            )
-            gib = (
-                q_text_char_chisq_gibberish(spark, sf_dir)
-                .filter("is_gibberish")
-                .select("doc_id")
-            )
-            cap = SEQ_PACK_CAP
-            lens = (
-                _docs(spark, sf_dir)
-                .selectExpr(
-                    "doc_id",
-                    rf"least(greatest(size(filter(split(text, '\\s+'), x -> x != '')), 1),"
-                    rf" {cap}) AS n_tok",
-                )
-                .join(kept.select("doc_id"), "doc_id")
-                .join(gib, "doc_id", "anti")
-            )
-            _CURATION_V4[key] = (
-                pack_rows(lens, cap)
-                .join(kept, "doc_id")
-                .select(
-                    "doc_id", "lang_pred", "bucket", "n_tok", "pack_id", "pack_fill"
-                )
-                .localCheckpoint(eager=True)
-            )
-    return _CURATION_V4[key]
+    kept = q_llm_corpus_curation_v3(spark, sf_dir).select(
+        "doc_id", "lang_pred", "bucket"
+    )
+    gib = (
+        q_text_char_chisq_gibberish(spark, sf_dir)
+        .filter("is_gibberish")
+        .select("doc_id")
+    )
+    cap = SEQ_PACK_CAP
+    lens = (
+        _docs(spark, sf_dir)
+        .selectExpr(
+            "doc_id",
+            rf"least(greatest(size(filter(split(text, '\\s+'), x -> x != '')), 1),"
+            rf" {cap}) AS n_tok",
+        )
+        .join(kept.select("doc_id"), "doc_id")
+        .join(gib, "doc_id", "anti")
+    )
+    return (
+        pack_rows(lens, cap)
+        .join(kept, "doc_id")
+        .select(
+            "doc_id", "lang_pred", "bucket", "n_tok", "pack_id", "pack_fill"
+        )
+        .localCheckpoint(eager=True)
+    )
 
 
 from gmall_spark.queries import ORACLES as _OR4  # noqa: E402

@@ -152,121 +152,79 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "embeddings")
 
 
-def _session_token(spark: SparkSession) -> str:
-    # applicationId is unique per SparkContext lifetime; id(spark) can
-    # be REUSED after a session is garbage-collected, silently
-    # inheriting stale cached state for the same sf_dir (ADVICE r3).
-    return spark.sparkContext.applicationId
+def _artifact(kind: str, sf_dir: str, load, save, train):
+    """Cross-session reuse (VERDICT r3 stretch): with
+    $SPARK_GRAFT_CENTROID_DIR set, a trained quantizer is published as
+    the fingerprinted artifact ``<kind>_<sf tag>.json`` and later
+    sessions (or parallel jobs) load it instead of retraining. Only
+    training is timed (under ``kind``)."""
+    import os
+
+    art_dir = os.environ.get("SPARK_GRAFT_CENTROID_DIR")
+    src = [f"{sf_dir}/embeddings.parquet"]
+    art = None
+    if art_dir:
+        tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
+        art = os.path.join(art_dir, f"{kind}_{tag}.json")
+        loaded = load(art, src)
+        if loaded is not None:
+            return loaded
+    with fixtures_audit.timer(kind):
+        value = train()
+    if art is not None:
+        os.makedirs(art_dir, exist_ok=True)
+        save(art, value, src)
+    return value
 
 
 # k-means centroids are deterministic per (session, sf_dir) — the IVF
 # index and the SemDeDup clustering train the IDENTICAL model, so one
 # training run serves both queries (the analog of a shared model/
-# index table in a production pipeline). Cleared by queries.clear_cache.
-_CENTROIDS: dict[tuple[str, str], list[list[float]]] = {}
-
-
+# index table in a production pipeline).
+@fixtures_audit.memoized("centroids")
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    key = (_session_token(spark), sf_dir)
-    if key not in _CENTROIDS:
-        _oracle_dim_check(spark, sf_dir)
-        # Cross-session reuse (VERDICT r3 stretch): with
-        # $SPARK_GRAFT_CENTROID_DIR set, the trained quantizer is
-        # published as a fingerprinted artifact and later sessions
-        # (or parallel jobs) load it instead of retraining.
-        import os
-
-        art_dir = os.environ.get("SPARK_GRAFT_CENTROID_DIR")
-        src = [f"{sf_dir}/embeddings.parquet"]
-        art = None
-        if art_dir:
-            tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-            art = os.path.join(art_dir, f"centroids_{tag}.json")
-            loaded = ivf.load_centroids(art, src)
-            if loaded is not None:
-                _CENTROIDS[key] = loaded
-                return loaded
-        with fixtures_audit.timed("centroids"):
-            _CENTROIDS[key] = ivf.train_centroids(_emb(spark, sf_dir))
-        if art is not None:
-            os.makedirs(art_dir, exist_ok=True)
-            ivf.save_centroids(art, _CENTROIDS[key], src)
-    return _CENTROIDS[key]
+    _oracle_dim_check(spark, sf_dir)
+    return _artifact(
+        "centroids",
+        sf_dir,
+        ivf.load_centroids,
+        ivf.save_centroids,
+        lambda: ivf.train_centroids(_emb(spark, sf_dir)),
+    )
 
 
 # Embedding width per (session, sf_dir): a metadata-scale .first()
 # probe, memoized so repeated query builds don't re-run it (ADVICE r2).
-_EMB_DIM: dict[tuple[str, str], int] = {}
-_DOC_COUNTS: dict[tuple[str, str], int] = {}
-
-# (n_src, n_tgt) for the bitext refusal guard — one tiny agg per
-# (session, sf_dir) instead of two jobs per invocation (ADVICE r8).
-# Cleared by queries.clear_cache.
-_BITEXT_COUNTS: dict[tuple[str, str], tuple[int, int]] = {}
-
-
+@fixtures_audit.memoized("emb_dim")
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
-    key = (_session_token(spark), sf_dir)
-    if key not in _EMB_DIM:
-        _EMB_DIM[key] = similarity.infer_dim(_emb(spark, sf_dir))
-    return _EMB_DIM[key]
+    return similarity.infer_dim(_emb(spark, sf_dir))
 
 
 # PQ codebooks per (session, sf_dir): shared by the PQ and IVF-PQ
 # queries (training collects the same bounded sample either way).
-_PQ_BOOKS: dict[tuple[str, str], list] = {}
-
-# SQ quantizer (mins, steps) per (session, sf_dir) — one single-row
-# aggregate, skipped on repeat runs.
-_SQ_STATS: dict[tuple[str, str], tuple[list, list]] = {}
-
-
+@fixtures_audit.memoized("pq_codebooks")
 def _trained_books(spark: SparkSession, sf_dir: str) -> list:
     from gmall_spark.operators import pq as _pq
 
-    key = (_session_token(spark), sf_dir)
-    if key not in _PQ_BOOKS:
-        # Cross-session artifact reuse, mirroring _trained_centroids:
-        # with $SPARK_GRAFT_CENTROID_DIR set the codebooks publish as
-        # a fingerprinted artifact and later sessions load it.
-        import os
-
-        art_dir = os.environ.get("SPARK_GRAFT_CENTROID_DIR")
-        src = [f"{sf_dir}/embeddings.parquet"]
-        art = None
-        if art_dir:
-            tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-            art = os.path.join(art_dir, f"pq_codebooks_{tag}.json")
-            loaded = _pq.load_codebooks(art, src)
-            if loaded is not None:
-                _PQ_BOOKS[key] = loaded
-                return _PQ_BOOKS[key]
-        with fixtures_audit.timed("pq_codebooks"):
-            _PQ_BOOKS[key] = _pq.train_codebooks(
-                _emb(spark, sf_dir), _oracle_dim_check(spark, sf_dir)
-            )
-        if art is not None:
-            os.makedirs(art_dir, exist_ok=True)
-            _pq.save_codebooks(art, _PQ_BOOKS[key], src)
-    return _PQ_BOOKS[key]
+    return _artifact(
+        "pq_codebooks",
+        sf_dir,
+        _pq.load_codebooks,
+        _pq.save_codebooks,
+        lambda: _pq.train_codebooks(
+            _emb(spark, sf_dir), _oracle_dim_check(spark, sf_dir)
+        ),
+    )
 
 
 # Transitive dedup groups per (session, sf_dir): three queries consume
 # the SAME connected-components result (transitive, keeper, curation);
 # the CC iterations run driver-side actions, so share one run like the
-# centroids. Cleared by queries.clear_cache.
-_DEDUP_GROUPS: dict[tuple[str, str], DataFrame] = {}
-
-
+# centroids.
+@fixtures_audit.memoized("dedup_groups", timed=True)
 def _transitive_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _DEDUP_GROUPS:
-        with fixtures_audit.timed("dedup_groups"):
-            pairs = llm_dedup.minhash_lsh_dedup(
-                _docs(spark, sf_dir), NEAR_DUP_THRESHOLD
-            )
-            _DEDUP_GROUPS[key] = components.connected_components(pairs)
-    return _DEDUP_GROUPS[key]
+    pairs = llm_dedup.minhash_lsh_dedup(_docs(spark, sf_dir), NEAR_DUP_THRESHOLD)
+    return components.connected_components(pairs)
 
 
 # Exact kNN(5) cosine edge list per (session, sf_dir): the pagerank
@@ -274,32 +232,21 @@ def _transitive_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (node, rank) pairs), and a production pipeline materializes the kNN
 # graph once as a table anyway. Same shared-fixture pattern as the
 # centroids; eagerly checkpointed so consumers never re-run the
-# brute-force build. Cleared by queries.clear_cache. (r4's repeat-run
-# speed here came from the pagerank cache LEAK — this is the
-# intentional replacement.)
-_KNN_EDGES: dict[tuple[str, str], DataFrame] = {}
-
-
+# brute-force build. (r4's repeat-run speed here came from the
+# pagerank cache LEAK — this is the intentional replacement.)
+@fixtures_audit.memoized("knn_edges", timed=True)
 def _knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _KNN_EDGES:
-        emb = _emb(spark, sf_dir)
-        # blocked-GEMM self-join (r7): row-identical to
-        # brute_force_topk(emb, emb, k) — asserted by
-        # test_gemm_topk_equals_hof — at BLAS speed instead of one
-        # HOF lambda per element (the build was the pagerank query's
-        # entire first-run cost)
-        with fixtures_audit.timed("knn_edges"):
-            knn = similarity.gemm_allpairs_topk(emb, k=k)
-            # cos_sim rides the checkpoint (same build cost): the
-            # graph consumers select (src, dst); the X244 semantic
-            # chain reads the weights
-            _KNN_EDGES[key] = knn.select(
-                F.col("query_id").alias("src"),
-                F.col("neighbor_id").alias("dst"),
-                "cos_sim",
-            ).localCheckpoint(eager=True)
-    return _KNN_EDGES[key]
+    # blocked-GEMM self-join (r7): row-identical to
+    # brute_force_topk(emb, emb, k) — asserted by
+    # test_gemm_topk_equals_hof — at BLAS speed instead of one HOF
+    # lambda per element (the build was the pagerank query's entire
+    # first-run cost). cos_sim rides the checkpoint (same build cost):
+    # the graph consumers select (src, dst); the X244 semantic chain
+    # reads the weights
+    knn = similarity.gemm_allpairs_topk(_emb(spark, sf_dir), k=k)
+    return knn.select(
+        F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"), "cos_sim"
+    ).localCheckpoint(eager=True)
 
 
 # Per-document char-bigram LM scores per (session, sf_dir): the scored
@@ -310,21 +257,12 @@ def _knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 # so without a shared materialization the explode+model+reduce scoring
 # pipeline ran up to 4x per bench (VERDICT r6 item 1). A CCNet-style
 # production pipeline scores once and reads the table everywhere
-# downstream; this fixture is that table. Same shared-fixture pattern
-# as _KNN_EDGES/_partsupp; cleared by queries.clear_cache.
-_LM_SCORES: dict[tuple[str, str], DataFrame] = {}
-
-
+# downstream; this fixture is that table.
+@fixtures_audit.memoized("lm_scores", timed=True)
 def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _LM_SCORES:
-        from gmall_spark.operators import lm
+    from gmall_spark.operators import lm
 
-        with fixtures_audit.timed("lm_scores"):
-            _LM_SCORES[key] = lm.bigram_logprob_scores(
-                _docs(spark, sf_dir)
-            ).localCheckpoint(eager=True)
-    return _LM_SCORES[key]
+    return lm.bigram_logprob_scores(_docs(spark, sf_dir)).localCheckpoint(eager=True)
 
 
 # The other stage outputs the curation compositions share (VERDICT r6
@@ -333,78 +271,54 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # their own registered query AND curation v3, and v3 additionally
 # re-derives all of v2 (which re-derives v1). A production pipeline
 # materializes each stage's output table once and composes READS, so
-# these fixtures are that table, per (session, sf_dir) — same pattern
-# and cache lifecycle as _LM_SCORES/_KNN_EDGES/_partsupp.
-_CONTAIN_PAIRS: dict[tuple[str, str], DataFrame] = {}
-_BOILER_CLEAN: dict[tuple[str, str], DataFrame] = {}
-_XMATCH: dict[tuple[str, str], DataFrame] = {}
-
-
+# these fixtures are that table, per (session, sf_dir).
+@fixtures_audit.memoized("xmatch", timed=True)
 def _xmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The X47 decontamination drop set (corpus docs near-duplicating
     the frozen doc_id%20==0 holdout) — shared by curation v2 AND the
     governance-aware v5 (r12), which would otherwise each re-run the
     cross-corpus LSH."""
-    key = (_session_token(spark), sf_dir)
-    if key not in _XMATCH:
-        from gmall_spark.queries_llm.corpus_lm import DECONTAM_THRESHOLD
+    from gmall_spark.queries_llm.corpus_lm import DECONTAM_THRESHOLD
 
-        with fixtures_audit.timed("xmatch"):
-            d = _docs(spark, sf_dir)
-            _XMATCH[key] = (
-                llm_dedup.cross_corpus_near_dups(
-                    d.filter(F.col("doc_id") % 20 != 0),
-                    d.filter(F.col("doc_id") % 20 == 0),
-                    DECONTAM_THRESHOLD,
-                )
-                .select("doc_id")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-    return _XMATCH[key]
-_CURATION_V2: dict[tuple[str, str], DataFrame] = {}
-_CURATION_V4: dict[tuple[str, str], DataFrame] = {}
-_CURATION_V5: dict[tuple[str, str], DataFrame] = {}
+    d = _docs(spark, sf_dir)
+    return (
+        llm_dedup.cross_corpus_near_dups(
+            d.filter(F.col("doc_id") % 20 != 0),
+            d.filter(F.col("doc_id") % 20 == 0),
+            DECONTAM_THRESHOLD,
+        )
+        .select("doc_id")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
+@fixtures_audit.memoized("contain_pairs", timed=True)
 def _contain_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _CONTAIN_PAIRS:
-        with fixtures_audit.timed("contain_pairs"):
-            _CONTAIN_PAIRS[key] = llm_dedup.containment_pairs_rare_blocking(
-                _docs(spark, sf_dir)
-            ).localCheckpoint(eager=True)
-    return _CONTAIN_PAIRS[key]
+    return llm_dedup.containment_pairs_rare_blocking(
+        _docs(spark, sf_dir)
+    ).localCheckpoint(eager=True)
 
 
+@fixtures_audit.memoized("boiler_clean", timed=True)
 def _boiler_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _BOILER_CLEAN:
-        with fixtures_audit.timed("boiler_clean"):
-            _BOILER_CLEAN[key] = llm_dedup.boilerplate_span_clean(
-                _docs(spark, sf_dir), SPAN_CLEAN_W, BOILER_DOC_FREQ
-            ).localCheckpoint(eager=True)
-    return _BOILER_CLEAN[key]
+    return llm_dedup.boilerplate_span_clean(
+        _docs(spark, sf_dir), SPAN_CLEAN_W, BOILER_DOC_FREQ
+    ).localCheckpoint(eager=True)
 
 
 # DSIR weights (X114): the scored relation feeds the weights query
 # AND both consumers inside the resample cut (histogram + assignment
 # join) — without the materialization the feature-explode + model
 # pipeline evaluates once per consumer, the same subtree class as
-# _LM_SCORES.
-_DSIR_WEIGHTS: dict[tuple[str, str], DataFrame] = {}
-
-
+# _lm_scores.
+@fixtures_audit.memoized("dsir_weights", timed=True)
 def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _DSIR_WEIGHTS:
-        with fixtures_audit.timed("dsir_weights"):
-            d = _docs(spark, sf_dir)
-            _DSIR_WEIGHTS[key] = dsir.importance_weights(
-                d.filter(F.col("doc_id") % 20 != 0),
-                d.filter(F.col("doc_id") % 20 == 0),
-            ).localCheckpoint(eager=True)
-    return _DSIR_WEIGHTS[key]
+    d = _docs(spark, sf_dir)
+    return dsir.importance_weights(
+        d.filter(F.col("doc_id") % 20 != 0),
+        d.filter(F.col("doc_id") % 20 == 0),
+    ).localCheckpoint(eager=True)
 
 
 # Frozen-model LM scores per (session, sf_dir): the add-one scored
@@ -412,37 +326,27 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # feeds X218 AND X219 (and perplexity_buckets reads its input twice —
 # histogram + assignment join). A CCNet-style pipeline scores once
 # and reads the table everywhere downstream; these fixtures are that
-# table, same lifecycle as _LM_SCORES.
-_FROZEN_LM: dict[tuple[str, str], DataFrame] = {}
-_FROZEN_KN: dict[tuple[str, str], DataFrame] = {}
-
-
+# table, same lifecycle as _lm_scores.
+@fixtures_audit.memoized("frozen_lm", timed=True)
 def _frozen_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_spark.operators import lm
 
-    key = (_session_token(spark), sf_dir)
-    if key not in _FROZEN_LM:
-        with fixtures_audit.timed("frozen_lm"):
-            d = _docs(spark, sf_dir)
-            _FROZEN_LM[key] = lm.score_with_model(
-                d.filter(F.col("doc_id") % 2 == 1),
-                lm.bigram_model(d.filter(F.col("doc_id") % 2 == 0)),
-            ).localCheckpoint(eager=True)
-    return _FROZEN_LM[key]
+    d = _docs(spark, sf_dir)
+    return lm.score_with_model(
+        d.filter(F.col("doc_id") % 2 == 1),
+        lm.bigram_model(d.filter(F.col("doc_id") % 2 == 0)),
+    ).localCheckpoint(eager=True)
 
 
+@fixtures_audit.memoized("frozen_kn", timed=True)
 def _frozen_kn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_spark.operators import lm
 
-    key = (_session_token(spark), sf_dir)
-    if key not in _FROZEN_KN:
-        with fixtures_audit.timed("frozen_kn"):
-            d = _docs(spark, sf_dir)
-            _FROZEN_KN[key] = lm.kn_score_with_model(
-                d.filter(F.col("doc_id") % 2 == 1),
-                lm.kn_model(d.filter(F.col("doc_id") % 2 == 0)),
-            ).localCheckpoint(eager=True)
-    return _FROZEN_KN[key]
+    d = _docs(spark, sf_dir)
+    return lm.kn_score_with_model(
+        d.filter(F.col("doc_id") % 2 == 1),
+        lm.kn_model(d.filter(F.col("doc_id") % 2 == 0)),
+    ).localCheckpoint(eager=True)
 
 
 # X212 shot-boundary detector output per (session, sf_dir): the
@@ -451,18 +355,12 @@ def _frozen_kn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-runs the full AVI synth + chunk-walk + consecutive-DIB-decode of
 # every frame pair (VERDICT r9 item 2: the bench paid the decode
 # twice). A video pipeline materializes the detector output as a
-# table; this fixture is that table, same lifecycle as _CONTAIN_PAIRS.
-_SHOT_BOUNDS: dict[tuple[str, str], DataFrame] = {}
-
-
+# table; this fixture is that table.
+@fixtures_audit.memoized("shot_bounds", timed=True)
 def _shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_token(spark), sf_dir)
-    if key not in _SHOT_BOUNDS:
-        with fixtures_audit.timed("shot_bounds"):
-            _SHOT_BOUNDS[key] = multimodal.avi_shot_boundaries(
-                multimodal.synth_shot_avi_blobs(_docs(spark, sf_dir))
-            ).localCheckpoint(eager=True)
-    return _SHOT_BOUNDS[key]
+    return multimodal.avi_shot_boundaries(
+        multimodal.synth_shot_avi_blobs(_docs(spark, sf_dir))
+    ).localCheckpoint(eager=True)
 
 
 def _oracle_dim_check(spark: SparkSession, sf_dir: str) -> int:

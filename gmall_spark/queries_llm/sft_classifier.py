@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
-from gmall_spark.queries_llm.prelude import _docs, _session_token
+from gmall_spark.queries_llm.prelude import _docs
 from gmall_spark.queries_llm.packing_release import (
     SEQ_PACK_CAP,
     _PACK_LEN_SQL,
@@ -392,8 +393,6 @@ WITH wd AS (
 """
 
 
-_HASHED_WTS: dict[tuple[str, str], list[int]] = {}
-
 # fixed-point weight scale: weights freeze as BIGINTs in 1e-9 units
 # via floor(x*SCALE+0.5) (identical rounding in Python and DuckDB —
 # Python round() is banker's, DuckDB round() is half-away, floor+0.5
@@ -415,6 +414,7 @@ _HASHED_WTS: dict[tuple[str, str], list[int]] = {}
 WEIGHT_SCALE = 10**9
 
 
+@fixtures_audit.memoized("hashed_wts")
 def _hashed_nb_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     """Train the hashed-feature NB linear model on the even half:
     per-bucket log-likelihood-ratio weights, Laplace-smoothed —
@@ -424,53 +424,46 @@ def _hashed_nb_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     HASH_BUCKETS-long fixed-point weight vector (the deployable
     artifact — its size is FIXED at any corpus scale; collect is
     constant-bounded, the quantizer-training precedent)."""
-    key = (_session_token(spark), sf_dir)
-    if key not in _HASHED_WTS:
-        tr = (
-            _docs(spark, sf_dir)
-            .filter(F.col("doc_id") % 2 == 0)
-            .select(
-                "lang",
-                F.explode(
-                    F.filter(
-                        F.split(F.lower(F.col("text")), r"\s+"),
-                        lambda x: x != "",
-                    )
-                ).alias("w"),
-            )
-            .selectExpr("lang", _BUCKET_SPARK.format(w="w") + " AS b")
-        )
-        cls = (
-            tr.groupBy("b")
-            .agg(
-                F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias(
-                    "c_en"
-                ),
-                F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias(
-                    "c_rest"
-                ),
-            )
-            .collect()
-        )
-        c_en = {r.b: r.c_en for r in cls}
-        c_rest = {r.b: r.c_rest for r in cls}
-        t_en = sum(c_en.values())
-        t_rest = sum(c_rest.values())
-        import math
-
-        B = HASH_BUCKETS
-        _HASHED_WTS[key] = [
-            math.floor(
-                (
-                    math.log((c_en.get(b, 0) + 1.0) / (t_en + float(B)))
-                    - math.log((c_rest.get(b, 0) + 1.0) / (t_rest + float(B)))
+    tr = (
+        _docs(spark, sf_dir)
+        .filter(F.col("doc_id") % 2 == 0)
+        .select(
+            "lang",
+            F.explode(
+                F.filter(
+                    F.split(F.lower(F.col("text")), r"\s+"),
+                    lambda x: x != "",
                 )
-                * WEIGHT_SCALE
-                + 0.5
+            ).alias("w"),
+        )
+        .selectExpr("lang", _BUCKET_SPARK.format(w="w") + " AS b")
+    )
+    cls = (
+        tr.groupBy("b")
+        .agg(
+            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("c_en"),
+            F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias("c_rest"),
+        )
+        .collect()
+    )
+    c_en = {r.b: r.c_en for r in cls}
+    c_rest = {r.b: r.c_rest for r in cls}
+    t_en = sum(c_en.values())
+    t_rest = sum(c_rest.values())
+    import math
+
+    B = HASH_BUCKETS
+    return [
+        math.floor(
+            (
+                math.log((c_en.get(b, 0) + 1.0) / (t_en + float(B)))
+                - math.log((c_rest.get(b, 0) + 1.0) / (t_rest + float(B)))
             )
-            for b in range(B)
-        ]
-    return _HASHED_WTS[key]
+            * WEIGHT_SCALE
+            + 0.5
+        )
+        for b in range(B)
+    ]
 
 
 @query(
@@ -706,7 +699,6 @@ def q_sft_novelty_rougel(spark, sf_dir):
     candidate-keyed aggregate + window."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
     from gmall_spark.functions import text as TX
 
     t = sft.turns(_docs(spark, sf_dir))
@@ -720,7 +712,7 @@ def q_sft_novelty_rougel(spark, sf_dir):
     # persisted (r13): pb2 feeds THREE subtrees (the candidate side,
     # the seed side, and the final candidate re-join), and each one
     # re-ran the conversation parse + tokenization without it
-    pb2 = _persist.register(
+    pb2 = (
         pb.select(
             "doc_id",
             "toks",

@@ -93,10 +93,9 @@ def _unigram_word_stream(spark, sf_dir, group_col: str):
     registered for the plan-budget suite)."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
     from gmall_spark.operators.ranking import _toks
 
-    tok = _persist.register(
+    tok = (
         _docs(spark, sf_dir)
         .select(group_col, F.explode(_toks(F.col("text"))).alias("w"))
         .groupBy(group_col, "w")
@@ -223,7 +222,6 @@ def q_llm_unigram_vocab_prune(spark, sf_dir):
     leave-one-out fold."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
     from gmall_spark.operators.ranking import _toks
 
     tok = (
@@ -233,10 +231,8 @@ def q_llm_unigram_vocab_prune(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     key = _uni.viterbi_key_expr_spark("w")
-    seg = _persist.register(
-        tok.selectExpr("w", "cnt", f"{key} AS key").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    seg = tok.selectExpr("w", "cnt", f"{key} AS key").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     pw = (
         seg.selectExpr(

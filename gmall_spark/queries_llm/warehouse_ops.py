@@ -13,14 +13,13 @@ from gmall_spark.operators import (
     multimodal,
     similarity,
 )
+from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
 from gmall_spark.queries import ORACLES
 from gmall_spark.queries_llm.prelude import (
-    _BITEXT_COUNTS,
     _docs,
     _emb,
     _knn_edges,
-    _session_token,
     _trained_centroids,
 )
 from gmall_spark.queries_llm.ann_topk import PR_KNN_K
@@ -337,13 +336,11 @@ def q_orders_ingest_gaps(spark, sf_dir):
     days; a denser SF may legitimately report none."""
     from pyspark import StorageLevel
 
-    from gmall_spark import persist as _persist
-
     # the day-count rollup feeds THREE consumers (the span, the
     # median, and the spine join) — unpersisted, each re-ran the
     # orders scan + agg (the N-consumers re-evaluation trap; found
     # via the r9 quiet-box read of the r7->r8 uptick)
-    c = _persist.register(
+    c = (
         _t(spark, sf_dir, "orders")
         .select(F.to_date("o_orderdate").alias("d"))
         .groupBy("d")
@@ -486,15 +483,14 @@ def q_llm_bitext_mining(spark, sf_dir):
     # only needs the side cardinalities, and recomputing them on every
     # invocation charged two full jobs per bench repeat and parity run
     # (ADVICE r8 item 3)
-    key = (_session_token(spark), sf_dir)
-    counts = _BITEXT_COUNTS.get(key)
-    if counts is None:
+    def side_counts():
         row = j.agg(
             F.count(F.when(F.col("lang") == BITEXT_SRC_LANG, 1)).alias("s"),
             F.count(F.when(F.col("lang") == BITEXT_TGT_LANG, 1)).alias("t"),
         ).collect()[0]
-        counts = (row["s"], row["t"])
-        _BITEXT_COUNTS[key] = counts
+        return (row["s"], row["t"])
+
+    counts = fixtures_audit.memo(spark, ("bitext_counts", sf_dir), side_counts)
     return similarity.bitext_margin_top1(
         j.filter(F.col("lang") == BITEXT_SRC_LANG),
         j.filter(F.col("lang") == BITEXT_TGT_LANG),

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from gmall_spark import fixtures_audit
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -71,14 +73,6 @@ HEAVY_TABLES = frozenset(
 )
 
 
-# parallel_scan split-probe memo: (input files, parallelism) -> bool.
-# The probe (df.rdd.getNumPartitions) forces an RDD lineage conversion,
-# which is cheap but repeated per _t() call; the decision only depends
-# on the scanned files and the session parallelism, so memoize it
-# (ADVICE r2).
-_SCAN_DECISIONS: dict[tuple[tuple[str, ...], int], bool] = {}
-
-
 def parallel_scan(spark: SparkSession, df, heavy: bool = True):
     """Normalize scan parallelism for small-file inputs.
 
@@ -96,19 +90,22 @@ def parallel_scan(spark: SparkSession, df, heavy: bool = True):
     if not heavy:
         return df
     target = spark.sparkContext.defaultParallelism
+
+    def fans_out() -> bool:
+        # df.rdd forces an RDD lineage conversion: cheap, but repeated
+        # per call, and the answer depends only on the scanned files
+        # and the parallelism — so it is memoized on those (ADVICE r2)
+        try:
+            return df.rdd.getNumPartitions() < target
+        except Exception:  # pragma: no cover - exotic sources without RDD view
+            return False
+
     try:
-        key = (tuple(sorted(df.inputFiles())), target)
+        files = tuple(sorted(df.inputFiles()))
     except Exception:  # pragma: no cover - exotic sources
-        key = None
-    if key is not None and key in _SCAN_DECISIONS:
-        return df.repartition(target) if _SCAN_DECISIONS[key] else df
-    try:
-        current = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - exotic sources without RDD view
-        return df
-    fan_out = current < target
-    if key is not None:
-        _SCAN_DECISIONS[key] = fan_out
+        fan_out = fans_out()
+    else:
+        fan_out = fixtures_audit.memo(spark, ("scan_fan_out", files, target), fans_out)
     return df.repartition(target) if fan_out else df
 
 

@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from gmall_spark.operators import llm_dedup
-from gmall_spark import persist
 
 _POSTINGS_SCHEMA = "doc_id long, shingle string"
 _BATCH_DIR_RE = _re.compile(r"^b\d+$")
@@ -95,9 +94,7 @@ def current_pairs(
     dfs and exact intersections see the same merged postings either
     way). The merged relation feeds six subtrees inside the core, so
     it is persisted exactly like the batch front door's shingles."""
-    sh = persist.register(
-        stored_postings(spark, store_root).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sh = stored_postings(spark, store_root).persist(StorageLevel.MEMORY_AND_DISK)
     return llm_dedup.containment_pairs_from_shingles(
         sh, max_df=max_df, num=num, den=den
     )

@@ -121,9 +121,13 @@ def test_named_vector_folds_bit_identical(spark, alt_corpus):
     _, sf = alt_corpus
     emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
     pairs = emb.select(
-        F.col("vec_id").alias("i"), F.col("embedding").alias("va")
+        F.col("vec_id").alias("i"),
+        F.col("embedding").alias("va"),
+        F.col("embedding").alias("null"),
     ).crossJoin(
-        emb.filter(F.col("vec_id") < 3).select(F.col("embedding").alias("vb"))
+        emb.filter(F.col("vec_id") < 3).select(
+            F.col("embedding").alias("vb"), F.col("embedding").alias("true")
+        )
     )
     via_cols = pairs.select(
         "i",
@@ -137,9 +141,17 @@ def test_named_vector_folds_bit_identical(spark, alt_corpus):
         V.dot("va", "vb").alias("d"),
         V.norm("va").alias("n"),
     ).collect()
-    assert len(via_cols) == len(via_names) > 0
-    for a, b in zip(via_cols, via_names):
-        assert (a.c, a.d, a.n) == (b.c, b.d, b.n)
+    # SQL keywords as column names: the parsed fold must still read
+    # the columns, not the NULL/TRUE literals
+    via_keywords = pairs.select(
+        "i",
+        V.cosine("null", "true").alias("c"),
+        V.dot("null", "true").alias("d"),
+        V.norm("null").alias("n"),
+    ).collect()
+    assert len(via_cols) == len(via_names) == len(via_keywords) > 0
+    for a, b, k in zip(via_cols, via_names, via_keywords):
+        assert (a.c, a.d, a.n) == (b.c, b.d, b.n) == (k.c, k.d, k.n)
 
 
 def test_jl_project_exprs_bit_identical(spark, alt_corpus):

@@ -27,27 +27,13 @@ def _fresh_fixtures():
     """Planted corpora hijack _docs under the SAME sf_dir key, so the
     shared stage fixtures must be cleared going in (stale real-corpus
     entries) and going out (stale planted entries)."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark import fixtures_audit
 
-    dicts = (
-        QL._DEDUP_GROUPS,
-        QL._LM_SCORES,
-        QL._CONTAIN_PAIRS,
-        QL._BOILER_CLEAN,
-        QL._CURATION_V2,
-        QL._CURATION_V4,
-        QL._CURATION_V5,
-        QL._XMATCH,
-        QL.governance._GOV_GATE,
-        QL.governance._LEDGER_FIX,  # r14: shared v5-chain stage fixtures
-    )
-    for d in dicts:
-        d.clear()
+    fixtures_audit.clear()
     try:
         yield
     finally:
-        for d in dicts:
-            d.clear()
+        fixtures_audit.clear()
 
 
 WORDS = (

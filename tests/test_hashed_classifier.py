@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from gmall_spark import fixtures_audit
 from gmall_spark import queries_llm as qllm
 from gmall_spark.queries_llm import sft_classifier as qmod
 from gmall_spark.queries import QUERIES
@@ -31,7 +32,7 @@ def _planted(spark):
 def test_separable_vocab_scores_perfectly(spark, sf_dir, monkeypatch):
     planted = _planted(spark)
     monkeypatch.setattr(qmod, "_docs", lambda s, d: planted)
-    qllm._HASHED_WTS.clear()
+    fixtures_audit.clear()
     try:
         rows = QUERIES["text_hashed_ngram_classifier"](spark, sf_dir).collect()
         assert rows and all(r.correct == 1 for r in rows)
@@ -45,7 +46,7 @@ def test_separable_vocab_scores_perfectly(spark, sf_dir, monkeypatch):
         assert grid[(1, 0)] == 0 and grid[(0, 1)] == 0  # empty cells present
         assert grid[(1, 1)] > 0 and grid[(0, 0)] > 0
     finally:
-        qllm._HASHED_WTS.clear()
+        fixtures_audit.clear()
 
 
 def test_model_is_fixed_width_and_train_only(spark, sf_dir, monkeypatch):
@@ -54,7 +55,7 @@ def test_model_is_fixed_width_and_train_only(spark, sf_dir, monkeypatch):
     text must not move a single weight."""
     planted = _planted(spark)
     monkeypatch.setattr(qmod, "_docs", lambda s, d: planted)
-    qllm._HASHED_WTS.clear()
+    fixtures_audit.clear()
     try:
         w1 = list(qllm._hashed_nb_weights(spark, sf_dir))
         assert len(w1) == qllm.HASH_BUCKETS
@@ -67,11 +68,11 @@ def test_model_is_fixed_width_and_train_only(spark, sf_dir, monkeypatch):
             ).otherwise(F.col("text")),
         )
         monkeypatch.setattr(qmod, "_docs", lambda s, d: perturbed)
-        qllm._HASHED_WTS.clear()
+        fixtures_audit.clear()
         w2 = list(qllm._hashed_nb_weights(spark, sf_dir))
         assert w1 == w2
     finally:
-        qllm._HASHED_WTS.clear()
+        fixtures_audit.clear()
 
 
 def test_corpus_accuracy_is_the_honest_floor(spark, sf_dir):

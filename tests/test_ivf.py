@@ -144,15 +144,14 @@ def test_trained_centroids_reuses_published_artifact(spark, sf_dir, tmp_path, mo
     """With SPARK_GRAFT_CENTROID_DIR set, a second (simulated) session
     must load the artifact instead of retraining: training is
     monkeypatched to raise after the first run."""
-    from gmall_spark import queries_llm
+    from gmall_spark import fixtures_audit, queries_llm
     from gmall_spark.operators import ivf
 
     monkeypatch.setenv("SPARK_GRAFT_CENTROID_DIR", str(tmp_path))
-    queries_llm._DEDUP_GROUPS.clear()
-    queries_llm._CENTROIDS.clear()
+    fixtures_audit.clear()
     try:
         first = queries_llm._trained_centroids(spark, sf_dir)
-        queries_llm._CENTROIDS.clear()  # simulate a fresh session
+        fixtures_audit.clear()  # simulate a fresh session
 
         def boom(*a, **k):
             raise AssertionError("retrained despite published artifact")
@@ -161,7 +160,7 @@ def test_trained_centroids_reuses_published_artifact(spark, sf_dir, tmp_path, mo
         again = queries_llm._trained_centroids(spark, sf_dir)
         assert again == first
     finally:
-        queries_llm._CENTROIDS.clear()  # drop artifact-keyed entries
+        fixtures_audit.clear()  # drop artifact-keyed entries
 
 
 def test_codebook_artifact_roundtrip_and_fingerprint(spark, sf_dir, tmp_path):
@@ -188,14 +187,14 @@ def test_codebook_artifact_roundtrip_and_fingerprint(spark, sf_dir, tmp_path):
 def test_trained_books_reuses_published_artifact(spark, sf_dir, tmp_path, monkeypatch):
     """A second (simulated) session must load the published codebooks
     instead of retraining (training monkeypatched to raise)."""
-    from gmall_spark import queries_llm
+    from gmall_spark import fixtures_audit, queries_llm
     from gmall_spark.operators import pq
 
     monkeypatch.setenv("SPARK_GRAFT_CENTROID_DIR", str(tmp_path))
-    queries_llm._PQ_BOOKS.clear()
+    fixtures_audit.clear()
     try:
         first = queries_llm._trained_books(spark, sf_dir)
-        queries_llm._PQ_BOOKS.clear()  # simulate a fresh session
+        fixtures_audit.clear()  # simulate a fresh session
 
         def boom(*a, **k):
             raise AssertionError("retrained despite published artifact")
@@ -204,4 +203,4 @@ def test_trained_books_reuses_published_artifact(spark, sf_dir, tmp_path, monkey
         again = queries_llm._trained_books(spark, sf_dir)
         assert again == first
     finally:
-        queries_llm._PQ_BOOKS.clear()
+        fixtures_audit.clear()

@@ -155,21 +155,27 @@ def test_frozen_score_fixtures_shared(spark):
     """X112/X218/X219 read per-(session, sf_dir) checkpoints — one
     scoring pass per corpus per smoother, and the tier-diff plan
     contains no bigram explode (it scans the checkpoints)."""
+    from gmall_spark import fixtures_audit
     from gmall_spark import queries as Q
-    from gmall_spark import queries_llm as QL
+
+    def n_built():
+        return (
+            len(fixtures_audit.entries("frozen_lm")),
+            len(fixtures_audit.entries("frozen_kn")),
+        )
 
     sf = "/root/testdata/sf0.001"
     Q.clear_cache()
     try:
         Q.QUERIES["text_lm_score_frozen_model"](spark, sf).count()
         Q.QUERIES["text_lm_score_kn_frozen"](spark, sf).count()
-        assert len(QL._FROZEN_LM) == 1 and len(QL._FROZEN_KN) == 1
+        assert n_built() == (1, 1)
         diff = Q.QUERIES["text_lm_tier_diff_kn"](spark, sf)
         plan = diff._jdf.queryExecution().executedPlan().toString()
         assert "Generate" not in plan  # no explode: checkpoint scans only
-        assert len(QL._FROZEN_LM) == 1 and len(QL._FROZEN_KN) == 1
+        assert n_built() == (1, 1)
         total = diff.agg(F.sum("n_docs")).collect()[0][0]
-        scored = QL._FROZEN_LM[next(iter(QL._FROZEN_LM))].count()
+        scored = fixtures_audit.entries("frozen_lm")[0].count()
         assert total == scored
     finally:
         Q.clear_cache()

@@ -418,21 +418,23 @@ def test_semantic_dedup_subset_of_exact_and_catches_planted(spark):
 
 def test_clear_cache_releases_everything(spark, sf_dir):
     """clear_cache must drain the DWD materialization cache, the
-    persisted-DataFrame registry, and the per-session model memos
+    operators' persisted DataFrames, and the per-session model memos
     (centroids, embedding width) without erroring, and queries must
     still run (and retrain) afterwards."""
-    from gmall_spark import persist, queries, queries_llm
+    from gmall_spark import fixtures_audit, queries, queries_llm
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     queries.QUERIES["dedup_minhash_lsh"](spark, sf_dir).count()
+    queries._dwd_order_detail(spark, sf_dir)
     queries_llm._trained_centroids(spark, sf_dir)
     queries_llm._emb_dim(spark, sf_dir)
-    assert persist._PERSISTED or queries_llm._CENTROIDS
+    assert not cache_manager.isEmpty() or fixtures_audit.entries("centroids")
 
     queries.clear_cache()
-    assert not persist._PERSISTED
-    assert not queries_llm._CENTROIDS
-    assert not queries_llm._EMB_DIM
-    assert not queries._MATERIALIZED
+    assert cache_manager.isEmpty()
+    assert not fixtures_audit.entries("centroids")
+    assert not fixtures_audit.entries("emb_dim")
+    assert not fixtures_audit.entries("dwd")
 
     # still functional after the drain
     assert queries.QUERIES["similarity_ivf_topk"](spark, sf_dir).count() > 0

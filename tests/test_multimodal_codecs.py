@@ -585,19 +585,20 @@ def test_shot_boundary_fixture_shared_across_consumers(spark):
     pass per (session, sf_dir), not one per consumer. The rollup's
     executed plan therefore contains no Arrow decode stage (it scans
     the checkpoint) and the fixture map holds exactly one entry."""
+    from gmall_spark import fixtures_audit
     from gmall_spark import queries as Q
-    from gmall_spark import queries_llm as QL
 
     sf = "/root/testdata/sf0.001"
     Q.clear_cache()
     try:
         bounds = Q.QUERIES["multimodal_shot_boundaries"](spark, sf)
         bounds.count()
-        assert len(QL._SHOT_BOUNDS) == 1
+        assert len(fixtures_audit.entries("shot_bounds")) == 1
         shots = Q.QUERIES["multimodal_video_shots"](spark, sf)
         plan = shots._jdf.queryExecution().executedPlan().toString()
         assert "MapInArrow" not in plan and "MapInPandas" not in plan
-        assert len(QL._SHOT_BOUNDS) == 1  # rollup did NOT rebuild
+        # rollup did NOT rebuild
+        assert len(fixtures_audit.entries("shot_bounds")) == 1
         assert shots.count() == bounds.select("doc_id").distinct().count() * 3
     finally:
         Q.clear_cache()

@@ -1,0 +1,135 @@
+"""The session-memo registry (gmall_spark.fixtures_audit): one memo
+behind every per-session reuse, build timing, and release."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+import time
+import types
+
+import pytest
+
+from gmall_spark import fixtures_audit
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "gmall_spark"
+
+
+def _empty_container(node: ast.expr | None) -> bool:
+    if isinstance(node, ast.Dict | ast.List):
+        return not (node.keys if isinstance(node, ast.Dict) else node.elts)
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("dict", "list")
+        and not node.args
+        and not node.keywords
+    )
+
+
+def test_no_module_level_memo_outside_registry():
+    """Spark-free lint: a module-level ``_UPPER = {}`` (or ``[]`` /
+    ``dict()``) is a hand-rolled session memo that clear_cache cannot
+    see; memoize through fixtures_audit.memo instead."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "fixtures_audit.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            for t in targets:
+                if (
+                    isinstance(t, ast.Name)
+                    and t.id.startswith("_")
+                    and t.id.isupper()
+                    and _empty_container(value)
+                ):
+                    offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno} {t.id}")
+    assert not offenders, offenders
+
+
+class _FakeJsc:
+    """getPersistentRDDs().keySet().toString() over a fixed id set."""
+
+    def __init__(self):
+        self.ids: set[int] = set()
+
+    def getPersistentRDDs(self):
+        ids = self.ids
+        return types.SimpleNamespace(
+            keySet=lambda: types.SimpleNamespace(
+                toString=lambda: "[" + ", ".join(map(str, sorted(ids))) + "]"
+            )
+        )
+
+
+def _fake_spark(app: str):
+    sc = types.SimpleNamespace(applicationId=app, _jsc=_FakeJsc())
+    return types.SimpleNamespace(sparkContext=sc)
+
+
+@pytest.fixture
+def registry(monkeypatch):
+    """An empty registry for the test, the session's restored after."""
+    monkeypatch.setattr(fixtures_audit, "_MEMO", {})
+    monkeypatch.setattr(fixtures_audit, "_HELD", set())
+    monkeypatch.setattr(fixtures_audit, "TIMINGS", {})
+
+
+def test_memo_keys_builds_and_times(registry):
+    """One build per (applicationId, key); only timed memos reach the
+    fixtures map; nested timed builds record exclusive time; RDD ids
+    that appear during a build are recorded for release."""
+    calls = []
+    a, b = _fake_spark("app-a"), _fake_spark("app-b")
+
+    @fixtures_audit.memoized("outer", timed=True)
+    def outer(spark, sf):
+        calls.append(("outer", sf))
+        spark.sparkContext._jsc.ids.add(7)
+        return inner(spark, sf) + 1
+
+    @fixtures_audit.memoized("inner", timed=True)
+    def inner(spark, sf):
+        calls.append(("inner", sf))
+        time.sleep(0.05)
+        return 41
+
+    assert outer(a, "x") == outer(a, "x") == 42
+    assert calls == [("outer", "x"), ("inner", "x")]
+    outer(b, "x")  # another app: its own entry
+    assert len(fixtures_audit.entries("outer")) == 2
+    assert fixtures_audit.memo(a, ("plain", 1), lambda: "v") == "v"
+    timings = fixtures_audit.snapshot()
+    assert set(timings) == {"outer", "inner"}
+    assert timings["outer"] < 0.05 <= timings["inner"]  # exclusive time
+    assert ("app-a", 7) in fixtures_audit._HELD
+
+
+def test_clear_cache_releases_fixture_storage(spark, sf_dir):
+    """clear_cache must free the checkpoint blocks the fixture builds
+    created, not only forget the memo entries — a long-lived session
+    otherwise leaks executor storage on every clear."""
+    from gmall_spark import queries as Q
+    from gmall_spark import queries_llm as QL
+
+    jsc = spark.sparkContext._jsc
+
+    def stored() -> set[int]:
+        return {info.id() for info in jsc.sc().getRDDStorageInfo()}
+
+    Q.clear_cache()
+    before = fixtures_audit._persistent_ids(jsc)
+    QL._boiler_clean(spark, sf_dir)
+    QL._shot_boundaries(spark, sf_dir)
+    created = fixtures_audit._persistent_ids(jsc) - before
+    assert len(created) >= 2 and created <= stored()
+
+    Q.clear_cache()
+    assert not created & fixtures_audit._persistent_ids(jsc)
+    assert not created & stored()
