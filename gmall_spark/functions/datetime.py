@@ -13,13 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-FMT_DATE = "yyyy-MM-dd"
 FMT_DATETIME = "yyyy-MM-dd HH:mm:ss"
-
-
-def to_date_str(ts: Column | str) -> Column:
-    """Epoch-aware ``yyyy-MM-dd`` string (DateFormatUtil.toDate)."""
-    return F.date_format(ts, FMT_DATE)
 
 
 def to_datetime_str(ts: Column | str) -> Column:
@@ -27,36 +21,8 @@ def to_datetime_str(ts: Column | str) -> Column:
     return F.date_format(ts, FMT_DATETIME)
 
 
-def epoch_millis_to_ts(ms: Column | str) -> Column:
-    """Log-envelope ``ts`` (epoch millis, BaseLogApp) -> TimestampType."""
-    return F.timestamp_millis(F.col(ms) if isinstance(ms, str) else ms)
-
-
 def epoch_seconds_to_ts(s: Column | str) -> Column:
     """CDC-envelope ``ts`` (epoch seconds, Maxwell) -> TimestampType."""
     return F.timestamp_seconds(F.col(s) if isinstance(s, str) else s)
 
 
-def tumble_start(ts: Column | str, seconds: int) -> Column:
-    """Aligned tumbling-window start as a timestamp.
-
-    Equivalent to ``F.window(ts, f"{seconds} seconds").start`` but
-    expressed via epoch arithmetic so the same formula is portable to
-    the ANSI-SQL oracle (DuckDB ``to_timestamp(floor(epoch(ts)/s)*s)``).
-    """
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.timestamp_seconds(
-        F.floor(F.unix_timestamp(c) / F.lit(seconds)) * F.lit(seconds)
-    )
-
-
-def window_bounds(ts: Column | str, seconds: int) -> tuple[Column, Column]:
-    """(stt, edt) string bounds of the enclosing tumble window.
-
-    Mirrors the reference's window-metadata injection
-    (DwsTrafficVcChArIsNewPageViewWindow.java:152-180: ``stt``/``edt``
-    formatted with DateFormatUtil).
-    """
-    start = tumble_start(ts, seconds)
-    end = F.timestamp_seconds(F.unix_timestamp(start) + F.lit(seconds))
-    return to_datetime_str(start), to_datetime_str(end)

@@ -242,50 +242,6 @@ def canonical_hash(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))
 
 
-def nibble(hexchar: Column) -> Column:
-    """Hex char -> 0..15 without engine-specific conv()."""
-    return F.instr(F.lit("0123456789abcdef"), hexchar) - 1
-
-
-def simhash16(doc_words: Column) -> Column:
-    """16-bit SimHash over a document's word array (reference
-    implementation — per-row expression form).
-
-    For each word, md5's first 4 hex chars give 16 bits; each bit
-    votes +1/-1; the sign per position forms the fingerprint. Uses
-    only md5/substring/arithmetic so the oracle SQL is identical —
-    engine hash functions (murmur vs duckdb hash) are avoided on
-    purpose.
-
-    NOT the hot path: each of the 16 folds re-hashes every word (md5
-    + substring per word per bit). Corpus-scale fingerprinting uses
-    :func:`simhash_fingerprints`, which hashes each word ONCE into a
-    16-bit int and folds pure integer bit-extractions — measured ~2x
-    faster at 200k docs with identical fingerprints. (An exploded
-    hash-AGGREGATE formulation — the minhash_signatures shape — was
-    also measured and is 5-7x SLOWER here: the explode multiplies the
-    row count by words-per-doc and the 16-state aggregate with a
-    string group key costs more than the per-row fold saves; the
-    minhash pathology came from k-fold re-hashing of 5-gram shingle
-    strings, which the one-hash transform below removes without any
-    exchange.)
-    """
-    def _voter(ch: int, b: int):
-        def _fn(acc: Column, w: Column) -> Column:
-            bit_set = (
-                (nibble(F.substring(F.md5(w), ch + 1, 1)) / (2**b)).cast("int") % 2
-            ) == 1
-            return acc + F.when(bit_set, F.lit(1)).otherwise(F.lit(-1))
-
-        return _fn
-
-    total = F.lit(0)
-    for bit in range(16):
-        vote = F.aggregate(doc_words, F.lit(0), _voter(bit // 4, bit % 4))
-        total = total + F.when(vote > 0, F.lit(2**bit)).otherwise(F.lit(0))
-    return total.cast("bigint")
-
-
 def _rep_rle(n: int, text_col: str) -> str:
     """(best, dup) covers for width-``n`` grams of one document as a
     single expression: sort the gram array, then one run-length fold
@@ -430,16 +386,15 @@ def simhash64_fingerprints(docs, id_col: str = "doc_id", text_col: str = "text")
 def simhash_fingerprints(docs, id_col: str = "doc_id", text_col: str = "text"):
     """(doc_id, canonical_md5, simhash) per document — the scale path.
 
-    Same fingerprint as :func:`simhash16` (bit b of the fingerprint
-    reads bit ``b % 4`` of hex nibble ``b // 4``, i.e. bit
-    ``(3 - b//4)*4 + b%4`` of the leading-16-bit word hash), but each
-    word is md5'd ONCE into a 16-bit int; the 16 per-bit votes then
-    fold pure integer shifts/masks over that int array. Entirely
-    per-row — ZERO shuffles, embarrassingly parallel at 100 TB — and
-    measured ~2x faster than the re-hashing fold form and 5-7x faster
-    than an exploded hash-aggregate formulation at 200k docs (see
-    :func:`simhash16` notes). Equality with the reference form is
-    asserted by the DuckDB oracle and tests.
+    16-bit SimHash: bit b of the fingerprint is the majority vote of
+    bit ``b % 4`` of hex nibble ``b // 4`` of each word's md5, i.e. bit
+    ``(3 - b//4)*4 + b%4`` of the leading-16-bit word hash. Each word
+    is md5'd ONCE into a 16-bit int; the 16 per-bit votes then fold
+    pure integer shifts/masks over that int array. Entirely per-row —
+    ZERO shuffles, embarrassingly parallel at 100 TB — and measured
+    ~2x faster than re-hashing each word per bit and 5-7x faster than
+    an exploded hash-aggregate formulation at 200k docs. Equality
+    with the DuckDB oracle is asserted by the tests.
     """
     hs = F.expr(
         f"transform(split({text_col}, '\\\\s+'), "

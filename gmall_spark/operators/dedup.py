@@ -123,11 +123,3 @@ def dedup_first_ttl(
     )
 
 
-def exact_dedup(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (hash-groupBy semantics).
-
-    ``dropDuplicates`` compiles to a hash aggregate on the dedup
-    columns — one shuffle, map-side partial dedup first, so at scale
-    the shuffle carries only distinct rows per mapper.
-    """
-    return df.dropDuplicates(list(cols) if cols else None)

@@ -71,40 +71,6 @@ def _unit(c: Column) -> Column:
     return F.transform(d, lambda x: x / safe)
 
 
-def _renorm(v: list[float]) -> list[float]:
-    n = sum(x * x for x in v) ** 0.5
-    return [x / n for x in v] if n > 0 else v
-
-
-def _sq_dist(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid, one codegen'd fold."""
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(_dvec(vec), lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _nearest_list(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the nearest centroid (ties -> lower id).
-
-    array_min over (distance, id) structs — linear expression size.
-    (A chained when/otherwise argmin duplicates every prior distance
-    subtree into the next comparison: O(2^k) expression nodes.)
-    Kept as the JVM-expression reference; the hot paths use
-    :func:`_nearest_lists_udf` (one gemm per Arrow batch)."""
-    dists = F.array(
-        *[
-            F.struct(
-                _sq_dist(vec, cen).alias("d"), F.lit(i).cast("int").alias("l")
-            )
-            for i, cen in enumerate(centroids)
-        ]
-    )
-    return F.array_min(dists).getField("l")
-
-
 def _nearest_lists_udf(centroids: list[list[float]], n: int = 1):
     """Arrow-batched UDF: the ``n`` nearest centroid ids of each
     (unit-normalized) vector, one gemm + stable argsort per batch.

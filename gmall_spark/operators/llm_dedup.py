@@ -172,9 +172,8 @@ def minhash_signatures(shingles: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """k-column MinHash signature from a (doc_id, shingle) relation:
     sig_i = min over shingles of the lane-i mix of md5(shingle).
 
-    Shuffle-based alternative to :func:`minhash_signatures_from_array`
-    (one exchange on doc_id, map-side partial mins) for inputs that
-    are already exploded. Same hash family, identical signatures.
+    One exchange on doc_id with map-side partial mins, for inputs that
+    are already exploded; :func:`lane_expr_sql` is the hash family.
     """
     h1 = F.expr("cast(conv(substring(md5(shingle), 1, 8), 16, 10) as bigint)")
     h2 = F.expr("cast(conv(substring(md5(shingle), 9, 8), 16, 10) as bigint)")
@@ -183,42 +182,6 @@ def minhash_signatures(shingles: DataFrame, k: int = MINHASH_K) -> DataFrame:
         F.min(F.expr(lane_expr_sql(i))).alias(f"sig_{i}") for i in range(k)
     ]
     return base.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures_from_array(
-    docs_with_shingles: DataFrame, k: int = MINHASH_K, arr_col: str = "shingles"
-) -> DataFrame:
-    """MinHash signature computed per ROW from the shingle array.
-
-    ``array_min(transform(...))`` replaces a groupBy aggregate: no
-    exchange — the signature computation is embarrassingly parallel,
-    so the first shuffle of the whole MinHash+LSH pipeline is the
-    (tiny) band-bucket join, not the full shingle relation.
-
-    Each shingle is hashed ONCE into two 32-bit halves (a projection
-    the k lane transforms then reuse); the per-lane work is three
-    int64 ops, not an md5. An earlier one-md5-per-lane variant spent
-    k md5 calls per shingle — 16× the hashing — and its
-    ``lambda s, i=i`` default-arg capture had arity 2, which PySpark's
-    ``transform`` interprets as an (element, index) lambda; the index
-    lambda-variable Column shadowed the default and was stringified
-    into the literal with a session-global counter, making signatures
-    valid-but-different hash families per plan build (the root cause
-    of the r1 26/28-pair "AQE" flakiness).
-    """
-    hp = F.expr(
-        f"transform({arr_col}, s -> named_struct("
-        "'h1', cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint), "
-        "'h2', cast(conv(substring(md5(s), 9, 8), 16, 10) as bigint)))"
-    )
-    base = docs_with_shingles.select("doc_id", hp.alias("__hp"))
-    lanes = [
-        F.array_min(
-            F.expr(f"transform(__hp, p -> {lane_expr_sql(i, 'p.h1', 'p.h2')})")
-        ).alias(f"sig_{i}")
-        for i in range(k)
-    ]
-    return base.select("doc_id", *lanes)
 
 
 # Opt-in bucket-width cap: buckets wider than this switch from
@@ -415,46 +378,6 @@ def jaccard_for_arrays(
     )
     return out.filter(F.col("jaccard") >= threshold).select(
         "doc_a", "doc_b", "inter", "jaccard"
-    )
-
-
-def jaccard_for_pairs(
-    pairs: DataFrame, shingles: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard verification restricted to the given pairs.
-
-    Cost tracks |candidates| x shingles-per-doc, never corpus² — this
-    is what makes LSH the scale path.
-    """
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = shingles.select(
-        F.col("doc_id").alias("doc_b_r"), F.col("shingle").alias("shingle_b")
-    )
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(
-            sb,
-            (F.col("doc_b") == F.col("doc_b_r"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-                6,
-            ),
-        )
-    )
-    return out.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", F.col("inter").cast("bigint").alias("inter"), "jaccard"
     )
 
 
@@ -833,7 +756,7 @@ def cross_corpus_near_dups(
     )
     # verify against the persisted per-doc shingle ARRAYS (broadcast
     # candidate joins + one array_intersect per pair) — the
-    # jaccard_for_pairs form re-shuffled the corpus-sized exploded
+    # exploded-shingle verify join re-shuffled the corpus-sized exploded
     # shingle relation on the verify key, which made this the single
     # most expensive plan inside the curation compositions (~8 s at
     # sf0.1 vs ~1.3 s for the self-dedup pipeline this now mirrors)

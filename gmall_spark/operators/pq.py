@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+from pyspark.sql.types import ArrayType, DoubleType
 
 from gmall_spark.functions.vectors import cosine, dot
 from gmall_spark.operators.ivf import _unit
@@ -114,18 +114,6 @@ def _encode_batch(books, vs: pd.Series) -> np.ndarray:
         score = v[:, j * sub : (j + 1) * sub] @ c.T - h
         out[:, j] = np.argmax(score, axis=1)
     return out
-
-
-def _codes_udf(books: list[list[list[float]]]):
-    """Arrow-batched encoder: the m PQ codes of each vector."""
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _codes(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        return pd.Series([row for row in _encode_batch(books, vs)])
-
-    return _codes
 
 
 def _recon_udf(books: list[list[list[float]]]):

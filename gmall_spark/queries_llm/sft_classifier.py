@@ -893,14 +893,6 @@ def _ctl_synth(docs):
     return docs.withColumn("text", F.concat(F.col("text"), tail))
 
 
-def _ctl_synth_sql() -> str:
-    parts = " || ".join(
-        f"CASE WHEN doc_id % {m} = {r} THEN '{seg}' ELSE '' END"
-        for m, r, seg in CONTROL_SEGMENTS
-    )
-    return f"text || {parts}"
-
-
 def _ctl_const_sum(tok: str) -> str:
     terms = [
         f"CASE WHEN doc_id % {m} = {r} THEN {seg.count(tok)} ELSE 0 END"

@@ -15,6 +15,9 @@ Design notes for the 100 TB deployment (tested on local[32]):
   byte-for-byte with the DuckDB oracle; the reference pins GMT+8
   (DwdTradePayDetailSuc.java:24) — pass ``tz="GMT+8"`` to reproduce.
 - Arrow enabled for every Pandas-UDF boundary.
+- Python workers get the package root on their ``PYTHONPATH``, so a
+  program started outside the repo root (with only ``sys.path``
+  pointing at it) can run Python/Arrow UDFs.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import SparkSession
 from gmall_spark import fixtures_audit
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_session(
@@ -48,6 +52,8 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", tz)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # the JVM merges this into each Python worker's PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
@@ -109,23 +115,3 @@ def parallel_scan(spark: SparkSession, df, heavy: bool = True):
     return df.repartition(target) if fan_out else df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver-provided parquet tables as a dict of DataFrames."""
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    return {
-        n: parallel_scan(
-            spark, spark.read.parquet(f"{sf_dir}/{n}.parquet"), n in HEAVY_TABLES
-        )
-        for n in names
-    }

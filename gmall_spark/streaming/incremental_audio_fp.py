@@ -2,7 +2,7 @@
 X197's streaming twin, the incremental_image_phash (X177) deployment
 shape: landmark fingerprints are FROZEN at ingest (the decode ->
 rfft -> pair-hash chain is deterministic), each micro-batch
-overwrites its own store subdir idempotently, and the GROUP structure
+overwrites its own ``epoch=<batch_id>`` partition idempotently, and the GROUP structure
 is re-derived from the merged fingerprint store through the exact
 batch operator — so any batch split is row-identical to one big
 batch, including retroactive rep_id re-labeling when a smaller
@@ -16,30 +16,16 @@ a scheduled rollup, unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import multimodal
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _FP_SCHEMA = (
     "doc_id long, decode_ok boolean, n_frames long, "
     "pair_hashes array<long>, fp_hex string"
 )
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _fp_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "fps")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -50,21 +36,19 @@ def process_batch(
 ) -> None:
     """Fingerprint one micro-batch of (doc_id, blob) rows through the
     real decode/FFT path and write the landmarks to the batch's own
-    subdir. Replay-safe: hashing is deterministic and the write is a
-    per-batch-subdir overwrite."""
-    multimodal.wav_peak_pair_fingerprints(batch_blobs).select(
-        "doc_id", "decode_ok", "n_frames", "pair_hashes", "fp_hex"
-    ).write.mode("overwrite").parquet(
-        os.path.join(store_root, "fps", f"b{batch_id}")
+    epoch. Replay-safe: hashing is deterministic and the write is a
+    per-epoch overwrite."""
+    idempotent_parquet_write(f"{store_root}/fps")(
+        multimodal.wav_peak_pair_fingerprints(batch_blobs).select(
+            "doc_id", "decode_ok", "n_frames", "pair_hashes", "fp_hex"
+        ),
+        batch_id,
     )
 
 
 def stored_fingerprints(spark: SparkSession, store_root: str) -> DataFrame:
     """Every fingerprint ingested so far."""
-    dirs = _fp_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _FP_SCHEMA)
-    return spark.read.schema(_FP_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/fps", _FP_SCHEMA)
 
 
 def current_groups(spark: SparkSession, store_root: str) -> DataFrame:

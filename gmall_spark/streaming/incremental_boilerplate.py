@@ -8,13 +8,13 @@ does not: a span's document frequency only ever GROWS, so a span that
 was below threshold when early documents were emitted can cross K in
 a later batch — at which point those already-emitted documents are
 WRONG and must be re-emitted without the span. Monotonicity is the
-saving grace: spans never un-cross, so repair is append-only
-re-emission (latest row per doc wins), never retraction of a removal.
+saving grace: spans never un-cross, so repair is re-emission in a
+later epoch (latest row per doc wins), never retraction of a removal.
 
 Per micro-batch:
 
-1. append the batch's span POSTINGS (doc_id, idx, h) and its distinct
-   span CONTENT (h, span) to per-batch store subdirs (content is
+1. write the batch's span POSTINGS (doc_id, idx, h) and its distinct
+   span CONTENT (h, span) to the batch's own store epochs (content is
    content-addressed by hash, so boilerplate text is stored once per
    distinct span, not per occurrence);
 2. recompute document frequencies over all postings; spans with
@@ -32,9 +32,9 @@ where the threshold crossing happens in batch 2 and a batch-1 doc is
 retroactively re-emitted).
 
 Replay safety under foreachBatch retries mirrors
-incremental_span_clean: every read excludes the current batch's own
-subdirs (a failed attempt may have written them), all writes are
-idempotent per-batch-subdir overwrites, and a retry therefore
+incremental_span_clean: every read keeps only the epochs before the
+current batch (a failed attempt may have written its own), all
+writes are idempotent per-epoch overwrites, and a retry therefore
 recomputes byte-identical rows.
 
 Scale shape: postings are O(corpus spans) and content is O(distinct
@@ -46,12 +46,12 @@ boilerplate and crossed sets are tiny by construction and broadcast.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import llm_dedup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _POST_SCHEMA = "doc_id long, idx int, h string"
 _SPAN_SCHEMA = "h string, span string"
@@ -60,39 +60,6 @@ _OUT_SCHEMA = (
     " batch bigint"
 )
 
-
-import re as _re
-
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _dirs(root: str, sub: str, exclude_batch: int | None = None) -> list[str]:
-    base = os.path.join(root, sub)
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            # only real batch subdirs: a crashed purge rewrite may
-            # leave a *.purgetmp sibling (retention.py) — reading it
-            # would double-count rows
-            if _BATCH_DIR_RE.match(d)
-            and (exclude_batch is None or d != f"b{exclude_batch}")
-        )
-    except FileNotFoundError:
-        return []
-
-
-def _read(
-    spark: SparkSession,
-    root: str,
-    sub: str,
-    schema: str,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    dirs = _dirs(root, sub, exclude_batch)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
 
 
 def process_batch(
@@ -108,15 +75,15 @@ def process_batch(
     crossed the doc-frequency threshold."""
     spans_b = llm_dedup.span_rows(batch_docs, span_w).persist()
     try:
-        spans_b.select("doc_id", "idx", "h").write.mode("overwrite").parquet(
-            os.path.join(store_root, "postings", f"b{batch_id}")
+        idempotent_parquet_write(f"{store_root}/postings")(
+            spans_b.select("doc_id", "idx", "h"), batch_id
         )
-        spans_b.select("h", "span").dropDuplicates(["h"]).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(store_root, "spans", f"b{batch_id}"))
+        idempotent_parquet_write(f"{store_root}/spans")(
+            spans_b.select("h", "span").dropDuplicates(["h"]), batch_id
+        )
 
-        prior_posts = _read(
-            spark, store_root, "postings", _POST_SCHEMA, exclude_batch=batch_id
+        prior_posts = read_epochs(
+            spark, f"{store_root}/postings", _POST_SCHEMA, before=batch_id
         )
         all_posts = prior_posts.unionByName(
             spans_b.select("doc_id", "idx", "h")
@@ -144,16 +111,11 @@ def process_batch(
             .select("doc_id")
             .distinct()
         )
-        # excludes the current batch's own subdir like every other
-        # read (ADVICE r6: reading it relied on the unstated invariant
-        # that the spans/b{id} overwrite above completes before this
-        # read is planned); the batch's own content comes from the
-        # in-memory spans_b, which a foreachBatch retry recomputes
-        # byte-identically
+        # earlier epochs only, like every other read; the batch's own
+        # content comes from the in-memory spans_b, which a
+        # foreachBatch retry recomputes byte-identically
         content = (
-            _read(
-                spark, store_root, "spans", _SPAN_SCHEMA, exclude_batch=batch_id
-            )
+            read_epochs(spark, f"{store_root}/spans", _SPAN_SCHEMA, before=batch_id)
             .unionByName(spans_b.select("h", "span").dropDuplicates(["h"]))
             .dropDuplicates(["h"])
         )
@@ -171,9 +133,7 @@ def process_batch(
         rollup = llm_dedup.span_doc_rollup(flagged.drop("is_boiler")).withColumn(
             "batch", F.lit(batch_id).cast("bigint")
         )
-        rollup.write.mode("overwrite").parquet(
-            os.path.join(store_root, "docs", f"b{batch_id}")
-        )
+        idempotent_parquet_write(f"{store_root}/docs")(rollup, batch_id)
     finally:
         spans_b.unpersist()
 
@@ -184,7 +144,7 @@ def emitted_docs(spark: SparkSession, store_root: str) -> DataFrame:
     earlier ones, so max-batch wins; removals never revert."""
     from pyspark.sql import Window
 
-    out = _read(spark, store_root, "docs", _OUT_SCHEMA)
+    out = read_epochs(spark, f"{store_root}/docs", _OUT_SCHEMA)
     w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
     return (
         out.withColumn("rn", F.row_number().over(w))

@@ -10,15 +10,18 @@ alarm must fire DURING ingest (the batch where the secret first
 appears), not at the next full-corpus sweep.
 
 State: one tiny parquet table (canary, docs_hit, total_hits) per
-batch version; the current view sums versions (append-only, the
-X191 fingerprint discipline — integer addition commutes, so the
-merged view is independent of batch order).
+batch epoch; the current view sums epochs (the X191 fingerprint
+discipline — integer addition commutes, so the merged view is
+independent of batch order, and a replay overwrites its own epoch).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -46,22 +49,22 @@ def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Scan one micro-batch and append its per-canary counts; returns
-    the batch's counts (the alarm view: a canary with total_hits > 0
-    in THIS batch just leaked)."""
+    """Scan one micro-batch and write its per-canary counts to its
+    epoch; returns the batch's counts (the alarm view: a canary with
+    total_hits > 0 in THIS batch just leaked)."""
     counts = batch_counts(batch_docs)
-    counts.write.mode("append").parquet(f"{store_dir}/canary_counts")
+    idempotent_parquet_write(f"{store_dir}/canary_counts")(counts, batch_id)
     return counts
 
 
 def current_counts(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged corpus-so-far view: per canary, the SUM over all
-    batch versions — bit-equal to the batch query on the union of
+    batch epochs — bit-equal to the batch query on the union of
     everything ingested (integer addition, order-free)."""
     return (
-        spark.read.parquet(f"{store_dir}/canary_counts")
+        read_epochs(spark, f"{store_dir}/canary_counts")
         .groupBy("canary")
         .agg(
             F.sum("docs_hit").cast("bigint").alias("docs_hit"),

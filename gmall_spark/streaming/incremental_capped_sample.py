@@ -15,34 +15,20 @@ effects the test pins:
 - the md5 rank is global, so a later arrival with a smaller md5 can
   DISPLACE an earlier pick at the cap boundary.
 
-Idempotence comes from the per-batch-subdir overwrite. At 100 TB the
+Idempotence comes from the per-epoch overwrite. At 100 TB the
 store is the (vec_id, list_id)-partitioned index table the IVF path
 already maintains, and current_sample is a scheduled selection pass.
 """
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import ivf, semdedup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _ASSIGN_SCHEMA = "vec_id long, list_id int"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _dirs(root: str) -> list[str]:
-    base = os.path.join(root, "assign")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -54,19 +40,15 @@ def process_batch(
 ) -> None:
     """Assign one micro-batch of (vec_id, embedding) rows under the
     FROZEN centroids and write the assignments to the batch's own
-    subdir (idempotent overwrite — assignment is deterministic)."""
-    ivf.build_index(batch_emb, centroids).select(
-        "vec_id", "list_id"
-    ).write.mode("overwrite").parquet(
-        os.path.join(store_root, "assign", f"b{batch_id}")
+    epoch (idempotent overwrite — assignment is deterministic)."""
+    idempotent_parquet_write(f"{store_root}/assign")(
+        ivf.build_index(batch_emb, centroids).select("vec_id", "list_id"),
+        batch_id,
     )
 
 
 def stored_assignments(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _ASSIGN_SCHEMA)
-    return spark.read.schema(_ASSIGN_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/assign", _ASSIGN_SCHEMA)
 
 
 def current_sample(

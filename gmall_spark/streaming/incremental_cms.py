@@ -3,14 +3,15 @@ heavy-hitter counts.
 
 The CMS companion to streaming/incremental_bloom.py: each
 micro-batch's items are hashed into (lane, col, cell_ct) partial
-counts and SUM-merged into a persisted cell store. Addition is
-associative and commutative, so after ANY batch split the store
-equals ``cms_build`` over the union of all batches cell-for-cell
-(asserted by tests/test_streaming.py) — and estimates probed against
-it are therefore identical too. Like the Bloom store the rewrite is
-O(d·w) regardless of how much has been ingested; the swap is a
-single atomic pointer rename with crash recovery
-(:mod:`gmall_spark.streaming.store`, ADVICE r4).
+counts written as the batch's own ``epoch=<batch_id>`` delta, and the
+read SUM-merges the deltas. Addition is associative and commutative,
+so after ANY batch split the merged cells equal ``cms_build`` over the
+union of all batches cell-for-cell (asserted by
+tests/test_streaming.py) — and estimates probed against them are
+therefore identical too. Unlike the Bloom ``bit_or`` merge, a SUM
+merge is not idempotent: merging a replayed batch into a swapped
+store would count it twice, so the batch's delta overwrites its own
+epoch instead. Each delta is O(d·w) rows regardless of batch size.
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import sketches
-from gmall_spark.streaming import store as _store
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _STORE_SCHEMA = T.StructType(
     [
@@ -36,25 +38,26 @@ def process_batch(
     batch: DataFrame,
     key_col: str,
     store_dir: str,
+    batch_id: int,
     depth: int = sketches.CMS_DEPTH,
     width: int = sketches.CMS_WIDTH,
 ) -> None:
-    """SUM-merge one micro-batch of items into the persisted cells."""
-    delta = sketches.cms_build(batch, key_col, depth, width).select(
-        F.col("lane").cast("int").alias("lane"),
-        F.col("col").cast("bigint").alias("col"),
-        F.col("cell_ct").cast("bigint").alias("cell_ct"),
+    """Write one micro-batch's cell counts as its epoch delta."""
+    idempotent_parquet_write(f"{store_dir}/cells")(
+        sketches.cms_build(batch, key_col, depth, width).select(
+            F.col("lane").cast("int").alias("lane"),
+            F.col("col").cast("bigint").alias("col"),
+            F.col("cell_ct").cast("bigint").alias("cell_ct"),
+        ),
+        batch_id,
     )
-    merged = (
-        _store.read_or_empty(spark, store_dir, _STORE_SCHEMA)
-        .unionByName(delta)
-        .groupBy("lane", "col")
-        .agg(F.sum("cell_ct").cast("bigint").alias("cell_ct"))
-    )
-    _store.swap_write(merged, store_dir)
 
 
 def current_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
     """The sketch as of the last completed batch — feed straight into
     ``sketches.cms_estimate``."""
-    return _store.read_or_empty(spark, store_dir, _STORE_SCHEMA)
+    return (
+        read_epochs(spark, f"{store_dir}/cells", _STORE_SCHEMA)
+        .groupBy("lane", "col")
+        .agg(F.sum("cell_ct").cast("bigint").alias("cell_ct"))
+    )

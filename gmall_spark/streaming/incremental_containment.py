@@ -3,14 +3,16 @@ pass as a continuous pipeline (the last r6 batch family without an
 incremental story; X106/X108 got theirs in r6/r7).
 
 State is the distinct ``(doc_id, shingle)`` postings relation —
-append-only, because documents only ever ARRIVE (a deletion runs
+it only grows, one epoch per batch, because documents only ever
+ARRIVE (a deletion runs
 through the X89 retention path instead). Per micro-batch:
 
 1. shingle the batch's documents (the X107 front door's own
    ``word_shingles`` — per-row HOF, no token shuffle);
-2. write the batch's postings to its own store subdir
-   (``postings/b<id>`` — an idempotent overwrite, so a foreachBatch
-   retry rewrites byte-identical rows and never double-counts).
+2. write the batch's postings to its own epoch
+   (``postings/epoch=<id>`` — an idempotent overwrite, so a
+   foreachBatch retry rewrites byte-identical rows and never
+   double-counts).
 
 :func:`current_pairs` derives the CURRENT pair set from the merged
 postings through the exact batch core
@@ -34,28 +36,14 @@ scheduled rollup; the layout carries over unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from gmall_spark.operators import llm_dedup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _POSTINGS_SCHEMA = "doc_id long, shingle string"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _posting_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "postings")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -65,21 +53,17 @@ def process_batch(
     batch_id: int,
     n: int = llm_dedup.NGRAM_N,
 ) -> None:
-    """Shingle one micro-batch and append its distinct
-    (doc_id, shingle) postings to the batch's own subdir. Replay-safe:
-    shingling is deterministic and the write is a per-batch-subdir
-    overwrite."""
-    llm_dedup.word_shingles(batch_docs, n=n).write.mode("overwrite").parquet(
-        os.path.join(store_root, "postings", f"b{batch_id}")
+    """Shingle one micro-batch and write its distinct
+    (doc_id, shingle) postings to the batch's own epoch. Replay-safe:
+    shingling is deterministic and the write is a per-epoch overwrite."""
+    idempotent_parquet_write(f"{store_root}/postings")(
+        llm_dedup.word_shingles(batch_docs, n=n), batch_id
     )
 
 
 def stored_postings(spark: SparkSession, store_root: str) -> DataFrame:
     """Every (doc_id, shingle) posting ingested so far."""
-    dirs = _posting_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _POSTINGS_SCHEMA)
-    return spark.read.schema(_POSTINGS_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/postings", _POSTINGS_SCHEMA)
 
 
 def current_pairs(

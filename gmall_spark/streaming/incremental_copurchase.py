@@ -6,8 +6,8 @@ The subtlety a naive per-batch pair count gets WRONG: an order's
 lines can SPAN micro-batches (the order header arrives, more lines
 trickle in), and a pair only exists once both parts are in the
 basket — so pair deltas are not sum-mergeable. State is therefore
-the append-only DISTINCT (order, part) MEMBERSHIP postings, written
-per batch (idempotent overwrite, replay-safe), and the pair table
+the DISTINCT (order, part) MEMBERSHIP postings, one epoch per batch
+(idempotent overwrite, replay-safe), and the pair table
 re-derives from the merged postings through the EXACT batch core
 (operators/relational.copurchase_pairs, shared by refactor). Two
 consequences the tests pin:
@@ -27,28 +27,14 @@ a scheduled job — the layout carries over unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators.relational import COPURCHASE_TOP, copurchase_pairs
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _OP_SCHEMA = "o long, p long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _op_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "op")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -60,12 +46,13 @@ def process_batch(
     part_col: str = "p",
 ) -> None:
     """Append one micro-batch's distinct (order, part) memberships to
-    the batch's own subdir (idempotent overwrite, replay-safe)."""
-    batch.select(
-        F.col(order_col).cast("long").alias("o"),
-        F.col(part_col).cast("long").alias("p"),
-    ).distinct().write.mode("overwrite").parquet(
-        os.path.join(store_root, "op", f"b{batch_id}")
+    the batch's own epoch (idempotent overwrite, replay-safe)."""
+    idempotent_parquet_write(f"{store_root}/op")(
+        batch.select(
+            F.col(order_col).cast("long").alias("o"),
+            F.col(part_col).cast("long").alias("p"),
+        ).distinct(),
+        batch_id,
     )
 
 
@@ -73,10 +60,7 @@ def stored_memberships(spark: SparkSession, store_root: str) -> DataFrame:
     """Every (order, part) membership ingested so far, deduped across
     batches (the same line replayed into two batch ids must not
     double-count a pair)."""
-    dirs = _op_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _OP_SCHEMA)
-    return spark.read.schema(_OP_SCHEMA).parquet(*dirs).distinct()
+    return read_epochs(spark, f"{store_root}/op", _OP_SCHEMA).distinct()
 
 
 def current_pairs(

@@ -6,11 +6,12 @@ reference index (centroids + reference vectors by list) is FROZEN at
 deployment (the benchmark set does not grow with the corpus), so a
 corpus vector's verdict depends only on itself and the frozen index —
 each arriving batch assigns to lists, meets the reference inside its
-list, exact-cosine verifies, and appends its flags. The merged view
-is plain union: streaming equals batch EXACTLY after any split, and
-the alarm (this batch shipped contaminated docs) fires in the batch
-where the doc ARRIVES — the operational point; a post-hoc corpus
-sweep is exactly what this replaces at 100 TB."""
+list, exact-cosine verifies, and writes its flags to its own
+epoch. The merged view is plain union: streaming equals batch
+EXACTLY after any split, and the alarm (this batch shipped
+contaminated docs) fires in the batch where the doc ARRIVES — the
+operational point; a post-hoc corpus sweep is exactly what this
+replaces at 100 TB."""
 
 from __future__ import annotations
 
@@ -19,6 +20,8 @@ from pyspark.sql import functions as F
 
 from gmall_spark.operators import ivf
 from gmall_spark.operators.similarity import _verify_pairs
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def reference_index(
@@ -70,11 +73,13 @@ def process_batch(
     centroids: list[list[float]],
     threshold: float,
     store_dir: str,
+    batch_id: int,
 ) -> DataFrame:
-    """Flag one micro-batch against the frozen reference and append;
-    returns the batch's flags (the arrival-time alarm)."""
+    """Flag one micro-batch against the frozen reference and write the
+    flags to its epoch; returns the batch's flags (the arrival-time
+    alarm)."""
     flags = batch_flags(batch_emb, ref_emb, ref_index, centroids, threshold)
-    flags.write.mode("append").parquet(f"{store_dir}/decontam_flags")
+    idempotent_parquet_write(f"{store_dir}/decontam_flags")(flags, batch_id)
     return flags
 
 
@@ -82,4 +87,4 @@ def current_flags(spark: SparkSession, store_dir: str) -> DataFrame:
     """Union of everything flagged so far — row-identical to the
     batch X220 on the arrivals (per-doc verdicts are independent
     under a frozen reference)."""
-    return spark.read.parquet(f"{store_dir}/decontam_flags")
+    return read_epochs(spark, f"{store_dir}/decontam_flags")

@@ -6,7 +6,7 @@ micro-batch of new documents is shingled, signed and banded exactly
 like the batch path, then joined against a PERSISTED signature store
 holding every previously-seen document's band hashes — so a new doc
 is checked against the whole corpus-so-far without ever rescanning
-it. The store is three append-only parquet tables:
+it. The store is three tables:
 
 - ``bands``:    (doc_id, band_idx, band_hash) — the LSH index
 - ``shingles``: (doc_id, shingles)            — for exact verification
@@ -19,9 +19,10 @@ candidate set.
 
 Two store layouts:
 
-- :class:`ParquetStore` — plain append-only parquet dirs (the simple
-  dev/test layout; the probe join shuffles the store side when the
-  batch side is too big to broadcast).
+- :class:`ParquetStore` — plain epoch-partitioned parquet dirs (the
+  simple dev/test layout; a replayed batch overwrites its own epoch
+  and probes only earlier ones; the probe join shuffles the store
+  side when the batch side is too big to broadcast).
 - :class:`BucketedStore` — the 100 TB layout (scale.write_bucketed
   composed in, VERDICT r3 task 2): the band store is BUCKETED by
   band_hash and the shingle store by doc_id, so the per-batch probe
@@ -50,6 +51,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import llm_dedup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _BANDS_SCHEMA = T.StructType(
     [
@@ -66,41 +69,29 @@ _SHINGLES_SCHEMA = T.StructType(
 )
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Read a store table, treating ONLY a missing path as 'first
-    batch: store not created yet'. Any other failure (permissions, a
-    corrupt footer) must surface — swallowing it would silently treat
-    the store as empty and permanently drop cross-batch duplicate
-    pairs (ADVICE r3)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
-
-
 class ParquetStore:
-    """Plain append-only parquet signature store (dev/test layout)."""
+    """Epoch-partitioned parquet signature store (dev/test layout);
+    ``before`` keeps the epochs before a batch id."""
 
     def __init__(self, store_dir: str):
         self.store_dir = store_dir
 
-    def bands(self, spark: SparkSession) -> DataFrame:
-        return _read_or_empty(spark, f"{self.store_dir}/bands", _BANDS_SCHEMA)
+    def bands(self, spark: SparkSession, before: int | None = None) -> DataFrame:
+        return read_epochs(spark, f"{self.store_dir}/bands", _BANDS_SCHEMA, before)
 
-    def shingles(self, spark: SparkSession) -> DataFrame:
-        return _read_or_empty(spark, f"{self.store_dir}/shingles", _SHINGLES_SCHEMA)
+    def shingles(self, spark: SparkSession, before: int | None = None) -> DataFrame:
+        return read_epochs(
+            spark, f"{self.store_dir}/shingles", _SHINGLES_SCHEMA, before
+        )
 
     def pairs(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(f"{self.store_dir}/pairs")
+        return read_epochs(spark, f"{self.store_dir}/pairs")
 
-    def append(self, pairs: DataFrame, bands: DataFrame, shingles: DataFrame) -> None:
-        pairs.write.mode("append").parquet(f"{self.store_dir}/pairs")
-        bands.write.mode("append").parquet(f"{self.store_dir}/bands")
-        shingles.write.mode("append").parquet(f"{self.store_dir}/shingles")
+    def append(
+        self, pairs: DataFrame, bands: DataFrame, shingles: DataFrame, batch_id: int
+    ) -> None:
+        for sub, df in (("pairs", pairs), ("bands", bands), ("shingles", shingles)):
+            idempotent_parquet_write(f"{self.store_dir}/{sub}")(df, batch_id)
 
 
 class BucketedStore:
@@ -116,7 +107,8 @@ class BucketedStore:
     every per-batch join is exchange-free — only the (tiny) batch
     side shuffles. Append cost is one clustered write per batch; the
     bucket count should target ~128-512 MB per bucket file at scale
-    (it must stay fixed for the table's lifetime).
+    (it must stay fixed for the table's lifetime). The catalog append
+    ignores the batch id, so a replayed batch is appended twice.
     """
 
     def __init__(self, table_prefix: str, n_buckets: int = 8):
@@ -130,10 +122,10 @@ class BucketedStore:
             return spark.table(table)
         return spark.createDataFrame([], schema)
 
-    def bands(self, spark: SparkSession) -> DataFrame:
+    def bands(self, spark: SparkSession, before: int | None = None) -> DataFrame:
         return self._table_or_empty(spark, f"{self.prefix}_bands", _BANDS_SCHEMA)
 
-    def shingles(self, spark: SparkSession) -> DataFrame:
+    def shingles(self, spark: SparkSession, before: int | None = None) -> DataFrame:
         return self._table_or_empty(
             spark, f"{self.prefix}_shingles", _SHINGLES_SCHEMA
         )
@@ -141,7 +133,9 @@ class BucketedStore:
     def pairs(self, spark: SparkSession) -> DataFrame:
         return spark.table(f"{self.prefix}_pairs")
 
-    def append(self, pairs: DataFrame, bands: DataFrame, shingles: DataFrame) -> None:
+    def append(
+        self, pairs: DataFrame, bands: DataFrame, shingles: DataFrame, batch_id: int
+    ) -> None:
         pairs.write.mode("append").format("parquet").saveAsTable(
             f"{self.prefix}_pairs"
         )
@@ -182,6 +176,7 @@ def process_batch(
     spark: SparkSession,
     batch_docs: DataFrame,
     store: str | ParquetStore | BucketedStore,
+    batch_id: int,
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -189,9 +184,10 @@ def process_batch(
     k: int = llm_dedup.MINHASH_K,
     bands: int = llm_dedup.LSH_BANDS,
 ) -> DataFrame:
-    """Dedup one micro-batch against the signature store; append the
-    verified new pairs and the batch's signatures/shingles; return the
-    new pairs (same schema as the batch operator: doc_a, doc_b, inter,
+    """Dedup one micro-batch against the signature store (the batches
+    before ``batch_id``); store the verified new pairs and the batch's
+    signatures/shingles under ``batch_id``; return the new pairs
+    (same schema as the batch operator: doc_a, doc_b, inter,
     jaccard). ``store`` is a store object (or a directory path,
     shorthand for ``ParquetStore``)."""
     if isinstance(store, str):
@@ -205,7 +201,7 @@ def process_batch(
         llm_dedup.minhash_signatures(sh, k), bands, k
     ).persist()
 
-    old_bands = store.bands(spark)
+    old_bands = store.bands(spark, before=batch_id)
     # candidates: each NEW doc against everything seen so far
     # (including this batch — within-batch pairs), canonical a < b.
     # The store probe is a SEPARATE join from the within-batch self
@@ -221,11 +217,11 @@ def process_batch(
     # member from THIS batch (never seen before), so a pair can only
     # be generated in the batch where its later member arrives; the
     # distinct above collapses multi-band collisions within it.
-    old_shingles = store.shingles(spark)
+    old_shingles = store.shingles(spark, before=batch_id)
     all_arr = old_shingles.unionByName(with_arr)
     pairs = llm_dedup.jaccard_for_arrays(cand, all_arr, threshold)
 
-    store.append(pairs, new_bands, with_arr)
+    store.append(pairs, new_bands, with_arr, batch_id)
     with_arr.unpersist()
     new_bands.unpersist()
     return pairs

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import weburl
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def batch_state(batch_docs: DataFrame) -> DataFrame:
@@ -41,12 +43,13 @@ def batch_state(batch_docs: DataFrame) -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Ingest one micro-batch: append its fine-grain counts; returns
-    the batch increment (what this batch added per provenance row)."""
+    """Ingest one micro-batch: write its fine-grain counts to its
+    epoch; returns the batch increment (what this batch added per
+    provenance row)."""
     inc = batch_state(batch_docs)
-    inc.write.mode("append").parquet(f"{store_dir}/domain_state")
+    idempotent_parquet_write(f"{store_dir}/domain_state")(inc, batch_id)
     return inc
 
 
@@ -54,9 +57,9 @@ def current_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     """The corpus-so-far domain view: re-group the state table to the
     X226 output — bit-equal to the batch query on everything
     ingested (sums add; distincts count state rows, which the
-    append-only grain keeps exact)."""
+    finer grain keeps exact)."""
     return (
-        spark.read.parquet(f"{store_dir}/domain_state")
+        read_epochs(spark, f"{store_dir}/domain_state")
         .groupBy("registered_domain")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -1,6 +1,6 @@
 """Incremental (streaming) value-distribution drift monitor — X183 as
 a continuous pipeline. The UNDERLYING state, (day, bucket) counts, is
-SUM-mergeable (the X179 equality class), so the store is per-batch
+SUM-mergeable (the X179 equality class), so the store is per-epoch
 partial grids merged at read; the chi-square terms themselves are NOT
 mergeable — the reference/current split point is the global day-span
 midpoint, which a late day can MOVE — so the report re-derives from
@@ -16,26 +16,13 @@ unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
+
 _GRID_SCHEMA = "d date, bucket long, cnt long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _grid_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "grid")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -47,28 +34,23 @@ def process_batch(
     ts_col: str = "ts",
 ) -> None:
     """Reduce one micro-batch to its (day, bucket) partial grid and
-    write it to the batch's own subdir (idempotent overwrite)."""
+    write it to the batch's own epoch (idempotent overwrite)."""
     from gmall_spark.queries_llm import DRIFT_W
 
-    (
+    idempotent_parquet_write(f"{store_root}/grid")(
         batch.select(
             F.to_date(ts_col).alias("d"),
             F.floor(F.col(value_col) / DRIFT_W).cast("bigint").alias("bucket"),
         )
         .groupBy("d", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_root, "grid", f"b{batch_id}"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
+        batch_id,
     )
 
 
 def stored_grid(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _grid_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _GRID_SCHEMA)
     return (
-        spark.read.schema(_GRID_SCHEMA)
-        .parquet(*dirs)
+        read_epochs(spark, f"{store_root}/grid", _GRID_SCHEMA)
         .groupBy("d", "bucket")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )

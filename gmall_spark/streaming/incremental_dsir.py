@@ -14,7 +14,7 @@ a quantile of the weight distribution seen so far, and grows more
 selective (in absolute weight) as target-like batches arrive.
 
 Per micro-batch: score the batch under the frozen (p, q) ratio and
-append to the batch's own store subdir (idempotent overwrite —
+write to the batch's own store epoch (idempotent overwrite —
 foreachBatch replay rewrites byte-identical rows).
 :func:`selected_docs` re-derives the kept tier from ALL stored
 weights through the exact batch cut (dsir.resample_top_fraction), so
@@ -30,27 +30,13 @@ value-space-bounded (rounded weights); the frozen ratio table is
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import dsir
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _W_SCHEMA = "doc_id long, n_feats bigint, dsir_logratio double"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _dirs(root: str) -> list[str]:
-    base = os.path.join(root, "weights")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -62,22 +48,17 @@ def process_batch(
     batch_id: int,
 ) -> None:
     """Score one micro-batch's importance weights under the frozen
-    (target, raw-sample) models and append them to the batch's own
-    subdir. Pass the SAME target/raw-sample relations every batch —
+    (target, raw-sample) models and write them to the batch's own
+    epoch. Pass the SAME target/raw-sample relations every batch —
     they are the frozen models (checkpoint them upstream)."""
-    w = dsir.importance_weights_under(
-        batch_docs, target_docs, raw_sample_docs
-    )
-    w.write.mode("overwrite").parquet(
-        os.path.join(store_root, "weights", f"b{batch_id}")
+    idempotent_parquet_write(f"{store_root}/weights")(
+        dsir.importance_weights_under(batch_docs, target_docs, raw_sample_docs),
+        batch_id,
     )
 
 
 def stored_weights(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _W_SCHEMA)
-    return spark.read.schema(_W_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/weights", _W_SCHEMA)
 
 
 def selected_docs(

@@ -19,12 +19,14 @@ single-batch X207 output on the full corpus (levenshtein is a pure
 function of the two stored texts — no order dependence anywhere).
 Asserted by tests/test_streaming.py.
 
-Store layout (ParquetStore shape): ``bands`` as in incremental_dedup
-plus ``texts`` (doc_id, text) — the edit tier verifies against raw
-text, not shingle arrays, so the store keeps the text column the
-verify needs. At 100 TB the texts table is the corpus itself (no
-amplification — it replaces, not duplicates, the shingle store) and
-the probe join is the same bucketed-band equi-join.
+Store layout (the incremental_dedup.ParquetStore shape: epoch
+stores, a batch probes the epochs before its own): ``bands``, the
+emitted ``pairs`` rows, plus ``texts`` (doc_id, text) — the edit
+tier verifies against raw text, not shingle arrays, so the store
+keeps the text column the verify needs. At 100 TB the texts table
+is the corpus itself (no amplification — it replaces, not
+duplicates, the shingle store) and the probe join is the same
+bucketed-band equi-join.
 """
 
 from __future__ import annotations
@@ -34,11 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import llm_dedup
-from gmall_spark.streaming.incremental_dedup import (
-    _BANDS_SCHEMA,
-    _read_or_empty,
-    probe_candidates,
-)
+from gmall_spark.streaming.incremental_dedup import _BANDS_SCHEMA, probe_candidates
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _TEXTS_SCHEMA = T.StructType(
     [
@@ -46,27 +46,6 @@ _TEXTS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
     ]
 )
-
-
-class EditVerifyStore:
-    """Append-only parquet store: bands + raw texts + emitted rows."""
-
-    def __init__(self, store_dir: str):
-        self.store_dir = store_dir
-
-    def bands(self, spark: SparkSession) -> DataFrame:
-        return _read_or_empty(spark, f"{self.store_dir}/bands", _BANDS_SCHEMA)
-
-    def texts(self, spark: SparkSession) -> DataFrame:
-        return _read_or_empty(spark, f"{self.store_dir}/texts", _TEXTS_SCHEMA)
-
-    def pairs(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(f"{self.store_dir}/pairs")
-
-    def append(self, pairs: DataFrame, bands: DataFrame, texts: DataFrame) -> None:
-        pairs.write.mode("append").parquet(f"{self.store_dir}/pairs")
-        bands.write.mode("append").parquet(f"{self.store_dir}/bands")
-        texts.write.mode("append").parquet(f"{self.store_dir}/texts")
 
 
 def edit_verify_rows(cand: DataFrame, texts: DataFrame, max_pct: int) -> DataFrame:
@@ -105,7 +84,8 @@ def edit_verify_rows(cand: DataFrame, texts: DataFrame, max_pct: int) -> DataFra
 def process_batch(
     spark: SparkSession,
     batch_docs: DataFrame,
-    store: str | EditVerifyStore,
+    store_dir: str,
+    batch_id: int,
     max_pct: int | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -113,16 +93,15 @@ def process_batch(
     k: int = llm_dedup.MINHASH_K,
     bands: int = llm_dedup.LSH_BANDS,
 ) -> DataFrame:
-    """Verify one micro-batch against the store; append the new rows
-    and the batch's bands/texts; return the new rows (same schema as
+    """Verify one micro-batch against the store (the batches before
+    ``batch_id``); store the new rows and the batch's bands/texts
+    under ``batch_id``; return the new rows (same schema as
     the X207 batch query: doc_a, doc_b, lev, max_len, edit_sim,
     is_near_dup)."""
     if max_pct is None:
         from gmall_spark.queries_llm import EDIT_SIM_MAX_PCT
 
         max_pct = EDIT_SIM_MAX_PCT
-    if isinstance(store, str):
-        store = EditVerifyStore(store)
     txt = batch_docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("text"),
@@ -134,21 +113,22 @@ def process_batch(
         llm_dedup.minhash_signatures(sh, k), bands, k
     ).persist()
 
+    old_bands = read_epochs(spark, f"{store_dir}/bands", _BANDS_SCHEMA, batch_id)
+    old_texts = read_epochs(spark, f"{store_dir}/texts", _TEXTS_SCHEMA, batch_id)
     cand = (
         probe_candidates(new_bands, new_bands)
-        .unionByName(probe_candidates(new_bands, store.bands(spark)))
+        .unionByName(probe_candidates(new_bands, old_bands))
         .distinct()
     )
-    rows = edit_verify_rows(cand, store.texts(spark).unionByName(txt), max_pct)
+    rows = edit_verify_rows(cand, old_texts.unionByName(txt), max_pct)
 
-    store.append(rows, new_bands, txt)
+    for sub, df in (("pairs", rows), ("bands", new_bands), ("texts", txt)):
+        idempotent_parquet_write(f"{store_dir}/{sub}")(df, batch_id)
     txt.unpersist()
     new_bands.unpersist()
     return rows
 
 
-def emitted_rows(spark: SparkSession, store: str | EditVerifyStore) -> DataFrame:
+def emitted_rows(spark: SparkSession, store_dir: str) -> DataFrame:
     """All rows emitted so far (union over processed batches)."""
-    if isinstance(store, str):
-        store = EditVerifyStore(store)
-    return store.pairs(spark)
+    return read_epochs(spark, f"{store_dir}/pairs")

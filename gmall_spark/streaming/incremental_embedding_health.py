@@ -10,36 +10,23 @@ per-batch state is keyed BY width — the distinct count happens at the
 read over the merged keys. So streaming state after ANY batch split
 is EXACTLY the batch audit over the union, bit-identical.
 
-Idempotence comes from the per-batch-subdir overwrite (the CMS/
-value-hist pattern). At 100 TB the subdirs become date partitions and
+Idempotence comes from the per-epoch overwrite (the value-hist
+pattern). At 100 TB the epochs become date partitions and
 current_health a scheduled rollup, unchanged.
 """
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _DIM_SCHEMA = "dim long, dim_min double, dim_max double, zeros long"
 _CORPUS_SCHEMA = (
     "width int, n_vectors long, nan_vectors long, zero_vectors long"
 )
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _dirs(root: str, sub: str) -> list[str]:
-    base = os.path.join(root, sub)
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -50,7 +37,7 @@ def process_batch(
 ) -> None:
     """Audit one micro-batch of (vec_id, embedding) rows: per-dim
     envelope partials and per-WIDTH corpus counters, each to the
-    batch's own subdir (idempotent overwrite)."""
+    batch's own epoch (idempotent overwrite)."""
     e = batch_emb.select(
         F.size("embedding").alias("width"),
         F.aggregate(
@@ -95,26 +82,16 @@ def process_batch(
             .alias("zeros"),
         )
     )
-    dims.write.mode("overwrite").parquet(
-        os.path.join(store_root, "dims", f"b{batch_id}")
-    )
-    corpus.write.mode("overwrite").parquet(
-        os.path.join(store_root, "corpus", f"b{batch_id}")
-    )
+    idempotent_parquet_write(f"{store_root}/dims")(dims, batch_id)
+    idempotent_parquet_write(f"{store_root}/corpus")(corpus, batch_id)
 
 
 def stored_dims(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root, "dims")
-    if not dirs:
-        return spark.createDataFrame([], _DIM_SCHEMA)
-    return spark.read.schema(_DIM_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/dims", _DIM_SCHEMA)
 
 
 def stored_corpus(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root, "corpus")
-    if not dirs:
-        return spark.createDataFrame([], _CORPUS_SCHEMA)
-    return spark.read.schema(_CORPUS_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/corpus", _CORPUS_SCHEMA)
 
 
 def current_health(spark: SparkSession, store_root: str) -> DataFrame:

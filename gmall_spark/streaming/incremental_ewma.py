@@ -2,9 +2,8 @@
 pipeline. The decomposition is the point: the EWMA fold itself is
 order-sensitive and NOT mergeable, but the (type, day) COUNT rollup
 underneath it is plain addition — so state is the sum-merged day
-grid (per-batch delta subdirs, idempotent overwrite, replay-safe via
-re-derivation from immutable deltas... a replayed batch overwrites
-its own subdir with identical counts), and the forecast RE-DERIVES
+grid (per-epoch deltas, idempotent overwrite: a replayed batch
+overwrites its own epoch with identical counts), and the forecast RE-DERIVES
 by folding the merged series through the exact batch operator's
 arithmetic. Consequences the tests pin:
 
@@ -22,26 +21,13 @@ over the grid only.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
+
 _DELTA_SCHEMA = "event_type string, d date, cnt long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _dirs(root: str) -> list[str]:
-    base = os.path.join(root, "days")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -51,21 +37,18 @@ def process_batch(
     batch_id: int,
 ) -> None:
     """Append one micro-batch's (type, day) count delta to the
-    batch's own subdir (idempotent overwrite, replay-safe)."""
-    batch.groupBy(
-        "event_type", F.to_date(F.col("ts").cast("timestamp")).alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store_root, "days", f"b{batch_id}"))
+    batch's own epoch (idempotent overwrite, replay-safe)."""
+    idempotent_parquet_write(f"{store_root}/days")(
+        batch.groupBy(
+            "event_type", F.to_date(F.col("ts").cast("timestamp")).alias("d")
+        ).agg(F.count(F.lit(1)).cast("long").alias("cnt")),
+        batch_id,
+    )
 
 
 def merged_days(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _DELTA_SCHEMA)
     return (
-        spark.read.schema(_DELTA_SCHEMA)
-        .parquet(*dirs)
+        read_epochs(spark, f"{store_root}/days", _DELTA_SCHEMA)
         .groupBy("event_type", "d")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )

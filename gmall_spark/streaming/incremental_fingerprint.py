@@ -2,7 +2,7 @@
 (the X179 SUM-merge equality class): all four statistics (doc count,
 char volume, content/id hash sums) are plain integer sums, so the
 stored per-batch partials merge EXACTLY and streaming == batch after
-any split, bit for bit. Idempotence via the per-batch-subdir
+any split, bit for bit. Idempotence via the per-epoch
 overwrite. The running fingerprint is the live 'what data have I
 ingested?' stamp an ingest service exposes — two pipelines that
 agree on it hold the same corpus with overwhelming probability.
@@ -10,28 +10,15 @@ agree on it hold the same corpus with overwhelming probability.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _FP_SCHEMA = (
     "n_docs long, n_chars long, content_sum decimal(38,0), id_sum decimal(38,0)"
 )
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _fp_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "fp")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -42,7 +29,7 @@ def process_batch(
 ) -> None:
     """Reduce one micro-batch of (doc_id, text) rows to its partial
     fingerprint row (idempotent overwrite)."""
-    (
+    idempotent_parquet_write(f"{store_root}/fp")(
         batch_docs.selectExpr(
             "cast(conv(substring(md5(concat(cast(doc_id as string), ':', text)), 1, 15), 16, 10) as decimal(38,0)) AS ch",
             "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as decimal(38,0)) AS ih",
@@ -53,25 +40,17 @@ def process_batch(
             F.sum("len").cast("long").alias("n_chars"),
             F.sum("ch").cast("decimal(38,0)").alias("content_sum"),
             F.sum("ih").cast("decimal(38,0)").alias("id_sum"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_root, "fp", f"b{batch_id}"))
+        ),
+        batch_id,
     )
 
 
 def current_fingerprint(spark: SparkSession, store_root: str) -> DataFrame:
     """The fingerprint over every batch so far — EXACTLY the batch
     operator on the union (integer sums merge)."""
-    dirs = _fp_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _FP_SCHEMA)
-    return (
-        spark.read.schema(_FP_SCHEMA)
-        .parquet(*dirs)
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-            F.sum("content_sum").cast("decimal(38,0)").alias("content_sum"),
-            F.sum("id_sum").cast("decimal(38,0)").alias("id_sum"),
-        )
+    return read_epochs(spark, f"{store_root}/fp", _FP_SCHEMA).agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("n_chars"),
+        F.sum("content_sum").cast("decimal(38,0)").alias("content_sum"),
+        F.sum("id_sum").cast("decimal(38,0)").alias("id_sum"),
     )

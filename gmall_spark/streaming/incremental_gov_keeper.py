@@ -5,12 +5,12 @@ the EXACT-MIRROR grain (group key = the X6 canonical text hash — a
 pure per-row function, so group identity is stable across any batch
 split; the "blocklist silently deletes content that has a perfectly
 releasable mirror" case IS the exact-duplicate case). Two state
-relations, both append-mergeable:
+relations, each an epoch store that merges by union:
 
   - candidates: (text_hash, doc_id, registered_domain, n_words) per
     ingested document, derived with the IDENTICAL canonical-hash +
     synth-url + canonicalize chain the batch queries run;
-  - the opt-out REGISTER: registered domains appended over time — the
+  - the opt-out REGISTER: registered domains added over time — the
     retroactivity axis. The frozen X241 lists are plan literals; the
     register is the part of governance that genuinely arrives late
     (takedown notices, licensing changes).
@@ -37,7 +37,8 @@ from pyspark.sql import types as T
 from gmall_spark.functions import text as TX
 from gmall_spark.operators import weburl
 from gmall_spark.queries_llm.web_tier import DOMAIN_BLOCKLIST, DOMAIN_OPTOUT
-from gmall_spark.streaming.incremental_dedup import _read_or_empty
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _CAND_SCHEMA = T.StructType(
     [
@@ -118,21 +119,24 @@ def _keepers(cands: DataFrame, register: DataFrame) -> DataFrame:
     )
 
 
-def current_keepers(spark: SparkSession, store_dir: str) -> DataFrame:
+def current_keepers(
+    spark: SparkSession,
+    store_dir: str,
+    docs_before: int | None = None,
+    optouts_before: int | None = None,
+) -> DataFrame:
     """The corpus-so-far keeper view — row-identical to a batch
     election over everything ingested with the full register (the
-    election's total order is associative over ingest splits)."""
+    election's total order is associative over ingest splits). The
+    ``*_before`` bounds restrict each store to its earlier epochs."""
     return _keepers(
-        _read_or_empty(spark, f"{store_dir}/gov_candidates", _CAND_SCHEMA),
-        _read_or_empty(spark, f"{store_dir}/gov_optout_register", _REG_SCHEMA),
+        read_epochs(
+            spark, f"{store_dir}/gov_candidates", _CAND_SCHEMA, docs_before
+        ),
+        read_epochs(
+            spark, f"{store_dir}/gov_optout_register", _REG_SCHEMA, optouts_before
+        ),
     )
-
-
-def _snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
-    # materialize the BEFORE view eagerly: the scans are lazy and a
-    # plan executed after an append would re-list the paths and see
-    # the new files (the incremental_sft_keeper lesson)
-    return current_keepers(spark, store_dir).localCheckpoint(eager=True)
 
 
 def _moves(before: DataFrame, after: DataFrame) -> DataFrame:
@@ -169,28 +173,33 @@ def _moves(before: DataFrame, after: DataFrame) -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest one document micro-batch; returns the keeper-move log
     (new groups enter with old_keeper NULL; a better-quality or
     earlier-id mirror displaces, exactly the batch election's say)."""
-    before = _snapshot(spark, store_dir)
-    batch_candidates(batch_docs).write.mode("append").parquet(
-        f"{store_dir}/gov_candidates"
+    before = current_keepers(spark, store_dir, docs_before=batch_id)
+    idempotent_parquet_write(f"{store_dir}/gov_candidates")(
+        batch_candidates(batch_docs), batch_id
     )
-    return _moves(before, current_keepers(spark, store_dir))
+    return _moves(
+        before, current_keepers(spark, store_dir, docs_before=batch_id + 1)
+    )
 
 
 def process_optout(
-    spark: SparkSession, domains: list[str], store_dir: str
+    spark: SparkSession, domains: list[str], store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest LATE-ARRIVING opt-out register entries; returns the
     RESTORATION log: groups whose keeper changed retroactively — the
     gated keeper's previously pruned mirror becomes the
     representative (new_keeper on a surviving domain), or the group
-    honestly leaves the release (new_keeper NULL)."""
-    before = _snapshot(spark, store_dir)
-    spark.createDataFrame(
-        [(d,) for d in domains], _REG_SCHEMA
-    ).write.mode("append").parquet(f"{store_dir}/gov_optout_register")
-    return _moves(before, current_keepers(spark, store_dir))
+    honestly leaves the release (new_keeper NULL). ``batch_id`` numbers
+    the register's own epochs."""
+    before = current_keepers(spark, store_dir, optouts_before=batch_id)
+    idempotent_parquet_write(f"{store_dir}/gov_optout_register")(
+        spark.createDataFrame([(d,) for d in domains], _REG_SCHEMA), batch_id
+    )
+    return _moves(
+        before, current_keepers(spark, store_dir, optouts_before=batch_id + 1)
+    )

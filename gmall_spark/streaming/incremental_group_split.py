@@ -20,8 +20,9 @@ proven incremental_dedup theorem), then re-close the transitive
 groups over ALL pairs emitted so far (the pairs table is duplicate-
 density-bounded, never corpus-sized), re-derive every seen doc's
 split with the IDENTICAL md5 expression the batch query uses, diff
-against the previous assignment snapshot, and append the new snapshot
-(versioned by batch) plus the move log.
+against the previous assignment snapshot, and write the new snapshot
+plus the move log to the batch's epoch (a replay diffs against the
+same earlier snapshot and overwrites both).
 
 Batch-equals-streaming: the final snapshot equals the batch X210
 output on the full corpus — same pairs => same components => same
@@ -32,9 +33,9 @@ train->val move).
 
 Scale shape: group re-closure runs on the pair graph (bounded by
 duplicate density); the assignment join is group-table-broadcast vs
-one pass over seen doc ids; snapshots append (batch_id, doc_id,
-group_key, split) — at 100 TB the snapshot is a partitioned table and
-the diff joins the last two partitions only.
+one pass over seen doc ids; each snapshot is one epoch of (batch_id,
+doc_id, group_key, split) — at 100 TB the diff joins the last two
+epochs only.
 """
 
 from __future__ import annotations
@@ -45,6 +46,8 @@ from pyspark.sql import types as T
 
 from gmall_spark.operators import components
 from gmall_spark.streaming import incremental_dedup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _ASSIGN_SCHEMA = T.StructType(
     [
@@ -56,17 +59,14 @@ _ASSIGN_SCHEMA = T.StructType(
 )
 
 
-def _assign(spark: SparkSession, store_dir: str) -> DataFrame:
-    return incremental_dedup._read_or_empty(
-        spark, f"{store_dir}/assign", _ASSIGN_SCHEMA
-    )
-
-
-def current_assignment(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The latest snapshot: (doc_id, group_key, split) rows of the
-    max batch_id (the two-column read a partitioned table serves from
-    its last partition)."""
-    a = _assign(spark, store_dir)
+def current_assignment(
+    spark: SparkSession, store_dir: str, before: int | None = None
+) -> DataFrame:
+    """The latest snapshot (of the batches before ``before``, all by
+    default): (doc_id, group_key, split) rows of the max batch_id
+    (the two-column read a partitioned table serves from its last
+    partition)."""
+    a = read_epochs(spark, f"{store_dir}/assign", _ASSIGN_SCHEMA, before)
     last = a.agg(F.max("batch_id").alias("b"))
     return (
         a.join(F.broadcast(last), a.batch_id == last.b)
@@ -76,7 +76,7 @@ def current_assignment(spark: SparkSession, store_dir: str) -> DataFrame:
 
 def moves(spark: SparkSession, store_dir: str) -> DataFrame:
     """The retroactive-move log accumulated across batches."""
-    return spark.read.parquet(f"{store_dir}/moves")
+    return read_epochs(spark, f"{store_dir}/moves")
 
 
 def process_batch(
@@ -89,7 +89,7 @@ def process_batch(
 ) -> DataFrame:
     """Ingest one micro-batch: dedup it against the store, re-derive
     every seen doc's group-aware split, log the docs whose split
-    MOVED since the previous snapshot, append the new snapshot.
+    MOVED since the previous snapshot, write the new snapshot.
     Returns the move log rows for this batch (doc_id, old_split,
     new_split, old_group_key, new_group_key)."""
     from gmall_spark.queries_llm import NEAR_DUP_THRESHOLD, _SPLIT_SQL_SPARK
@@ -102,6 +102,7 @@ def process_batch(
             F.col(text_col).alias("text"),
         ),
         store,
+        batch_id,
         NEAR_DUP_THRESHOLD,
     )
 
@@ -119,7 +120,7 @@ def process_batch(
         .persist()
     )
 
-    prev = current_assignment(spark, store_dir)
+    prev = current_assignment(spark, store_dir, before=batch_id)
     moved = (
         new.alias("n")
         .join(prev.alias("p"), "doc_id")
@@ -134,14 +135,15 @@ def process_batch(
         )
         .persist()
     )
-    moved.write.mode("append").parquet(f"{store_dir}/moves")
-    new.selectExpr(
-        f"cast({batch_id} as long) AS batch_id", "doc_id", "group_key", "split"
-    ).write.mode("append").parquet(f"{store_dir}/assign")
+    idempotent_parquet_write(f"{store_dir}/moves")(moved, batch_id)
+    idempotent_parquet_write(f"{store_dir}/assign")(
+        new.selectExpr(
+            f"cast({batch_id} as long) AS batch_id", "doc_id", "group_key", "split"
+        ),
+        batch_id,
+    )
     new.unpersist()
     moved.unpersist()
-    # return the WRITTEN rows, not the live plan: the lazy plan reads
-    # current_assignment(), which this batch's append just changed —
-    # re-evaluating it later would silently diff against the wrong
-    # snapshot. The parquet read is immutable.
+    # return the WRITTEN rows, not the live plan: re-evaluating the
+    # lazy plan would redo the group closure over the pair store
     return moves(spark, store_dir).filter(F.col("batch_id") == batch_id)

@@ -8,7 +8,7 @@ view after any batch split is EXACTLY the batch rollup. The
 operational shape: a WET ingest job publishes the running extraction
 report per batch instead of re-scanning the crawl.
 
-State: one tiny parquet row per batch (n_docs, total_raw_chars,
+State: one tiny parquet row per batch epoch (n_docs, total_raw_chars,
 total_text_chars, min_share_raw, max_share_raw) — shares ride RAW
 (un-rounded is impossible here: the per-row share is already a
 deterministic double both engines compute identically from exact
@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import markup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def batch_rollup(batch_docs: DataFrame) -> DataFrame:
@@ -41,11 +43,11 @@ def batch_rollup(batch_docs: DataFrame) -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Extract one micro-batch and append its rollup row."""
+    """Extract one micro-batch and write its rollup row to its epoch."""
     roll = batch_rollup(batch_docs)
-    roll.write.mode("append").parquet(f"{store_dir}/html_rollup")
+    idempotent_parquet_write(f"{store_dir}/html_rollup")(roll, batch_id)
     return roll
 
 
@@ -55,7 +57,7 @@ def current_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     envelope is min-of-mins / max-of-maxes, the share divides once
     at the end)."""
     return (
-        spark.read.parquet(f"{store_dir}/html_rollup")
+        read_epochs(spark, f"{store_dir}/html_rollup")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
             F.sum("total_raw_chars").cast("bigint").alias("total_raw_chars"),

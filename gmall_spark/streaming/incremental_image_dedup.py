@@ -10,14 +10,14 @@ is the GROUP structure: a later arrival can join an existing group
 (growing its size) or bridge two fingerprints within Hamming range —
 and with representative = min doc_id, an arrival carrying a smaller
 id retroactively re-labels every earlier member of its group.
-Re-grouping is append-only re-derivation, never a retraction of
-ingested data.
+Re-grouping is re-derivation, never a retraction of ingested
+data.
 
 Per micro-batch:
 
 1. hash the batch's image blobs through the REAL decode path;
 2. write (doc_id, decode_ok, dhash_hex, dhash_bytes) to the batch's
-   own store subdir (``fps/b<id>`` — an idempotent overwrite).
+   own epoch (``fps/epoch=<id>`` — an idempotent overwrite).
 
 :func:`current_groups` derives the group assignment from the MERGED
 fingerprint store through the exact batch operator
@@ -37,29 +37,15 @@ layout carries over unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import multimodal
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _FP_SCHEMA = (
     "doc_id long, decode_ok boolean, dhash_hex string, dhash_bytes array<int>"
 )
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _fp_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "fps")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -69,22 +55,20 @@ def process_batch(
     batch_id: int,
 ) -> None:
     """Hash one micro-batch of (doc_id, blob) rows through the real
-    decode path and append the fingerprints to the batch's own
-    subdir. Replay-safe: hashing is deterministic and the write is a
-    per-batch-subdir overwrite."""
-    multimodal.image_hashes(batch_blobs).select(
-        "doc_id", "decode_ok", "dhash_hex", "dhash_bytes"
-    ).write.mode("overwrite").parquet(
-        os.path.join(store_root, "fps", f"b{batch_id}")
+    decode path and write the fingerprints to the batch's own
+    epoch. Replay-safe: hashing is deterministic and the write is a
+    per-epoch overwrite."""
+    idempotent_parquet_write(f"{store_root}/fps")(
+        multimodal.image_hashes(batch_blobs).select(
+            "doc_id", "decode_ok", "dhash_hex", "dhash_bytes"
+        ),
+        batch_id,
     )
 
 
 def stored_fingerprints(spark: SparkSession, store_root: str) -> DataFrame:
     """Every fingerprint ingested so far."""
-    dirs = _fp_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _FP_SCHEMA)
-    return spark.read.schema(_FP_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/fps", _FP_SCHEMA)
 
 
 def current_groups(

@@ -2,7 +2,7 @@
 streaming twin, the same deployment shape as incremental_image_dedup
 (X140): fingerprints are FROZEN at ingest (pHash is deterministic
 through the real decode -> canvas-normalize -> DCT path), each
-micro-batch overwrites its own store subdir idempotently, and the
+micro-batch overwrites its own store epoch idempotently, and the
 GROUP structure is re-derived from the merged fingerprint store
 through the exact batch operator — so any batch split is
 row-identical to one big batch, including retroactive rep_id
@@ -16,29 +16,15 @@ current_groups a scheduled rollup, unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import multimodal
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _FP_SCHEMA = (
     "doc_id long, decode_ok boolean, phash_hex string, phash_bytes array<int>"
 )
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _fp_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "fps")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -49,21 +35,19 @@ def process_batch(
 ) -> None:
     """pHash one micro-batch of (doc_id, blob) rows through the real
     decode/DCT path and write the fingerprints to the batch's own
-    subdir. Replay-safe: hashing is deterministic and the write is a
-    per-batch-subdir overwrite."""
-    multimodal.image_phash(batch_blobs).select(
-        "doc_id", "decode_ok", "phash_hex", "phash_bytes"
-    ).write.mode("overwrite").parquet(
-        os.path.join(store_root, "fps", f"b{batch_id}")
+    epoch. Replay-safe: hashing is deterministic and the write is a
+    per-epoch overwrite."""
+    idempotent_parquet_write(f"{store_root}/fps")(
+        multimodal.image_phash(batch_blobs).select(
+            "doc_id", "decode_ok", "phash_hex", "phash_bytes"
+        ),
+        batch_id,
     )
 
 
 def stored_fingerprints(spark: SparkSession, store_root: str) -> DataFrame:
     """Every fingerprint ingested so far."""
-    dirs = _fp_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _FP_SCHEMA)
-    return spark.read.schema(_FP_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/fps", _FP_SCHEMA)
 
 
 def current_groups(

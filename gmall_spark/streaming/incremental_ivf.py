@@ -7,9 +7,10 @@ INGESTS — new vectors arrive continuously and must become searchable
 without re-indexing the corpus. This module is that path, in the
 faiss-at-scale shape: the coarse quantizer (centroids) is FIXED
 (trained offline on a bounded sample, retrained out-of-band when
-drift warrants — assignments are append-only between retrains), and
+drift warrants — assignments are immutable between retrains), and
 each micro-batch is one embarrassingly-parallel gemm assignment pass
-appended to a list_id-PARTITIONED parquet store. Probing reads ONLY
+written to its own ``epoch=<batch_id>`` partition of the store,
+sub-partitioned by list_id. Probing reads ONLY
 the nprobe matching partitions (partition pruning at the scan —
 asserted on the plan), so query cost tracks nprobe/n_lists of the
 corpus no matter how many batches have been ingested.
@@ -28,24 +29,29 @@ from pyspark.sql import functions as F
 
 from gmall_spark.functions.vectors import cosine
 from gmall_spark.operators import ivf
+from gmall_spark.streaming.store import read_epochs
 
 
 def process_batch(
     batch: DataFrame,
     centroids: list[list[float]],
     store_dir: str,
+    batch_id: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Assign one micro-batch against the FIXED coarse quantizer and
-    append it to the partitioned index store."""
-    assigned = ivf.build_index(batch, centroids, id_col, vec_col)
-    assigned.write.mode("append").partitionBy("list_id").parquet(store_dir)
+    overwrite its epoch of the index store (runner
+    .idempotent_parquet_write's layout, plus the list_id partitioning
+    that lets a probe prune)."""
+    ivf.build_index(batch, centroids, id_col, vec_col).write.mode(
+        "overwrite"
+    ).partitionBy("list_id").parquet(f"{store_dir}/epoch={batch_id}")
 
 
 def read_index(spark: SparkSession, store_dir: str) -> DataFrame:
     """The index as of the last completed batch."""
-    return spark.read.parquet(store_dir)
+    return read_epochs(spark, store_dir)
 
 
 def topk_from_store(

@@ -13,7 +13,7 @@ consequences the tests pin:
 - **replay-safe for free**: min-union is idempotent, so a foreachBatch
   retry that re-merges the same batch leaves the store unchanged — no
   batch-id bookkeeping needed (unlike the CMS store, whose SUM-merge
-  relies on the per-batch-subdir overwrite for idempotence).
+  relies on the per-epoch overwrite for idempotence).
 
 The store rewrite is O(K) rows regardless of ingested volume; the
 swap is the atomic pointer rename of :mod:`gmall_spark.streaming

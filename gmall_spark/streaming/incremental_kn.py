@@ -26,43 +26,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import lm
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest one micro-batch of (doc_id, lang, text): training docs
     (doc_id even, the X112/X218 split) fold into the SUM-merged
-    count store; eval docs (odd) append to the raw store. Returns
-    the batch's eval docs scored under the model as of this batch."""
+    count store; eval docs (odd) go to the raw store, each in the
+    batch's epoch. Returns the batch's eval docs scored under the
+    model as of this batch."""
     train = batch_docs.filter(F.col("doc_id") % 2 == 0)
     evals = batch_docs.filter(F.col("doc_id") % 2 == 1)
-    lm.kn_bigram_counts(train).write.mode("append").parquet(
-        f"{store_dir}/kn_counts"
+    idempotent_parquet_write(f"{store_dir}/kn_counts")(
+        lm.kn_bigram_counts(train), batch_id
     )
-    evals.select("doc_id", "lang", "text").write.mode("append").parquet(
-        f"{store_dir}/kn_eval"
+    idempotent_parquet_write(f"{store_dir}/kn_eval")(
+        evals.select("doc_id", "lang", "text"), batch_id
     )
-    return lm.kn_score_with_model(evals, _current_model(spark, store_dir))
-
-
-def _merged_counts(spark: SparkSession, store_dir: str) -> DataFrame:
-    return (
-        spark.read.parquet(f"{store_dir}/kn_counts")
-        .groupBy("lang", "b")
-        .agg(F.sum("c").alias("c"))
+    return lm.kn_score_with_model(
+        evals, _current_model(spark, store_dir, before=batch_id + 1)
     )
 
 
-def _current_model(spark: SparkSession, store_dir: str) -> DataFrame:
-    return lm.kn_model_from_counts(_merged_counts(spark, store_dir))
+def _current_model(
+    spark: SparkSession, store_dir: str, before: int | None = None
+) -> DataFrame:
+    counts = read_epochs(spark, f"{store_dir}/kn_counts", before=before)
+    return lm.kn_model_from_counts(
+        counts.groupBy("lang", "b").agg(F.sum("c").alias("c"))
+    )
 
 
 def current_scores(spark: SparkSession, store_dir: str) -> DataFrame:
     """Every ingested eval doc re-scored under the merged count
     table — bit-equal to the batch X218 on the union of everything
     ingested (same model algebra over the same counts)."""
-    evals = spark.read.parquet(f"{store_dir}/kn_eval")
+    evals = read_epochs(spark, f"{store_dir}/kn_eval")
     return lm.kn_score_with_model(evals, _current_model(spark, store_dir))
 
 

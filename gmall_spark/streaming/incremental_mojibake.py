@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import mojibake
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -40,22 +42,23 @@ def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Scan one micro-batch (already-corrupted text arrives on the
-    wire; the synth step belongs to the test harness) and append its
-    per-pattern counts; returns the batch's counts (the alarm view)."""
+    wire; the synth step belongs to the test harness) and write its
+    per-pattern counts to its epoch; returns the batch's counts (the
+    alarm view)."""
     counts = batch_counts(batch_docs)
-    counts.write.mode("append").parquet(f"{store_dir}/mojibake_counts")
+    idempotent_parquet_write(f"{store_dir}/mojibake_counts")(counts, batch_id)
     return counts
 
 
 def current_counts(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged corpus-so-far census: per pattern, the SUM over all
-    batch versions — bit-equal to the batch query on everything
+    batch epochs — bit-equal to the batch query on everything
     ingested (integer addition, order-free)."""
     return (
-        spark.read.parquet(f"{store_dir}/mojibake_counts")
+        read_epochs(spark, f"{store_dir}/mojibake_counts")
         .groupBy("pattern")
         .agg(
             F.sum("docs_hit").cast("bigint").alias("docs_hit"),

@@ -11,10 +11,10 @@ candidate verdict is NOT final at arrival, and the twin ships the
 revocation log instead of silently keeping stale verdicts (the X210
 re-derive honesty: state merges, artifacts re-derive).
 
-State, both append-mergeable at prompt grain:
+State, two epoch stores at prompt grain that merge by union:
   - candidates: (doc_id, toks, n_tok, blk) per ingested candidate doc,
     derived with the IDENTICAL turns -> prompt -> token chain;
-  - seeds: same shape, appended by seed batches (the retroactivity
+  - seeds: same shape, written by seed batches (the retroactivity
     axis).
 
 The verdict view re-derives per candidate from the blocked pairs over
@@ -25,7 +25,7 @@ is a pure function of the prompt. The LCS is the registered
 functions/text.lcs_length (Arrow-batched integer DP since r13);
 every expression matches the batch query's.
 
-Scale shape: candidate and seed stores append at prompt grain; the
+Scale shape: candidate and seed stores grow at prompt grain; the
 verdict re-derive is one prefix-keyed join (candidates x merged
 seeds) + a candidate-keyed aggregate — at production the re-derive is
 scoped to the PREFIX BLOCKS a seed batch touches (the dirty-block
@@ -42,7 +42,8 @@ from pyspark.sql import types as T
 from gmall_spark.functions import text as TX
 from gmall_spark.operators import sft
 from gmall_spark.queries_llm.sft_classifier import ROUGEL_DEN, ROUGEL_NUM
-from gmall_spark.streaming.incremental_dedup import _read_or_empty
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _POOL_SCHEMA = T.StructType(
     [
@@ -127,49 +128,47 @@ def _verdicts(cands: DataFrame, seeds: DataFrame) -> DataFrame:
     )
 
 
-def current_verdicts(spark: SparkSession, store_dir: str) -> DataFrame:
+def current_verdicts(
+    spark: SparkSession, store_dir: str, seeds_before: int | None = None
+) -> DataFrame:
     """The corpus-so-far gate view — row-identical to the batch gate
     over everything ingested (max-over-seeds is associative over any
-    split of the seed pool)."""
+    split of the seed pool). ``seeds_before`` keeps the seed epochs
+    before it."""
     return _verdicts(
-        _read_or_empty(spark, f"{store_dir}/novelty_candidates", _POOL_SCHEMA),
-        _read_or_empty(spark, f"{store_dir}/novelty_seeds", _POOL_SCHEMA),
+        read_epochs(spark, f"{store_dir}/novelty_candidates", _POOL_SCHEMA),
+        read_epochs(spark, f"{store_dir}/novelty_seeds", _POOL_SCHEMA, seeds_before),
     )
 
 
-def _snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
-    return current_verdicts(spark, store_dir).localCheckpoint(eager=True)
-
-
 def process_candidates(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest a candidate micro-batch; returns THE BATCH's verdicts
     against the seed pool as of now (what the generation loop acts
     on)."""
     rows = prompt_rows(batch_docs).localCheckpoint(eager=True)
-    rows.write.mode("append").parquet(f"{store_dir}/novelty_candidates")
-    seeds = _read_or_empty(
-        spark, f"{store_dir}/novelty_seeds", _POOL_SCHEMA
-    )
+    idempotent_parquet_write(f"{store_dir}/novelty_candidates")(rows, batch_id)
+    seeds = read_epochs(spark, f"{store_dir}/novelty_seeds", _POOL_SCHEMA)
     return _verdicts(rows, seeds)
 
 
 def process_seeds(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest a LATE-ARRIVING seed batch; returns the REVOCATION log:
     candidates whose verdict changed retroactively (novel -> rejected
-    because a new seed collides, plus any rougel_max/nearest moves)."""
-    before = _snapshot(spark, store_dir).select(
+    because a new seed collides, plus any rougel_max/nearest moves).
+    ``batch_id`` numbers the seed store's own epochs."""
+    before = current_verdicts(spark, store_dir, seeds_before=batch_id).select(
         "doc_id",
         F.col("novel").alias("old_novel"),
         F.col("rougel_max").alias("old_rougel_max"),
     )
-    prompt_rows(batch_docs).write.mode("append").parquet(
-        f"{store_dir}/novelty_seeds"
+    idempotent_parquet_write(f"{store_dir}/novelty_seeds")(
+        prompt_rows(batch_docs), batch_id
     )
-    after = current_verdicts(spark, store_dir)
+    after = current_verdicts(spark, store_dir, seeds_before=batch_id + 1)
     return (
         after.join(before, "doc_id")
         .filter(

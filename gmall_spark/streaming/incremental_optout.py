@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 from gmall_spark.operators import weburl
 from gmall_spark.queries_llm.web_tier import DOMAIN_BLOCKLIST, DOMAIN_OPTOUT
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def _gated(batch_docs: DataFrame) -> DataFrame:
@@ -67,18 +69,18 @@ def _state_from_gated(g: DataFrame) -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Ingest one micro-batch: append its domain counters; returns the
-    batch's per-doc verdicts (final at arrival — what a crawl gate
+    """Ingest one micro-batch: write its domain counters to its epoch;
+    returns the batch's per-doc verdicts (final at arrival — what a crawl gate
     acts on immediately)."""
     # run the synth_url + canonicalize chain ONCE per batch and derive
-    # both the appended counters and the returned verdicts from the
+    # both the written counters and the returned verdicts from the
     # materialized result (ADVICE r11: batch_state(batch_docs) used to
     # re-run the whole gate chain a second time for the state write)
     g = _gated(batch_docs).localCheckpoint(eager=True)
-    _state_from_gated(g).write.mode("append").parquet(
-        f"{store_dir}/optout_state"
+    idempotent_parquet_write(f"{store_dir}/optout_state")(
+        _state_from_gated(g), batch_id
     )
     return g.select(
         "doc_id",
@@ -94,7 +96,7 @@ def process_batch(
 
 def _merged(spark: SparkSession, store_dir: str) -> DataFrame:
     return (
-        spark.read.parquet(f"{store_dir}/optout_state")
+        read_epochs(spark, f"{store_dir}/optout_state")
         .groupBy("registered_domain")
         .agg(
             *[

@@ -3,7 +3,7 @@ continuous pipeline, the X156 re-derive class: pack assignment is
 NOT mergeable (a bucket's rule choice and cumsum chop depend on the
 bucket's GLOBAL census, so a late doc can re-pack its whole bucket),
 but the per-doc token length IS frozen at ingest. Each micro-batch
-writes its (doc_id, n_tok) rows to its own store subdir
+writes its (doc_id, n_tok) rows to its own store epoch
 (idempotent overwrite); :func:`current_packs` re-derives the packed
 table from the merged length store through the exact batch operator
 (queries_llm.pack_rows), so after ANY batch split the result is
@@ -19,25 +19,12 @@ regenerates its epoch manifest when the corpus grows.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
+
 _LEN_SCHEMA = "doc_id long, n_tok long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _len_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "lens")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -48,17 +35,14 @@ def process_batch(
 ) -> None:
     """Persist one micro-batch's (doc_id, n_tok) rows — n_tok already
     clamped to [1, cap] by the caller's tokenizer stage — to the
-    batch's own subdir (replay-safe overwrite)."""
-    batch_lens.select("doc_id", "n_tok").write.mode("overwrite").parquet(
-        os.path.join(store_root, "lens", f"b{batch_id}")
+    batch's own epoch (replay-safe overwrite)."""
+    idempotent_parquet_write(f"{store_root}/lens")(
+        batch_lens.select("doc_id", "n_tok"), batch_id
     )
 
 
 def stored_lengths(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _len_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _LEN_SCHEMA)
-    return spark.read.schema(_LEN_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/lens", _LEN_SCHEMA)
 
 
 def current_packs(spark: SparkSession, store_root: str, cap: int | None = None) -> DataFrame:

@@ -2,7 +2,7 @@
 
 The streaming twin of X237 (queries_llm.web_host_pagerank) — the
 X185/X198/X210 RE-DERIVE class: the maintained state (the set of
-pages seen, hence the edge list) is append-mergeable, but the derived
+pages seen, hence the edge list) merges by union, but the derived
 artifact (the rank vector) is NOT — a single new page adds edges
 whose mass flows through the whole graph, so ranks re-derive over the
 merged edge set and the twin ships the CHANGE LOG (every node whose
@@ -16,7 +16,7 @@ computation is the IDENTICAL integer fixed-point operator
 (operators/graph.pagerank — BIGINT div, no float accumulation), so
 the re-derived view is bit-equal to the batch query.
 
-Scale shape: state appends at page grain (bounded by distinct
+Scale shape: state grows at page grain (bounded by distinct
 pages); each re-derivation shuffles only (node, rank) pairs; the
 before/after diff joins two node-sized tables.
 """
@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import graph
-from gmall_spark.streaming.incremental_dedup import _read_or_empty
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _PAGES_SCHEMA = T.StructType([T.StructField("u", T.LongType())])
 
@@ -45,36 +46,34 @@ def _edges(pages: DataFrame) -> DataFrame:
     )
 
 
-def current_ranks(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Re-derive ranks over every page seen so far — bit-equal to the
-    batch X237 rank columns on the union of everything ingested."""
-    pages = _read_or_empty(
-        spark, f"{store_dir}/pages_seen", _PAGES_SCHEMA
+def current_ranks(
+    spark: SparkSession, store_dir: str, before: int | None = None
+) -> DataFrame:
+    """Re-derive ranks over every page seen so far (in the batches
+    before ``before``, all by default) — bit-equal to the batch X237
+    rank columns on the union of everything ingested."""
+    pages = read_epochs(
+        spark, f"{store_dir}/pages_seen", _PAGES_SCHEMA, before
     ).distinct()
     return graph.pagerank(_edges(pages))
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest one micro-batch of documents; returns the rank-change
     log: every node whose rank_micro differs from the previous
     derivation (new nodes report old_rank_micro NULL)."""
-    path = f"{store_dir}/pages_seen"
-    seen = _read_or_empty(spark, path, _PAGES_SCHEMA).distinct()
-    # eager snapshot: the post-append re-list must not leak into the
-    # BEFORE side of the diff (the incremental_sft_keeper lesson)
-    before = (
-        graph.pagerank(_edges(seen))
-        .select(
-            "node_id", F.col("rank_micro").alias("old_rank_micro")
-        )
-        .localCheckpoint(eager=True)
+    before = current_ranks(spark, store_dir, before=batch_id).select(
+        "node_id", F.col("rank_micro").alias("old_rank_micro")
     )
-    batch_docs.select(
-        (F.col("doc_id") % 40).cast("long").alias("u")
-    ).distinct().write.mode("append").parquet(path)
-    after = current_ranks(spark, store_dir).select(
+    idempotent_parquet_write(f"{store_dir}/pages_seen")(
+        batch_docs.select(
+            (F.col("doc_id") % 40).cast("long").alias("u")
+        ).distinct(),
+        batch_id,
+    )
+    after = current_ranks(spark, store_dir, before=batch_id + 1).select(
         "node_id", F.col("rank_micro").alias("new_rank_micro")
     )
     return (

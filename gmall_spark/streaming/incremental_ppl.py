@@ -9,14 +9,14 @@ document's score never changes after ingest. What DOES change is the
 bucket assignment: head/middle/tail are equal-population tiers of
 the score distribution seen so far, and the cut points move as the
 corpus fills in — re-bucketing is retroactive by nature, exactly the
-incremental_boilerplate repair shape (monotone state, append-only
-re-derivation, never a retraction of ingested data).
+incremental_boilerplate repair shape (monotone state, re-derivation
+that never retracts ingested data).
 
 Per micro-batch:
 
 1. score the batch's documents under the frozen model;
 2. write the scored rows (doc_id, lang, n_bigrams, bigram_logprob)
-   to the batch's own store subdir (``scores/b<id>`` — an idempotent
+   to the batch's own epoch (``scores/epoch=<id>`` — an idempotent
    overwrite, so a foreachBatch retry rewrites byte-identical rows
    and never double-counts).
 
@@ -39,29 +39,15 @@ layout carries over unchanged.
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import lm
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _SCORE_SCHEMA = (
     "doc_id long, lang string, n_bigrams bigint, bigram_logprob double"
 )
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _score_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "scores")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -72,23 +58,20 @@ def process_batch(
     batch_id: int,
 ) -> None:
     """Score one micro-batch under the frozen ``model`` (a
-    lm.bigram_model relation) and append the scored rows to the
-    batch's own subdir. Replay-safe: scoring is deterministic and the
-    write is a per-batch-subdir overwrite."""
-    scored = lm.score_with_model(batch_docs, model)
-    scored.select(
-        "doc_id", "lang", "n_bigrams", "bigram_logprob"
-    ).write.mode("overwrite").parquet(
-        os.path.join(store_root, "scores", f"b{batch_id}")
+    lm.bigram_model relation) and write the scored rows to the
+    batch's own epoch. Replay-safe: scoring is deterministic and the
+    write is a per-epoch overwrite."""
+    idempotent_parquet_write(f"{store_root}/scores")(
+        lm.score_with_model(batch_docs, model).select(
+            "doc_id", "lang", "n_bigrams", "bigram_logprob"
+        ),
+        batch_id,
     )
 
 
 def stored_scores(spark: SparkSession, store_root: str) -> DataFrame:
     """Every scored row ingested so far."""
-    dirs = _score_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
-    return spark.read.schema(_SCORE_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/scores", _SCORE_SCHEMA)
 
 
 def bucketed_docs(

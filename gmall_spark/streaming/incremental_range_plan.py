@@ -12,7 +12,7 @@ version — but ONLY when the re-derived boundaries actually differ:
 bucket granularity bounds what any plan can achieve, and re-freezing
 an identical plan would loop forever on an unfixable skew (one bucket
 holding more than 2/P of the data). Plan versions are immutable
-subdirs, so replays are idempotent and an auditor can diff versions.
+``v<N>`` dirs, so replays are idempotent and an auditor can diff versions.
 """
 
 from __future__ import annotations
@@ -56,7 +56,7 @@ def process_batch(
     value_col: str = "value",
 ) -> None:
     """Ingest one micro-batch into the shared X179 histogram store
-    (idempotent per-batch-subdir overwrite)."""
+    (idempotent per-epoch overwrite)."""
     vh.process_batch(spark, batch, store_root, batch_id, value_col)
 
 

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from gmall_spark.operators import ivf, similarity
 from gmall_spark.queries_llm.ann_topk import PR_KNN_K
 from gmall_spark.queries_llm.incontext import chain_pack
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def process_batch(
@@ -38,15 +40,16 @@ def process_batch(
     batch_docs: DataFrame,
     batch_emb: DataFrame,
     store_dir: str,
+    batch_id: int,
 ) -> None:
-    """Ingest one micro-batch: append raw docs and embeddings (the
-    X209 raw-store pattern — global retraining/kNN make anything
-    finer lossy)."""
-    batch_docs.select("doc_id", "text").write.mode("append").parquet(
-        f"{store_dir}/sp_docs"
+    """Ingest one micro-batch: write raw docs and embeddings to its
+    epoch (the X209 raw-store pattern — global retraining/kNN make
+    anything finer lossy)."""
+    idempotent_parquet_write(f"{store_dir}/sp_docs")(
+        batch_docs.select("doc_id", "text"), batch_id
     )
-    batch_emb.select("vec_id", "embedding").write.mode("append").parquet(
-        f"{store_dir}/sp_emb"
+    idempotent_parquet_write(f"{store_dir}/sp_emb")(
+        batch_emb.select("vec_id", "embedding"), batch_id
     )
 
 
@@ -55,8 +58,8 @@ def current_packing(spark: SparkSession, store_dir: str) -> DataFrame:
     assembly the batch fixtures feed, so this equals the batch X244
     on the union (both orderings; filter ordering='semantic' for the
     registered query's slice)."""
-    docs = spark.read.parquet(f"{store_dir}/sp_docs")
-    emb = spark.read.parquet(f"{store_dir}/sp_emb")
+    docs = read_epochs(spark, f"{store_dir}/sp_docs")
+    emb = read_epochs(spark, f"{store_dir}/sp_emb")
     cents = ivf.train_centroids(emb)
     knn = similarity.gemm_allpairs_topk(emb, k=PR_KNN_K).select(
         F.col("query_id").alias("src"),

@@ -2,7 +2,7 @@
 
 The streaming twin of X233 (queries_llm.sft_prompt_dedup) — the
 MAX-merge class: the maintained state is the per-prompt candidate
-table (prompt, doc_id, asst_len), which is append-mergeable, while
+table (prompt, doc_id, asst_len), which merges by union, while
 the derived artifact (the keeper) is an argmax over it — a later
 arrival with a RICHER response DISPLACES the current keeper, and the
 twin ships that move instead of silently keeping the stale pick
@@ -10,14 +10,14 @@ twin ships that move instead of silently keeping the stale pick
 
 Per batch: derive the batch's conversations with the IDENTICAL
 turns/fold expressions the batch query uses, reduce to per-prompt
-batch candidates, diff the keeper view before vs after the append,
-and return the displacement log (prompt, old/new keeper + lengths).
+batch candidates, diff the keeper view before vs after the batch's
+epoch, and return the displacement log (prompt, old/new keeper + lengths).
 Batch-equals-streaming: the keeper view after any ingest split is
 row-identical to the batch query on the full corpus — argmax with
 the (asst_len DESC, doc_id ASC) total order is associative over any
 partition of the rows.
 
-Scale shape: state appends at prompt grain (bounded by distinct
+Scale shape: state grows at prompt grain (bounded by distinct
 prompts per batch); the keeper view is one prompt-keyed window; the
 diff joins the before/after keeper tables on prompt only.
 """
@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import sft
-from gmall_spark.streaming.incremental_dedup import _read_or_empty
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _CAND_SCHEMA = T.StructType(
     [
@@ -73,38 +74,35 @@ def _keepers(cands: DataFrame) -> DataFrame:
     )
 
 
-def current_keepers(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The corpus-so-far keeper view: argmax over all appended
-    candidates — row-identical (for prompts with n_convs >= 2) to the
-    batch X233 on everything ingested."""
+def current_keepers(
+    spark: SparkSession, store_dir: str, before: int | None = None
+) -> DataFrame:
+    """The corpus-so-far keeper view (the batches before ``before``,
+    all by default): argmax over the stored candidates —
+    row-identical (for prompts with n_convs >= 2) to the batch X233
+    on everything ingested."""
     return _keepers(
-        _read_or_empty(spark, f"{store_dir}/sft_candidates", _CAND_SCHEMA)
+        read_epochs(spark, f"{store_dir}/sft_candidates", _CAND_SCHEMA, before)
     )
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest one micro-batch; returns the DISPLACEMENT log: prompts
     whose keeper changed (a richer response arrived — old_keeper's
-    rows should leave the training set, new_keeper's enter)."""
-    path = f"{store_dir}/sft_candidates"
-    # materialize the BEFORE snapshot eagerly: the scan is lazy, and a
-    # plan executed after the append below would re-list the path and
-    # see the new files — before would silently equal after and the
-    # displacement log would always be empty
-    before = (
-        _keepers(_read_or_empty(spark, path, _CAND_SCHEMA))
-        .select(
-            "prompt",
-            F.col("doc_id").alias("old_keeper"),
-            F.col("asst_len").alias("old_asst_len"),
-        )
-        .localCheckpoint(eager=True)
+    rows should leave the training set, new_keeper's enter). Both
+    sides of the diff read a fixed epoch range, so the log is the
+    same however late it is evaluated, and on a replay."""
+    before = current_keepers(spark, store_dir, before=batch_id).select(
+        "prompt",
+        F.col("doc_id").alias("old_keeper"),
+        F.col("asst_len").alias("old_asst_len"),
     )
-    cands = batch_candidates(batch_docs)
-    cands.write.mode("append").parquet(path)
-    after = _keepers(spark.read.schema(_CAND_SCHEMA).parquet(path)).select(
+    idempotent_parquet_write(f"{store_dir}/sft_candidates")(
+        batch_candidates(batch_docs), batch_id
+    )
+    after = current_keepers(spark, store_dir, before=batch_id + 1).select(
         "prompt",
         F.col("doc_id").alias("new_keeper"),
         F.col("asst_len").alias("new_asst_len"),

@@ -13,34 +13,21 @@ both live at the READ, not in state:
 - the corpus token total N (lift's numerator scale) is the sum of the
   unigram counts — no separate counter to drift out of sync.
 
-Idempotence comes from the per-batch-subdir overwrite (the CMS/
-value-hist pattern). At 100 TB the subdirs become date partitions and
+Idempotence comes from the per-epoch overwrite (the value-hist
+pattern). At 100 TB the epochs become date partitions and
 current_lift a scheduled rollup, unchanged.
 """
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
+
 _PAIR_SCHEMA = "w_a string, w_b string, pair_cnt long"
 _UNI_SCHEMA = "w string, cnt long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _dirs(root: str, sub: str) -> list[str]:
-    base = os.path.join(root, sub)
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -52,7 +39,7 @@ def process_batch(
 ) -> None:
     """Count one micro-batch of (doc_id, text) rows: raw in-window
     pair counts (the X184 per-row array pairing — never a self-join)
-    and unigram counts, each to the batch's own subdir."""
+    and unigram counts, each to the batch's own epoch."""
     from gmall_spark.queries_llm import SKIPGRAM_WINDOW
 
     win = SKIPGRAM_WINDOW if window is None else window
@@ -74,26 +61,16 @@ def process_batch(
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(store_root, "pairs", f"b{batch_id}")
-    )
-    uni.write.mode("overwrite").parquet(
-        os.path.join(store_root, "uni", f"b{batch_id}")
-    )
+    idempotent_parquet_write(f"{store_root}/pairs")(pairs, batch_id)
+    idempotent_parquet_write(f"{store_root}/uni")(uni, batch_id)
 
 
 def stored_pairs(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root, "pairs")
-    if not dirs:
-        return spark.createDataFrame([], _PAIR_SCHEMA)
-    return spark.read.schema(_PAIR_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/pairs", _PAIR_SCHEMA)
 
 
 def stored_unigrams(spark: SparkSession, store_root: str) -> DataFrame:
-    dirs = _dirs(store_root, "uni")
-    if not dirs:
-        return spark.createDataFrame([], _UNI_SCHEMA)
-    return spark.read.schema(_UNI_SCHEMA).parquet(*dirs)
+    return read_epochs(spark, f"{store_root}/uni", _UNI_SCHEMA)
 
 
 def current_lift(

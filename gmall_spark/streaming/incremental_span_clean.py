@@ -5,21 +5,21 @@ Extends operators/llm_dedup.span_dedup_clean (SURVEY X104) the way
 incremental_dedup extends the batch MinHash pipeline (X19): each
 micro-batch's spans are checked keep-first WITHIN the batch (one
 span-hash window) and against the persisted claimed-hash store (one
-left join), per-doc cleaned rows are appended to a results store, and
-the batch's newly-claimed hashes are appended to the hash store. With
+left join), and the batch's per-doc cleaned rows and newly-claimed
+hashes land in its own epoch of the results and hash stores. With
 batches arriving in doc_id order, the union of emitted rows after ANY
 batch split is row-identical to the batch operator over the whole
 corpus (asserted by tests/test_streaming.py).
 
-Store layout: the hash store is APPEND-ONLY, one subdirectory per
-batch (``hashes/b<epoch>``), so a batch's write target is never a
-path its own plan reads — the read side enumerates the existing
-subdirectories at plan-construction time. State is O(distinct spans):
+Store layout: both stores are epoch-partitioned
+(``hashes/epoch=<batch_id>``, ``docs/epoch=<batch_id>``) and a batch
+reads only the hash epochs before its own, so its write target is
+never a path its own plan reads. State is O(distinct spans):
 inherent to exact global dedup (the bit-capped Bloom inversion does
 not apply — membership must be exact or a false positive DELETES
 content). At 100 TB the store becomes hash-bucketed files probed with
 a bucket-pruned join, exactly the incremental_dedup.BucketedStore
-recipe; the append-only per-batch layout carries over unchanged.
+recipe; the epoch layout carries over unchanged.
 
 Wire :func:`process_batch` into ``runner.run_foreach_batch``; a Kafka
 document topic swaps in upstream unchanged.
@@ -27,12 +27,12 @@ document topic swaps in upstream unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import llm_dedup
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _HASH_SCHEMA = "h string"
 _OUT_SCHEMA = (
@@ -40,30 +40,16 @@ _OUT_SCHEMA = (
 )
 
 
-def _hash_dirs(root: str, exclude_batch: int | None = None) -> list[str]:
-    hdir = os.path.join(root, "hashes")
-    try:
-        return sorted(
-            os.path.join(hdir, d)
-            for d in os.listdir(hdir)
-            if exclude_batch is None or d != f"b{exclude_batch}"
-        )
-    except FileNotFoundError:
-        return []
-
-
 def claimed_hashes(
-    spark: SparkSession, store_root: str, exclude_batch: int | None = None
+    spark: SparkSession, store_root: str, before: int | None = None
 ) -> DataFrame:
-    """Every span hash claimed by batches processed so far.
+    """Every span hash claimed by the batches before ``before`` (all
+    batches by default).
 
-    ``exclude_batch`` is the replay guard: a RETRIED micro-batch must
-    not see the hashes its failed attempt already claimed, or every
-    kept span would flip to removed on the second run."""
-    dirs = _hash_dirs(store_root, exclude_batch)
-    if not dirs:
-        return spark.createDataFrame([], _HASH_SCHEMA)
-    return spark.read.schema(_HASH_SCHEMA).parquet(*dirs)
+    ``before`` is the replay guard: a RETRIED micro-batch must not
+    see the hashes its failed attempt already claimed, or every kept
+    span would flip to removed on the second run."""
+    return read_epochs(spark, f"{store_root}/hashes", _HASH_SCHEMA, before)
 
 
 def process_batch(
@@ -73,15 +59,14 @@ def process_batch(
     batch_id: int,
     span_w: int = 10,
 ) -> None:
-    """Clean one micro-batch against the claimed-hash store; append
-    the per-doc cleaned rows and the batch's newly-claimed hashes.
+    """Clean one micro-batch against the claimed-hash store; write
+    the per-doc cleaned rows and the batch's newly-claimed hashes to
+    the batch's own epochs.
 
-    Replay-safe under foreachBatch retries: the read side excludes
-    this batch's own hash subdir (a failed attempt may have written
-    it), the hash write is an idempotent overwrite, and the doc rows
-    a retry re-appends are byte-identical — ``emitted_docs``
-    deduplicates on doc_id."""
-    seen = claimed_hashes(spark, store_root, exclude_batch=batch_id).withColumn(
+    Replay-safe under foreachBatch retries: the read side keeps only
+    earlier epochs (a failed attempt may have written this one), and
+    both writes are idempotent per-epoch overwrites."""
+    seen = claimed_hashes(spark, store_root, before=batch_id).withColumn(
         "__seen", F.lit(1)
     )
     w = Window.partitionBy("h").orderBy("doc_id", "idx")
@@ -96,25 +81,18 @@ def process_batch(
         .persist()
     )
     try:
-        llm_dedup.span_doc_rollup(flagged).write.mode("append").parquet(
-            os.path.join(store_root, "docs")
+        idempotent_parquet_write(f"{store_root}/docs")(
+            llm_dedup.span_doc_rollup(flagged), batch_id
         )
         # newly-claimed hashes: exactly the kept spans (rn==1 makes
-        # them unique within the batch); written to a FRESH subdir so
-        # the plan never reads its own write target
-        flagged.filter("kept").select("h").write.mode("overwrite").parquet(
-            os.path.join(store_root, "hashes", f"b{batch_id}")
+        # them unique within the batch)
+        idempotent_parquet_write(f"{store_root}/hashes")(
+            flagged.filter("kept").select("h"), batch_id
         )
     finally:
         flagged.unpersist()
 
 
 def emitted_docs(spark: SparkSession, store_root: str) -> DataFrame:
-    """All per-doc cleaned rows emitted so far. dropDuplicates
-    absorbs replayed batches: a retry's rows are byte-identical
-    (its hash-store view excludes its own failed attempt)."""
-    return (
-        spark.read.schema(_OUT_SCHEMA)
-        .parquet(os.path.join(store_root, "docs"))
-        .dropDuplicates(["doc_id"])
-    )
+    """All per-doc cleaned rows emitted so far."""
+    return read_epochs(spark, f"{store_root}/docs", _OUT_SCHEMA)

@@ -7,15 +7,15 @@ FRONTIER (last event seen).
 
 Exactly-once design without any engine-managed state store:
 
-- ``deltas/b<id>``: the batch's pair-count delta — the in-batch
+- ``deltas/epoch=<id>``: the batch's pair-count delta — the in-batch
   consecutive pairs PLUS the bridge pair from the stored frontier to
-  the batch's first event per user. Per-batch idempotent overwrite.
-- ``frontier/b<id>``: each user's last (ts_us, event_id, event_type)
-  AS OF batch id, derived deterministically from ``frontier/b<id-1>``
-  and the batch content. Reading the PREVIOUS batch's frontier (never
-  a mutable 'live' frontier) is what makes a foreachBatch REPLAY of
-  batch k recompute byte-identical outputs: the inputs of batch k are
-  immutable once batch k-1 committed.
+  the batch's first event per user. Per-epoch idempotent overwrite.
+- ``frontier/epoch=<id>``: each user's last (ts_us, event_id,
+  event_type) within the batch; the frontier AS OF batch k is the
+  latest row per user over the epochs before k. Reading only earlier
+  epochs (never a mutable 'live' frontier) is what makes a
+  foreachBatch REPLAY of batch k recompute byte-identical outputs:
+  the inputs of batch k are immutable once batch k-1 committed.
 
 Contract: events arrive in (ts, event_id) order per user across
 batches (the source's per-key ordering guarantee — Kafka per
@@ -26,45 +26,34 @@ emitting wrong pairs.
 :func:`current_matrix` sum-merges the immutable deltas — pair counts
 ARE mergeable once the bridge pairs are materialized per batch — and
 equals the batch operator over the union of all batches (asserted,
-including a user stream split mid-way). Scale: frontier is ONE row
-per user, deltas are |types|² per batch; the only corpus-sized work
-per batch is the batch's own window.
+including a user stream split mid-way). Scale: frontier is one row
+per user per batch the user appears in, deltas are |types|² per
+batch; the only corpus-sized work per batch is the batch's own
+window.
 """
 
 from __future__ import annotations
-
-import os
-import re as _re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmall_spark.operators.relational import transition_counts
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _FRONTIER_SCHEMA = "user_id long, ts_us long, event_id long, event_type string"
 _DELTA_SCHEMA = "from_type string, to_type string, n long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
 
 
-def _dirs(root: str, sub: str) -> list[str]:
-    base = os.path.join(root, sub)
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
-
-
-def _read_frontier(
-    spark: SparkSession, store_root: str, batch_id: int
-) -> DataFrame:
-    path = os.path.join(store_root, "frontier", f"b{batch_id}")
-    if os.path.isdir(path):
-        return spark.read.schema(_FRONTIER_SCHEMA).parquet(path)
-    return spark.createDataFrame([], _FRONTIER_SCHEMA)
+def _last_per_user(ev: DataFrame) -> DataFrame:
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("ts_us"), F.desc("event_id")
+    )
+    return (
+        ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "ts_us", "event_id", "event_type")
+    )
 
 
 def process_batch(
@@ -74,16 +63,20 @@ def process_batch(
     batch_id: int,
 ) -> None:
     """Emit one micro-batch's pair delta (in-batch pairs + frontier
-    bridges) and advance the frontier. Both writes are per-batch
-    idempotent overwrites derived from batch ``batch_id - 1``'s
-    frontier, so replays are exact."""
+    bridges) and advance the frontier. Both writes are per-epoch
+    idempotent overwrites derived from the frontier of the epochs
+    before ``batch_id``, so replays are exact."""
     ev = batch.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts_us").cast("long").alias("ts_us"),
         F.col("event_id").cast("long").alias("event_id"),
         F.col("event_type").alias("event_type"),
     )
-    prev = _read_frontier(spark, store_root, batch_id - 1)
+    prev = _last_per_user(
+        read_epochs(
+            spark, f"{store_root}/frontier", _FRONTIER_SCHEMA, before=batch_id
+        )
+    )
     aug = prev.unionByName(ev)
     # the frontier is a single row per user, so pairs over the
     # augmented stream are exactly: bridge (frontier -> first batch
@@ -91,31 +84,17 @@ def process_batch(
     delta = transition_counts(aug).select(
         "from_type", "to_type", F.col("n").cast("long").alias("n")
     )
-    delta.write.mode("overwrite").parquet(
-        os.path.join(store_root, "deltas", f"b{batch_id}")
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_us"), F.desc("event_id")
-    )
-    frontier = (
-        aug.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "ts_us", "event_id", "event_type")
-    )
-    frontier.write.mode("overwrite").parquet(
-        os.path.join(store_root, "frontier", f"b{batch_id}")
+    idempotent_parquet_write(f"{store_root}/deltas")(delta, batch_id)
+    idempotent_parquet_write(f"{store_root}/frontier")(
+        _last_per_user(ev), batch_id
     )
 
 
 def current_matrix(spark: SparkSession, store_root: str) -> DataFrame:
     """(from_type, to_type, n) over everything ingested so far:
     sum-merge of the immutable per-batch deltas."""
-    dirs = _dirs(store_root, "deltas")
-    if not dirs:
-        return spark.createDataFrame([], _DELTA_SCHEMA)
     return (
-        spark.read.schema(_DELTA_SCHEMA)
-        .parquet(*dirs)
+        read_epochs(spark, f"{store_root}/deltas", _DELTA_SCHEMA)
         .groupBy("from_type", "to_type")
         .agg(F.sum("n").cast("long").alias("n"))
     )

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import unicode_norm
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 
 def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -47,12 +49,12 @@ def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def process_batch(
-    spark: SparkSession, batch_docs: DataFrame, store_dir: str
+    spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Scan one micro-batch and append its per-class counts; returns
-    the batch's counts (the alarm view)."""
+    """Scan one micro-batch and write its per-class counts to its
+    epoch; returns the batch's counts (the alarm view)."""
     counts = batch_counts(batch_docs)
-    counts.write.mode("append").parquet(f"{store_dir}/unicode_counts")
+    idempotent_parquet_write(f"{store_dir}/unicode_counts")(counts, batch_id)
     return counts
 
 
@@ -60,7 +62,7 @@ def current_counts(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged corpus-so-far census — bit-equal to the batch query
     on everything ingested (integer addition, order-free)."""
     return (
-        spark.read.parquet(f"{store_dir}/unicode_counts")
+        read_epochs(spark, f"{store_dir}/unicode_counts")
         .groupBy("rule_class")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),

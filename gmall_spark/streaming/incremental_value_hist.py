@@ -5,40 +5,26 @@ Bucket counts merge by plain SUM, so like the KMV min-union (and
 unlike a t-digest, whose centroid merge is order-sensitive) the
 streaming state after ANY batch split is EXACTLY the batch sketch
 over the union — the quantile reads are bit-identical, not
-approximately close. Idempotence comes from the per-batch-subdir
+approximately close. Idempotence comes from the per-epoch
 overwrite (the CMS/image-fps pattern): a foreachBatch retry rewrites
-the same subdir with the same deterministic counts.
+the same epoch with the same deterministic counts.
 
 State is one row per occupied value bucket per batch — bounded by the
 value DOMAIN times batch count, and compacted to the pure grid at
-every read. At 100 TB the per-batch subdirs become date partitions
+every read. At 100 TB the epochs become date partitions
 and current_quantiles a scheduled rollup, unchanged.
 """
 
 from __future__ import annotations
 
-import os
-import re as _re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import sketches
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _HIST_SCHEMA = "bucket long, cnt long"
-_BATCH_DIR_RE = _re.compile(r"^b\d+$")
-
-
-def _hist_dirs(root: str) -> list[str]:
-    base = os.path.join(root, "hist")
-    try:
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if _BATCH_DIR_RE.match(d)
-        )
-    except FileNotFoundError:
-        return []
 
 
 def process_batch(
@@ -49,20 +35,16 @@ def process_batch(
     value_col: str = "value",
 ) -> None:
     """Bucket-count one micro-batch and write its partial histogram
-    to the batch's own subdir (idempotent overwrite)."""
-    sketches.value_hist(batch, value_col).write.mode("overwrite").parquet(
-        os.path.join(store_root, "hist", f"b{batch_id}")
+    to the batch's own epoch (idempotent overwrite)."""
+    idempotent_parquet_write(f"{store_root}/hist")(
+        sketches.value_hist(batch, value_col), batch_id
     )
 
 
 def stored_hist(spark: SparkSession, store_root: str) -> DataFrame:
     """The merged (bucket, cnt) sketch over every batch so far."""
-    dirs = _hist_dirs(store_root)
-    if not dirs:
-        return spark.createDataFrame([], _HIST_SCHEMA)
     return (
-        spark.read.schema(_HIST_SCHEMA)
-        .parquet(*dirs)
+        read_epochs(spark, f"{store_root}/hist", _HIST_SCHEMA)
         .groupBy("bucket")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )

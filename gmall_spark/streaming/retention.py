@@ -7,15 +7,17 @@ the ANN index — or the deleted text keeps influencing dedup
 decisions (and keeps being re-derivable from shingles). This is the
 GDPR-article-17 pass every production corpus pipeline carries.
 
-Mechanics: each parquet store is rewritten through a broadcast
-ANTI-join on its id column (the delete set is small by nature) with
-the single-atomic-pointer swap the incremental stores use
-(:mod:`gmall_spark.streaming.store`, ADVICE r4) — a concurrent
-reader sees the old or the new store, never a torn or missing one,
-and a crash mid-swap is recoverable. At 100 TB the rewrite cost is one linear pass per
-store; batching many takedown requests into one purge amortizes it,
-and a list_id/bucket-partitioned store only rewrites the partitions
-that contain deleted rows (pushdown on the partition column).
+Mechanics: every store is an epoch store (streaming/store.py's
+layout), rewritten one ``epoch=<N>`` dir at a time through a
+broadcast ANTI-join on its id columns (the delete set is small by
+nature): checkpoint the kept rows, write them to a ``_purgetmp.<N>``
+sibling, remove the epoch dir, rename the sibling into place. The tmp
+name starts with ``_`` and holds no ``=``, so partition discovery
+neither reads it nor takes it for a partition (``_epoch=0.purgetmp``
+raised CONFLICTING_PARTITION_COLUMN_NAMES). A crash between the last
+two steps loses no data: the tmp dir holds the epoch's full kept
+content. At 100 TB the rewrite cost is one linear pass per store;
+batching many takedown requests into one purge amortizes it.
 
 Bloom filters CANNOT delete (bits are shared — unsetting one would
 create false negatives for other keys): the bloom store must be
@@ -27,10 +29,34 @@ exactly, but the rebuild path is the safe default there too.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_spark.streaming.store import swap_write as _swap_write
+from gmall_spark.streaming.store import read_epochs
+
+
+def _rewrite_epochs(
+    spark: SparkSession, path: str, keep: Callable[[DataFrame], DataFrame]
+) -> int:
+    """Rewrite each ``epoch=<N>`` dir under ``path`` to ``keep`` of its
+    rows; returns the number of rows removed."""
+    removed = 0
+    for d in sorted(glob.glob(os.path.join(path, "epoch=*"))):
+        df = spark.read.parquet(d)
+        # localCheckpoint: the rewrite must not lazily re-read the
+        # directory it is about to replace
+        kept = keep(df).localCheckpoint()
+        removed += df.count() - kept.count()
+        tmp = os.path.join(path, "_purgetmp." + d.rsplit("=", 1)[1])
+        kept.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(d)
+        os.replace(tmp, d)
+    return removed
 
 
 def purge_doc_ids(
@@ -40,50 +66,24 @@ def purge_doc_ids(
 ) -> dict[str, int]:
     """Remove every row referencing a deleted id from each store.
 
-    ``stores`` maps a parquet dir to the id COLUMNS to purge on (a
-    pair store purges on both ``doc_a`` and ``doc_b``). Returns the
-    number of rows removed per store."""
+    ``stores`` maps an epoch store dir to the id COLUMNS to purge on
+    (a pair store purges on both ``doc_a`` and ``doc_b``). Returns
+    the number of rows removed per store."""
     ids = spark.createDataFrame(
         [(int(i),) for i in doc_ids], "___purge_id bigint"
     )
     removed: dict[str, int] = {}
     for path, id_cols in stores.items():
-        df = spark.read.parquet(path)
-        before = df.count()
-        kept = df
-        for c in id_cols:
-            kept = kept.join(
-                F.broadcast(ids),
-                kept[c] == ids["___purge_id"],
-                "left_anti",
-            )
-        # localCheckpoint: the rewrite must not lazily re-read the
-        # directory it is about to replace
-        kept = kept.localCheckpoint()
-        removed[path] = before - kept.count()
-        _swap_write(kept, path)
+
+        def keep(df: DataFrame, id_cols: list[str] = id_cols) -> DataFrame:
+            for c in id_cols:
+                df = df.join(
+                    F.broadcast(ids), df[c] == ids["___purge_id"], "left_anti"
+                )
+            return df
+
+        removed[path] = _rewrite_epochs(spark, path, keep)
     return removed
-
-
-def _rewrite_subdir(df: DataFrame, subdir: str) -> None:
-    """Replace one per-batch subdir's content in place.
-
-    The boilerplate store's per-batch layout can't use the symlink
-    swap (its readers enumerate ``b<N>`` names, and the swap's
-    ``b<N>.v<M>`` siblings would be double-read), so the rewrite is
-    checkpoint → write sibling ``.purgetmp`` → rmtree → rename. A
-    crash between the last two steps loses no data (the tmp dir holds
-    the full kept content and re-running the purge is idempotent);
-    readers never pick the tmp up because ``_dirs`` only matches
-    ``b<N>`` names. ``df`` must already be materialized
-    (localCheckpoint) — it must not lazily re-read ``subdir``."""
-    import os
-    import shutil
-
-    tmp = subdir + ".purgetmp"
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(subdir, ignore_errors=True)
-    os.replace(tmp, subdir)
 
 
 def purge_boilerplate_store(
@@ -92,7 +92,7 @@ def purge_boilerplate_store(
     store_root: str,
 ) -> dict[str, int]:
     """Takedown pass for the incremental-boilerplate store
-    (streaming/incremental_boilerplate.py), whose ``spans/b*`` rows
+    (streaming/incremental_boilerplate.py), whose ``spans`` rows
     hold VERBATIM span text content-addressed by hash with no doc
     linkage — purging the doc-keyed ``postings``/``docs`` rows alone
     would leave a deleted document's text alive as orphaned
@@ -100,9 +100,9 @@ def purge_boilerplate_store(
 
     Three sub-stores, in dependency order:
 
-    1. ``postings/b*`` — drop the purged docs' (doc_id, idx, h) rows;
-    2. ``docs/b*`` — drop the purged docs' emitted rollups;
-    3. ``spans/b*`` — garbage-collect content: keep only hashes still
+    1. ``postings`` — drop the purged docs' (doc_id, idx, h) rows;
+    2. ``docs`` — drop the purged docs' emitted rollups;
+    3. ``spans`` — garbage-collect content: keep only hashes still
        referenced by the REMAINING postings (semi-join against the
        post-purge posting set), so text whose every occurrence
        belonged to purged docs is physically deleted, while spans
@@ -111,35 +111,18 @@ def purge_boilerplate_store(
 
     Returns rows removed per sub-store. Run offline, not concurrently
     with process_batch (same contract as any store rewrite)."""
-    from gmall_spark.streaming import incremental_boilerplate as ib
+    from gmall_spark.streaming.incremental_boilerplate import _POST_SCHEMA
 
-    ids = spark.createDataFrame(
-        [(int(i),) for i in doc_ids], "___purge_id bigint"
-    )
-    removed = {"postings": 0, "docs": 0, "spans": 0}
-    for sub, schema in (("postings", ib._POST_SCHEMA), ("docs", ib._OUT_SCHEMA)):
-        for d in ib._dirs(store_root, sub):
-            df = spark.read.schema(schema).parquet(d)
-            before = df.count()
-            kept = df.join(
-                F.broadcast(ids),
-                df["doc_id"] == ids["___purge_id"],
-                "left_anti",
-            )
-            kept = kept.localCheckpoint()
-            removed[sub] += before - kept.count()
-            _rewrite_subdir(kept, d)
+    subs = {"postings": f"{store_root}/postings", "docs": f"{store_root}/docs"}
+    gone = purge_doc_ids(spark, doc_ids, {p: ["doc_id"] for p in subs.values()})
     referenced = (
-        ib._read(spark, store_root, "postings", ib._POST_SCHEMA)
+        read_epochs(spark, subs["postings"], _POST_SCHEMA)
         .select("h")
         .distinct()
         .localCheckpoint()
     )
-    for d in ib._dirs(store_root, "spans"):
-        df = spark.read.schema(ib._SPAN_SCHEMA).parquet(d)
-        before = df.count()
-        kept = df.join(referenced, "h", "left_semi")
-        kept = kept.localCheckpoint()
-        removed["spans"] += before - kept.count()
-        _rewrite_subdir(kept, d)
+    removed = {sub: gone[p] for sub, p in subs.items()}
+    removed["spans"] = _rewrite_epochs(
+        spark, f"{store_root}/spans", lambda df: df.join(referenced, "h", "left_semi")
+    )
     return removed

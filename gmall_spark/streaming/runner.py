@@ -12,12 +12,14 @@ streaming job:
   (the Spark analog of the reference's per-record JDBC sinks S8/S10 —
   but batched: one write per micro-batch, not per row)
 
-Kafka specifics (S1-S4): ``format("kafka")`` with ``from_json`` on
-``value`` replaces MyKafkaUtil (utils/MyKafkaUtil.java:24-100); the
-upsert-kafka PK table (S4) maps to a keyed write + downstream
-``latest_by_key`` dedup. Kafka brokers aren't present in the test
-container, so those adapters are exercised through file sources which
-share the same code path after the source node.
+Kafka specifics (S1-S4): ``format("kafka")`` with the option dicts
+below and ``from_json`` on ``value`` (:func:`parse_kafka_value`)
+replaces MyKafkaUtil (utils/MyKafkaUtil.java:24-100); the
+upsert-kafka PK table (S4) maps to a keyed write
+(:func:`kafka_payload`) + downstream ``latest_by_key`` dedup. Kafka
+brokers aren't present in the test container, so the pipelines run
+on file sources, which share the same code path after the source
+node.
 """
 
 from __future__ import annotations
@@ -81,29 +83,13 @@ def parse_kafka_value(raw: DataFrame, schema: T.StructType) -> DataFrame:
     ).select("j.*", "timestamp")
 
 
-def kafka_json_source(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    schema: T.StructType,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """Kafka JSON source (ref MyKafkaUtil.getKafkaConsumer, S1/S3/S5)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .options(**kafka_source_options(brokers, topic, starting_offsets))
-        .load()
-    )
-    return parse_kafka_value(raw, schema)
-
-
 def kafka_payload(df: DataFrame, key_col: str | None = None) -> DataFrame:
     """The record shaping of the Kafka sink (S2/S4), as a pure
     transformation so it is testable without a broker: JSON-encode the
     full row as ``value``; with ``key_col``, key the record like the
     reference's upsert-kafka PK sink (S4) so compaction/consumers can
     reconstruct latest-per-key. Round-trips through
-    ``kafka_json_source``'s from_json parse."""
+    :func:`parse_kafka_value`."""
     return df.select(
         *(
             [F.col(key_col).cast("string").alias("key")]
@@ -111,18 +97,6 @@ def kafka_payload(df: DataFrame, key_col: str | None = None) -> DataFrame:
             else []
         ),
         F.to_json(F.struct(*df.columns)).alias("value"),
-    )
-
-
-def kafka_json_sink(
-    df: DataFrame, brokers: str, topic: str, checkpoint: str, key_col: str | None = None
-) -> StreamingQuery:
-    """Kafka JSON sink (S2; payload shape in :func:`kafka_payload`)."""
-    return (
-        kafka_payload(df, key_col)
-        .writeStream.format("kafka")
-        .options(**kafka_sink_options(brokers, topic, checkpoint))
-        .start()
     )
 
 

@@ -1,4 +1,15 @@
-"""Atomic parquet store swap for the incremental sketches/stores.
+"""The two state layouts of the streaming twins.
+
+Every twin keeps its state under ``<store>/<sub>/epoch=<batch_id>``,
+written by ``runner.idempotent_parquet_write`` and read back by
+:func:`read_epochs`: a replayed foreachBatch epoch overwrites its own
+partition and reads only earlier ones, so the replay is a no-op. The
+Bloom and KMV sketches instead keep one capped table that each batch
+rewrites through the atomic swap below; their merges (``bit_or``,
+distinct k-min) are idempotent, so re-merging a replayed batch
+changes nothing.
+
+Atomic parquet store swap for the Bloom/KMV sketches.
 
 The r4 pattern (write ``.next``, ``os.replace(final, old)``,
 ``os.replace(next, final)``) had two defects (ADVICE r4):
@@ -31,6 +42,8 @@ import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _VERSION_RE = re.compile(r"\.v(\d+)$")
 # pid of the writer that claimed a version dir. The claim means
@@ -240,6 +253,44 @@ def read_or_empty(spark: SparkSession, store_dir: str, schema) -> DataFrame:
         if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
             return spark.createDataFrame([], schema)
         raise
+
+
+def read_epochs(
+    spark: SparkSession, path: str, schema=None, before: int | None = None
+) -> DataFrame:
+    """A twin's state: the ``epoch=<batch_id>`` partitions under
+    ``path``, read by partition discovery, with ``epoch`` dropped.
+    ``before`` keeps only epochs < ``before``; a twin that reads its
+    own state mid-batch passes its batch id, so a replay sees exactly
+    what its first attempt saw. ONLY a missing path means 'first
+    batch' (empty ``schema`` rows); any other read failure surfaces —
+    treating a corrupt store as empty would silently drop state
+    (ADVICE r3)."""
+    from pyspark.errors import AnalysisException
+
+    # the root path stays the same as epochs land: refresh any Dataset
+    # cached from an earlier read (an operator may persist it), or
+    # this identical plan would be served from that cache without the
+    # new epochs
+    spark.catalog.refreshByPath(path)
+    reader = spark.read
+    if schema is not None:
+        # ``epoch`` in the schema keeps the column on an empty dir too
+        reader = reader.schema(
+            f"{schema}, epoch long"
+            if isinstance(schema, str)
+            else T.StructType([*schema.fields, T.StructField("epoch", T.LongType())])
+        )
+    try:
+        df = reader.parquet(path)
+    except AnalysisException as exc:
+        missing = "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
+        if schema is None or not missing:
+            raise
+        return spark.createDataFrame([], schema)
+    if before is not None:
+        df = df.filter(F.col("epoch") < before)
+    return df.drop("epoch")
 
 
 def list_versions(store_dir: str) -> list[int]:

@@ -714,6 +714,7 @@ def test_incremental_transitions_any_split_equals_batch(spark, tmpdir_factory, r
     store = str(tmpdir_factory.mktemp("trans_prop"))
     it.process_batch(spark, b1, store, 0)
     it.process_batch(spark, b2, store, 1)
+    it.process_batch(spark, b2, store, 1)  # foreachBatch replay: a no-op
     got = {(r.from_type, r.to_type): r.n
            for r in it.current_matrix(spark, store).collect()}
     want = {(r.from_type, r.to_type): r.n

@@ -1,5 +1,6 @@
 """The session-memo registry (gmall_spark.fixtures_audit): one memo
-behind every per-session reuse, build timing, and release."""
+behind every per-session reuse, build timing, and release; plus the
+Python-worker environment get_session sets up."""
 
 from __future__ import annotations
 
@@ -133,3 +134,37 @@ def test_clear_cache_releases_fixture_storage(spark, sf_dir):
     Q.clear_cache()
     assert not created & fixtures_audit._persistent_ids(jsc)
     assert not created & stored()
+
+
+def test_python_udf_runs_from_a_script_outside_the_repo(tmp_path, sf_dir):
+    """A script started elsewhere, with only ``sys.path`` pointing at
+    the package, must still run a Python/Arrow UDF: the workers import
+    ``gmall_spark`` too, so get_session exports the package root to
+    them. Runs in a subprocess so the session is fresh."""
+    import os
+    import subprocess
+    import sys
+
+    script = tmp_path / "udf_script.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(PKG.parent)!r})\n"
+        "from gmall_spark.queries import QUERIES\n"
+        "from gmall_spark.session import get_session\n"
+        "spark = get_session(app_name='udf_outside_repo', shuffle_partitions=2)\n"
+        # collect, not count: count would prune the UDF column
+        "rows = QUERIES['sft_novelty_rougel'](spark, sys.argv[1]).collect()\n"
+        "print('ROWS', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, str(script), sf_dir],
+        cwd="/tmp",
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS " in out.stdout, out.stdout[-2000:]

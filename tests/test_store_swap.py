@@ -1,14 +1,19 @@
-"""Atomic store swap (streaming/store.py, ADVICE r4): single-rename
-pointer swap, crash recovery, legacy-layout migration."""
+"""The streaming state layouts (streaming/store.py): the epoch
+layout every twin keeps its state in, and the atomic store swap
+(ADVICE r4: single-rename pointer swap, crash recovery, legacy-layout
+migration) the Bloom/KMV sketches use."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 
 import pytest
 from pyspark.sql import types as T
 
 from gmall_spark.streaming import store
+from gmall_spark.streaming.runner import idempotent_parquet_write
 
 SCHEMA = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
 
@@ -18,7 +23,76 @@ def _df(spark, rows):
 
 
 def _read(spark, path):
-    return {(r.k, r.v) for r in store.read_or_empty(spark, path, SCHEMA).collect()}
+    return _rows(store.read_or_empty(spark, path, SCHEMA))
+
+
+def _rows(df):
+    return {(r.k, r.v) for r in df.collect()}
+
+
+def test_read_epochs_replay_is_a_no_op(spark, tmp_path):
+    """A missing store reads as empty; a replayed epoch overwrites
+    itself; ``before`` keeps only the earlier epochs."""
+    p = str(tmp_path / "e")
+    assert _rows(store.read_epochs(spark, p, SCHEMA)) == set()
+    write = idempotent_parquet_write(p)
+    write(_df(spark, [(1, 10)]), 0)
+    write(_df(spark, [(2, 20), (3, 30)]), 1)
+    write(_df(spark, [(2, 20), (3, 30)]), 1)  # replay of epoch 1
+    assert _rows(store.read_epochs(spark, p, SCHEMA)) == {(1, 10), (2, 20), (3, 30)}
+    assert store.read_epochs(spark, p, SCHEMA).count() == 3
+    assert _rows(store.read_epochs(spark, p, SCHEMA, before=1)) == {(1, 10)}
+    assert store.read_epochs(spark, p).columns == ["k", "v"]
+
+
+STREAMING = pathlib.Path(store.__file__).parent
+BUCKETED_CATALOG_STORES = {"BucketedStore", "BucketedVersionStore"}
+
+
+def _calls(path: pathlib.Path, attr: str, exempt_scopes: set[str]) -> list[ast.Call]:
+    """``x.<attr>(...)`` calls in ``path`` outside the named classes
+    and functions."""
+    tree = ast.parse(path.read_text())
+    skip = {
+        id(n)
+        for scope in ast.walk(tree)
+        if isinstance(scope, ast.ClassDef | ast.FunctionDef)
+        and scope.name in exempt_scopes
+        for n in ast.walk(scope)
+    }
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and id(n) not in skip
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == attr
+    ]
+
+
+def test_streaming_state_uses_the_epoch_layout():
+    """Spark-free lint: a twin's state goes through
+    runner.idempotent_parquet_write and store.read_epochs. An append
+    double-counts a replayed epoch, and a hand-rolled directory lister
+    duplicates read_epochs. Exempt: store.py's version-dir write, the
+    two bucketed catalog stores, and incremental_range_plan's plan
+    versions."""
+    offenders = []
+    for path in sorted(STREAMING.glob("*.py")):
+        if path.name != "store.py":
+            offenders += [
+                f"{path.name}:{c.lineno} mode('append')"
+                for c in _calls(path, "mode", BUCKETED_CATALOG_STORES)
+                if [getattr(a, "value", None) for a in c.args] == ["append"]
+            ]
+        if path.name.startswith("incremental_"):
+            plan_versions = path.name == "incremental_range_plan.py"
+            exempt = {"_plan_versions"} if plan_versions else set()
+            offenders += [
+                f"{path.name}:{c.lineno} os.listdir"
+                for c in _calls(path, "listdir", exempt)
+            ]
+    assert not offenders, offenders
 
 
 def test_swap_is_pointer_and_reaps_old_versions(spark, tmp_path):

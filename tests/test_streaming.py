@@ -573,7 +573,7 @@ def test_incremental_span_clean_equals_batch(spark, sf_dir, tmpdir):
     # cross-batch state mattered: a batch-2 span whose hash was
     # claimed by BATCH 1 exists (not merely a within-batch-2 dup),
     # and its document records a removal
-    b1 = spark.read.parquet(f"{store}/hashes/b0").select("h")
+    b1 = spark.read.parquet(f"{store}/hashes/epoch=0").select("h")
     cross = (
         llm_dedup.span_rows(docs.filter(F.col("doc_id") >= mid))
         .join(b1, "h")
@@ -584,8 +584,8 @@ def test_incremental_span_clean_equals_batch(spark, sf_dir, tmpdir):
     assert cross, "fixture has no cross-batch duplicate spans"
     assert all(got[r.doc_id][1] > 0 for r in cross)
     # foreachBatch replay: re-running batch 1 (same batch_id) must not
-    # change the emitted set — the retry's store view excludes its own
-    # earlier hash write, and duplicate doc rows collapse on read
+    # change the emitted set — the retry reads only earlier hash epochs
+    # and overwrites its own doc and hash epochs
     isc.process_batch(spark, docs.filter(F.col("doc_id") >= mid), store, 1)
     got2 = {
         r.doc_id: (r.n_spans, r.removed_spans, r.clean_md5)
@@ -620,8 +620,8 @@ def test_incremental_dedup_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: incremental_dedup.process_batch(
-            spark, b, store, 0.8
+        write_fn=lambda b, eid: incremental_dedup.process_batch(
+            spark, b, store, eid, 0.8
         ),
         # NOT ckpt_dedup: the module-scoped tmpdir is shared with
         # test_streaming_dedup_equals_batch, and reusing its checkpoint
@@ -629,6 +629,10 @@ def test_incremental_dedup_equals_batch(spark, sf_dir, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_dedup",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    incremental_dedup.process_batch(
+        spark, docs.filter(F.col("doc_id") > mid), store, 1, 0.8
+    )
 
     from gmall_spark.operators import llm_dedup
 
@@ -641,6 +645,8 @@ def test_incremental_dedup_equals_batch(spark, sf_dir, tmpdir):
         for r in llm_dedup.minhash_lsh_dedup(docs, 0.8).collect()
     }
     assert got == want and len(want) > 0
+    # the replay left no duplicate rows (the sets above would hide them)
+    assert incremental_dedup.emitted_pairs(spark, store).count() == len(got)
 
 
 @pytest.mark.slow
@@ -661,10 +667,10 @@ def test_incremental_dedup_bucketed_store_equals_batch_and_plan(spark, sf_dir, t
     store.drop(spark)
     try:
         incremental_dedup.process_batch(
-            spark, docs.filter(F.col("doc_id") <= mid), store, 0.8
+            spark, docs.filter(F.col("doc_id") <= mid), store, 0, 0.8
         )
         incremental_dedup.process_batch(
-            spark, docs.filter(F.col("doc_id") > mid), store, 0.8
+            spark, docs.filter(F.col("doc_id") > mid), store, 1, 0.8
         )
         got = {
             (r.doc_a, r.doc_b, r.inter, r.jaccard)
@@ -983,8 +989,10 @@ def test_streaming_temporal_join_equals_batch(spark, sf_dir, tmpdir):
         T.StructField("view_event_id", T.LongType()),
     ])
     store = tj.VersionStore(f"{tmpdir}/tjoin_store", schema)
-    emitted = []
-    for lo, hi in ((None, split), (split, None)):
+    emitted = {}
+    # batch 1 runs twice: the second run is a foreachBatch replay,
+    # whose rows replace the first attempt's
+    for batch_id, lo, hi in ((0, None, split), (1, split, None), (1, split, None)):
         def cut(df):
             c = df
             if lo is not None:
@@ -993,12 +1001,13 @@ def test_streaming_temporal_join_equals_batch(spark, sf_dir, tmpdir):
                 c = c.filter(F.col("ts_us") <= hi)
             return c
         out = tj.process_batch(
-            spark, cut(purchases), cut(views), store, "user_id", "ts_us")
-        emitted.extend(out.collect())
+            spark, cut(purchases), cut(views), store, "user_id", "ts_us", batch_id)
+        emitted[batch_id] = out.collect()
 
     got = {
         (r.purchase_event_id): (r.user_id, r.ts_us, r.view_event_id, r.ts_us_right)
-        for r in emitted
+        for rows in emitted.values()
+        for r in rows
     }
     from gmall_spark.operators.relational import asof_join_backward
     expected = {
@@ -1006,6 +1015,8 @@ def test_streaming_temporal_join_equals_batch(spark, sf_dir, tmpdir):
         for r in asof_join_backward(purchases, views, "user_id", "ts_us").collect()
     }
     assert got == expected
+    # the replayed batch stored its versions once
+    assert store.read(spark).count() == views.count()
 
 
 def test_streaming_temporal_join_bucketed_equals_batch_and_plan(spark, sf_dir):
@@ -1088,6 +1099,8 @@ def test_incremental_bloom_equals_batch(spark, sf_dir, tmpdir):
             (F.crc32("gram") % 100 >= lo) & (F.crc32("gram") % 100 < hi)
         )
         ib.process_batch(spark, batch, "gram", store)
+    # foreachBatch replay of the last batch: bit_or is idempotent
+    ib.process_batch(spark, batch, "gram", store)
     got = {
         (r.word_idx, r.word) for r in ib.current_filter(spark, store).collect()
     }
@@ -1139,11 +1152,13 @@ def test_incremental_cms_equals_batch(spark, sf_dir, tmpdir):
         .select(F.explode(_toks(F.col("text"))).alias("tok"))
     )
     store = f"{tmpdir}/cms_store"
-    for lo, hi in ((0, 40), (40, 41), (41, 100)):
+    for batch_id, (lo, hi) in enumerate(((0, 40), (40, 41), (41, 100))):
         batch = toks.filter(
             (F.crc32("tok") % 100 >= lo) & (F.crc32("tok") % 100 < hi)
         )
-        ic.process_batch(spark, batch, "tok", store)
+        ic.process_batch(spark, batch, "tok", store, batch_id)
+    # foreachBatch replay of the last batch: overwrites its own delta
+    ic.process_batch(spark, batch, "tok", store, batch_id)
     got = {
         (r.lane, r.col): r.cell_ct
         for r in ic.current_sketch(spark, store).collect()
@@ -1171,9 +1186,10 @@ def test_incremental_ivf_index_equals_batch_and_prunes(spark, sf_dir, tmpdir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     centroids = ivf.train_centroids(emb)
     store = f"{tmpdir}/ivf_store"
-    for lo, hi in ((0, 200), (200, 350), (350, 10_000_000)):
+    for batch_id, (lo, hi) in enumerate(((0, 200), (200, 350), (350, 10_000_000))):
         batch = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-        ii.process_batch(batch, centroids, store)
+        ii.process_batch(batch, centroids, store, batch_id)
+    ii.process_batch(batch, centroids, store, batch_id)  # foreachBatch replay
     got = {
         (r.vec_id, r.list_id) for r in ii.read_index(spark, store).collect()
     }
@@ -1240,7 +1256,7 @@ def test_purge_doc_ids_removes_from_every_store(spark, sf_dir, tmpdir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     store_dir = f"{tmpdir}/purge_store"
     store = idd.ParquetStore(store_dir)
-    idd.process_batch(spark, docs, store, 0.8)
+    idd.process_batch(spark, docs, store, 0, 0.8)
     pairs = store.pairs(spark).collect()
     assert pairs, "fixture corpus must contain near-dup pairs"
     victim = int(pairs[0].doc_a)
@@ -1313,7 +1329,7 @@ def test_incremental_boilerplate_retroactive_repair(spark, tmpdir):
     assert got == expected
     assert got[1][1] == 1  # batch-1 doc retroactively lost the span
     # the repair row really is a second, later emission of doc 1
-    raw = spark.read.parquet(f"{store}/docs/b0", f"{store}/docs/b1")
+    raw = spark.read.parquet(f"{store}/docs/epoch=0", f"{store}/docs/epoch=1")
     doc1_batches = sorted(
         r.batch for r in raw.filter("doc_id = 1").select("batch").collect()
     )
@@ -1339,6 +1355,8 @@ def test_incremental_boilerplate_equals_batch_on_corpus(spark, sf_dir, tmpdir):
     store = f"{tmpdir}/boiler_corpus_store"
     mid = 250
     ib.process_batch(spark, docs.filter(F.col("doc_id") < mid), store, 0)
+    ib.process_batch(spark, docs.filter(F.col("doc_id") >= mid), store, 1)
+    # foreachBatch replay of batch 1: a no-op
     ib.process_batch(spark, docs.filter(F.col("doc_id") >= mid), store, 1)
     got = {
         r.doc_id: (r.n_spans, r.removed_spans, r.clean_md5)
@@ -1381,6 +1399,8 @@ def test_incremental_boilerplate_foreach_batch_e2e(spark, sf_dir, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_boiler",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ib.process_batch(spark, docs.filter(F.col("doc_id") >= mid), store, 1)
 
     got = {
         r.doc_id: (r.n_spans, r.removed_spans, r.clean_md5)
@@ -1404,6 +1424,7 @@ def test_purge_boilerplate_store_removes_orphaned_span_text(spark, tmpdir):
     the survivors' content too)."""
     from gmall_spark.streaming import incremental_boilerplate as ib
     from gmall_spark.streaming.retention import purge_boilerplate_store
+    from gmall_spark.streaming.store import read_epochs
 
     boiler = " ".join(f"b{i}" for i in range(10))
     secret = " ".join(f"secret{i}" for i in range(10))
@@ -1421,7 +1442,7 @@ def test_purge_boilerplate_store_removes_orphaned_span_text(spark, tmpdir):
     ib.process_batch(spark, b2, store, 1)
     spans_before = {
         r.span
-        for r in ib._read(spark, store, "spans", ib._SPAN_SCHEMA).collect()
+        for r in read_epochs(spark, f"{store}/spans", ib._SPAN_SCHEMA).collect()
     }
     assert any("secret0" in s for s in spans_before), "fixture lost its span"
 
@@ -1435,13 +1456,14 @@ def test_purge_boilerplate_store_removes_orphaned_span_text(spark, tmpdir):
     for f in pathlib.Path(store).rglob("*.parquet"):
         assert b"secret0" not in f.read_bytes(), f"purged text survives in {f}"
     # 2. no posting/doc row references doc 1
-    posts = ib._read(spark, store, "postings", ib._POST_SCHEMA)
+    posts = read_epochs(spark, f"{store}/postings", ib._POST_SCHEMA)
     assert posts.filter(F.col("doc_id") == 1).count() == 0
     assert ib.emitted_docs(spark, store).filter(F.col("doc_id") == 1).count() == 0
     # 3. shared boilerplate span text SURVIVES (it belongs to docs
     # 3/4 too) and surviving docs' state is untouched
     spans_after = {
-        r.span for r in ib._read(spark, store, "spans", ib._SPAN_SCHEMA).collect()
+        r.span
+        for r in read_epochs(spark, f"{store}/spans", ib._SPAN_SCHEMA).collect()
     }
     assert any("b0" in s and "b9" in s for s in spans_after)
     got = {
@@ -1609,6 +1631,10 @@ def test_incremental_ppl_foreach_batch_e2e(spark, sf_dir, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_ppl",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ip.process_batch(
+        spark, streamed.filter(F.col("doc_id") >= mid), model, store, 1
+    )
 
     got = {
         (r.doc_id, r.bucket_id, r.bucket, r.bigram_logprob)
@@ -1705,6 +1731,8 @@ def test_incremental_containment_foreach_batch_e2e(spark, sf_dir, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_contain",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ic.process_batch(spark, docs.filter(F.col("doc_id") >= mid), store, 1)
 
     got = {tuple(r) for r in ic.current_pairs(spark, store).collect()}
     want = {
@@ -1790,6 +1818,8 @@ def test_incremental_image_dedup_foreach_batch_e2e(spark, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_img",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ii.process_batch(spark, blobs.filter(F.col("doc_id") >= 120), store, 1)
 
     got = {(r.doc_id, r.rep_id, r.group_size)
            for r in ii.current_groups(spark, store).collect()}
@@ -1906,6 +1936,8 @@ def test_incremental_kmv_foreach_batch_e2e(spark, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_kmv",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last batch: min-union is idempotent
+    ik.process_batch(spark, keys.filter("k >= 600"), "k", store)
 
     got = sorted(r.h for r in ik.current_sketch(spark, store).collect())
     want = sorted(
@@ -2209,6 +2241,8 @@ def test_incremental_value_hist_foreach_batch_e2e(spark, tmpdir):
         checkpoint=f"{tmpdir}/ckpt_incr_hist",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ih.process_batch(spark, e.filter("event_id % 2 = 1"), store, 1)
 
     got = {(r.q_pct, r.bucket, r.est_upper, r.n)
            for r in ih.current_quantiles(spark, store).collect()}
@@ -2381,6 +2415,8 @@ def test_incremental_range_plan_replans_exactly_once(spark, tmpdir):
 
     # batch 2: skewed — 200 extra rows in each of buckets 0..7
     rp.process_batch(spark, df({b: 200 for b in range(8)}), store, 1)
+    # foreachBatch replay of batch 1: a no-op
+    rp.process_batch(spark, df({b: 200 for b in range(8)}), store, 1)
     a2 = rp.audit(spark, store, P).collect()
     assert any(not r.in_band for r in a2)  # drift detected under v1
     replanned, v2 = rp.maybe_replan(spark, store, P)
@@ -2494,12 +2530,16 @@ def test_incremental_edit_verify_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: incremental_edit_verify.process_batch(
-            spark, b, store
+        write_fn=lambda b, eid: incremental_edit_verify.process_batch(
+            spark, b, store, eid
         ),
         checkpoint=f"{tmpdir}/ckpt_incr_edit",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    incremental_edit_verify.process_batch(
+        spark, docs.filter(F.col("doc_id") > mid), store, 1
+    )
 
     key = lambda r: (r.doc_a, r.doc_b, r.lev, r.max_len, r.edit_sim, r.is_near_dup)
     got = {
@@ -2511,6 +2551,8 @@ def test_incremental_edit_verify_equals_batch(spark, sf_dir, tmpdir):
         for r in QUERIES["dedup_edit_distance_verify"](spark, sf_dir).collect()
     }
     assert got == want and len(want) > 0
+    # the replay left no duplicate rows (the sets above would hide them)
+    assert incremental_edit_verify.emitted_rows(spark, store).count() == len(got)
 
 
 @pytest.mark.slow
@@ -2529,6 +2571,8 @@ def test_incremental_group_split_equals_batch(spark, sf_dir, tmpdir):
     store = f"{tmpdir}/group_split_store"
     igs.process_batch(spark, docs.filter(F.col("doc_id") <= mid), store, 1)
     igs.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 2)
+    # foreachBatch replay of batch 2: a no-op
+    igs.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 2)
 
     got = {
         (r.doc_id, r.group_key, r.split)
@@ -2539,6 +2583,8 @@ def test_incremental_group_split_equals_batch(spark, sf_dir, tmpdir):
         for r in QUERIES["llm_split_by_group"](spark, sf_dir).collect()
     }
     assert got == want and len(want) > 0
+    # the replay left no duplicate rows (the sets above would hide them)
+    assert igs.current_assignment(spark, store).count() == len(got)
 
 
 @pytest.mark.slow
@@ -2584,12 +2630,13 @@ def test_incremental_group_split_retroactive_move(spark, tmpdir):
     assert snap1[a].split == "train" and snap1[b].split == "val"
     assert snap1[a].group_key == a  # A and B did NOT group pairwise
 
-    m2 = igs.process_batch(
-        spark,
-        spark.createDataFrame([(c, tc)], "doc_id long, text string"),
-        store,
-        2,
-    ).collect()
+    for _ in range(2):  # the second run is a foreachBatch replay
+        m2 = igs.process_batch(
+            spark,
+            spark.createDataFrame([(c, tc)], "doc_id long, text string"),
+            store,
+            2,
+        ).collect()
     assert len(m2) == 1 and m2[0].doc_id == a
     assert m2[0].old_split == "train" and m2[0].new_split == "val"
     assert m2[0].old_group_key == a and m2[0].new_group_key == b
@@ -2623,12 +2670,16 @@ def test_incremental_canary_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: incremental_canary.process_batch(
-            spark, b, store
+        write_fn=lambda b, eid: incremental_canary.process_batch(
+            spark, b, store, eid
         ),
         checkpoint=f"{tmpdir}/ckpt_incr_canary",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    incremental_canary.process_batch(
+        spark, docs.filter(F.col("doc_id") > mid), store, 1
+    )
 
     got = {
         r.canary: (r.docs_hit, r.total_hits)
@@ -2665,10 +2716,12 @@ def test_incremental_html_rollup_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: ihe.process_batch(spark, b, store),
+        write_fn=lambda b, eid: ihe.process_batch(spark, b, store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_html",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ihe.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 1)
     got = ihe.current_rollup(spark, store).collect()[0].asDict()
     want = (
         QUERIES["text_html_extract_rollup"](spark, sf_dir).collect()[0].asDict()
@@ -2701,10 +2754,12 @@ def test_incremental_domain_rollup_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: idr.process_batch(spark, b, store),
+        write_fn=lambda b, eid: idr.process_batch(spark, b, store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_domain",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    idr.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 1)
     key = lambda r: r["registered_domain"]  # noqa: E731
     got = sorted(
         (r.asDict() for r in idr.current_rollup(spark, store).collect()),
@@ -2747,10 +2802,12 @@ def test_incremental_mojibake_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: imj.process_batch(spark, b, store),
+        write_fn=lambda b, eid: imj.process_batch(spark, b, store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_moji",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    imj.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 1)
     got = {
         r.pattern: (r.docs_hit, r.total_hits)
         for r in imj.current_counts(spark, store).collect()
@@ -2787,10 +2844,12 @@ def test_incremental_sft_keeper_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: isk.process_batch(spark, b, store),
+        write_fn=lambda b, eid: isk.process_batch(spark, b, store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_sft",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    isk.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 1)
     got = {
         r.prompt: (r.doc_id, r.asst_len, r.n_convs)
         for r in isk.current_keepers(spark, store)
@@ -2838,10 +2897,12 @@ def test_incremental_pagerank_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: ipr.process_batch(spark, b, store),
+        write_fn=lambda b, eid: ipr.process_batch(spark, b, store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_pr",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    ipr.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 1)
     got = {
         r.node_id: r.rank_micro
         for r in ipr.current_ranks(spark, store).collect()
@@ -2863,7 +2924,7 @@ def test_incremental_pagerank_rank_change_log(spark, tmpdir):
 
     store = f"{tmpdir}/pr_change"
     b1 = spark.createDataFrame([(0, "x"), (3, "x")], "doc_id long, text string")
-    m1 = {r.node_id: r for r in ipr.process_batch(spark, b1, store).collect()}
+    m1 = {r.node_id: r for r in ipr.process_batch(spark, b1, store, 0).collect()}
     assert m1 and all(r.old_rank_micro is None for r in m1.values())
     before = {
         r.node_id: r.rank_micro
@@ -2872,7 +2933,8 @@ def test_incremental_pagerank_rank_change_log(spark, tmpdir):
     # page 11 links to (7*11+3)%40 = 0 and (11*11+5)%40 = 6: an edge
     # INTO the existing node 0
     b2 = spark.createDataFrame([(11, "x")], "doc_id long, text string")
-    m2 = {r.node_id: r for r in ipr.process_batch(spark, b2, store).collect()}
+    for _ in range(2):  # the second run is a foreachBatch replay
+        m2 = {r.node_id: r for r in ipr.process_batch(spark, b2, store, 1).collect()}
     assert 0 in m2 and m2[0].old_rank_micro == before[0]
     assert m2[0].new_rank_micro != m2[0].old_rank_micro
     after = {
@@ -2894,13 +2956,14 @@ def test_incremental_sft_keeper_displacement(spark, tmpdir):
         [(100, "ask me this and tersely done x y")],
         "doc_id long, text string",
     )
-    m1 = isk.process_batch(spark, b1, store).collect()
+    m1 = isk.process_batch(spark, b1, store, 0).collect()
     assert m1 == []  # first keeper is an arrival, not a displacement
     b2 = spark.createDataFrame(
         [(102, "ask me this and verbose answer here zz")],
         "doc_id long, text string",
     )
-    m2 = isk.process_batch(spark, b2, store).collect()
+    for _ in range(2):  # the second run is a foreachBatch replay
+        m2 = isk.process_batch(spark, b2, store, 1).collect()
     assert len(m2) == 1
     assert m2[0].old_keeper == 100 and m2[0].new_keeper == 102
     assert m2[0].new_asst_len > m2[0].old_asst_len
@@ -2931,7 +2994,8 @@ def test_incremental_kn_rescore_equals_batch_and_is_retroactive(spark, tmpdir):
         "doc_id long, lang string, text string",
     )
     first = {
-        r.doc_id: r.kn_logprob for r in ikn.process_batch(spark, b0, store).collect()
+        r.doc_id: r.kn_logprob
+        for r in ikn.process_batch(spark, b0, store, 0).collect()
     }
     s0 = ikn.current_scores(spark, store).collect()
     assert len(s0) == 1 and math.isclose(
@@ -2942,7 +3006,8 @@ def test_incremental_kn_rescore_equals_batch_and_is_retroactive(spark, tmpdir):
     b1 = spark.createDataFrame(
         [(2, "en", "ac")], "doc_id long, lang string, text string"
     )
-    ikn.process_batch(spark, b1, store)
+    ikn.process_batch(spark, b1, store, 1)
+    ikn.process_batch(spark, b1, store, 1)  # foreachBatch replay: a no-op
     s1 = {r.doc_id: r.kn_logprob for r in ikn.current_scores(spark, store).collect()}
     assert not math.isclose(s1[1], first[1], abs_tol=1e-9)  # retroactive
     # equality with the batch algebra on (train ∪ eval) so far
@@ -2982,16 +3047,19 @@ def test_incremental_decontam_equals_batch(spark, tmpdir):
     corp = emb.filter(F.col("vec_id") % 20 != 0)
     mid = corp.approxQuantile("vec_id", [0.5], 0.0)[0]
     arrived = set()
-    for part in (
-        corp.filter(F.col("vec_id") <= mid),
-        corp.filter(F.col("vec_id") > mid),
+    for batch_id, part in enumerate(
+        (corp.filter(F.col("vec_id") <= mid), corp.filter(F.col("vec_id") > mid))
     ):
         batch = idc.process_batch(
-            spark, part, ref, ridx, cents, QL.SEM_DECONTAM_THRESHOLD, store
+            spark, part, ref, ridx, cents, QL.SEM_DECONTAM_THRESHOLD, store, batch_id
         ).collect()
         ids = {r.doc_id for r in batch}
         assert ids.isdisjoint(arrived)  # alarm fires on arrival, once
         arrived |= ids
+    # foreachBatch replay of the last batch: a no-op
+    idc.process_batch(
+        spark, part, ref, ridx, cents, QL.SEM_DECONTAM_THRESHOLD, store, batch_id
+    )
     got = {
         (r.doc_id, r.ref_id, r.cos_sim, r.n_ref_hits)
         for r in idc.current_flags(spark, store).collect()
@@ -3001,6 +3069,8 @@ def test_incremental_decontam_equals_batch(spark, tmpdir):
         for r in QUERIES["llm_semantic_decontam"](spark, sf_dir).collect()
     }
     assert got == want and len(want) > 0
+    # the replay left no duplicate rows (the sets above would hide them)
+    assert idc.current_flags(spark, store).count() == len(got)
 
 
 @pytest.mark.slow
@@ -3021,7 +3091,7 @@ def test_incremental_kn_buckets_equal_batch(spark, tmpdir):
          (1, "en", "abab"), (3, "en", "zzzz")],
         "doc_id long, lang string, text string",
     )
-    ikn.process_batch(spark, b0, store)
+    ikn.process_batch(spark, b0, store, 0)
     first = {r.doc_id: r.bucket_id
              for r in ikn.bucketed_docs(spark, store).collect()}
     assert set(first) == {1, 3}
@@ -3033,7 +3103,8 @@ def test_incremental_kn_buckets_equal_batch(spark, tmpdir):
          (11, "en", "aabb")],
         "doc_id long, lang string, text string",
     )
-    ikn.process_batch(spark, b1, store)
+    ikn.process_batch(spark, b1, store, 1)
+    ikn.process_batch(spark, b1, store, 1)  # foreachBatch replay: a no-op
     cur = {r.doc_id: r.bucket_id
            for r in ikn.bucketed_docs(spark, store).collect()}
     assert set(cur) == {1, 3, 5, 7, 9, 11}
@@ -3054,6 +3125,8 @@ def test_incremental_kn_buckets_equal_batch(spark, tmpdir):
     want = {r.doc_id: r.bucket_id
             for r in lm.perplexity_buckets(scored, scored=scored).collect()}
     assert cur == want
+    # the replay left no duplicate rows (the dict above would hide them)
+    assert ikn.bucketed_docs(spark, store).count() == len(cur)
 
 
 def test_incremental_optout_equals_batch_and_is_final(spark, sf_dir, tmpdir):
@@ -3071,8 +3144,9 @@ def test_incremental_optout_equals_batch_and_is_final(spark, sf_dir, tmpdir):
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
     v0 = {r.doc_id: (r.on_blocklist, r.opted_out, r.kept)
-          for r in ioo.process_batch(spark, b0, store).collect()}
-    ioo.process_batch(spark, b1, store)
+          for r in ioo.process_batch(spark, b0, store, 0).collect()}
+    ioo.process_batch(spark, b1, store, 1)
+    ioo.process_batch(spark, b1, store, 1)  # foreachBatch replay: a no-op
     # verdict finality: the batch query on the union agrees with every
     # batch-0 arrival verdict
     want_gate = {r.doc_id: (r.on_blocklist, r.opted_out, r.kept)
@@ -3119,9 +3193,10 @@ def test_incremental_sem_pack_equality_and_locality(spark, sf_dir, tmpdir):
     b0e, b1e = emb.filter(F.col("vec_id") % 2 == 0), emb.filter(
         F.col("vec_id") % 2 == 1
     )
-    isp.process_batch(spark, b0d, b0e, store)
+    isp.process_batch(spark, b0d, b0e, store, 0)
     v1 = isp.current_packing(spark, store).localCheckpoint(eager=True)
-    isp.process_batch(spark, b1d, b1e, store)
+    isp.process_batch(spark, b1d, b1e, store, 1)
+    isp.process_batch(spark, b1d, b1e, store, 1)  # foreachBatch replay: a no-op
     v2 = isp.current_packing(spark, store).localCheckpoint(eager=True)
     # equality with the batch query on the union
     got = {
@@ -3195,10 +3270,11 @@ def test_incremental_gov_keeper_retroactive_restore(spark, sf_dir, tmpdir):
     )
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
-    first = igk.process_batch(spark, b0, store)
+    first = igk.process_batch(spark, b0, store, 0)
     # every group new in batch 0 enters with old_keeper NULL
     assert first.filter(F.col("old_keeper").isNotNull()).count() == 0
-    igk.process_batch(spark, b1, store)
+    igk.process_batch(spark, b1, store, 1)
+    igk.process_batch(spark, b1, store, 1)  # foreachBatch replay: a no-op
     got = {
         r.text_hash: (r.n_members, r.n_surviving, r.keeper_id)
         for r in igk.current_keepers(spark, store).collect()
@@ -3221,15 +3297,16 @@ def test_incremental_gov_keeper_retroactive_restore(spark, sf_dir, tmpdir):
         [(45, t), (81, t), (85, "a unique single page about the sea")],
         "doc_id long, text string",
     )
-    igk.process_batch(spark, planted, store2)
+    igk.process_batch(spark, planted, store2, 0)
     before = {
         r.text_hash: r for r in igk.current_keepers(spark, store2).collect()
     }
     assert {r.keeper_id for r in before.values()} == {45, 85}
-    moves = {
-        r.old_keeper: r
-        for r in igk.process_optout(spark, ["site5.com"], store2).collect()
-    }
+    for _ in range(2):  # the second run is a foreachBatch replay
+        moves = {
+            r.old_keeper: r
+            for r in igk.process_optout(spark, ["site5.com"], store2, 0).collect()
+        }
     assert set(moves) == {45, 85}
     m = moves[45]
     assert m.new_keeper == 81  # the pruned mirror is RESTORED
@@ -3267,13 +3344,14 @@ def test_incremental_novelty_retroactive_revocation(spark, sf_dir, tmpdir):
     )
     seeds0 = docs.filter(F.col("doc_id") % 10 == 0)
     cands = docs.filter(F.col("doc_id") % 10 != 0)
-    inv.process_seeds(spark, seeds0, store)
+    inv.process_seeds(spark, seeds0, store, 0)
     inv.process_candidates(
-        spark, cands.filter(F.col("doc_id") % 2 == 0), store
+        spark, cands.filter(F.col("doc_id") % 2 == 0), store, 0
     )
-    inv.process_candidates(
-        spark, cands.filter(F.col("doc_id") % 2 == 1), store
-    )
+    for _ in range(2):  # the second run is a foreachBatch replay
+        inv.process_candidates(
+            spark, cands.filter(F.col("doc_id") % 2 == 1), store, 1
+        )
     got = {
         r.doc_id: (r.n_blocked_seeds, r.rougel_max, r.novel)
         for r in inv.current_verdicts(spark, store).collect()
@@ -3306,9 +3384,10 @@ def test_incremental_novelty_retroactive_revocation(spark, sf_dir, tmpdir):
     late_seed = spark.createDataFrame(
         [(50, " ".join(S + filler_s))], "doc_id long, text string"
     )
-    first = inv.process_candidates(spark, cand_doc, store2).collect()
+    first = inv.process_candidates(spark, cand_doc, store2, 0).collect()
     assert len(first) == 1 and first[0].novel is True  # empty pool: novel
-    moves = inv.process_seeds(spark, late_seed, store2).collect()
+    for _ in range(2):  # the second run is a foreachBatch replay
+        moves = inv.process_seeds(spark, late_seed, store2, 0).collect()
     assert len(moves) == 1
     m = moves[0]
     assert m.doc_id == 52 and m.old_novel is True and m.new_novel is False
@@ -3343,10 +3422,12 @@ def test_incremental_unicode_census_equals_batch(spark, sf_dir, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, _eid: iun.process_batch(spark, b, store),
+        write_fn=lambda b, eid: iun.process_batch(spark, b, store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_uni",
     )
     q.awaitTermination(180)
+    # foreachBatch replay of the last epoch: a no-op
+    iun.process_batch(spark, docs.filter(F.col("doc_id") > mid), store, 1)
     got = {
         r.rule_class: (r.n_docs, r.n_hits)
         for r in iun.current_counts(spark, store).collect()
