@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gmall_spark.session import scoped_conf
+
 PR_SCALE = 10**12  # fixed-point micro-units
 PR_DAMPING_PCT = 85  # damping 0.85 as an exact integer percentage
 PR_ITERATIONS = 5
@@ -68,17 +70,13 @@ def pagerank(
     # right side of the trade when the alternative is re-shuffling
     # the whole edge list once per iteration.
     _AQE = "spark.sql.adaptive.enabled"
-    prev_aqe = spark.conf.get(_AQE, "true")
     nodes_q = (
         e.select(F.col("src").alias("node_id"))
         .union(e.select(F.col("dst").alias("node_id")))
         .distinct()
     )
-    spark.conf.set(_AQE, "false")
-    try:
+    with scoped_conf(spark, _AQE, "false"):
         nodes = nodes_q.persist()
-    finally:
-        spark.conf.set(_AQE, prev_aqe)
     try:
         n1 = nodes.agg(F.count(F.lit(1)).alias("n"))  # 1 row, broadcast below
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
@@ -94,11 +92,8 @@ def pagerank(
         # re-exchanging the (corpus-sized) edge list — iterations
         # shuffle only the small (node, rank) side (guide §2.4)
         eq = e.join(outdeg, "src").repartition("src")
-        spark.conf.set(_AQE, "false")
-        try:
+        with scoped_conf(spark, _AQE, "false"):
             e_od = eq.persist()
-        finally:
-            spark.conf.set(_AQE, prev_aqe)
         ranks = nodes.crossJoin(F.broadcast(n1)).select(
             "node_id", F.expr(f"{PR_SCALE} div n").alias("r")
         )

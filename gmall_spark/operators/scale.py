@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.session import scoped_conf
+
 
 def write_bucketed(
     df: DataFrame,
@@ -174,10 +176,7 @@ def overwrite_day_partition(
     same way). Static overwrite mode would TRUNCATE the whole table —
     the conf scoping here is the difference between repairing a day
     and deleting a year."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(
+        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
         df.write.mode("overwrite").partitionBy(day_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -23,7 +23,7 @@ from gmall_spark import fixtures_audit
 from gmall_spark import oracles as O
 from gmall_spark.operators.dedup import dedup_first, latest_by_key
 from gmall_spark.plans import ads, dim, dwd, dws, traffic, user
-from gmall_spark.session import HEAVY_TABLES, parallel_scan
+from gmall_spark.session import HEAVY_TABLES, parallel_scan, scoped_conf
 from gmall_spark.sources import cdc_gen, dims, log_gen
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -82,12 +82,8 @@ def _materialized(name: str, spark: SparkSession, sf_dir: str, build) -> DataFra
         # action so per-row HOF pipelines (simhash, minhash lanes)
         # never see it — global inlining is exactly what caused the r1
         # minhash 16x re-hash pathology.
-        prev = spark.conf.get(_INLINE_CONF, "false")
-        spark.conf.set(_INLINE_CONF, "true")
-        try:
+        with scoped_conf(spark, _INLINE_CONF, "true"):
             df.count()
-        finally:
-            spark.conf.set(_INLINE_CONF, prev)
         return df
 
     return fixtures_audit.memo(spark, ("dwd", sf_dir, name), persist_eagerly)

@@ -23,6 +23,8 @@ Design notes for the 100 TB deployment (tested on local[32]):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -69,6 +71,25 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set the session conf ``key`` to ``value`` for the body of a
+    ``with`` block, then restore the previous value (or unset it), also
+    when the body raises. The flip is still session-global while the
+    body runs: a query compiled at the same time on another thread of
+    this session sees it too. Isolating it needs a
+    ``spark.newSession()`` child (ROADMAP item 3), not this helper."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 # Fact-sized tables whose downstream plans do heavy per-row derivation

@@ -6,21 +6,18 @@ extends the batch MinHash pipeline (X19): as reference/benchmark
 documents keep arriving, each micro-batch's keys are hashed into
 (word_idx, word) bit rows and OR-merged into a persisted word store —
 ``bit_or`` is associative and commutative, so after ANY batch split
-the store is bit-for-bit identical to ``bloom_build`` over the union
+the merged filter is bit-for-bit identical to ``bloom_build`` over the union
 of all batches (asserted by tests/test_streaming.py). Training
 pipelines then probe the current store with ``bloom_probe``
 unchanged.
 
-The store is rewritten wholesale each batch — deliberately: the
-filter is CAPPED at bits/32 rows (2048 at the default 65536 bits)
-regardless of how much has been ingested, so the rewrite is O(bits),
-never O(corpus). That inversion is the whole point of the Bloom
-layout — the corpus-sized state lives in the bit pattern, not in
-rows. The swap is a single atomic pointer rename
-(:mod:`gmall_spark.streaming.store`), so a concurrent probe reads
-either the old or the new filter, never a torn or missing one, and a
-crash mid-swap is recoverable instead of silently resetting the
-filter (ADVICE r4).
+Each batch writes only its own delta — its ``bloom_build`` rows,
+at most bits/32 (2048 at the default 65536 bits) regardless of batch
+size — to its ``epoch=<batch_id>`` partition of ``<store>/words``,
+and :func:`current_filter` ``bit_or``s the epochs per ``word_idx``. A
+replayed batch overwrites its own epoch, so a replay changes nothing.
+State grows by at most bits/32 rows per epoch, just as the CMS
+twin's does.
 
 Wire :func:`process_batch` into ``runner.run_foreach_batch`` exactly
 like incremental_dedup; a Kafka source swaps in upstream unchanged.
@@ -33,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import bloom
-from gmall_spark.streaming import store as _store
+from gmall_spark.streaming.runner import idempotent_parquet_write
+from gmall_spark.streaming.store import read_epochs
 
 _STORE_SCHEMA = T.StructType(
     [
@@ -48,21 +46,21 @@ def process_batch(
     batch: DataFrame,
     key_col: str,
     store_dir: str,
+    batch_id: int,
     n_hashes: int = bloom.BLOOM_HASHES,
     bits: int = bloom.BLOOM_BITS,
 ) -> None:
-    """OR-merge one micro-batch of keys into the persisted filter."""
-    delta = bloom.bloom_build(batch, key_col, n_hashes, bits)
-    merged = (
-        _store.read_or_empty(spark, store_dir, _STORE_SCHEMA)
-        .unionByName(delta)
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
+    """Write one micro-batch's filter words as its epoch delta."""
+    idempotent_parquet_write(f"{store_dir}/words")(
+        bloom.bloom_build(batch, key_col, n_hashes, bits), batch_id
     )
-    _store.swap_write(merged, store_dir)
 
 
 def current_filter(spark: SparkSession, store_dir: str) -> DataFrame:
     """The filter as of the last completed batch — feed straight into
     ``bloom.bloom_probe``."""
-    return _store.read_or_empty(spark, store_dir, _STORE_SCHEMA)
+    return (
+        read_epochs(spark, f"{store_dir}/words", _STORE_SCHEMA)
+        .groupBy("word_idx")
+        .agg(F.bit_or("word").alias("word"))
+    )

@@ -38,10 +38,8 @@ writes are idempotent per-epoch overwrites, and a retry therefore
 recomputes byte-identical rows.
 
 Scale shape: postings are O(corpus spans) and content is O(distinct
-spans) — the inherent state of exact frequency dedup; at 100 TB both
-stores become hash-bucketed (incremental_dedup.BucketedStore) so the
-df aggregate and the affected-doc probe are bucket-pruned joins. The
-boilerplate and crossed sets are tiny by construction and broadcast.
+spans) — the inherent state of exact frequency dedup. The boilerplate
+and crossed sets are tiny by construction and broadcast.
 """
 
 from __future__ import annotations

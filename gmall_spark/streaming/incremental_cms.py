@@ -8,10 +8,9 @@ read SUM-merges the deltas. Addition is associative and commutative,
 so after ANY batch split the merged cells equal ``cms_build`` over the
 union of all batches cell-for-cell (asserted by
 tests/test_streaming.py) — and estimates probed against them are
-therefore identical too. Unlike the Bloom ``bit_or`` merge, a SUM
-merge is not idempotent: merging a replayed batch into a swapped
-store would count it twice, so the batch's delta overwrites its own
-epoch instead. Each delta is O(d·w) rows regardless of batch size.
+therefore identical too. A replayed batch overwrites its own epoch,
+so it is counted once. Each delta is O(d·w) rows regardless of batch
+size; the Bloom and KMV twins keep their deltas the same way.
 """
 
 from __future__ import annotations

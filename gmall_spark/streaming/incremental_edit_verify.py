@@ -19,14 +19,13 @@ single-batch X207 output on the full corpus (levenshtein is a pure
 function of the two stored texts — no order dependence anywhere).
 Asserted by tests/test_streaming.py.
 
-Store layout (the incremental_dedup.ParquetStore shape: epoch
-stores, a batch probes the epochs before its own): ``bands``, the
-emitted ``pairs`` rows, plus ``texts`` (doc_id, text) — the edit
-tier verifies against raw text, not shingle arrays, so the store
-keeps the text column the verify needs. At 100 TB the texts table
-is the corpus itself (no amplification — it replaces, not
-duplicates, the shingle store) and the probe join is the same
-bucketed-band equi-join.
+Store layout (the incremental_dedup shape: epoch stores, a batch
+probes the epochs before its own): ``bands``, the emitted ``pairs``
+rows, plus ``texts`` (doc_id, text) — the edit tier verifies against
+raw text, not shingle arrays, so the store keeps the text column the
+verify needs. At 100 TB the texts table is the corpus itself (no
+amplification — it replaces, not duplicates, the shingle store) and
+the probe join is the same band equi-join.
 """
 
 from __future__ import annotations

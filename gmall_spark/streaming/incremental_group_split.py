@@ -94,14 +94,13 @@ def process_batch(
     new_split, old_group_key, new_group_key)."""
     from gmall_spark.queries_llm import NEAR_DUP_THRESHOLD, _SPLIT_SQL_SPARK
 
-    store = incremental_dedup.ParquetStore(store_dir)
     incremental_dedup.process_batch(
         spark,
         batch_docs.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("text"),
         ),
-        store,
+        store_dir,
         batch_id,
         NEAR_DUP_THRESHOLD,
     )
@@ -109,9 +108,9 @@ def process_batch(
     # Re-close groups over ALL pairs so far (duplicate-density-bounded)
     # and re-derive the split for every doc seen so far — the exact
     # X210 expressions (group rep hash; singletons keep the doc hash).
-    pairs = store.pairs(spark).select("doc_a", "doc_b")
+    pairs = incremental_dedup.emitted_pairs(spark, store_dir).select("doc_a", "doc_b")
     groups = components.connected_components(pairs)
-    seen = store.shingles(spark).select("doc_id")
+    seen = read_epochs(spark, f"{store_dir}/shingles", "doc_id long")
     grp_split = _SPLIT_SQL_SPARK.replace("doc_id", "group_key")
     new = (
         seen.join(F.broadcast(groups), "doc_id", "left")

@@ -15,11 +15,9 @@ Store layout: both stores are epoch-partitioned
 (``hashes/epoch=<batch_id>``, ``docs/epoch=<batch_id>``) and a batch
 reads only the hash epochs before its own, so its write target is
 never a path its own plan reads. State is O(distinct spans):
-inherent to exact global dedup (the bit-capped Bloom inversion does
-not apply — membership must be exact or a false positive DELETES
-content). At 100 TB the store becomes hash-bucketed files probed with
-a bucket-pruned join, exactly the incremental_dedup.BucketedStore
-recipe; the epoch layout carries over unchanged.
+inherent to exact global dedup (a Bloom filter's fixed bit budget
+does not apply — membership must be exact or a false positive
+DELETES content).
 
 Wire :func:`process_batch` into ``runner.run_foreach_batch``; a Kafka
 document topic swaps in upstream unchanged.

@@ -22,9 +22,10 @@ batching many takedown requests into one purge amortizes it.
 Bloom filters CANNOT delete (bits are shared — unsetting one would
 create false negatives for other keys): the bloom store must be
 REBUILT from the retained keys, which :func:`purge_doc_ids` does NOT
-automate — callers re-run ``incremental_bloom.process_batch`` over
-the retained reference corpus. Count-min cells could subtract
-exactly, but the rebuild path is the safe default there too.
+automate — callers remove the store's ``words`` epochs and re-run
+``incremental_bloom.process_batch`` over the retained reference
+corpus. Count-min cells could subtract exactly, but the rebuild path
+is the safe default there too.
 """
 
 from __future__ import annotations

@@ -14,13 +14,12 @@ watermark when versions do not arrive after probes of later event
 time (the condition the batch-equality test constructs by splitting
 the input in event-time order).
 
-Store layout at scale: epoch-partitioned parquet keyed by the join key;
-compact with ``operators.scale.write_bucketed`` (bucket by the key)
-so the per-batch probe join is exchange-free on the store side —
-identical reasoning to incremental_dedup.BucketedStore. The store
-holds FULL version history (needed for late probes); a TTL compaction
-dropping versions older than the watermark minus the maximum probe
-lateness bounds it.
+Store layout: ``<store>/versions/epoch=<batch_id>``, the one epoch
+layout of :mod:`gmall_spark.streaming.store`; a replayed batch reads
+the same earlier epochs and overwrites its own. The store holds FULL
+version history (needed for late probes); a TTL compaction dropping
+versions older than the watermark minus the maximum probe lateness
+would bound it.
 """
 
 from __future__ import annotations
@@ -45,79 +44,6 @@ class VersionStore:
 
     def write(self, versions: DataFrame, batch_id: int) -> None:
         idempotent_parquet_write(f"{self.store_dir}/versions")(versions, batch_id)
-
-
-class BucketedVersionStore:
-    """The 100 TB store layout (X16 composed in, as for
-    incremental_dedup.BucketedStore): the version history is a
-    catalog table BUCKETED by the join key, so the store side of the
-    per-batch probe join is exchange-free — only the (small) probe
-    batch shuffles. The probe against a bucketed store uses the
-    join-then-argmax as-of formulation (equi-join on the bucketed
-    key + max_by over versions at-or-before the probe ts) instead of
-    union+window: a union would break the store's co-partitioning.
-    Fan-out is versions-per-key, bounded by TTL compaction."""
-
-    def __init__(self, table: str, key: str, n_buckets: int = 8):
-        self.table = table
-        self.key = key
-        self.n_buckets = n_buckets
-
-    def read(self, spark: SparkSession, schema: T.StructType) -> DataFrame:
-        if spark.catalog.tableExists(self.table):
-            return spark.table(self.table)
-        return spark.createDataFrame([], schema)
-
-    def append(self, versions: DataFrame) -> None:
-        versions.write.mode("append").format("parquet").bucketBy(
-            self.n_buckets, self.key
-        ).saveAsTable(self.table)
-
-    def drop(self, spark: SparkSession) -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {self.table}")
-
-
-def process_batch_bucketed(
-    spark: SparkSession,
-    left_batch: DataFrame,
-    right_batch: DataFrame,
-    store: BucketedVersionStore,
-    key: str,
-    ts: str,
-    schema: T.StructType,
-) -> DataFrame:
-    """As-of join one micro-batch against a bucketed version store.
-
-    Appends the batch's versions FIRST (so probes see same-batch
-    versions, matching :func:`process_batch`), then probes with
-    join-then-argmax: left ⟕ versions on the bucketed key with
-    ``version.ts <= probe.ts``, ``max_by`` picking the latest version
-    (ties: greatest payload — the asof_join_backward rule). Left rows
-    must be distinct. Output schema matches asof_join_backward."""
-    import pyspark.sql.functions as F
-
-    store.append(right_batch.select(*[f.name for f in schema.fields]))
-    versions = store.read(spark, schema)
-    r_cols = [f.name for f in schema.fields if f.name not in (key, ts)]
-    r_ts = f"{ts}_right"
-    v = versions.select(
-        F.col(key).alias("__vk"),
-        F.struct(F.col(ts).alias(r_ts), *r_cols).alias("__ver"),
-    )
-    l_cols = left_batch.columns
-    joined = left_batch.join(
-        v,
-        (left_batch[key] == v["__vk"]) & (v[f"__ver.{r_ts}"] <= left_batch[ts]),
-        "left_outer",
-    )
-    best = joined.groupBy(*l_cols).agg(F.max_by("__ver", "__ver").alias("__ver"))
-    return best.select(
-        key,
-        ts,
-        *[c for c in l_cols if c not in (key, ts)],
-        F.col(f"__ver.{r_ts}").alias(r_ts),
-        *[F.col(f"__ver.{c}").alias(c) for c in r_cols],
-    )
 
 
 def process_batch(

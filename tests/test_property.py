@@ -722,6 +722,60 @@ def test_incremental_transitions_any_split_equals_batch(spark, tmpdir_factory, r
     assert got == want
 
 
+# --- sketch twins: any split, any replayed epoch --------------------------------
+
+
+def _sketch_twin(name):
+    """(process_batch, current view, one-shot batch sketch) of one
+    sketch twin; KMV runs at K=8 so a few dozen keys overflow it."""
+    from functools import partial
+
+    from gmall_spark.operators import bloom, sketches
+    from gmall_spark.streaming import incremental_bloom as ib
+    from gmall_spark.streaming import incremental_cms as ic
+    from gmall_spark.streaming import incremental_kmv as ik
+
+    return {
+        "bloom": (ib.process_batch, ib.current_filter,
+                  lambda keys: bloom.bloom_build(keys, "k")),
+        "cms": (ic.process_batch, ic.current_sketch,
+                lambda keys: sketches.cms_build(keys, "k")),
+        "kmv": (partial(ik.process_batch, k=8), partial(ik.current_sketch, k=8),
+                lambda keys: sketches.kmv_sketch(sketches.kmv_hashes(keys, "k"), 8)),
+    }[name]
+
+
+@pytest.mark.parametrize("twin", ["bloom", "cms", "kmv"])
+@given(data=st.data())
+@settings(**_SETTINGS)
+@pytest.mark.slow
+def test_sketch_twin_any_split_and_replay_equals_batch(spark, tmpdir_factory, twin, data):
+    """For ANY keys, ANY split into 1-3 batches and a replay of ANY
+    one epoch after all batches ran (a middle one included), the
+    twin's current view equals the one-shot batch sketch row for
+    row."""
+    process, current, batch_sketch = _sketch_twin(twin)
+    keys = data.draw(st.lists(st.integers(0, 60), min_size=1, max_size=40), "keys")
+    n = data.draw(st.integers(1, 3), "n_batches")
+    cuts = sorted(data.draw(
+        st.lists(st.integers(0, len(keys)), min_size=n - 1, max_size=n - 1), "cuts"))
+    bounds = [0, *cuts, len(keys)]
+    batches = [
+        spark.createDataFrame([(f"w{k}",) for k in keys[lo:hi]], "k string")
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+    replay = data.draw(st.integers(0, n - 1), "replayed_epoch")
+
+    store = str(tmpdir_factory.mktemp(f"{twin}_prop"))
+    for eid, b in enumerate(batches):
+        process(spark, b, "k", store, eid)
+    process(spark, batches[replay], "k", store, replay)  # foreachBatch replay
+    got = sorted(tuple(r) for r in current(spark, store).collect())
+    full = spark.createDataFrame([(f"w{k}",) for k in keys], "k string")
+    want = sorted(tuple(r) for r in batch_sketch(full).collect())
+    assert got == want
+
+
 # --- systematic resampling (X158) ----------------------------------------------
 
 weights_strategy = st.lists(st.integers(1, 50), min_size=1, max_size=30)

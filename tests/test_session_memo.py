@@ -1,6 +1,7 @@
 """The session-memo registry (gmall_spark.fixtures_audit): one memo
 behind every per-session reuse, build timing, and release; plus the
-Python-worker environment get_session sets up."""
+Python-worker environment get_session sets up and its scoped conf
+flip."""
 
 from __future__ import annotations
 
@@ -168,3 +169,22 @@ def test_python_udf_runs_from_a_script_outside_the_repo(tmp_path, sf_dir):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "ROWS " in out.stdout, out.stdout[-2000:]
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """scoped_conf sets the key inside the block only: a key that was
+    set gets its value back, an unset key is unset again, also when
+    the body raises."""
+    from gmall_spark.session import scoped_conf
+
+    key = "spark.sql.optimizer.collapseProjectAlwaysInline"
+    spark.conf.unset(key)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, key, "true"):
+            assert spark.conf.get(key) == "true"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key, None) is None
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prev

@@ -650,71 +650,6 @@ def test_incremental_dedup_equals_batch(spark, sf_dir, tmpdir):
 
 
 @pytest.mark.slow
-def test_incremental_dedup_bucketed_store_equals_batch_and_plan(spark, sf_dir, tmpdir):
-    """X16 composed into X19 (VERDICT r3 task 2): the band store
-    bucketed by band_hash and the shingle store by doc_id. Asserts
-    (a) two-batch streaming over the bucketed store emits exactly the
-    single-batch operator's pairs, and (b) the per-batch probe join is
-    exchange-free on the STORE side — the bucketed scan satisfies the
-    join's clustered distribution, where a plain parquet store needs
-    one more shuffle."""
-    from gmall_spark.operators import llm_dedup
-    from gmall_spark.streaming import incremental_dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    mid = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-    store = incremental_dedup.BucketedStore("t_incr_bkt", n_buckets=4)
-    store.drop(spark)
-    try:
-        incremental_dedup.process_batch(
-            spark, docs.filter(F.col("doc_id") <= mid), store, 0, 0.8
-        )
-        incremental_dedup.process_batch(
-            spark, docs.filter(F.col("doc_id") > mid), store, 1, 0.8
-        )
-        got = {
-            (r.doc_a, r.doc_b, r.inter, r.jaccard)
-            for r in incremental_dedup.emitted_pairs(spark, store).collect()
-        }
-        want = {
-            (r.doc_a, r.doc_b, r.inter, r.jaccard)
-            for r in llm_dedup.minhash_lsh_dedup(docs, 0.8).collect()
-        }
-        assert got == want and len(want) > 0
-
-        # (b) plan shape: same probe, bucketed store vs plain copy
-        batch = docs.filter(F.col("doc_id") > mid).select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            llm_dedup.shingle_array("text").alias("shingles"),
-        )
-        sh = batch.select("doc_id", F.explode("shingles").alias("shingle"))
-        nb = llm_dedup.band_signatures(llm_dedup.minhash_signatures(sh))
-        plain_dir = f"{tmpdir}/plain_bands"
-        store.bands(spark).write.mode("overwrite").parquet(plain_dir)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            def shuffles(df):
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                return plan.count("Exchange") - plan.count("BroadcastExchange"), plan
-
-            n_bkt, plan_bkt = shuffles(
-                incremental_dedup.probe_candidates(nb, store.bands(spark))
-            )
-            n_plain, _ = shuffles(
-                incremental_dedup.probe_candidates(
-                    nb, spark.read.parquet(plain_dir)
-                )
-            )
-            assert "Bucketed: true" in plan_bkt, plan_bkt[:3000]
-            assert n_bkt == n_plain - 1, (n_bkt, n_plain, plan_bkt[:3000])
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        store.drop(spark)
-
-
-@pytest.mark.slow
 def test_streaming_dedup_ttl_read_refresh_equals_batch(spark, tmpdir):
     """OnReadAndWrite TTL parity (VERDICT r3 #6, ref
     DwsTradePaymentSucWindow.java:84-90): the read-refreshing 5 s TTL
@@ -1019,65 +954,6 @@ def test_streaming_temporal_join_equals_batch(spark, sf_dir, tmpdir):
     assert store.read(spark).count() == views.count()
 
 
-def test_streaming_temporal_join_bucketed_equals_batch_and_plan(spark, sf_dir):
-    """The bucketed-store temporal join (join-then-argmax probe) must
-    match the batch as-of join after an event-time-ordered 2-batch
-    split, with the store side of the probe join exchange-free."""
-    from gmall_spark import queries as q
-    from gmall_spark.streaming import temporal_join as tj
-    from pyspark.sql import types as T
-
-    ev = _events(spark, sf_dir)
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.unix_micros("ts").alias("ts_us"),
-        F.col("event_id").alias("view_event_id"))
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.unix_micros("ts").alias("ts_us"),
-        F.col("event_id").alias("purchase_event_id"))
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("view_event_id", T.LongType()),
-    ])
-    store = tj.BucketedVersionStore("tjoin_bucketed_versions", "user_id")
-    store.drop(spark)
-    try:
-        split = ev.agg(F.expr("percentile(unix_micros(ts), 0.5)")).collect()[0][0]
-        emitted = []
-        last_probe = None
-        for lo, hi in ((None, split), (split, None)):
-            def cut(df):
-                c = df
-                if lo is not None:
-                    c = c.filter(F.col("ts_us") > lo)
-                if hi is not None:
-                    c = c.filter(F.col("ts_us") <= hi)
-                return c
-            out = tj.process_batch_bucketed(
-                spark, cut(purchases), cut(views), store, "user_id", "ts_us", schema)
-            last_probe = out
-            emitted.extend(out.collect())
-
-        from gmall_spark.operators.relational import asof_join_backward
-        key = lambda r: (r.purchase_event_id,)
-        got = {key(r): (r.user_id, r.ts_us, r.view_event_id, r.ts_us_right)
-               for r in emitted}
-        expected = {key(r): (r.user_id, r.ts_us, r.view_event_id, r.ts_us_right)
-                    for r in asof_join_backward(
-                        purchases, views, "user_id", "ts_us").collect()}
-        assert got == expected
-
-        # the store scan must engage the bucketed read (Bucketed: true /
-        # SelectedBucketsCount): at scale that makes the store side of
-        # the probe join exchange-free (here AQE broadcasts the tiny
-        # store, which is also exchange-free on the store side)
-        plan = last_probe._jdf.queryExecution().executedPlan().toString()
-        assert "tjoin_bucketed_versions" in plan, plan[:2000]
-        assert "Bucketed: true" in plan, plan[:2000]
-    finally:
-        store.drop(spark)
-
-
 def test_incremental_bloom_equals_batch(spark, sf_dir, tmpdir):
     """bit_or is associative+commutative, so after ANY batch split the
     persisted filter must equal bloom_build over the union — word for
@@ -1094,13 +970,13 @@ def test_incremental_bloom_equals_batch(spark, sf_dir, tmpdir):
     ref = grams.filter(F.col("doc_id") % 10 == 7).select("gram").distinct()
     store = f"{tmpdir}/bloom_store"
     # three uneven batches
-    for lo, hi in ((0, 60), (60, 61), (61, 10_000_000)):
+    for batch_id, (lo, hi) in enumerate(((0, 60), (60, 61), (61, 10_000_000))):
         batch = ref.filter(
             (F.crc32("gram") % 100 >= lo) & (F.crc32("gram") % 100 < hi)
         )
-        ib.process_batch(spark, batch, "gram", store)
-    # foreachBatch replay of the last batch: bit_or is idempotent
-    ib.process_batch(spark, batch, "gram", store)
+        ib.process_batch(spark, batch, "gram", store, batch_id)
+    # foreachBatch replay of the last batch: overwrites its own delta
+    ib.process_batch(spark, batch, "gram", store, batch_id)
     got = {
         (r.word_idx, r.word) for r in ib.current_filter(spark, store).collect()
     }
@@ -1252,18 +1128,22 @@ def test_purge_doc_ids_removes_from_every_store(spark, sf_dir, tmpdir):
     purged store finds no pair with the deleted doc."""
     from gmall_spark.streaming import incremental_dedup as idd
     from gmall_spark.streaming.retention import purge_doc_ids
+    from gmall_spark.streaming.store import read_epochs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     store_dir = f"{tmpdir}/purge_store"
-    store = idd.ParquetStore(store_dir)
-    idd.process_batch(spark, docs, store, 0, 0.8)
-    pairs = store.pairs(spark).collect()
+    idd.process_batch(spark, docs, store_dir, 0, 0.8)
+
+    def read(sub):
+        return read_epochs(spark, f"{store_dir}/{sub}")
+
+    pairs = read("pairs").collect()
     assert pairs, "fixture corpus must contain near-dup pairs"
     victim = int(pairs[0].doc_a)
     before = {
-        "bands": store.bands(spark).count(),
-        "shingles": store.shingles(spark).count(),
-        "pairs": store.pairs(spark).count(),
+        "bands": read("bands").count(),
+        "shingles": read("shingles").count(),
+        "pairs": read("pairs").count(),
     }
     removed = purge_doc_ids(
         spark,
@@ -1274,19 +1154,19 @@ def test_purge_doc_ids_removes_from_every_store(spark, sf_dir, tmpdir):
             f"{store_dir}/pairs": ["doc_a", "doc_b"],
         },
     )
-    assert store.bands(spark).filter(F.col("doc_id") == victim).count() == 0
-    assert store.shingles(spark).filter(F.col("doc_id") == victim).count() == 0
+    assert read("bands").filter(F.col("doc_id") == victim).count() == 0
+    assert read("shingles").filter(F.col("doc_id") == victim).count() == 0
     assert (
-        store.pairs(spark)
+        read("pairs")
         .filter((F.col("doc_a") == victim) | (F.col("doc_b") == victim))
         .count()
         == 0
     )
     # only the victim's rows were removed
-    assert store.bands(spark).count() == before["bands"] - removed[f"{store_dir}/bands"]
+    assert read("bands").count() == before["bands"] - removed[f"{store_dir}/bands"]
     assert removed[f"{store_dir}/bands"] > 0
     assert removed[f"{store_dir}/pairs"] >= 1
-    assert store.pairs(spark).count() == before["pairs"] - removed[f"{store_dir}/pairs"]
+    assert read("pairs").count() == before["pairs"] - removed[f"{store_dir}/pairs"]
 
 
 @pytest.mark.slow
@@ -1831,16 +1711,16 @@ def test_incremental_image_dedup_foreach_batch_e2e(spark, tmpdir):
 def test_incremental_kmv_exactly_equals_batch_and_replay(spark, tmpdir):
     """KMV streaming twin (X145's pipeline form): min-union merging
     makes streaming == batch EXACT (row-identical sketch, bit-equal
-    estimate) after any split, and idempotent under foreachBatch
-    replay with NO batch-id bookkeeping."""
+    estimate) after any split, and a foreachBatch replay overwrites
+    its own epoch delta."""
     from gmall_spark.operators import sketches
     from gmall_spark.streaming import incremental_kmv as ik
 
     store = f"{tmpdir}/kmv_store"
     b1 = spark.range(0, 400).selectExpr("id AS k")
     b2 = spark.range(300, 900).selectExpr("id AS k")  # overlaps b1
-    ik.process_batch(spark, b1, "k", store)
-    ik.process_batch(spark, b2, "k", store)
+    ik.process_batch(spark, b1, "k", store, 0)
+    ik.process_batch(spark, b2, "k", store, 1)
 
     got_sketch = sorted(r.h for r in ik.current_sketch(spark, store).collect())
     want_sketch = sorted(
@@ -1859,14 +1739,14 @@ def test_incremental_kmv_exactly_equals_batch_and_replay(spark, tmpdir):
     # 900 true distinct; K=256 estimator should land close
     assert abs(got_est.est - 900) / 900 < 0.2
 
-    # replay: re-merging batch 2 is a no-op (min-union idempotence)
-    ik.process_batch(spark, b2, "k", store)
+    # replay of batch 2: overwrites its own epoch, a no-op
+    ik.process_batch(spark, b2, "k", store, 1)
     again = sorted(r.h for r in ik.current_sketch(spark, store).collect())
     assert again == got_sketch
 
     # sub-K corpus: sketch holds everything, estimate EXACT
     store2 = f"{tmpdir}/kmv_small"
-    ik.process_batch(spark, spark.range(0, 100).selectExpr("id AS k"), "k", store2)
+    ik.process_batch(spark, spark.range(0, 100).selectExpr("id AS k"), "k", store2, 0)
     e = ik.distinct_estimate(spark, store2).collect()[0]
     assert (e.n_sketch, e.est) == (100, 100.0)
 
@@ -1932,12 +1812,12 @@ def test_incremental_kmv_foreach_batch_e2e(spark, tmpdir):
     q = runner.run_foreach_batch(
         stream,
         batch_fn=lambda b: b,
-        write_fn=lambda b, eid: ik.process_batch(spark, b, "k", store),
+        write_fn=lambda b, eid: ik.process_batch(spark, b, "k", store, eid),
         checkpoint=f"{tmpdir}/ckpt_incr_kmv",
     )
     q.awaitTermination(180)
-    # foreachBatch replay of the last batch: min-union is idempotent
-    ik.process_batch(spark, keys.filter("k >= 600"), "k", store)
+    # foreachBatch replay of the last batch: overwrites its own epoch
+    ik.process_batch(spark, keys.filter("k >= 600"), "k", store, 1)
 
     got = sorted(r.h for r in ik.current_sketch(spark, store).collect())
     want = sorted(
