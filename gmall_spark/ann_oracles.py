@@ -28,7 +28,7 @@ The embedding width is PROBED from the driver's testdata at import
 (one-row pyarrow read of ``embeddings.parquet``), so a regenerated
 corpus at another width transparently regenerates matching oracle
 SQL; 64 (the historical width) is only the no-testdata fallback.
-``queries_llm._oracle_dim_check`` still fail-fasts if a specific
+``queries_llm.prelude._oracle_dim_check`` still fail-fasts if a specific
 ``sf_dir``'s width disagrees with the probed global.
 """
 

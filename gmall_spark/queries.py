@@ -3841,11 +3841,6 @@ def q_promotion_candidate_suppliers(spark, sf_dir):
     )
 
 
-# Register the LLM-data-pipeline queries into the same registry.
-# (Import + reorder choreography is at the BOTTOM of this file: the
-# registry finalization must be order-independent — a user importing
-# gmall_spark.queries_llm first re-enters this module mid-import.)
-
 # ---------------------------------------------------------------------------
 # Registry ordering. The round driver issues CORRECTNESS rows for the FIRST
 # 50 registry entries only (r1 lesson: the LLM queries registered last got
@@ -4022,11 +4017,10 @@ _PRIORITY = [
 def _finalize_registry() -> None:
     """Validate + reorder once every registration module has run.
 
-    Called from whichever module finishes LAST: importing
-    ``gmall_spark.queries`` first runs queries_llm's registrations
-    inline (the import below), while importing ``queries_llm`` first
-    re-enters THIS module before any LLM query is registered — in that
-    order queries_llm's own tail makes the call.
+    Called once, from the tail of ``gmall_spark.queries_llm``: that
+    package finishes last in either import order (imported first, it
+    re-enters THIS module before any LLM query is registered; imported
+    second, by the import below, it runs inside this module's import).
     """
     global QUERIES
     missing = [n for n in _PRIORITY if n not in QUERIES]
@@ -4037,6 +4031,3 @@ def _finalize_registry() -> None:
 
 
 from gmall_spark import queries_llm  # noqa: E402,F401
-
-if getattr(queries_llm, "_REGISTERED", False):
-    _finalize_registry()

@@ -1,21 +1,9 @@
-"""LLM-training-data pipeline queries (dedup / similarity / text /
-multimodal / web / SFT) with DuckDB oracle twins — the family-module
-package that replaced the single-file queries_llm.py (r11 split;
-VERDICT r10 item 5).
-
-Importing this package registers every family's queries into
-``gmall_spark.queries.QUERIES``/``ORACLES`` in the exact order the
-monolith did, and re-exports every module's names here so existing
-``from gmall_spark.queries_llm import X`` and ``queries_llm.Y``
-references (tests, streaming twins, bench) keep working unchanged.
-New query families land as new modules in this package, imported and
-re-exported below.
+"""LLM-training-data pipeline queries with DuckDB oracle twins, one
+family module per concern. Every name lives in exactly one family
+module; import it from there. Importing this package registers every
+family's queries into ``gmall_spark.queries.QUERIES``/``ORACLES``: the
+import order below is the registration order.
 """
-
-from __future__ import annotations
-
-import sys as _sys
-import types as _types
 
 from gmall_spark.queries_llm import (  # noqa: F401  (import order = registration order)
     prelude,
@@ -40,98 +28,6 @@ from gmall_spark.queries_llm import (  # noqa: F401  (import order = registratio
     incontext,
     governance,
 )
+from gmall_spark.queries import _finalize_registry
 
-# Re-export every family's top-level names (public AND private: the
-# test suite imports private helpers and monkeypatches _docs) into the
-# package namespace, later modules winning name collisions exactly as
-# later statements won in the monolith.
-_pkg = _sys.modules[__name__]
-for _m in (
-    prelude,
-    text_signals,
-    dedup_docs,
-    ann_topk,
-    corpus_lm,
-    sampling_privacy,
-    loader_schedule,
-    curation,
-    mm_codecs,
-    ann_eval,
-    tok_frozen,
-    packing_release,
-    distribution_stats,
-    behavior_analytics,
-    warehouse_ops,
-    tok_media,
-    extraction_tiers,
-    web_tier,
-    sft_classifier,
-    incontext,
-    governance,
-):
-    for _k in vars(_m):
-        if not _k.startswith("__"):
-            setattr(_pkg, _k, getattr(_m, _k))
-
-_FAMILY_MODULES = (
-    prelude,
-    text_signals,
-    dedup_docs,
-    ann_topk,
-    corpus_lm,
-    sampling_privacy,
-    loader_schedule,
-    curation,
-    mm_codecs,
-    ann_eval,
-    tok_frozen,
-    packing_release,
-    distribution_stats,
-    behavior_analytics,
-    warehouse_ops,
-    tok_media,
-    extraction_tiers,
-    web_tier,
-    sft_classifier,
-    incontext,
-    governance,
-)
-
-
-class _SourceForwardingModule(_types.ModuleType):
-    """Package module class that forwards assignments of the shared
-    SOURCE hooks (``_docs``/``_emb``/``_t``) to every family module.
-
-    In the monolith, tests injected planted corpora by assigning
-    ``queries_llm._docs = lambda ...`` and every query saw it through
-    module globals. After the split each family module holds its own
-    early binding, so a plain package-level set would be invisible —
-    this class keeps the monolith's patch point working by
-    propagating the set (and its restore) to all families.
-
-    ONLY the three names in ``_FORWARDED`` remain package-level patch
-    points (ADVICE r11): assigning any other re-exported private
-    helper on the package (e.g. ``queries_llm._knn_edges``, a
-    monolith-era patch point) does NOT reach the family modules'
-    early bindings — patch the owning family module directly instead
-    (``queries_llm.prelude._knn_edges`` etc.), which is what the
-    suite does. The source hooks are forwarded because they are the
-    planted-corpus injection point shared by dozens of tests; other
-    helpers each have exactly one owner module."""
-
-    _FORWARDED = frozenset({"_docs", "_emb", "_t"})
-
-    def __setattr__(self, name: str, value) -> None:
-        super().__setattr__(name, value)
-        if name in self._FORWARDED:
-            for _fm in _FAMILY_MODULES:
-                _types.ModuleType.__setattr__(_fm, name, value)
-
-
-_pkg.__class__ = _SourceForwardingModule
-
-_REGISTERED = True
-
-from gmall_spark import queries as _queries_mod  # noqa: E402
-
-_queries_mod._finalize_registry()
+_finalize_registry()

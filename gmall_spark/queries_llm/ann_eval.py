@@ -1,8 +1,4 @@
 """ANN evaluation harnesses: LSH band planning, embedding dimension truncation, JL random-projection recall/two-stage retrieval evals.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

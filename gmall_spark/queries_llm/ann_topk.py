@@ -1,8 +1,4 @@
 """ANN top-k retrieval families: brute cosine, LSH, IVF, SQ, PQ, IVF-PQ (+residual), embedding PageRank centrality.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Behavioral analytics: next-event eval, funnel latency, session paths, ABC revenue, transition matrices, cohort LTV, warehouse data tests, EWMA forecasts, RFM segmentation, file-stats pruning, systematic resampling.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Corpus/LM prep families: cross-corpus decontamination, vocab, negative samples, BPE merge candidates, PMI, TF-IDF, bigram LM scoring, perplexity buckets, NB language classifier, DSIR, tokenizer fertility, hard negatives.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Corpus curation capstones: the composed keep/drop funnel (v1/v2) over dedup + quality + PII + decontamination.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Document dedup families: exact, prefix, n-gram Jaccard, MinHash+LSH, transitive groups/keepers, embedding cosine/LSH, winnowing fingerprints.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

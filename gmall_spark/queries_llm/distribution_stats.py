@@ -1,8 +1,4 @@
 """Distribution/layout statistics: skip-gram lift, vocabulary growth, value drift, range-partition plans, histogram quantile sketches, volume control charts, supply risk, JSON profiles, RANGE-frame windows.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Extraction + LM scoring tiers: HTML/markup main-text extraction (X215-X217), interpolated Kneser-Ney LM (X218-X219), semantic decontamination (X220-X221), byte-fallback BPE (X222-X224).
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -56,7 +56,7 @@ from gmall_spark.queries_llm.prelude import (
     _transitive_groups,
     _xmatch,
 )
-from gmall_spark.queries_llm.sampling_privacy import SHARD_N
+from gmall_spark.queries_llm.loader_schedule import SHARD_N
 from gmall_spark.queries_llm.web_tier import (
     DOMAIN_BLOCKLIST,
     DOMAIN_OPTOUT,

@@ -1,10 +1,8 @@
-"""Loader-schedule family (r12 split from sampling_privacy.py along
-the loader-schedule seam — VERDICT r11 item 6): the deterministic
-epoch/shard deal (X128), curriculum ordering (X249), staged mixture
-schedule (X250), quality-tier repeat plan (X251), and the epoch-shard
-manifest (X252), moved verbatim — every @query body and oracle string
-is byte-identical to where it moved from. New loader-schedule queries
-(the X256 repeat-expanded stream) land here.
+"""Loader-schedule family: the deterministic epoch/shard deal (X128),
+curriculum ordering (X249), staged mixture schedule (X250),
+quality-tier repeat plan (X251), the epoch-shard manifest (X252), the
+repeat-expanded stream (X256) and the final per-doc sampling weight
+(X263).
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Multimodal plumbing: image/audio/video codec stubs, EXIF/metadata profiles, frame sampling, bloom/CMS sketch scans.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

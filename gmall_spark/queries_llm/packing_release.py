@@ -1,8 +1,4 @@
 """Packing + release families: image perceptual hashing, l-diversity gate, length-bucket padding, FFD sequence packing, gibberish scoring, curation funnel/fingerprint, duplicate attribution, split leakage, curation v4 manifest, embedding health.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Shared helpers for the LLM query families: corpus loaders, session-scoped fixture caches, and the minhash/shingle oracle SQL fragments every dedup family composes.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """PII/contamination/sampling families: PII scan, n-gram novelty, stratified sampling, train/val/test splits, repetition signals, sequence packing, k-anonymity, z-order layout, epoch shards, segment dedup, semantic clusters.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations
@@ -1231,16 +1227,3 @@ def q_llm_domain_mix_weights(spark, sf_dir):
         ).alias("keep_rate"),
     )
 
-
-
-
-
-# X128/X249-X252 moved to loader_schedule.py (r12 split along the
-# loader-schedule seam — VERDICT r11 item 6); re-imported here so the
-# established import paths keep working.
-from gmall_spark.queries_llm.loader_schedule import (  # noqa: E402,F401
-    MIX_SCHEDULE_EPOCHS,
-    REPEAT_EPOCHS,
-    SHARD_EPOCHS,
-    SHARD_N,
-)

@@ -1,9 +1,5 @@
 """SFT conversation tier (X231-X234), packed-row boundary offsets
 (X238), hashing-trick classifier (X239-X240).
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

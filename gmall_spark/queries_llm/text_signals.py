@@ -1,8 +1,4 @@
 """Text-quality signal families: quality scores, language ID, simhash fingerprints, Gopher repetition, span/boilerplate cleaning, n-gram containment (X-series: simhash/containment tiers).
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Frozen tokenizer tier (X139) and the unigram-LM (SentencePiece-class) tokenizer tier (X194-X196).
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

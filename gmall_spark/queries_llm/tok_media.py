@@ -1,8 +1,4 @@
 """WordPiece tokenizer tier (X205-X206), edit-distance verify + FIM transform (X207-X208), leakage-safe group split (X210), shot boundaries/canary/rollup (X212-X214).
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

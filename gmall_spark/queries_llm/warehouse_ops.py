@@ -1,8 +1,4 @@
 """Warehouse/retrieval ops: range-as-equi join, corpus datasheet, greedy LM decode, co-purchase pairs, ingest completeness, kNN triangles, bitext mining, compaction planning, KMV cardinality, OOV reports, audio features/fingerprints.
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Web provenance tier: URL canonicalization / domain rollup / re-crawl drift (X225-X228), host PageRank (X237), domain caps (X235-X236), mojibake repair (X229-X230).
-
-Split from queries_llm.py (r11) verbatim; registry semantics
-unchanged — every @query body and oracle string is byte-identical
-to the monolith it moved from.
 """
 
 from __future__ import annotations

@@ -30,7 +30,12 @@ from pyspark.sql import SparkSession
 
 from gmall_spark import fixtures_audit
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_SHUFFLE_PARTITIONS = int(_CPUS)
+# Driver heap when SPARK_DRIVER_MEMORY is unset: half the host's
+# physical memory, at most 48g, so the JVM never outgrows the host.
+_HOST_MIB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+DEFAULT_DRIVER_MEMORY = f"{min(48 << 10, _HOST_MIB // 2)}m"
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -42,8 +47,7 @@ def get_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session with scale-aware defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{_CPUS}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.master(master)
@@ -58,7 +62,10 @@ def get_session(
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", DEFAULT_DRIVER_MEMORY),
+        )
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""),

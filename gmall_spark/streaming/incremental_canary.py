@@ -27,7 +27,7 @@ from gmall_spark.streaming.store import read_epochs
 def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The X213 projection over one batch — the IDENTICAL stack
     expression the batch query runs (one pass, all canaries)."""
-    from gmall_spark.queries_llm import CANARY_PHRASES
+    from gmall_spark.queries_llm.tok_media import CANARY_PHRASES
 
     stack_args = ", ".join(
         f"'{c}', (length({text_col}) - length(replace({text_col}, '{c}', '')))"

@@ -35,7 +35,7 @@ def process_batch(
 ) -> None:
     """Reduce one micro-batch to its (day, bucket) partial grid and
     write it to the batch's own epoch (idempotent overwrite)."""
-    from gmall_spark.queries_llm import DRIFT_W
+    from gmall_spark.queries_llm.distribution_stats import DRIFT_W
 
     idempotent_parquet_write(f"{store_root}/grid")(
         batch.select(

@@ -98,7 +98,7 @@ def process_batch(
     the X207 batch query: doc_a, doc_b, lev, max_len, edit_sim,
     is_near_dup)."""
     if max_pct is None:
-        from gmall_spark.queries_llm import EDIT_SIM_MAX_PCT
+        from gmall_spark.queries_llm.tok_media import EDIT_SIM_MAX_PCT
 
         max_pct = EDIT_SIM_MAX_PCT
     txt = batch_docs.select(

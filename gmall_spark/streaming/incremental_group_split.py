@@ -92,7 +92,8 @@ def process_batch(
     MOVED since the previous snapshot, write the new snapshot.
     Returns the move log rows for this batch (doc_id, old_split,
     new_split, old_group_key, new_group_key)."""
-    from gmall_spark.queries_llm import NEAR_DUP_THRESHOLD, _SPLIT_SQL_SPARK
+    from gmall_spark.queries_llm.packing_release import _SPLIT_SQL_SPARK
+    from gmall_spark.queries_llm.prelude import NEAR_DUP_THRESHOLD
 
     incremental_dedup.process_batch(
         spark,

@@ -53,7 +53,7 @@ def current_packs(spark: SparkSession, store_root: str, cap: int | None = None) 
     The default cap is SEQ_PACK_CAP itself (not a hardcoded copy):
     a literal 2048 here would silently diverge from the batch packer
     if the constant ever changed (ADVICE r8 item 4)."""
-    from gmall_spark.queries_llm import SEQ_PACK_CAP, pack_rows
+    from gmall_spark.queries_llm.packing_release import SEQ_PACK_CAP, pack_rows
 
     return pack_rows(
         stored_lengths(spark, store_root),

@@ -30,7 +30,7 @@ _PLAN_DIR_RE = _re.compile(r"^v(\d+)$")
 
 
 def _default_parts() -> int:
-    from gmall_spark.queries_llm import RANGE_PARTS
+    from gmall_spark.queries_llm.distribution_stats import RANGE_PARTS
 
     return RANGE_PARTS
 

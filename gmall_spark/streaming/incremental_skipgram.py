@@ -40,7 +40,7 @@ def process_batch(
     """Count one micro-batch of (doc_id, text) rows: raw in-window
     pair counts (the X184 per-row array pairing — never a self-join)
     and unigram counts, each to the batch's own epoch."""
-    from gmall_spark.queries_llm import SKIPGRAM_WINDOW
+    from gmall_spark.queries_llm.distribution_stats import SKIPGRAM_WINDOW
 
     win = SKIPGRAM_WINDOW if window is None else window
     docs = batch_docs.selectExpr(
@@ -80,7 +80,7 @@ def current_lift(
     bit-identical to the batch operator on the union (SUM-merged
     integer counts; lift divides exact integers, one IEEE divide +
     round, so there is nothing order-sensitive to drift)."""
-    from gmall_spark.queries_llm import SKIPGRAM_MIN_PAIR
+    from gmall_spark.queries_llm.distribution_stats import SKIPGRAM_MIN_PAIR
 
     mp = SKIPGRAM_MIN_PAIR if min_pair is None else min_pair
     pairs = (

@@ -230,8 +230,9 @@ def streaming_interval_join(
     lower_s: int,
     upper_s: int,
     watermark: str,
+    how: str,
 ) -> DataFrame:
-    """Stream-stream interval join (SURVEY J7).
+    """Stream-stream interval join (SURVEY J7), inner or left outer.
 
     Ref src/test/.../DataStreamJoinTest.java:48-56 — DataStream
     ``intervalJoin .between(-5s, +5s)``. Spark supports this natively:
@@ -239,6 +240,13 @@ def streaming_interval_join(
     sides so each side's join state is evicted once the other side's
     watermark passes the range bound (Flink's interval-join state
     cleanup, for free).
+
+    ``how="leftOuter"`` is the streaming form of J2 (ref
+    DwdTradeOrderDetail.java's double LEFT join: an order-detail row
+    must emit even when its activity/coupon record never arrives): the
+    same condition, with outer-NULL rows emitted once the watermark
+    passes the upper bound, i.e. once the match window provably
+    closed. State eviction is the same as for ``how="inner"``.
     """
     lw = left.withWatermark(left_ts, watermark)
     rw = right.withWatermark(right_ts, watermark)
@@ -247,39 +255,7 @@ def streaming_interval_join(
         & (rw[right_ts] >= lw[left_ts] + F.expr(f"INTERVAL {lower_s} SECONDS"))
         & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {upper_s} SECONDS"))
     )
-    return lw.join(rw, cond)
-
-
-def streaming_left_outer_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    lower_s: int,
-    upper_s: int,
-    watermark: str,
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join — the streaming form of J2.
-
-    Ref DwdTradeOrderDetail.java's double LEFT join: an order-detail
-    row must emit even when its activity/coupon record never arrives.
-    Flink SQL holds both sides in state-retention-bounded join state;
-    Spark's equivalent is the watermarked left-outer stream-stream
-    join — the SAME equi-join + time-range condition as the interval
-    join, with outer-NULL rows emitted once the watermark passes the
-    upper bound (i.e. once the match window provably closed). State
-    eviction follows the watermark on both sides, exactly like the
-    inner variant.
-    """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (rw[right_ts] >= lw[left_ts] + F.expr(f"INTERVAL {lower_s} SECONDS"))
-        & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {upper_s} SECONDS"))
-    )
-    return lw.join(rw, cond, "leftOuter")
+    return lw.join(rw, cond, how)
 
 
 def idempotent_parquet_write(out_dir: str) -> Callable[[DataFrame, int], None]:

@@ -15,25 +15,9 @@ u=1 -> site1.org and u=5/u=6 -> kept domains.
 
 from __future__ import annotations
 
-import contextlib
-
 import pytest
 
 from gmall_spark.queries import QUERIES
-
-
-@contextlib.contextmanager
-def _fresh_fixtures():
-    """Planted corpora hijack _docs under the SAME sf_dir key, so the
-    shared stage fixtures must be cleared going in (stale real-corpus
-    entries) and going out (stale planted entries)."""
-    from gmall_spark import fixtures_audit
-
-    fixtures_audit.clear()
-    try:
-        yield
-    finally:
-        fixtures_audit.clear()
 
 
 WORDS = (
@@ -45,7 +29,7 @@ WORDS = (
 
 
 @pytest.mark.slow
-def test_keeper_gated_reelects_surviving_mirror(spark, sf_dir, monkeypatch):
+def test_keeper_gated_reelects_surviving_mirror(spark, sf_dir, plant):
     """X253 planted groups:
     - group 41: blocked doc 83 has the MOST words (ungated keeper),
       survivors 45 (30w) and 41 (29w) -> re-elected keeper is 45 (the
@@ -54,8 +38,6 @@ def test_keeper_gated_reelects_surviving_mirror(spark, sf_dir, monkeypatch):
     - group 42: every member gated (optout + blocklist) -> keeper NULL.
     - group 46: no member gated -> keeper == ungated keeper, no
       re-election."""
-    import gmall_spark.queries_llm as QL
-
     a83 = " ".join(WORDS)  # 31 words, u=3 -> site3.io (blocklist)
     b45 = " ".join(WORDS[:30])  # u=5 -> site5.com (kept)
     c41 = " ".join(WORDS[:29])  # u=1 -> site1.org (kept)
@@ -71,14 +53,13 @@ def test_keeper_gated_reelects_surviving_mirror(spark, sf_dir, monkeypatch):
         (86, g3.strip()),  # u=6 kept
     ]
     planted = spark.createDataFrame(rows, "doc_id long, text string")
-    with _fresh_fixtures():
-        monkeypatch.setattr(QL, "_docs", lambda s, d: planted)
-        out = {
-            r.group_id: r
-            for r in QUERIES["dedup_groups_keeper_gated"](
-                spark, sf_dir
-            ).collect()
-        }
+    sf_dir = plant(documents=planted)
+    out = {
+        r.group_id: r
+        for r in QUERIES["dedup_groups_keeper_gated"](
+            spark, sf_dir
+        ).collect()
+    }
     assert set(out) == {41, 42, 46}
     g = out[41]
     assert g.group_size == 3 and g.n_surviving == 2
@@ -130,7 +111,7 @@ def _mirror_corpus(spark):
 @pytest.mark.sf001
 @pytest.mark.slow
 def test_curation_v5_restores_blocked_keepers_mirror(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir, plant
 ):
     """The end-to-end restore: v4 (governance-blind) keeps mirror 43
     and prunes the rest; v5 gates 43 (site3.io is blocklisted),
@@ -139,20 +120,17 @@ def test_curation_v5_restores_blocked_keepers_mirror(
     vanishes with its blocked representative. The funnel's stage-5 row
     shows the same count (one per stage here), and the release diff
     charges 43 as removed and 81 as added."""
-    import gmall_spark.queries_llm as QL
-
     planted = _mirror_corpus(spark)
-    with _fresh_fixtures():
-        monkeypatch.setattr(QL, "_docs", lambda s, d: planted)
-        v4 = {
-            r.doc_id
-            for r in QUERIES["llm_corpus_curation_v4"](spark, sf_dir).collect()
-        }
-        v5 = {
-            r.doc_id
-            for r in QUERIES["llm_corpus_curation_v5"](spark, sf_dir).collect()
-        }
-        diff = QUERIES["llm_release_diff"](spark, sf_dir).collect()
+    sf_dir = plant(documents=planted)
+    v4 = {
+        r.doc_id
+        for r in QUERIES["llm_corpus_curation_v4"](spark, sf_dir).collect()
+    }
+    v5 = {
+        r.doc_id
+        for r in QUERIES["llm_corpus_curation_v5"](spark, sf_dir).collect()
+    }
+    diff = QUERIES["llm_release_diff"](spark, sf_dir).collect()
     assert 43 in v4 and 81 not in v4  # ungated chain: min-id mirror only
     assert 43 not in v5  # blocklisted representative is out
     assert 81 in v5  # ...and its releasable mirror is RESTORED
@@ -278,7 +256,7 @@ def _containment_corpus(spark):
 @pytest.mark.sf001
 @pytest.mark.slow
 def test_curation_v5_restores_contained_copy_of_blocked_container(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir, plant
 ):
     """The containment-grain restore (r12, the X253 logic at X106
     grain): v4 drops the contained copy 41 (containment loser) and
@@ -286,25 +264,22 @@ def test_curation_v5_restores_contained_copy_of_blocked_container(
     the containment winner no longer survives — KEEPS 41, so the
     content's last releasable representative ships instead of
     vanishing. The X259 audit flags exactly this pair as restored."""
-    import gmall_spark.queries_llm as QL
-
     planted = _containment_corpus(spark)
-    with _fresh_fixtures():
-        monkeypatch.setattr(QL, "_docs", lambda s, d: planted)
-        aud = {
-            (r.doc_a, r.doc_b): r
-            for r in QUERIES["dedup_containment_keeper_gated"](
-                spark, sf_dir
-            ).collect()
-        }
-        v4 = {
-            r.doc_id
-            for r in QUERIES["llm_corpus_curation_v4"](spark, sf_dir).collect()
-        }
-        v5 = {
-            r.doc_id
-            for r in QUERIES["llm_corpus_curation_v5"](spark, sf_dir).collect()
-        }
+    sf_dir = plant(documents=planted)
+    aud = {
+        (r.doc_a, r.doc_b): r
+        for r in QUERIES["dedup_containment_keeper_gated"](
+            spark, sf_dir
+        ).collect()
+    }
+    v4 = {
+        r.doc_id
+        for r in QUERIES["llm_corpus_curation_v4"](spark, sf_dir).collect()
+    }
+    v5 = {
+        r.doc_id
+        for r in QUERIES["llm_corpus_curation_v5"](spark, sf_dir).collect()
+    }
     assert (41, 83) in aud
     r = aud[(41, 83)]
     assert r.winner_id == 83 and r.loser_id == 41
@@ -317,13 +292,11 @@ def test_curation_v5_restores_contained_copy_of_blocked_container(
 
 @pytest.mark.sf001
 @pytest.mark.slow
-def test_pack_license_taint_flips_exactly_its_pack(spark, sf_dir, monkeypatch):
+def test_pack_license_taint_flips_exactly_its_pack(spark, sf_dir, plant):
     """X260 planted fixture: ten cc-by helper docs (site1.org) pack
     into fully trainable cc-by packs; adding ONE proprietary doc
     (site3.com — proprietary tier, NOT blocklisted) relicenses exactly
     the packs that contain it and no others."""
-    import gmall_spark.queries_llm as QL
-
     helpers = [
         "a calm wind moves across the wide bay and the ships rest at anchor",
         "the baker sells warm bread before the town wakes and the bells ring",
@@ -360,23 +333,21 @@ def test_pack_license_taint_flips_exactly_its_pack(spark, sf_dir, monkeypatch):
         )
 
     clean = corpus(False)
-    with _fresh_fixtures():
-        monkeypatch.setattr(QL, "_docs", lambda s, d: clean)
-        audit_a = QUERIES["llm_pack_license_audit"](spark, sf_dir).collect()
+    sf_dir = plant(documents=clean)
+    audit_a = QUERIES["llm_pack_license_audit"](spark, sf_dir).collect()
     assert audit_a and all(r.trainable for r in audit_a)
     assert {r.pack_license for r in audit_a} == {"cc-by"}
 
     tainted = corpus(True)
-    with _fresh_fixtures():
-        monkeypatch.setattr(QL, "_docs", lambda s, d: tainted)
-        v5 = {
-            r.doc_id: r.pack_id
-            for r in QUERIES["llm_corpus_curation_v5"](spark, sf_dir).collect()
-        }
-        audit_b = {
-            r.pack_id: r
-            for r in QUERIES["llm_pack_license_audit"](spark, sf_dir).collect()
-        }
+    sf_dir = plant(documents=tainted)
+    v5 = {
+        r.doc_id: r.pack_id
+        for r in QUERIES["llm_corpus_curation_v5"](spark, sf_dir).collect()
+    }
+    audit_b = {
+        r.pack_id: r
+        for r in QUERIES["llm_pack_license_audit"](spark, sf_dir).collect()
+    }
     assert 90 in v5  # the proprietary doc survives the content stages
     taint_pack = v5[90]
     for pid, r in audit_b.items():
@@ -409,21 +380,18 @@ def test_drop_ledger_partitions_and_matches_v5(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_drop_ledger_labels_planted_mirrors(spark, sf_dir, monkeypatch):
+def test_drop_ledger_labels_planted_mirrors(spark, sf_dir, plant):
     """X261 on the mirror corpus: the blocked representative reads
     'governance', the restored mirror reads 'released', the remaining
     identical mirrors read 'exact_dup' (they lose the gated exact-hash
     election before the near-dup stage is even consulted), and the
     rare-letter fillers read 'quality'."""
-    import gmall_spark.queries_llm as QL
-
     planted = _mirror_corpus(spark)
-    with _fresh_fixtures():
-        monkeypatch.setattr(QL, "_docs", lambda s, d: planted)
-        led = {
-            r.doc_id: r.drop_stage
-            for r in QUERIES["llm_drop_ledger"](spark, sf_dir).collect()
-        }
+    sf_dir = plant(documents=planted)
+    led = {
+        r.doc_id: r.drop_stage
+        for r in QUERIES["llm_drop_ledger"](spark, sf_dir).collect()
+    }
     assert led[43] == "governance"
     assert led[81] == "released"
     for d in (121, 161, 201, 241):

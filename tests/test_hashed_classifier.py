@@ -11,9 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from gmall_spark import fixtures_audit
-from gmall_spark import queries_llm as qllm
-from gmall_spark.queries_llm import sft_classifier as qmod
+from gmall_spark.queries_llm import sft_classifier
 from gmall_spark.queries import QUERIES
 
 
@@ -29,50 +27,38 @@ def _planted(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
-def test_separable_vocab_scores_perfectly(spark, sf_dir, monkeypatch):
-    planted = _planted(spark)
-    monkeypatch.setattr(qmod, "_docs", lambda s, d: planted)
-    fixtures_audit.clear()
-    try:
-        rows = QUERIES["text_hashed_ngram_classifier"](spark, sf_dir).collect()
-        assert rows and all(r.correct == 1 for r in rows)
-        assert {r.pred_en for r in rows} == {0, 1}  # both classes predicted
-        grid = {
-            (r.pred_en, r.is_en): r.n_docs
-            for r in QUERIES["text_hashed_classifier_confusion"](
-                spark, sf_dir
-            ).collect()
-        }
-        assert grid[(1, 0)] == 0 and grid[(0, 1)] == 0  # empty cells present
-        assert grid[(1, 1)] > 0 and grid[(0, 0)] > 0
-    finally:
-        fixtures_audit.clear()
+def test_separable_vocab_scores_perfectly(spark, plant):
+    sf_dir = plant(documents=_planted(spark))
+    rows = QUERIES["text_hashed_ngram_classifier"](spark, sf_dir).collect()
+    assert rows and all(r.correct == 1 for r in rows)
+    assert {r.pred_en for r in rows} == {0, 1}  # both classes predicted
+    grid = {
+        (r.pred_en, r.is_en): r.n_docs
+        for r in QUERIES["text_hashed_classifier_confusion"](
+            spark, sf_dir
+        ).collect()
+    }
+    assert grid[(1, 0)] == 0 and grid[(0, 1)] == 0  # empty cells present
+    assert grid[(1, 1)] > 0 and grid[(0, 0)] > 0
 
 
-def test_model_is_fixed_width_and_train_only(spark, sf_dir, monkeypatch):
+def test_model_is_fixed_width_and_train_only(spark, plant):
     """The deployable artifact is exactly HASH_BUCKETS floats, and it
     derives from the TRAIN half alone: perturbing an odd (eval) doc's
     text must not move a single weight."""
-    planted = _planted(spark)
-    monkeypatch.setattr(qmod, "_docs", lambda s, d: planted)
-    fixtures_audit.clear()
-    try:
-        w1 = list(qllm._hashed_nb_weights(spark, sf_dir))
-        assert len(w1) == qllm.HASH_BUCKETS
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        perturbed = planted.withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 2 == 1, F.concat(F.col("text"), F.lit(" xyzzy"))
-            ).otherwise(F.col("text")),
-        )
-        monkeypatch.setattr(qmod, "_docs", lambda s, d: perturbed)
-        fixtures_audit.clear()
-        w2 = list(qllm._hashed_nb_weights(spark, sf_dir))
-        assert w1 == w2
-    finally:
-        fixtures_audit.clear()
+    planted = _planted(spark)
+    w1 = list(sft_classifier._hashed_nb_weights(spark, plant(documents=planted)))
+    assert len(w1) == sft_classifier.HASH_BUCKETS
+    perturbed = planted.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 2 == 1, F.concat(F.col("text"), F.lit(" xyzzy"))
+        ).otherwise(F.col("text")),
+    )
+    w2 = list(sft_classifier._hashed_nb_weights(spark, plant(documents=perturbed)))
+    assert w1 == w2
 
 
 def test_corpus_accuracy_is_the_honest_floor(spark, sf_dir):

@@ -144,20 +144,21 @@ def test_trained_centroids_reuses_published_artifact(spark, sf_dir, tmp_path, mo
     """With SPARK_GRAFT_CENTROID_DIR set, a second (simulated) session
     must load the artifact instead of retraining: training is
     monkeypatched to raise after the first run."""
-    from gmall_spark import fixtures_audit, queries_llm
+    from gmall_spark import fixtures_audit
+    from gmall_spark.queries_llm import prelude
     from gmall_spark.operators import ivf
 
     monkeypatch.setenv("SPARK_GRAFT_CENTROID_DIR", str(tmp_path))
     fixtures_audit.clear()
     try:
-        first = queries_llm._trained_centroids(spark, sf_dir)
+        first = prelude._trained_centroids(spark, sf_dir)
         fixtures_audit.clear()  # simulate a fresh session
 
         def boom(*a, **k):
             raise AssertionError("retrained despite published artifact")
 
         monkeypatch.setattr(ivf, "train_centroids", boom)
-        again = queries_llm._trained_centroids(spark, sf_dir)
+        again = prelude._trained_centroids(spark, sf_dir)
         assert again == first
     finally:
         fixtures_audit.clear()  # drop artifact-keyed entries
@@ -187,20 +188,21 @@ def test_codebook_artifact_roundtrip_and_fingerprint(spark, sf_dir, tmp_path):
 def test_trained_books_reuses_published_artifact(spark, sf_dir, tmp_path, monkeypatch):
     """A second (simulated) session must load the published codebooks
     instead of retraining (training monkeypatched to raise)."""
-    from gmall_spark import fixtures_audit, queries_llm
+    from gmall_spark import fixtures_audit
+    from gmall_spark.queries_llm import prelude
     from gmall_spark.operators import pq
 
     monkeypatch.setenv("SPARK_GRAFT_CENTROID_DIR", str(tmp_path))
     fixtures_audit.clear()
     try:
-        first = queries_llm._trained_books(spark, sf_dir)
+        first = prelude._trained_books(spark, sf_dir)
         fixtures_audit.clear()  # simulate a fresh session
 
         def boom(*a, **k):
             raise AssertionError("retrained despite published artifact")
 
         monkeypatch.setattr(pq, "train_codebooks", boom)
-        again = queries_llm._trained_books(spark, sf_dir)
+        again = prelude._trained_books(spark, sf_dir)
         assert again == first
     finally:
         fixtures_audit.clear()

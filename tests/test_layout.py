@@ -44,9 +44,9 @@ def test_compaction_plan_pairs_adjacent_undersized(spark, sf_dir):
     at most two files, partners are ADJACENT in the undersized z
     sequence (clustering preserved), merged_rows is the group sum,
     and a trailing odd file stays for the next cycle."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import warehouse_ops
 
-    rows = ql.q_layout_compaction_plan(spark, sf_dir).collect()
+    rows = warehouse_ops.q_layout_compaction_plan(spark, sf_dir).collect()
     by_target = {}
     for r in rows:
         by_target.setdefault(r.merge_target, []).append(r)

@@ -421,13 +421,14 @@ def test_clear_cache_releases_everything(spark, sf_dir):
     operators' persisted DataFrames, and the per-session model memos
     (centroids, embedding width) without erroring, and queries must
     still run (and retrain) afterwards."""
-    from gmall_spark import fixtures_audit, queries, queries_llm
+    from gmall_spark import fixtures_audit, queries
+    from gmall_spark.queries_llm import prelude
 
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     queries.QUERIES["dedup_minhash_lsh"](spark, sf_dir).count()
     queries._dwd_order_detail(spark, sf_dir)
-    queries_llm._trained_centroids(spark, sf_dir)
-    queries_llm._emb_dim(spark, sf_dir)
+    prelude._trained_centroids(spark, sf_dir)
+    prelude._emb_dim(spark, sf_dir)
     assert not cache_manager.isEmpty() or fixtures_audit.entries("centroids")
 
     queries.clear_cache()
@@ -1121,10 +1122,10 @@ def test_ngram_novelty_planted(spark, sf_dir):
     verbatim FROM a reference doc must score novelty 0; reference
     docs never appear in the output; and every novelty value is a
     valid fraction with integer-exact counts."""
-    from gmall_spark import queries_llm as ql
+    from gmall_spark.queries_llm import prelude, sampling_privacy
 
     out = {r.doc_id: (r.n_grams, r.seen_ct, r.novelty)
-           for r in ql.q_text_ngram_novelty(spark, sf_dir).collect()}
+           for r in sampling_privacy.q_text_ngram_novelty(spark, sf_dir).collect()}
     assert out, "corpus docs shorter than 8 words everywhere?"
     assert all(k % 20 != 0 for k in out)
     for n, s, nov in out.values():
@@ -1146,7 +1147,7 @@ def test_ngram_novelty_planted(spark, sf_dir):
     d = docs.unionByName(planted)
     grams = d.select(
         "doc_id",
-        F.explode(llm_dedup.shingle_array("text", ql.CONTAM_GRAM_N)).alias("gram"),
+        F.explode(llm_dedup.shingle_array("text", prelude.CONTAM_GRAM_N)).alias("gram"),
     )
     ref = (grams.filter(F.col("doc_id") % 20 == 0).select("gram").distinct()
            .withColumn("__seen", F.lit(1)))
@@ -1170,7 +1171,7 @@ def test_decontam_audit_catches_subthreshold_quote(spark):
     doc quoting ONE reference 8-gram has Jaccard far below the 0.7
     drop threshold (survives the clean) but a nonzero shared-gram
     count (shows up on the certificate)."""
-    from gmall_spark import queries_llm as ql
+    from gmall_spark.queries_llm import corpus_lm, prelude
 
     ref_text = "r1 r2 r3 r4 r5 r6 r7 r8"
     quote_doc = " ".join(f"k{i}" for i in range(40)) + " " + ref_text
@@ -1182,11 +1183,11 @@ def test_decontam_audit_catches_subthreshold_quote(spark):
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     ref = docs.filter(F.col("doc_id") % 20 == 0)
     dropped = llm_dedup.cross_corpus_near_dups(
-        corpus, ref, ql.DECONTAM_THRESHOLD
+        corpus, ref, corpus_lm.DECONTAM_THRESHOLD
     ).select("doc_id").distinct()
     assert dropped.count() == 0  # LSH clean keeps the quoting doc
     kept = corpus.join(F.broadcast(dropped), "doc_id", "left_anti")
-    grams = F.explode(llm_dedup.shingle_array("text", ql.CONTAM_GRAM_N))
+    grams = F.explode(llm_dedup.shingle_array("text", prelude.CONTAM_GRAM_N))
     ov = (
         kept.select("doc_id", grams.alias("gram"))
         .join(F.broadcast(ref.select(grams.alias("gram")).distinct()), "gram")
@@ -1201,10 +1202,10 @@ def test_lsh_band_plan_s_curve_properties(spark):
     """The band-plan table (X137) matches the analytic S-curve: exact
     value at a hand-computed point, monotone in s within a config, and
     the s50 crossover moves RIGHT as rows/band grows (more selective)."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import ann_eval
 
-    rows = ql.q_dedup_lsh_band_plan(spark, None).collect()
-    assert len(rows) == 19 * len(ql.BAND_PLAN_CONFIGS)
+    rows = ann_eval.q_dedup_lsh_band_plan(spark, None).collect()
+    assert len(rows) == 19 * len(ann_eval.BAND_PLAN_CONFIGS)
     by_cfg = {}
     for r in rows:
         by_cfg.setdefault((r.n_bands, r.rows_per_band), []).append(r)
@@ -1231,10 +1232,10 @@ def test_dim_truncation_recall_shape(spark, sf_dir):
     ground-truth pair count, and using ALL 64 dims would give recall 1
     by construction (sanity of the harness itself via the 32-dim arm
     being <= 1)."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import ann_eval
 
-    rows = ql.q_similarity_eval_dim_truncation(spark, sf_dir).collect()
-    assert sorted(r.dims for r in rows) == sorted(ql.TRUNC_DIMS)
+    rows = ann_eval.q_similarity_eval_dim_truncation(spark, sf_dir).collect()
+    assert sorted(r.dims for r in rows) == sorted(ann_eval.TRUNC_DIMS)
     for r in rows:
         assert r.bf_pairs > 0 and 0 <= r.hits <= r.bf_pairs
         assert r.recall_at_10 == round(r.hits / r.bf_pairs, 6)
@@ -1293,7 +1294,7 @@ def test_vocab_oov_planted_counts(spark, tmpdir):
     (the synthetic testdata's ~31-type vocabulary never misses): the
     frozen vocab keeps only train words with count >= 2, and holdout
     OOV is counted token- and type-weighted."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import warehouse_ops
 
     rows = [
         (0, "aa aa bb", "en"),   # train: aa x2 (kept), bb x1 (hapax, cut)
@@ -1305,7 +1306,7 @@ def test_vocab_oov_planted_counts(spark, tmpdir):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string"
     ).write.parquet(f"{sf}/documents.parquet")
-    got = {r.lang: r for r in ql.q_llm_vocab_oov(spark, sf).collect()}
+    got = {r.lang: r for r in warehouse_ops.q_llm_vocab_oov(spark, sf).collect()}
     en = got["en"]
     assert (en.n_tokens, en.oov_tokens) == (4, 3)
     assert en.oov_token_rate == 0.75
@@ -1320,10 +1321,11 @@ def test_kmv_join_cardinality_accuracy(spark, sf_dir):
     a side smaller than K is EXACT by construction (the sketch holds
     every value), and the K=256 estimates carry ~1/sqrt(K-1) ≈ 6%
     standard error — gate at 25% relative."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.operators import sketches
+    from gmall_spark.queries_llm import warehouse_ops
 
-    r = ql.q_events_join_cardinality_sketch(spark, sf_dir).collect()[0]
-    assert r.k == ql.KMV_K
+    r = warehouse_ops.q_events_join_cardinality_sketch(spark, sf_dir).collect()[0]
+    assert r.k == sketches.KMV_K
     if r.n_a_exact < r.k:
         assert r.n_a_est == float(r.n_a_exact)
     for est, exact in [
@@ -1424,10 +1426,10 @@ def test_systematic_resample_exactness_properties(spark, sf_dir):
     scheme is this tight)."""
     import math
 
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import behavior_analytics
 
-    rows = ql.q_llm_systematic_resample(spark, sf_dir).collect()
-    D = ql.RESAMPLE_DRAWS
+    rows = behavior_analytics.q_llm_systematic_resample(spark, sf_dir).collect()
+    D = behavior_analytics.RESAMPLE_DRAWS
     W = sum(r.n_tokens for r in rows)
     assert sum(r.draws for r in rows) == D
     for r in rows:
@@ -1441,7 +1443,7 @@ def test_data_tests_fire_on_planted_violations(spark, tmpdir):
     test): a planted warehouse with a duplicate order key, a NULL and
     an orphan custkey, an orphan lineitem, a duplicate customer, an
     out-of-range value, an unknown event type, and an empty doc."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import behavior_analytics
 
     sf = f"{tmpdir}/bad_sf"
     spark.createDataFrame(
@@ -1469,7 +1471,7 @@ def test_data_tests_fire_on_planted_violations(spark, tmpdir):
     ).write.parquet(f"{sf}/documents.parquet")
 
     got = {(r.tbl, r.test): r.failures
-           for r in ql.q_warehouse_data_tests(spark, sf).collect()}
+           for r in behavior_analytics.q_warehouse_data_tests(spark, sf).collect()}
     assert got[("orders", "o_orderkey_unique")] == 1
     assert got[("orders", "o_custkey_not_null")] == 1
     assert got[("orders", "o_custkey_in_customer")] == 1  # custkey 99
@@ -1485,7 +1487,7 @@ def test_volume_control_chart_fires_on_planted_spike(spark, tmpdir):
     at 10 events + one 100-event spike must flag EXACTLY the spike
     (the uniform production corpus never breaches 3 sigma, so this
     fixture is the proof the alarm can fire at all)."""
-    import gmall_spark.queries_llm as ql
+    from gmall_spark.queries_llm import distribution_stats
 
     rows = []
     eid = 0
@@ -1505,7 +1507,8 @@ def test_volume_control_chart_fires_on_planted_spike(spark, tmpdir):
                  "event_type", "value", "props").write.parquet(
         f"{sf}/events.parquet")
     got = {r.day: r.is_anomaly
-           for r in ql.q_events_daily_volume_anomalies(spark, sf).collect()}
+           for r in distribution_stats.q_events_daily_volume_anomalies(
+               spark, sf).collect()}
     assert got["2024-03-30"] is True
     assert sum(got.values()) == 1  # only the spike
 
@@ -1534,9 +1537,9 @@ def test_bitext_ann_agreement_gate_sf001(spark):
     """VERDICT r7 item 2 acceptance: the IVF-backed miner's top-1
     agreement vs the exact cross-join pass must be >= 0.9 at the
     driver's sf0.01 (measured 0.95 when registered)."""
-    from gmall_spark import queries_llm
+    from gmall_spark.queries_llm import warehouse_ops
 
-    row = queries_llm.q_llm_bitext_mining_eval(
+    row = warehouse_ops.q_llm_bitext_mining_eval(
         spark, "/root/testdata/sf0.01"
     ).collect()[0]
     assert row.n_src > 0
@@ -1550,15 +1553,15 @@ def test_sequence_packing_beats_bucketed_padding(spark, sf_dir):
     docs under a mask, so it only ever pays end-of-row waste where
     bucketed batching pays per-doc padding (measured 0.91 vs 0.62 at
     sf0.001, 0.88 vs 0.61 at sf0.01)."""
-    from gmall_spark import queries_llm
+    from gmall_spark.queries_llm import packing_release
 
-    pack = queries_llm.q_llm_sequence_packing_ffd(spark, sf_dir)
+    pack = packing_release.q_llm_sequence_packing_ffd(spark, sf_dir)
     agg = pack.agg(
         F.sum("n_tok").alias("tok"),
         F.countDistinct("pack_id").alias("packs"),
     ).collect()[0]
-    packed_util = agg.tok / (agg.packs * queries_llm.SEQ_PACK_CAP)
-    pad = queries_llm.q_llm_length_bucket_padding(spark, sf_dir).agg(
+    packed_util = agg.tok / (agg.packs * packing_release.SEQ_PACK_CAP)
+    pad = packing_release.q_llm_length_bucket_padding(spark, sf_dir).agg(
         F.sum("sum_tokens").alias("tok"), F.sum("padded_tokens").alias("pad")
     ).collect()[0]
     assert packed_util >= pad.tok / pad.pad, (packed_util, pad)
@@ -1572,12 +1575,12 @@ def test_packed_boundaries_theorems(spark, sf_dir):
     offset grain, not just at the fill sum."""
     from collections import defaultdict
 
-    from gmall_spark import queries_llm
+    from gmall_spark.queries_llm import packing_release, sft_classifier
 
-    rows = queries_llm.q_llm_packed_boundaries(spark, sf_dir).collect()
+    rows = sft_classifier.q_llm_packed_boundaries(spark, sf_dir).collect()
     fills = {
         r.pack_id: r.pack_fill
-        for r in queries_llm.q_llm_sequence_packing_ffd(spark, sf_dir)
+        for r in packing_release.q_llm_sequence_packing_ffd(spark, sf_dir)
         .select("pack_id", "pack_fill")
         .distinct()
         .collect()
@@ -1592,7 +1595,7 @@ def test_packed_boundaries_theorems(spark, sf_dir):
         for a, b in zip(members, members[1:]):
             assert b.seq_start == a.seq_end, (pid, a, b)
         assert members[-1].seq_end == fills[pid], pid
-        assert members[-1].seq_end <= queries_llm.SEQ_PACK_CAP, pid
+        assert members[-1].seq_end <= packing_release.SEQ_PACK_CAP, pid
 
 
 def test_hist_quantile_sketch_error_bound(spark, sf_dir):
@@ -1619,14 +1622,15 @@ def test_range_partition_plan_balance_and_ties(spark, sf_dir):
     MASSIVE-TIE key distribution must still split — the composite
     (value, key) boundary is the real RangePartitioner's tie-break,
     without it every tied row lands in one partition."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import distribution_stats
 
     plan = {r.part_no: r.n_rows
-            for r in QL.q_layout_range_partition_plan(spark, sf_dir).collect()}
-    assert set(plan) == set(range(QL.RANGE_PARTS))
+            for r in distribution_stats.q_layout_range_partition_plan(
+                spark, sf_dir).collect()}
+    assert set(plan) == set(range(distribution_stats.RANGE_PARTS))
     total = sum(plan.values())
     for p, n in plan.items():
-        assert 0.5 <= n * QL.RANGE_PARTS / total <= 2.0, (p, n)
+        assert 0.5 <= n * distribution_stats.RANGE_PARTS / total <= 2.0, (p, n)
 
     # ties: 4000 rows, ONE value — composite boundaries still balance
     o = spark.range(4000).selectExpr(
@@ -1634,15 +1638,15 @@ def test_range_partition_plan_balance_and_ties(spark, sf_dir):
     )
     samp = (
         o.select("k", "v", F.md5(F.col("k").cast("string")).alias("h"))
-        .orderBy("h").limit(QL.RANGE_SAMPLE)
+        .orderBy("h").limit(distribution_stats.RANGE_SAMPLE)
     )
-    step = QL.RANGE_SAMPLE // QL.RANGE_PARTS
+    step = distribution_stats.RANGE_SAMPLE // distribution_stats.RANGE_PARTS
     from pyspark.sql import Window as W
 
     ranked = samp.select(
         "k", "v", F.row_number().over(W.orderBy("v", "k")).alias("rn"))
     b = ranked.filter(
-        (F.col("rn") % step == 0) & (F.col("rn") < QL.RANGE_SAMPLE)
+        (F.col("rn") % step == 0) & (F.col("rn") < distribution_stats.RANGE_SAMPLE)
     ).select(F.col("v").alias("bv"), F.col("k").alias("bk"))
     parts = (
         o.crossJoin(F.broadcast(b))
@@ -1654,23 +1658,23 @@ def test_range_partition_plan_balance_and_ties(spark, sf_dir):
         .groupBy("p").count().collect()
     )
     counts = {r.p: r["count"] for r in parts}
-    assert set(counts) == set(range(QL.RANGE_PARTS))
+    assert set(counts) == set(range(distribution_stats.RANGE_PARTS))
     assert all(0.5 <= c * 8 / 4000 <= 2.0 for c in counts.values()), counts
 
 
-def test_vocab_growth_curve_structure(spark, sf_dir):
+def test_vocab_growth_curve_structure(spark, sf_dir, plant):
     """X182 invariants on the real corpus (types non-decreasing,
     bounded by tokens, full cut == whole corpus) plus a synthetic
     corpus where vocabulary genuinely grows — the driver corpus
     saturates its 31 types inside the first cut, so Heaps-law growth
     needs a planted fixture to be observable."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import distribution_stats
 
     rows = sorted(
-        QL.q_text_vocab_growth_curve(spark, sf_dir).collect(),
+        distribution_stats.q_text_vocab_growth_curve(spark, sf_dir).collect(),
         key=lambda r: r.pct,
     )
-    assert [r.pct for r in rows] == list(QL.VOCAB_CUTS)
+    assert [r.pct for r in rows] == list(distribution_stats.VOCAB_CUTS)
     for a, b in zip(rows, rows[1:]):
         assert a.n_types <= b.n_types and a.n_tokens <= b.n_tokens
         assert a.n_docs <= b.n_docs
@@ -1681,20 +1685,15 @@ def test_vocab_growth_curve_structure(spark, sf_dir):
         [(i, "x", f"common word{i}", 0) for i in range(100)],
         "doc_id long, lang string, text string, source int",
     )
-    import gmall_spark.queries_llm as _ql
-
-    orig = _ql._docs
-    try:
-        _ql._docs = lambda s, sd: docs
-        got = {r.pct: r.n_types
-               for r in QL.q_text_vocab_growth_curve(spark, "ignored").collect()}
-    finally:
-        _ql._docs = orig
+    planted = plant(documents=docs)
+    got = {r.pct: r.n_types
+           for r in distribution_stats.q_text_vocab_growth_curve(
+               spark, planted).collect()}
     # types = prefix size + 1 ('common' plus one new word per doc)
     assert got == {10: 11, 25: 26, 50: 51, 100: 101}
 
 
-def test_drift_chisq_planted_shift_fires(spark):
+def test_drift_chisq_planted_shift_fires(spark, plant):
     """X183: a second-half distribution shift must produce a large
     chi term in the vacated/receiving buckets, while identical halves
     stay near zero — the planted-violation discipline (X162/X173):
@@ -1702,7 +1701,7 @@ def test_drift_chisq_planted_shift_fires(spark):
     branch needs a fixture to be observable."""
     import datetime
 
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import distribution_stats
 
     base = datetime.datetime(2022, 1, 1)
     rows = []
@@ -1715,41 +1714,32 @@ def test_drift_chisq_planted_shift_fires(spark):
         rows, "event_id long, ts timestamp, user_id long, event_type string, "
               "value double, props string"
     )
-    import gmall_spark.queries_llm as _ql
-
-    orig = _ql._t
-    try:
-        _ql._t = lambda s, sd, name: e
-        got = {r.bucket: r.chi_term
-               for r in QL.q_events_value_drift_chisq(spark, "ignored").collect()}
-    finally:
-        _ql._t = orig
+    planted = plant(events=e)
+    got = {r.bucket: r.chi_term
+           for r in distribution_stats.q_events_value_drift_chisq(
+               spark, planted).collect()}
     # all mass moved bucket 0 -> bucket 2: both terms huge
     assert got[0] > 50 and got[2] > 50, got
 
 
-def test_skipgram_cooccurrence_hand_computed(spark):
+def test_skipgram_cooccurrence_hand_computed(spark, plant):
     """X184 on a hand-built corpus: 'a b a b a' with window 2 yields
     the 7 ordered forward pairs (a,b)x2 (positions 1-2, 3-4), (b,a)x2
     (2-3, 4-5), (a,a)x2 (1-3, 3-5), (b,b)x1 (2-4)."""
-    from gmall_spark import queries_llm as _ql
+    from gmall_spark.queries_llm import distribution_stats
 
     docs = spark.createDataFrame(
         [(1, "en", "a b a b a", 0)],
         "doc_id long, lang string, text string, source int",
     )
-    orig = _ql._docs
-    try:
-        _ql._docs = lambda s, sd: docs
-        # min-count 5 hides everything on a 5-token corpus — the
-        # threshold branch, asserted explicitly
-        got = {
-            (r.w_a, r.w_b): (r.pair_cnt, r.cnt_a, r.cnt_b, r.lift)
-            for r in _ql.q_text_skipgram_cooccurrence(spark, "ignored")
-            .collect()
-        }
-    finally:
-        _ql._docs = orig
+    # min-count 5 hides everything on a 5-token corpus — the
+    # threshold branch, asserted explicitly
+    planted = plant(documents=docs)
+    got = {
+        (r.w_a, r.w_b): (r.pair_cnt, r.cnt_a, r.cnt_b, r.lift)
+        for r in distribution_stats.q_text_skipgram_cooccurrence(spark, planted)
+        .collect()
+    }
     # only pairs with count >= SKIPGRAM_MIN_PAIR=5 survive: none here
     assert got == {}
 
@@ -1772,12 +1762,12 @@ def test_skipgram_cooccurrence_hand_computed(spark):
     assert cnt == {("a", "b"): 2, ("b", "a"): 2, ("a", "a"): 2, ("b", "b"): 1}
 
 
-def test_embedding_health_audit_detects_poison(spark, sf_dir):
+def test_embedding_health_audit_detects_poison(spark, sf_dir, plant):
     """X186: the real corpus is healthy (no NaN/zero/mixed-width
     vectors); a planted poisoned table flags each defect class."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release
 
-    rows = QL.q_embedding_health_audit(spark, sf_dir).collect()
+    rows = packing_release.q_embedding_health_audit(spark, sf_dir).collect()
     assert len(rows) == 64
     r0 = rows[0]
     assert r0.nan_vectors == 0 and r0.zero_vectors == 0 and r0.n_widths == 1
@@ -1791,12 +1781,8 @@ def test_embedding_health_audit_detects_poison(spark, sf_dir):
         ],
         "vec_id long, embedding array<double>",
     )
-    orig = QL._emb
-    try:
-        QL._emb = lambda s, sd: poisoned
-        got = QL.q_embedding_health_audit(spark, "x").collect()
-    finally:
-        QL._emb = orig
+    planted = plant(embeddings=poisoned)
+    got = packing_release.q_embedding_health_audit(spark, planted).collect()
     g = got[0]
     assert g.n_vectors == 4 and g.n_widths == 2
     assert g.nan_vectors == 1 and g.zero_vectors == 1
@@ -1804,12 +1790,12 @@ def test_embedding_health_audit_detects_poison(spark, sf_dir):
     assert dim1 == (0.0, 1.0, 1.0) or dim1[2] == 1  # one zero in dim 1
 
 
-def test_char_chisq_flags_planted_gibberish(spark):
+def test_char_chisq_flags_planted_gibberish(spark, plant):
     """X187: keyboard-mash ('zzz...') against an English-ish corpus
     must blow past the chi-square threshold while the natural docs
     stay below it (the real corpus honestly never flags — max ~62
     vs the 100 cut)."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release
 
     docs = spark.createDataFrame(
         [(i, "en", "the quick brown fox jumps over the lazy dog", 0)
@@ -1817,14 +1803,10 @@ def test_char_chisq_flags_planted_gibberish(spark):
         + [(99, "en", "z" * 200, 0), (98, "en", "!!! ??? --- ***", 0)],
         "doc_id long, lang string, text string, source int",
     )
-    orig = QL._docs
-    try:
-        QL._docs = lambda s, sd: docs
-        got = {r.doc_id: r for r in
-               QL.q_text_char_chisq_gibberish(spark, "x").collect()}
-    finally:
-        QL._docs = orig
-    assert got[99].is_gibberish and got[99].chi2 > QL.GIBBERISH_CHI2
+    planted = plant(documents=docs)
+    got = {r.doc_id: r for r in
+           packing_release.q_text_char_chisq_gibberish(spark, planted).collect()}
+    assert got[99].is_gibberish and got[99].chi2 > packing_release.GIBBERISH_CHI2
     assert not got[0].is_gibberish
     # zero-[a-z0-9] docs (pure punctuation) must NOT vanish: forced
     # gibberish with NULL chi2 (ADVICE r8 item 2)
@@ -1839,9 +1821,9 @@ def test_split_leakage_audit_finds_real_leaks_sf001(spark):
     near-dup groups spanning train and another split exist in the
     corpus (2 when registered), so the alarm branch fires on real
     data, not just a fixture; every group is emitted flagged."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release
 
-    rows = QL.q_llm_split_leakage_audit(
+    rows = packing_release.q_llm_split_leakage_audit(
         spark, "/root/testdata/sf0.01"
     ).collect()
     assert rows, "expected near-dup groups"
@@ -1860,22 +1842,22 @@ def test_jl_projection_eval_structure(spark, sf_dir):
     The LOW absolute recall is the honest finding: +/-1 JL at 32 of
     64 dims is a poor shrink for this corpus, unlike X138's
     truncation — exactly what the table exists to reveal."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import ann_eval
 
     rows = {r.dims: r for r in
-            QL.q_similarity_eval_jl_projection(spark, sf_dir).collect()}
-    assert set(rows) == set(QL.JL_DIMS)
+            ann_eval.q_similarity_eval_jl_projection(spark, sf_dir).collect()}
+    assert set(rows) == set(ann_eval.JL_DIMS)
     for r in rows.values():
         assert r.bf_pairs == 50 and 0.0 <= r.recall_at_10 <= 1.0
         assert r.hits <= r.bf_pairs
     assert rows[32].recall_at_10 >= rows[16].recall_at_10
 
 
-def test_corpus_fingerprint_order_independent_and_sensitive(spark):
+def test_corpus_fingerprint_order_independent_and_sensitive(spark, plant):
     """X191: the fingerprint must be identical under any row order
     (integer sums commute) and must CHANGE when one character
     changes — the two properties that make it a release stamp."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release
 
     base = [(i, "en", f"doc number {i}", 0) for i in range(50)]
 
@@ -1883,12 +1865,8 @@ def test_corpus_fingerprint_order_independent_and_sensitive(spark):
         docs = spark.createDataFrame(
             rows, "doc_id long, lang string, text string, source int"
         )
-        orig = QL._docs
-        try:
-            QL._docs = lambda s, sd: docs
-            r = QL.q_llm_corpus_fingerprint(spark, "x").collect()[0]
-        finally:
-            QL._docs = orig
+        planted = plant(documents=docs)
+        r = packing_release.q_llm_corpus_fingerprint(spark, planted).collect()[0]
         return (r.n_docs, r.n_chars, str(r.content_sum), str(r.id_sum))
 
     a = fp(base)
@@ -1904,11 +1882,11 @@ def test_source_attribution_counts_spanning_groups(spark, sf_dir):
     """X192: every reported pair count equals the number of
     transitive groups containing BOTH sources — recomputed
     independently from the raw group/source assignment."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release, prelude
 
-    groups = QL._transitive_groups(spark, sf_dir).collect()
+    groups = prelude._transitive_groups(spark, sf_dir).collect()
     src = {r.doc_id: r.source
-           for r in QL._docs(spark, sf_dir).select("doc_id", "source").collect()}
+           for r in prelude._docs(spark, sf_dir).select("doc_id", "source").collect()}
     by_group: dict = {}
     for r in groups:
         by_group.setdefault(r.group_id, set()).add(src[r.doc_id])
@@ -1919,17 +1897,17 @@ def test_source_attribution_counts_spanning_groups(spark, sf_dir):
             for y in ss[i + 1:]:
                 want[(x, y)] = want.get((x, y), 0) + 1
     got = {(r.source_a, r.source_b): r.n_groups
-           for r in QL.q_dedup_source_attribution(spark, sf_dir).collect()}
+           for r in packing_release.q_dedup_source_attribution(spark, sf_dir).collect()}
     assert got == want and want
 
 
 @pytest.mark.slow
-def test_unigram_encode_decode_planted(spark):
+def test_unigram_encode_decode_planted(spark, plant):
     """X194/X195 planted fixture: known words segment to the known
     Viterbi optimum, the decode audit reports a perfect round trip
     with zero OOV pieces, and a zero-[a-z0-9] doc is emitted with
     zeroed counts (the X187 discipline) instead of vanishing."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import tok_frozen
     from gmall_spark.operators import unigram as U
 
     docs = spark.createDataFrame(
@@ -1938,17 +1916,13 @@ def test_unigram_encode_decode_planted(spark):
          (3, "en", "!!! ---", 0)],
         "doc_id long, lang string, text string, source int",
     )
-    orig = QL._docs
-    try:
-        QL._docs = lambda s, sd: docs
-        enc = {r.doc_id: r for r in
-               QL.q_llm_unigram_encode_frozen(spark, "x").collect()}
-        dec = {r.doc_id: r for r in
-               QL.q_llm_unigram_decode_frozen(spark, "x").collect()}
-        fert = {r.lang: r for r in
-                QL.q_text_tokenizer_fertility_frozen(spark, "x").collect()}
-    finally:
-        QL._docs = orig
+    planted = plant(documents=docs)
+    enc = {r.doc_id: r for r in
+           tok_frozen.q_llm_unigram_encode_frozen(spark, planted).collect()}
+    dec = {r.doc_id: r for r in
+           tok_frozen.q_llm_unigram_decode_frozen(spark, planted).collect()}
+    fert = {r.lang: r for r in
+            tok_frozen.q_text_tokenizer_fertility_frozen(spark, planted).collect()}
 
     # doc 1: 'the' -> [the] (1 piece), 'information' -> Viterbi optimum
     c_the, t_the = U.viterbi_py("the")
@@ -2059,7 +2033,8 @@ def test_fim_reassembly_theorem_and_geometry(spark, sf_dir):
     """prefix || middle || suffix == text for EVERY doc (any
     0 <= lo <= hi <= len), the cut geometry is in range, and all
     three modes occur at the corpus grain."""
-    from gmall_spark.queries_llm import _docs, _fim_exprs
+    from gmall_spark.queries_llm.prelude import _docs
+    from gmall_spark.queries_llm.tok_media import _fim_exprs
 
     e = _fim_exprs("spark")
     rows = (
@@ -2159,7 +2134,7 @@ def test_mix_schedule_endpoints_and_interpolation(spark, sf_dir):
     from collections import defaultdict
 
     from gmall_spark.queries import QUERIES
-    from gmall_spark.queries_llm.sampling_privacy import MIX_SCHEDULE_EPOCHS
+    from gmall_spark.queries_llm.loader_schedule import MIX_SCHEDULE_EPOCHS
 
     rows = QUERIES["llm_mix_schedule"](spark, sf_dir).collect()
     per_ep = defaultdict(dict)
@@ -2198,13 +2173,13 @@ def test_repeat_plan_policy_and_conservation(spark, sf_dir):
     assert sum(r.n_docs for r in rows) == scored
 
 
-def test_shard_manifest_conserves_and_detects_change(spark, sf_dir):
+def test_shard_manifest_conserves_and_detects_change(spark, sf_dir, plant):
     """X252: shard manifests partition each epoch exactly (docs and
     tokens sum to the corpus), every (epoch, shard) cell is present,
     and the checksum is sensitive — one mutated doc flips exactly the
     cells that hold it."""
     from gmall_spark.queries import QUERIES
-    from gmall_spark.queries_llm.sampling_privacy import (
+    from gmall_spark.queries_llm.loader_schedule import (
         SHARD_EPOCHS,
         SHARD_N,
     )
@@ -2217,19 +2192,12 @@ def test_shard_manifest_conserves_and_detects_change(spark, sf_dir):
         cells = [r for r in rows if r.epoch == ep]
         assert sum(r.n_docs for r in cells) == n
     base = {(r.epoch, r.shard): str(r.content_sum) for r in rows}
-    import gmall_spark.queries_llm as QL
-
     mutated = docs.withColumn(
         "text",
         F.when(F.col("doc_id") == 0, F.concat(F.col("text"), F.lit("!")))
         .otherwise(F.col("text")),
     )
-    orig = QL._docs
-    try:
-        QL._docs = lambda s, sd: mutated
-        rows2 = QUERIES["llm_shard_manifest"](spark, sf_dir).collect()
-    finally:
-        QL._docs = orig
+    rows2 = QUERIES["llm_shard_manifest"](spark, plant(documents=mutated)).collect()
     changed = {(r.epoch, r.shard)
                for r in rows2
                if base[(r.epoch, r.shard)] != str(r.content_sum)}

@@ -779,7 +779,7 @@ def test_lm_fixture_single_subtree(spark, sf_dir):
     consumer reads the checkpointed fixture, so its physical plan
     carries ZERO — a reintroduced inline scoring subtree fails the
     explode ceiling here."""
-    from gmall_spark import queries_llm as ql
+    from gmall_spark.queries_llm import prelude
     from gmall_spark.operators import lm
 
     q.clear_cache()
@@ -790,7 +790,7 @@ def test_lm_fixture_single_subtree(spark, sf_dir):
     # branches' own scans — all in the ONE fixture build only
     assert 1 <= bplan.count("explode") <= 3, bplan[:2000]
 
-    ql._lm_scores(spark, sf_dir)  # materialize the fixture once
+    prelude._lm_scores(spark, sf_dir)  # materialize the fixture once
     # (consumer, explode ceiling): LM consumers whose ONLY explode-ish
     # stage was the scoring pipeline must now have none; v2/v3 keep
     # their shingle/containment explodes but not one more for the LM
@@ -816,7 +816,7 @@ def test_stage_fixture_build_plans(spark, sf_dir):
     pipelines' physical shapes are pinned here instead, on the
     fixture BUILD plans. A regression (lost broadcast, extra
     exchange) in any composed stage fails here."""
-    from gmall_spark import queries_llm as ql
+    from gmall_spark.queries_llm import prelude
     from gmall_spark.operators import dsir, llm_dedup
 
     q.clear_cache()
@@ -836,7 +836,7 @@ def test_stage_fixture_build_plans(spark, sf_dir):
             # doc reassembly; the tiny frequent set MUST broadcast
             "boilerplate_clean",
             llm_dedup.boilerplate_span_clean(
-                docs, ql.SPAN_CLEAN_W, ql.BOILER_DOC_FREQ
+                docs, prelude.SPAN_CLEAN_W, prelude.BOILER_DOC_FREQ
             ),
             5,
             1,

@@ -776,6 +776,68 @@ def test_sketch_twin_any_split_and_replay_equals_batch(spark, tmpdir_factory, tw
     assert got == want
 
 
+# --- counter twins: any split, any replayed epoch -------------------------------
+
+
+def _counter_twin(name):
+    """(twin module, the marker strings its counts hit)."""
+    from gmall_spark.operators import mojibake, unicode_norm
+    from gmall_spark.queries_llm.tok_media import CANARY_PHRASES
+    from gmall_spark.streaming import (
+        incremental_canary,
+        incremental_mojibake,
+        incremental_unicode,
+    )
+
+    return {
+        "canary": (incremental_canary, list(CANARY_PHRASES)),
+        "mojibake": (incremental_mojibake, [bad for bad, _ in mojibake.PATTERNS]),
+        "unicode": (incremental_unicode,
+                    [bad.strip() for _, _, bad, _ in unicode_norm.SEGMENTS]),
+    }[name]
+
+
+@pytest.mark.parametrize("twin", ["canary", "mojibake", "unicode"])
+@given(data=st.data())
+@settings(**_SETTINGS)
+@pytest.mark.slow
+def test_counter_twin_any_split_and_replay_equals_one_batch(
+    spark, tmpdir_factory, twin, data
+):
+    """For ANY docs mixing plain words with the twin's markers, ANY
+    split into 1-3 batches and a replay of ANY one epoch after all
+    batches ran (a middle one included), current_counts equals the
+    view after one batch holding every doc, in a fresh store."""
+    twin_mod, markers = _counter_twin(twin)
+    words = st.sampled_from(["alpha", "beta", "gamma", *markers])
+    texts = data.draw(st.lists(
+        st.lists(words, max_size=6).map(" ".join), min_size=1, max_size=12), "texts")
+    # one doc always carries a marker, so the counts are non-zero
+    hit = data.draw(st.integers(0, len(texts) - 1), "hit_doc")
+    texts[hit] += " " + data.draw(st.sampled_from(markers), "marker")
+    n = data.draw(st.integers(1, 3), "n_batches")
+    cuts = sorted(data.draw(
+        st.lists(st.integers(0, len(texts)), min_size=n - 1, max_size=n - 1), "cuts"))
+    bounds = [0, *cuts, len(texts)]
+
+    def docs(rows):
+        return spark.createDataFrame([(t,) for t in rows], "text string")
+
+    batches = [docs(texts[lo:hi]) for lo, hi in zip(bounds, bounds[1:])]
+    replay = data.draw(st.integers(0, n - 1), "replayed_epoch")
+
+    store = str(tmpdir_factory.mktemp(f"{twin}_split"))
+    for eid, b in enumerate(batches):
+        twin_mod.process_batch(spark, b, store, eid)
+    twin_mod.process_batch(spark, batches[replay], store, replay)  # replay
+    got = sorted(tuple(r) for r in twin_mod.current_counts(spark, store).collect())
+    one = str(tmpdir_factory.mktemp(f"{twin}_one"))
+    twin_mod.process_batch(spark, docs(texts), one, 0)
+    want = sorted(tuple(r) for r in twin_mod.current_counts(spark, one).collect())
+    assert got == want
+    assert sum(r[2] for r in want) > 0
+
+
 # --- systematic resampling (X158) ----------------------------------------------
 
 weights_strategy = st.lists(st.integers(1, 50), min_size=1, max_size=30)
@@ -862,7 +924,7 @@ def test_sequence_packing_matches_python_and_respects_cap(spark, lens):
     """X175 (VERDICT r7 item 5): the Spark closed-form assignment
     equals the Python reference packer doc for doc, and the 2048 cap
     is a theorem — no pack's actual token sum may exceed it."""
-    from gmall_spark.queries_llm import pack_rows
+    from gmall_spark.queries_llm.packing_release import pack_rows
 
     rows = [(i, n) for i, n in enumerate(lens)]
     got = pack_rows(
@@ -976,9 +1038,9 @@ def test_range_partition_assignment_matches_python(spark, rows):
     partition index is within [0, P-1]."""
     import hashlib
 
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import distribution_stats
 
-    P, S = QL.RANGE_PARTS, QL.RANGE_SAMPLE
+    P, S = distribution_stats.RANGE_PARTS, distribution_stats.RANGE_SAMPLE
     o = spark.createDataFrame(rows, "k long, v double")
     samp = (
         o.select("k", "v", F.md5(F.col("k").cast("string")).alias("h"))

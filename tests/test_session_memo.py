@@ -55,6 +55,133 @@ def test_no_module_level_memo_outside_registry():
     assert not offenders, offenders
 
 
+ROOT = PKG.parent
+LLM = "gmall_spark.queries_llm"
+FAMILIES = {p.stem for p in (PKG / "queries_llm").glob("*.py")} - {"__init__"}
+SOURCE_HOOKS = {"_docs", "_emb", "_t"}
+
+
+def _registry_offences(path: pathlib.Path) -> list[str]:
+    """Names read off the ``queries_llm`` package instead of the family
+    module that owns them, and assignments to the source hooks."""
+    tree = ast.parse(path.read_text())
+    aliases = set()  # names bound to the package itself
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            aliases |= {a.asname for a in node.names if a.name == LLM and a.asname}
+        elif isinstance(node, ast.ImportFrom) and node.module == "gmall_spark":
+            aliases |= {a.asname or a.name for a in node.names if a.name == "queries_llm"}
+        elif isinstance(node, ast.ImportFrom) and node.module == LLM:
+            out += [f"{node.lineno} imports {a.name}" for a in node.names if a.name not in FAMILIES]
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr not in FAMILIES
+            and (
+                isinstance(node.value, ast.Name) and node.value.id in aliases
+                or ast.unparse(node.value) == LLM
+            )
+        ):
+            out.append(f"{node.lineno} reads {ast.unparse(node)}")
+        targets = []
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AugAssign | ast.AnnAssign):
+            targets = [node.target]
+        out += [
+            f"{node.lineno} assigns {ast.unparse(t)}"
+            for t in targets
+            if isinstance(t, ast.Attribute) and t.attr in SOURCE_HOOKS
+        ]
+        if (
+            isinstance(node, ast.Call)
+            and ast.unparse(node.func).split(".")[-1] == "setattr"
+            and node.args
+        ):
+            name = [a.value for a in node.args[:2] if isinstance(a, ast.Constant)]
+            if name and str(name[0]).split(".")[-1] in SOURCE_HOOKS:
+                out.append(f"{node.lineno} assigns {name[0]} via setattr")
+    return out
+
+
+def test_registered_queries_have_one_import_path():
+    """Spark-free lint: every ``queries_llm`` name is imported from (or
+    read off) the family module that owns it, never off the package;
+    no code patches the source hooks ``_docs``/``_emb``/``_t`` (a test
+    plants a corpus with the ``plant`` fixture instead); and the
+    package is only the ordered family imports plus one finalize."""
+    paths = [*PKG.rglob("*.py"), *(ROOT / "tests").glob("*.py"),
+             *(ROOT / "tools").glob("*.py"), ROOT / "bench.py"]
+    offenders = [
+        f"{p.relative_to(ROOT)}:{o}" for p in sorted(paths) for o in _registry_offences(p)
+    ]
+    assert not offenders, offenders
+
+    body = ast.parse((PKG / "queries_llm" / "__init__.py").read_text()).body
+    doc, *imports, finalize_import, finalize = body
+    assert isinstance(doc, ast.Expr) and isinstance(doc.value, ast.Constant)
+    imported = [a.name for node in imports for a in node.names]
+    assert all(isinstance(n, ast.ImportFrom) and n.module == LLM for n in imports)
+    assert sorted(imported) == sorted(FAMILIES), imported
+    assert ast.unparse(finalize_import) == "from gmall_spark.queries import _finalize_registry"
+    assert ast.unparse(finalize) == "_finalize_registry()"
+    for path in PKG.rglob("*.py"):
+        assert "_REGISTERED" not in path.read_text(), path
+
+
+_IMPORT_PROBE = """
+import json, sys
+sys.path.insert(0, sys.argv[2])
+calls = []
+sys.setprofile(lambda frame, event, arg: event == "call"
+               and frame.f_code.co_name == "_finalize_registry"
+               and calls.append(1))
+__import__(sys.argv[1])
+sys.setprofile(None)
+from gmall_spark.queries import ORACLES, QUERIES
+print(json.dumps({"finalized": len(calls), "queries": list(QUERIES),
+                  "oracles": sorted(ORACLES.items())}))
+"""
+
+
+def test_registry_is_the_same_under_both_import_orders():
+    """Importing ``gmall_spark.queries`` first or ``queries_llm`` first
+    must finalize the registry exactly once and give the same 323
+    queries in the same order, with the same 319 oracles. One fresh
+    interpreter per order; Spark-free (no session starts)."""
+    import json
+    import subprocess
+    import sys
+
+    got = {}
+    for first in ("gmall_spark.queries", LLM):
+        out = subprocess.run(
+            [sys.executable, "-c", _IMPORT_PROBE, first, str(ROOT)],
+            capture_output=True, text=True, timeout=300, check=True,
+        )
+        got[first] = json.loads(out.stdout.splitlines()[-1])
+        assert got[first]["finalized"] == 1, (first, got[first]["finalized"])
+    a, b = got.values()
+    assert len(a["queries"]) == 323 and len(a["oracles"]) == 319
+    assert a == b
+
+
+def test_default_driver_heap_fits_the_host():
+    """Spark-free: with SPARK_DRIVER_MEMORY unset the driver heap is at
+    most half the host's physical memory, and 48g on hosts of 96 GB
+    or more."""
+    import os
+
+    from gmall_spark.session import DEFAULT_DRIVER_MEMORY
+
+    assert DEFAULT_DRIVER_MEMORY.endswith("m")
+    heap = int(DEFAULT_DRIVER_MEMORY[:-1]) << 20
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < heap <= host // 2
+    assert heap == min(48 << 30, host // 2 >> 20 << 20)
+
+
 class _FakeJsc:
     """getPersistentRDDs().keySet().toString() over a fixed id set."""
 
@@ -118,7 +245,7 @@ def test_clear_cache_releases_fixture_storage(spark, sf_dir):
     created, not only forget the memo entries — a long-lived session
     otherwise leaks executor storage on every clear."""
     from gmall_spark import queries as Q
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import prelude
 
     jsc = spark.sparkContext._jsc
 
@@ -127,8 +254,8 @@ def test_clear_cache_releases_fixture_storage(spark, sf_dir):
 
     Q.clear_cache()
     before = fixtures_audit._persistent_ids(jsc)
-    QL._boiler_clean(spark, sf_dir)
-    QL._shot_boundaries(spark, sf_dir)
+    prelude._boiler_clean(spark, sf_dir)
+    prelude._shot_boundaries(spark, sf_dir)
     created = fixtures_audit._persistent_ids(jsc) - before
     assert len(created) >= 2 and created <= stored()
 

@@ -141,12 +141,10 @@ def test_min_words_filter(spark):
     assert [r.doc_id for r in got] == [3]
 
 
-def test_keeper_prefers_longest_then_min_doc_id(spark, monkeypatch, sf_dir):
+def test_keeper_prefers_longest_then_min_doc_id(spark, plant):
     """Planted prompt collision: three conversations share a prompt;
     the keeper is the longest assistant reply, and on an exact length
     tie the smaller doc_id."""
-    from gmall_spark.queries_llm import sft_classifier as qllm
-
     planted = spark.createDataFrame(
         [
             # even doc_ids -> 2 turns; 8 words each so every prompt is
@@ -157,8 +155,7 @@ def test_keeper_prefers_longest_then_min_doc_id(spark, monkeypatch, sf_dir):
         ],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(qllm, "_docs", lambda s, d: planted)
-    rows = QUERIES["sft_prompt_dedup"](spark, sf_dir).collect()
+    rows = QUERIES["sft_prompt_dedup"](spark, plant(documents=planted)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.n_convs == 3 and r.keeper_doc_id == 102
@@ -298,14 +295,13 @@ def test_lcs_length_empty_side_is_zero(spark):
     assert got == {1: 0, 2: 0, 3: 0, 4: 1}
 
 
-def test_novelty_gate_catches_insertion_paraphrase(spark, sf_dir, monkeypatch):
+def test_novelty_gate_catches_insertion_paraphrase(spark, plant):
     """X257 planted fixture: the insertion paraphrase — seed prompt
     w1..w10, candidate prompt = the same sequence with a spacer every
     two words (14 tokens, LCS 10, ROUGE-L F1 = 20/24 ≈ 0.833 >= 0.7).
     Every candidate 3-gram shingle spans a spacer, so shingle Jaccard
     is 0 and the MinHash near-dup gate KEEPS the pair — the novelty
     gate must reject it (the order-sensitive family Jaccard lacks)."""
-    import gmall_spark.queries_llm as QL
     from gmall_spark.operators import llm_dedup
     from gmall_spark.queries import QUERIES
     from gmall_spark.queries_llm.prelude import NEAR_DUP_THRESHOLD
@@ -331,7 +327,7 @@ def test_novelty_gate_catches_insertion_paraphrase(spark, sf_dir, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(QL, "_docs", lambda s, d: docs)
+    sf_dir = plant(documents=docs)
     out = {
         r.doc_id: r
         for r in QUERIES["sft_novelty_rougel"](spark, sf_dir).collect()

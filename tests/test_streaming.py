@@ -143,6 +143,7 @@ def test_streaming_interval_join_equals_batch(spark, sf_dir, tmpdir):
         -3600,
         3600,
         "2 seconds",
+        "inner",
     )
     out = joined.select("event_id", "b_event_id")
     _run_to_memory(out, "ij_out", f"{tmpdir}/ckpt_ij")
@@ -182,7 +183,7 @@ def test_streaming_left_outer_join_equals_batch(spark, sf_dir, tmpdir):
     b.write.mode("overwrite").parquet(b_path)
     sa = runner.stream_from_parquet(spark, a_path, a.schema)
     sb = runner.stream_from_parquet(spark, b_path, b.schema)
-    joined = runner.streaming_left_outer_join(
+    joined = runner.streaming_interval_join(
         sa,
         sb.withColumn("user_id", F.col("b_user_id")),
         "user_id",
@@ -191,6 +192,7 @@ def test_streaming_left_outer_join_equals_batch(spark, sf_dir, tmpdir):
         -3600,
         3600,
         "2 seconds",
+        "leftOuter",
     )
     out = joined.select("event_id", "b_event_id")
     _run_to_memory(out, "loj_out", f"{tmpdir}/ckpt_loj")
@@ -1992,7 +1994,7 @@ def test_incremental_packing_rederives_exactly_and_retroactively(spark, tmpdir):
     store via the exact batch packer — two-batch == one-batch — and a
     late arrival can retroactively RE-PACK its bucket (a bucket's
     slot-vs-chop choice depends on its global census)."""
-    from gmall_spark.queries_llm import pack_rows
+    from gmall_spark.queries_llm.packing_release import pack_rows
     from gmall_spark.streaming import incremental_packing as ipk
 
     store = f"{tmpdir}/pack_store"
@@ -2028,13 +2030,13 @@ def test_incremental_packing_rederives_exactly_and_retroactively(spark, tmpdir):
     assert again == after2
 
 
-def test_incremental_drift_rederives_and_resplits(spark, tmpdir):
+def test_incremental_drift_rederives_and_resplits(spark, tmpdir, plant):
     """X183's streaming twin: the (day, bucket) grid is SUM-mergeable
     so streaming == batch exactly after any split, and a late batch
     that EXTENDS the day span retroactively moves the ref/current
     midpoint — the re-derive class, asserted by comparing against the
     batch operator over the union at every step."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import distribution_stats
     from gmall_spark.streaming import incremental_drift as idr
 
     e = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -2043,13 +2045,9 @@ def test_incremental_drift_rederives_and_resplits(spark, tmpdir):
     b2 = e.filter(F.dayofmonth("ts") > 15)
 
     def batch_report(events):
-        orig = QL._t
-        try:
-            QL._t = lambda s, sd, name: events
-            return {(r.bucket): (r.ref_cnt, r.cur_cnt, r.chi_term)
-                    for r in QL.q_events_value_drift_chisq(spark, "x").collect()}
-        finally:
-            QL._t = orig
+        return {(r.bucket): (r.ref_cnt, r.cur_cnt, r.chi_term)
+                for r in distribution_stats.q_events_value_drift_chisq(
+                    spark, plant(events=events)).collect()}
 
     idr.process_batch(spark, b1, store, 0)
     got1 = {r.bucket: (r.ref_cnt, r.cur_cnt, r.chi_term)
@@ -2074,7 +2072,7 @@ def test_incremental_fingerprint_exactly_equals_batch(spark, tmpdir):
     """X191's streaming twin: all four statistics are integer sums,
     so streaming == batch EXACTLY after any split, and replay of a
     batch subdir is idempotent."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release
     from gmall_spark.streaming import incremental_fingerprint as ifp
 
     store = f"{tmpdir}/fp_store"
@@ -2083,7 +2081,8 @@ def test_incremental_fingerprint_exactly_equals_batch(spark, tmpdir):
     ifp.process_batch(spark, d.filter("doc_id % 2 = 1"), store, 1)
 
     got = ifp.current_fingerprint(spark, store).collect()[0]
-    want = QL.q_llm_corpus_fingerprint(spark, "/root/testdata/sf0.001").collect()[0]
+    want = packing_release.q_llm_corpus_fingerprint(
+        spark, "/root/testdata/sf0.001").collect()[0]
     assert (got.n_docs, got.n_chars, got.content_sum, got.id_sum) == (
         want.n_docs, want.n_chars, want.content_sum, want.id_sum)
 
@@ -2172,13 +2171,13 @@ def test_incremental_audio_fp_equals_batch_and_retroactive(spark, tmpdir):
 
 
 @pytest.mark.slow
-def test_incremental_skipgram_exactly_equals_batch(spark, tmpdir):
+def test_incremental_skipgram_exactly_equals_batch(spark, tmpdir, plant):
     """X184's streaming twin: raw pair/unigram counts are
     SUM-mergeable (documents are atomic within a batch), the
     min-count filter applies to the MERGED counts, and N is the sum
     of the unigram counts — so streaming == batch bit-exactly,
     including a pair that clears the threshold only in the union."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import distribution_stats
     from gmall_spark.streaming import incremental_skipgram as sg
 
     texts1 = [(1, "en", "red fox red fox red fox", 0),
@@ -2197,13 +2196,10 @@ def test_incremental_skipgram_exactly_equals_batch(spark, tmpdir):
     got = {(r.w_a, r.w_b): (r.pair_cnt, r.cnt_a, r.cnt_b, r.lift)
            for r in sg.current_lift(spark, store).collect()}
 
-    orig = QL._docs
-    try:
-        QL._docs = lambda s, sd: df(texts1 + texts2)
-        want = {(r.w_a, r.w_b): (r.pair_cnt, r.cnt_a, r.cnt_b, r.lift)
-                for r in QL.q_text_skipgram_cooccurrence(spark, "x").collect()}
-    finally:
-        QL._docs = orig
+    planted = plant(documents=df(texts1 + texts2))
+    want = {(r.w_a, r.w_b): (r.pair_cnt, r.cnt_a, r.cnt_b, r.lift)
+            for r in distribution_stats.q_text_skipgram_cooccurrence(
+                spark, planted).collect()}
     assert got == want
     # (red, fox) clears min-count ONLY via the cross-batch sum
     # (3+2 forward-window hits at dist 1 plus the wraparound dist-2s)
@@ -2215,12 +2211,12 @@ def test_incremental_skipgram_exactly_equals_batch(spark, tmpdir):
     assert again == got
 
 
-def test_incremental_embedding_health_exactly_equals_batch(spark, tmpdir):
+def test_incremental_embedding_health_exactly_equals_batch(spark, tmpdir, plant):
     """X186's streaming twin: min/max envelopes and integer counters
     merge exactly (the audit's order-independent-stats-only design is
     WHY the twin is exact); n_widths merges because state is keyed by
     width. Poisoned vectors in different batches all surface."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import packing_release
     from gmall_spark.streaming import incremental_embedding_health as eh
 
     b1 = [(1, [1.0, -2.0, 0.0]), (2, [0.5, 4.0, 1.0]),
@@ -2248,12 +2244,8 @@ def test_incremental_embedding_health_exactly_equals_batch(spark, tmpdir):
     eh.process_batch(spark, df(b2), store, 1)
     got = norm(eh.current_health(spark, store).collect())
 
-    orig = QL._emb
-    try:
-        QL._emb = lambda s, sd: df(b1 + b2)
-        want = norm(QL.q_embedding_health_audit(spark, "x").collect())
-    finally:
-        QL._emb = orig
+    planted = plant(embeddings=df(b1 + b2))
+    want = norm(packing_release.q_embedding_health_audit(spark, planted).collect())
     assert got == want
     assert got[1]["n_widths"] == "2" and got[1]["nan_vectors"] == "1"
     assert got[1]["zero_vectors"] == "1"
@@ -2480,7 +2472,7 @@ def test_incremental_group_split_retroactive_move(spark, tmpdir):
     Exactly one move row is emitted, for exactly that doc."""
     import hashlib
 
-    from gmall_spark.queries_llm import SPLIT_TEST_HI, SPLIT_VAL_HI
+    from gmall_spark.queries_llm.packing_release import SPLIT_TEST_HI, SPLIT_VAL_HI
     from gmall_spark.streaming import incremental_group_split as igs
 
     def bucket(i: int) -> str:
@@ -2912,7 +2904,7 @@ def test_incremental_decontam_equals_batch(spark, tmpdir):
     appears in the batch where it ARRIVED. Runs at sf0.01 — the
     smallest SF whose flag set is non-empty (sf0.001's is honestly
     empty, which would make the equality vacuous)."""
-    from gmall_spark import queries_llm as QL
+    from gmall_spark.queries_llm import extraction_tiers, prelude
     from gmall_spark.queries import QUERIES
     from gmall_spark.streaming import incremental_decontam as idc
 
@@ -2921,7 +2913,7 @@ def test_incremental_decontam_equals_batch(spark, tmpdir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    cents = QL._trained_centroids(spark, sf_dir)
+    cents = prelude._trained_centroids(spark, sf_dir)
     ref = emb.filter(F.col("vec_id") % 20 == 0)
     ridx = idc.reference_index(ref, cents)
     corp = emb.filter(F.col("vec_id") % 20 != 0)
@@ -2931,14 +2923,16 @@ def test_incremental_decontam_equals_batch(spark, tmpdir):
         (corp.filter(F.col("vec_id") <= mid), corp.filter(F.col("vec_id") > mid))
     ):
         batch = idc.process_batch(
-            spark, part, ref, ridx, cents, QL.SEM_DECONTAM_THRESHOLD, store, batch_id
+            spark, part, ref, ridx, cents,
+            extraction_tiers.SEM_DECONTAM_THRESHOLD, store, batch_id,
         ).collect()
         ids = {r.doc_id for r in batch}
         assert ids.isdisjoint(arrived)  # alarm fires on arrival, once
         arrived |= ids
     # foreachBatch replay of the last batch: a no-op
     idc.process_batch(
-        spark, part, ref, ridx, cents, QL.SEM_DECONTAM_THRESHOLD, store, batch_id
+        spark, part, ref, ridx, cents,
+        extraction_tiers.SEM_DECONTAM_THRESHOLD, store, batch_id,
     )
     got = {
         (r.doc_id, r.ref_id, r.cos_sim, r.n_ref_hits)
@@ -3016,7 +3010,6 @@ def test_incremental_optout_equals_batch_and_is_final(spark, sf_dir, tmpdir):
     FINAL at arrival — batch 2 changes no batch-1 verdict (the X220
     frozen-reference property, opposite of the KN re-derive class)."""
     from gmall_spark.queries import QUERIES
-    from gmall_spark.queries_llm import web_tier as qmod
     from gmall_spark.streaming import incremental_optout as ioo
 
     store = f"{tmpdir}/optout_store"

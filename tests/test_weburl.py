@@ -135,20 +135,19 @@ def test_host_graph_is_simple(spark):
         assert a != u and b != u and a != b, u
 
 
-def test_domain_cap_binds_and_is_deterministic(spark, sf_dir, monkeypatch):
+def test_domain_cap_binds_and_is_deterministic(spark, plant):
     """Planted over-dense domain: 20 docs in one doc_id%40 class all
     land on one registered domain — the cap keeps exactly DOMAIN_CAP
     of them, the report charges the rest as dropped, and the kept set
     is deterministic (re-run identical)."""
-    import gmall_spark.queries_llm as qllm
-    from gmall_spark.queries_llm import web_tier as qmod
     from gmall_spark.queries import QUERIES
+    from gmall_spark.queries_llm import web_tier
 
     planted = spark.createDataFrame(
         [(40 * i, f"doc {i}") for i in range(20)],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(qmod, "_docs", lambda s, d: planted)
+    sf_dir = plant(documents=planted)
     a = {
         r.doc_id
         for r in QUERIES["web_domain_capped_sample"](spark, sf_dir).collect()
@@ -157,7 +156,7 @@ def test_domain_cap_binds_and_is_deterministic(spark, sf_dir, monkeypatch):
         r.doc_id
         for r in QUERIES["web_domain_capped_sample"](spark, sf_dir).collect()
     }
-    assert a == b and len(a) == qllm.DOMAIN_CAP
+    assert a == b and len(a) == web_tier.DOMAIN_CAP
     rep = QUERIES["web_domain_cap_report"](spark, sf_dir).collect()
     assert len(rep) == 1
     assert rep[0].n_docs == 20 and rep[0].n_dropped == 12
@@ -185,14 +184,13 @@ def test_synth_identity_is_u_mod_40(spark):
         assert len(us) == 1, (cu, us)
 
 
-def test_optout_gate_drops_planted_domain(spark, sf_dir, monkeypatch):
+def test_optout_gate_drops_planted_domain(spark, plant):
     """X241/X242 planted fixture: docs landing on a blocklisted
     domain (u=0 -> site0.com) and an opted-out domain (u=2 ->
     site2.net) must vanish from the kept release, the audit must
     charge them to the right list, and the delta row must balance
     exactly (before = after + blocklist + optout)."""
     from gmall_spark.queries import QUERIES
-    from gmall_spark.queries_llm import web_tier as qmod
 
     # u = doc_id % 40: 0 -> site0.com (blocklist), 2 -> site2.net
     # (optout), 1 -> site1.org (kept)
@@ -200,7 +198,7 @@ def test_optout_gate_drops_planted_domain(spark, sf_dir, monkeypatch):
         [(40 * i + u, f"doc {i}", 10) for i in range(5) for u in (0, 1, 2)],
         "doc_id long, text string, n_chars long",
     )
-    monkeypatch.setattr(qmod, "_docs", lambda s, d: planted)
+    sf_dir = plant(documents=planted)
     gate = {r.doc_id: r for r in
             QUERIES["web_domain_optout_gate"](spark, sf_dir).collect()}
     for d, r in gate.items():
