@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gmall_spark.session import local_rows
+
 LG_K = 12  # 2^12 buckets: ~1.6% relative standard error, 4 KiB state
 
 
@@ -213,7 +215,7 @@ def hist_quantiles(
     c = hist.withColumn(
         "cum", F.sum("cnt").over(Window.orderBy("bucket"))
     ).withColumn("n", F.sum("cnt").over(Window.partitionBy()))
-    qdf = hist.sparkSession.createDataFrame([(q,) for q in qs], "q_pct bigint")
+    qdf = local_rows(hist.sparkSession, [(q,) for q in qs], "q_pct bigint")
     hit = (
         qdf.crossJoin(c)
         .filter(F.col("cum") * 100 >= F.col("q_pct") * F.col("n"))
@@ -256,9 +258,7 @@ def hist_range_plan(hist: DataFrame, parts: int) -> DataFrame:
     c = hist.withColumn(
         "cum", F.sum("cnt").over(Window.orderBy("bucket"))
     ).withColumn("n", F.sum("cnt").over(Window.partitionBy()))
-    idf = hist.sparkSession.createDataFrame(
-        [(i,) for i in range(1, parts)], "i bigint"
-    )
+    idf = local_rows(hist.sparkSession, [(i,) for i in range(1, parts)], "i bigint")
     return (
         idf.crossJoin(c)
         .filter(F.col("cum") * parts >= F.col("i") * F.col("n"))
@@ -290,9 +290,7 @@ def hist_range_audit(
         .agg(F.sum("cnt").alias("n_rows"))
     )
     tot = hist.agg(F.sum("cnt").alias("total"))
-    grid = hist.sparkSession.createDataFrame(
-        [(p,) for p in range(parts)], "part_no bigint"
-    )
+    grid = local_rows(hist.sparkSession, [(p,) for p in range(parts)], "part_no bigint")
     return (
         grid.join(asg, "part_no", "left")
         .crossJoin(F.broadcast(tot))

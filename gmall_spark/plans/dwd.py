@@ -9,7 +9,7 @@ broadcast hash joins) all live here.
 
 Scale notes: the table/type filter prunes before any shuffle; the
 ``order_id`` join hash-partitions both fact sides once (AQE splits
-skewed order keys); ``base_dic`` joins are broadcast (16 rows), so the
+skewed order keys); ``base_dic`` joins are broadcast (20 rows), so the
 reference's JDBC row cache + Redis + async-IO machinery has no analog —
 Catalyst's broadcast exchange is strictly better.
 """

@@ -10,6 +10,7 @@ from gmall_spark.operators import (
 )
 from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
+from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import _emb, _oracle_dim_check
 
 # --- LSH band planning (X137) ----------------------------------------------
@@ -73,9 +74,7 @@ def q_dedup_lsh_band_plan(spark, sf_dir):
     floods candidates at s=20% and (1,16) misses most true pairs at
     s=80%). Powers evaluate as explicit IEEE multiply chains (the
     exact same expression text in both engines), never libm pow."""
-    cfg = spark.createDataFrame(
-        list(BAND_PLAN_CONFIGS), "n_bands int, rows_per_band int"
-    )
+    cfg = local_rows(spark, list(BAND_PLAN_CONFIGS), "n_bands int, rows_per_band int")
     grid = (
         cfg.crossJoin(
             spark.range(1, 20).select((F.col("id") * 5).alias("s_pct"))

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from gmall_spark.queries import _t, query
 from gmall_spark.queries import ORACLES
+from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import _docs
 from gmall_spark.queries_llm.sampling_privacy import (
     q_layout_zorder_orders,
@@ -803,9 +804,7 @@ def q_layout_file_stats_pruning(spark, sf_dir):
         F.min("day_bucket").alias("dmin"),
         F.max("day_bucket").alias("dmax"),
     )
-    preds = spark.createDataFrame(
-        list(PRUNE_PREDICATES), "dim string, val long"
-    )
+    preds = local_rows(spark, list(PRUNE_PREDICATES), "dim string, val long")
     j = preds.crossJoin(fs).select(
         "dim",
         "val",

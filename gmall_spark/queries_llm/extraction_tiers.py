@@ -13,6 +13,7 @@ from gmall_spark.queries import _t, query
 from gmall_spark.operators import unigram as _uni
 from gmall_spark.operators import wordpiece as _wp
 from gmall_spark.queries import ORACLES as _OR
+from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import (
     _docs,
     _emb,
@@ -525,7 +526,8 @@ def q_llm_semantic_decontam_audit(spark, sf_dir):
         .alias("detector"),
         F.lit(1).alias("hit"),
     )
-    grid = spark.createDataFrame(
+    grid = local_rows(
+        spark,
         [("both",), ("semantic_only",), ("lsh_only",)], "detector string"
     )
     return (

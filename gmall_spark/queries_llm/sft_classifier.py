@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from gmall_spark import fixtures_audit
 from gmall_spark.queries import _t, query
+from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import _docs
 from gmall_spark.queries_llm.packing_release import (
     SEQ_PACK_CAP,
@@ -578,7 +579,8 @@ def q_text_hashed_classifier_confusion(spark, sf_dir):
         .groupBy("pred_en", "is_en")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    grid = spark.createDataFrame(
+    grid = local_rows(
+        spark,
         [(a, b) for a in (0, 1) for b in (0, 1)],
         "pred_en BIGINT, is_en BIGINT",
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from gmall_spark.queries import _t, query
+from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import _docs
 
 # --- frozen-tokenizer encoding (X139) ---------------------------------------
@@ -251,7 +252,8 @@ def q_llm_unigram_vocab_prune(spark, sf_dir):
         F.sum(F.col("cnt") * F.col("uses")).alias("usage_occs"),
         F.sum(F.col("cnt") * F.col("delta")).alias("cost_delta"),
     )
-    vocab = spark.createDataFrame(
+    vocab = local_rows(
+        spark,
         [(p,) for p in sorted(_uni.FROZEN_UNIGRAM_VOCAB) if len(p) >= 2],
         "piece string",
     )

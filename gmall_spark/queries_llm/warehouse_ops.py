@@ -10,6 +10,7 @@ from gmall_spark.operators import (
     similarity,
 )
 from gmall_spark import fixtures_audit
+from gmall_spark.session import local_rows
 from gmall_spark.queries import _t, query
 from gmall_spark.queries import ORACLES
 from gmall_spark.queries_llm.prelude import (
@@ -63,7 +64,8 @@ def q_events_price_band_join(spark, sf_dir):
     2-dp data lands ~1e-10 from integers, never at a half), so no
     float boundary exists anywhere, including the band edges that
     would be the bug magnet in a double formulation."""
-    bands = spark.createDataFrame(
+    bands = local_rows(
+        spark,
         [(b, b * BAND_CENTS, (b + 1) * BAND_CENTS) for b in range(N_BANDS)],
         "band_id long, lo_cents long, hi_cents long",
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from gmall_spark.queries import _t, query
+from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import _docs
 
 # --- web-provenance URL tier (X225-X228) -------------------------------------
@@ -170,8 +171,8 @@ def q_web_url_dedup_venn(spark, sf_dir):
     cells = f.groupBy("url_dup", "text_dup").agg(
         F.count(F.lit(1)).alias("n")
     )
-    grid = spark.createDataFrame(
-        [(a, b) for a in (0, 1) for b in (0, 1)], "url_dup INT, text_dup INT"
+    grid = local_rows(
+        spark, [(a, b) for a in (0, 1) for b in (0, 1)], "url_dup INT, text_dup INT"
     )
     return (
         grid.join(F.broadcast(cells), ["url_dup", "text_dup"], "left")

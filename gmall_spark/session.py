@@ -26,7 +26,8 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from gmall_spark import fixtures_audit
 
@@ -97,6 +98,28 @@ def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of the Python-literal tuples in the list ``rows``
+    under ``schema`` (a DDL string or a ``StructType``), with the same
+    schema, nullability included, as
+    ``spark.createDataFrame(rows, schema)``.
+
+    The rows travel as one Arrow table, so the plan's leaf is a JVM
+    ``LocalRelation``: no pickled ``PythonRDD``, so no Python worker
+    starts when the plan runs, and the relation carries real
+    statistics for join planning. Every literal relation in the
+    package goes through here (tests/test_session_memo.py lints for
+    it)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, T.StructType):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
 
 
 # Fact-sized tables whose downstream plans do heavy per-row derivation

@@ -4,8 +4,10 @@
 (utils/MysqlUtil.java:5-13; lookup-joined FOR SYSTEM_TIME AS OF in
 every DWD SQL job, e.g. DwdTradeCartAdd.java:92-94). It is tiny, so the
 Spark-first replacement for the reference's JDBC-cache + Redis + async
-machinery is simply a broadcast hash join — re-read per micro-batch in
-streaming for the "as of processing time" snapshot semantics.
+machinery is simply a broadcast hash join — rebuilt per micro-batch in
+streaming for the "as of processing time" snapshot semantics. Each
+rebuild is a JVM ``LocalRelation`` (``session.local_rows``): no pickled
+RDD, so a micro-batch starts no Python worker to broadcast it.
 
 ``BASE_DIC_ROWS`` doubles as the oracle fixture: the same rows are
 inlined as a VALUES list in the DuckDB oracle SQL (see queries.py).
@@ -14,6 +16,8 @@ inlined as a VALUES list in the DuckDB oracle SQL (see queries.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gmall_spark.session import local_rows
 
 BASE_DIC_ROWS: list[tuple[str, str]] = [
     ("1001", "unpaid"),
@@ -40,7 +44,7 @@ BASE_DIC_ROWS: list[tuple[str, str]] = [
 
 
 def base_dic(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BASE_DIC_ROWS, "dic_code string, dic_name string")
+    return local_rows(spark, BASE_DIC_ROWS, "dic_code string, dic_name string")
 
 
 def base_dic_values_sql() -> str:

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from gmall_spark.functions import text as TX
 from gmall_spark.operators import weburl
 from gmall_spark.queries_llm.web_tier import DOMAIN_BLOCKLIST, DOMAIN_OPTOUT
+from gmall_spark.session import local_rows
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -198,7 +199,7 @@ def process_optout(
     the register's own epochs."""
     before = current_keepers(spark, store_dir, optouts_before=batch_id)
     idempotent_parquet_write(f"{store_dir}/gov_optout_register")(
-        spark.createDataFrame([(d,) for d in domains], _REG_SCHEMA), batch_id
+        local_rows(spark, [(d,) for d in domains], _REG_SCHEMA), batch_id
     )
     return _moves(
         before, current_keepers(spark, store_dir, optouts_before=batch_id + 1)

@@ -23,6 +23,7 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_spark.operators import sketches
+from gmall_spark.session import local_rows
 from gmall_spark.streaming import incremental_value_hist as vh
 
 _PLAN_SCHEMA = "i long, bb long"
@@ -65,7 +66,7 @@ def current_bounds(spark: SparkSession, store_root: str) -> tuple[int, DataFrame
     with an empty table when no plan has been frozen yet."""
     versions = _plan_versions(store_root)
     if not versions:
-        return 0, spark.createDataFrame([], _PLAN_SCHEMA)
+        return 0, local_rows(spark, [], _PLAN_SCHEMA)
     v, path = versions[-1]
     return v, spark.read.schema(_PLAN_SCHEMA).parquet(path)
 

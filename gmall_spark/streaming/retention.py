@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.streaming.store import read_epochs
+from gmall_spark.session import local_rows
 
 
 def _rewrite_epochs(
@@ -70,9 +71,7 @@ def purge_doc_ids(
     ``stores`` maps an epoch store dir to the id COLUMNS to purge on
     (a pair store purges on both ``doc_a`` and ``doc_b``). Returns
     the number of rows removed per store."""
-    ids = spark.createDataFrame(
-        [(int(i),) for i in doc_ids], "___purge_id bigint"
-    )
+    ids = local_rows(spark, [(int(i),) for i in doc_ids], "___purge_id bigint")
     removed: dict[str, int] = {}
     for path, id_cols in stores.items():
 

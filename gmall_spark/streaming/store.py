@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gmall_spark.session import local_rows
+
 
 def read_epochs(
     spark: SparkSession, path: str, schema=None, before: int | None = None
@@ -50,7 +52,7 @@ def read_epochs(
         missing = "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
         if schema is None or not missing:
             raise
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
     if before is not None:
         df = df.filter(F.col("epoch") < before)
     return df.drop("epoch")

@@ -330,9 +330,11 @@ BUDGETS = [
     # fingerprint columns
     ("dedup_image_phash_groups", 12, 0),
     # r8: histogram quantile sketch — scan + the grid agg + the two
-    # single-partition windows over ~20 bucket rows; the 4-row probe
-    # side broadcasts
-    ("events_value_quantile_sketch", 4, 1),
+    # single-partition windows over ~20 bucket rows; the 4-row q_pct
+    # LocalRelation broadcasts, so the cross join streams the
+    # single-partition histogram and the q_pct agg needs no exchange
+    # of its own (one fewer than the pickled-RDD probe side took)
+    ("events_value_quantile_sketch", 3, 1),
     # r8: range-partition planner — r10: the boundary set broadcasts
     # as ONE collected array row and assignment is a per-row fold, so
     # the only shuffles are the sample rank + the 8-row part rollup
@@ -878,3 +880,51 @@ def test_price_band_join_is_hash_not_nested_loop(spark, sf_dir):
     df = q.QUERIES["events_price_band_join"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan, plan[:2000]
+
+
+def _leaves(plan) -> list[str]:
+    kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    return [n for k in kids for n in _leaves(k)] if kids else [plan.nodeName()]
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([("1001", "unpaid"), ("1002", None)], "dic_code string, dic_name string"),
+        ([], "i long, bb long"),
+        ([(1, [0.5, 1.5]), (2, []), (3, None)], "id bigint, v array<float>"),
+    ],
+    ids=["strings", "empty", "array"],
+)
+def test_local_rows_is_a_local_relation(spark, rows, ddl):
+    """session.local_rows plans a JVM LocalRelation (no pickled
+    PythonRDD, so no Python worker) with exactly the schema
+    createDataFrame(rows, ddl) declares, nullability included."""
+    from pyspark.sql.types import StructType, _parse_datatype_json_string
+
+    from gmall_spark.session import local_rows
+
+    df = local_rows(spark, rows, ddl)
+    assert _leaves(df._jdf.queryExecution().optimizedPlan()) == ["LocalRelation"]
+    # the JVM's schema, not the one PySpark caches on the DataFrame
+    jvm_schema = _parse_datatype_json_string(df._jdf.schema().json())
+    assert jvm_schema == StructType.fromDDL(ddl) == spark.createDataFrame(rows, ddl).schema
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_dwd_micro_batch_plan_is_jvm_only(spark, sf_dir, tmp_path):
+    """The CDC micro-batch path: dwd_trade_order_detail over a parquet
+    CDC batch joins base_dic as a LocalTableScan, so its executed plan
+    holds no RDD scan (a pickled createDataFrame list plans to
+    LogicalRDD / Scan ExistingRDD, whose tasks start Python workers)
+    and no Python evaluation node."""
+    from gmall_spark.plans import dwd
+    from gmall_spark.sources import dims
+
+    q._topic_db(spark, sf_dir).write.parquet(str(tmp_path / "batch"))
+    batch = spark.read.parquet(str(tmp_path / "batch"))
+    df = dwd.dwd_trade_order_detail(batch, dims.base_dic(spark))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("ExistingRDD", "LogicalRDD", "EvalPython"):
+        assert node not in plan, plan[:3000]
+    assert "LocalTableScan" in plan, plan[:3000]

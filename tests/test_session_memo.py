@@ -55,6 +55,29 @@ def test_no_module_level_memo_outside_registry():
     assert not offenders, offenders
 
 
+def test_literal_rows_go_through_local_rows():
+    """Spark-free lint: ``createDataFrame(list)`` and ``parallelize``
+    plan a pickled PythonRDD whose tasks start Python workers; every
+    literal relation in the package goes through session.local_rows,
+    a JVM LocalRelation."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        helper = set()
+        for f in tree.body:
+            if path.name == "session.py" and getattr(f, "name", None) == "local_rows":
+                helper = {id(n) for n in ast.walk(f)}
+        offenders += [
+            f"{path.relative_to(PKG.parent)}:{node.lineno} {node.func.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("createDataFrame", "parallelize")
+            and id(node) not in helper
+        ]
+    assert not offenders, offenders
+
+
 ROOT = PKG.parent
 LLM = "gmall_spark.queries_llm"
 FAMILIES = {p.stem for p in (PKG / "queries_llm").glob("*.py")} - {"__init__"}
