@@ -211,12 +211,13 @@ FROZEN_MERGES: tuple[tuple[str, str], ...] = (
 # compute: ZERO shuffles at any corpus size.
 
 
-def encode_expr_spark(word: str, merges=FROZEN_MERGES) -> str:
-    """Spark SQL expression: ``word`` (a column/lambda-var reference)
-    -> token array under the frozen merges. CASE branches (not AND
-    chains) guard the empty accumulator — CASE is contractually lazy,
-    so ANSI element_at can never see an empty array."""
-    e = f"transform(sequence(1, length({word})), i -> substring({word}, i, 1))"
+def _merge_fold_spark(units: str, merges) -> str:
+    """Spark SQL expression: a token-array expression ``units`` ->
+    tokens under the rank-ordered ``merges``, one greedy fold per
+    merge. CASE branches (not AND chains) guard the empty accumulator
+    — CASE is contractually lazy, so ANSI element_at can never see an
+    empty array."""
+    e = units
     for l, r in merges:
         e = (
             f"aggregate({e}, cast(array() as array<string>), (acc, x) -> "
@@ -228,15 +229,12 @@ def encode_expr_spark(word: str, merges=FROZEN_MERGES) -> str:
     return e
 
 
-def encode_expr_duckdb(word: str, merges=FROZEN_MERGES) -> str:
-    """DuckDB twin of :func:`encode_expr_spark`. list_reduce has no
+def _merge_fold_duckdb(units: str, merges) -> str:
+    """DuckDB twin of :func:`_merge_fold_spark`. list_reduce has no
     initial-value overload, so elements ride as singleton lists and the
     first singleton IS the initial accumulator — which matches the fold
     exactly (out = [t1], then process the rest)."""
-    e = (
-        f"list_transform(list_transform(range(1, length({word}) + 1), "
-        f"i -> {word}[i:i]), t -> [t])"
-    )
+    e = f"list_transform({units}, t -> [t])"
     for l, r in merges:
         e = (
             f"list_transform(list_reduce({e}, (acc, x) -> "
@@ -245,6 +243,23 @@ def encode_expr_duckdb(word: str, merges=FROZEN_MERGES) -> str:
             f"t -> [t])"
         )
     return f"list_transform({e}, s -> s[1])"
+
+
+def encode_expr_spark(word: str, merges=FROZEN_MERGES) -> str:
+    """Spark SQL expression: ``word`` (a column/lambda-var reference)
+    -> token array under the frozen merges, over its chars."""
+    return _merge_fold_spark(
+        f"transform(sequence(1, length({word})), i -> substring({word}, i, 1))",
+        merges,
+    )
+
+
+def encode_expr_duckdb(word: str, merges=FROZEN_MERGES) -> str:
+    """DuckDB twin of :func:`encode_expr_spark`."""
+    return _merge_fold_duckdb(
+        f"list_transform(range(1, length({word}) + 1), i -> {word}[i:i])",
+        merges,
+    )
 
 
 def frozen_encode_oracle_sql() -> str:
@@ -395,31 +410,13 @@ def byte_units_expr_duckdb(word: str) -> str:
 
 def byte_encode_expr_spark(word: str, merges=BYTE_MERGES) -> str:
     """Byte-fallback encode: the frozen-merge greedy fold of
-    :func:`encode_expr_spark` over BYTE units instead of chars."""
-    e = byte_units_expr_spark(word)
-    for l, r in merges:
-        e = (
-            f"aggregate({e}, cast(array() as array<string>), (acc, x) -> "
-            f"CASE WHEN size(acc) = 0 THEN array(x) "
-            f"WHEN element_at(acc, -1) = '{l}' AND x = '{r}' "
-            f"THEN concat(slice(acc, 1, size(acc) - 1), array('{l}{r}')) "
-            f"ELSE concat(acc, array(x)) END)"
-        )
-    return e
+    :func:`_merge_fold_spark` over BYTE units instead of chars."""
+    return _merge_fold_spark(byte_units_expr_spark(word), merges)
 
 
 def byte_encode_expr_duckdb(word: str, merges=BYTE_MERGES) -> str:
-    """DuckDB twin of :func:`byte_encode_expr_spark` (fold state as
-    singleton lists — the list_reduce idiom)."""
-    e = f"list_transform({byte_units_expr_duckdb(word)}, t -> [t])"
-    for l, r in merges:
-        e = (
-            f"list_transform(list_reduce({e}, (acc, x) -> "
-            f"CASE WHEN acc[-1] = '{l}' AND x[1] = '{r}' "
-            f"THEN acc[1:len(acc)-1] || ['{l}{r}'] ELSE acc || x END), "
-            f"t -> [t])"
-        )
-    return f"list_transform({e}, s -> s[1])"
+    """DuckDB twin of :func:`byte_encode_expr_spark`."""
+    return _merge_fold_duckdb(byte_units_expr_duckdb(word), merges)
 
 
 def byte_decode_expr_spark(tokens: str) -> str:

@@ -267,8 +267,32 @@ def ivf_topk(
     centroids = centroids or train_centroids(
         embeddings, n_lists, iters, id_col=id_col, vec_col=vec_col
     )
-    index = build_index(embeddings, centroids, id_col, vec_col)
+    return probe_topk(
+        build_index(embeddings, centroids, id_col, vec_col),
+        queries,
+        centroids,
+        k,
+        nprobe,
+        id_col,
+        vec_col,
+        hint_broadcast_probes,
+    )
 
+
+def probe_topk(
+    index: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[float]],
+    k: int = 10,
+    nprobe: int = IVF_NPROBE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    hint_broadcast_probes: bool = True,
+) -> DataFrame:
+    """Probe a (vec_id, embedding, list_id) ``index`` built under
+    ``centroids``: each query's nprobe nearest lists, exact cosine
+    against their members, per-query top-k (query_id, neighbor_id,
+    rank, cos_sim)."""
     # Each query ranks the k centroids in one Arrow-batched gemm and
     # keeps its nprobe nearest lists.
     probes = queries.select(

@@ -976,6 +976,58 @@ def image_hashes(blobs: DataFrame) -> DataFrame:
     return blobs.mapInPandas(gen, schema=IMG_HASH_SCHEMA)
 
 
+def _near_dup_assign(
+    members: DataFrame, d: DataFrame, near: DataFrame, key: str
+) -> DataFrame:
+    """The shared tail of the near-dup groupers: each distinct
+    fingerprint's representative is the min doc_id over its direct
+    near-partners and itself, and every member row gets it with its
+    group size.
+
+    ``members`` is (doc_id, key), ``d`` one row per distinct
+    fingerprint (key, fp_min) and ``near`` the verified pairs
+    (hex_a, min_a, hex_b, min_b). Returns (doc_id, key, rep_id,
+    group_size)."""
+    from pyspark.sql import Window
+
+    # symmetrize via explode so `near` is ONE subtree (a union of two
+    # selects would evaluate the verify join twice)
+    partner_min = (
+        near.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("hex_a").alias(key),
+                        F.col("min_b").alias("pmin"),
+                    ),
+                    F.struct(
+                        F.col("hex_b").alias(key),
+                        F.col("min_a").alias("pmin"),
+                    ),
+                )
+            ).alias("e")
+        )
+        .select(f"e.{key}", "e.pmin")
+        .groupBy(key)
+        .agg(F.min("pmin").alias("near_min"))
+    )
+    reps = d.join(partner_min, key, "left").select(
+        key,
+        F.least(F.col("fp_min"), F.coalesce("near_min", F.col("fp_min"))).alias("rep_id"),
+    )
+    # rep table is one row per DISTINCT fingerprint — usually tiny, but
+    # not guaranteed broadcastable at corpus scale; leave the strategy
+    # to AQE (it broadcasts when the build side measures small).
+    out = members.join(reps, key)
+    w = Window.partitionBy("rep_id")
+    return out.select(
+        "doc_id",
+        key,
+        F.col("rep_id").cast("bigint").alias("rep_id"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("group_size"),
+    )
+
+
 def image_near_dup_groups(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
     """Perceptual-hash near-dup grouping, scaled the way an image
     corpus actually dedups at 100 TB:
@@ -1003,7 +1055,6 @@ def image_near_dup_groups(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
 
     Returns (doc_id, dhash_hex, rep_id, group_size)."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
     # the banding recall guarantee is the pigeonhole over 4 bands: up
     # to max_hamming touched bands still leave one clean band ONLY
@@ -1068,42 +1119,7 @@ def image_near_dup_groups(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    # symmetrize via explode so `near` is ONE subtree (a union of two
-    # selects would evaluate the verify join twice)
-    partner_min = (
-        near.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("hex_a").alias("dhash_hex"),
-                        F.col("min_b").alias("pmin"),
-                    ),
-                    F.struct(
-                        F.col("hex_b").alias("dhash_hex"),
-                        F.col("min_a").alias("pmin"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.dhash_hex", "e.pmin")
-        .groupBy("dhash_hex")
-        .agg(F.min("pmin").alias("near_min"))
-    )
-    reps = d.join(partner_min, "dhash_hex", "left").select(
-        "dhash_hex",
-        F.least(F.col("fp_min"), F.coalesce("near_min", F.col("fp_min"))).alias("rep_id"),
-    )
-    # rep table is one row per DISTINCT fingerprint — usually tiny, but
-    # not guaranteed broadcastable at corpus scale; leave the strategy
-    # to AQE (it broadcasts when the build side measures small).
-    out = fp.select("doc_id", "dhash_hex").join(reps, "dhash_hex")
-    w = Window.partitionBy("rep_id")
-    return out.select(
-        "doc_id",
-        "dhash_hex",
-        F.col("rep_id").cast("bigint").alias("rep_id"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("group_size"),
-    )
+    return _near_dup_assign(fp.select("doc_id", "dhash_hex"), d, near, "dhash_hex")
 
 
 # ---------------------------------------------------------------------------
@@ -1686,41 +1702,7 @@ def audio_near_dup_groups(
         .filter(min_overlap_den * inter >= min_overlap_num * smaller)
         .select("hex_a", "min_a", "hex_b", "min_b")
     )
-    partner_min = (
-        near.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("hex_a").alias("fp_hex"),
-                        F.col("min_b").alias("pmin"),
-                    ),
-                    F.struct(
-                        F.col("hex_b").alias("fp_hex"),
-                        F.col("min_a").alias("pmin"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.fp_hex", "e.pmin")
-        .groupBy("fp_hex")
-        .agg(F.min("pmin").alias("near_min"))
-    )
-    reps = d.join(partner_min, "fp_hex", "left").select(
-        "fp_hex",
-        F.least(
-            F.col("fp_min"), F.coalesce("near_min", F.col("fp_min"))
-        ).alias("rep_id"),
-    )
-    out = ok.select("doc_id", "fp_hex").join(reps, "fp_hex")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("rep_id")
-    return out.select(
-        "doc_id",
-        "fp_hex",
-        F.col("rep_id").cast("bigint").alias("rep_id"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("group_size"),
-    )
+    return _near_dup_assign(ok.select("doc_id", "fp_hex"), d, near, "fp_hex")
 
 
 # --- shot-boundary detection over the real AVI path (X212) -----------------

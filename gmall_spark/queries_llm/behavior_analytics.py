@@ -571,6 +571,40 @@ def q_warehouse_data_tests(spark, sf_dir):
 # --- EWMA daily-volume forecast (X161) --------------------------------------------------
 
 
+def ewma_day_counts(events):
+    """(event_type, d, cnt): the per-(type, day) event counts the
+    forecast folds — plain sums, so day grids of disjoint event sets
+    add up."""
+    return events.groupBy("event_type", F.to_date("ts").alias("d")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
+def ewma_forecast(day_counts):
+    """Fold each type's day-ordered count series (from
+    :func:`ewma_day_counts` rows) through s_t = (s_{t-1} + v_t)/2:
+    (event_type, last_day, n_days, last_count, ewma_forecast)."""
+    s = day_counts.groupBy("event_type").agg(
+        F.expr("array_sort(collect_list(struct(d, cnt)))").alias("ser"),
+        F.max("d").alias("last_day"),
+        F.count(F.lit(1)).alias("n_days"),
+    )
+    return s.select(
+        "event_type",
+        F.date_format("last_day", "yyyy-MM-dd").alias("last_day"),
+        F.col("n_days").cast("bigint").alias("n_days"),
+        F.element_at(F.col("ser"), -1)["cnt"].cast("bigint").alias("last_count"),
+        F.round(
+            F.expr(
+                "aggregate(slice(ser, 2, size(ser) - 1),"
+                " cast(ser[0].cnt as double),"
+                " (acc, x) -> (acc + x.cnt) * 0.5)"
+            ),
+            6,
+        ).alias("ewma_forecast"),
+    )
+
+
 @query(
     "events_ewma_forecast",
     """
@@ -608,32 +642,7 @@ def q_events_ewma_forecast(spark, sf_dir):
     libm drift. The series collects per (type, day) rollup —
     day-grid-bounded, never corpus-scaled; one hash agg + one
     type-keyed agg."""
-    c = (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type", F.to_date("ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    s = c.groupBy("event_type").agg(
-        F.expr(
-            "array_sort(collect_list(struct(d, cnt)))"
-        ).alias("ser"),
-        F.max("d").alias("last_day"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    return s.select(
-        "event_type",
-        F.date_format("last_day", "yyyy-MM-dd").alias("last_day"),
-        F.col("n_days").cast("bigint").alias("n_days"),
-        F.element_at(F.col("ser"), -1)["cnt"].cast("bigint").alias("last_count"),
-        F.round(
-            F.expr(
-                "aggregate(slice(ser, 2, size(ser) - 1),"
-                " cast(ser[0].cnt as double),"
-                " (acc, x) -> (acc + x.cnt) * 0.5)"
-            ),
-            6,
-        ).alias("ewma_forecast"),
-    )
+    return ewma_forecast(ewma_day_counts(_t(spark, sf_dir, "events")))
 
 
 # --- RFM customer segmentation (X160) -------------------------------------------------

@@ -14,6 +14,49 @@ SKIPGRAM_WINDOW = 2
 SKIPGRAM_MIN_PAIR = 5
 
 
+def skipgram_tokens(docs):
+    """(tokens, pairs) of (doc_id, text) rows: one row per word token
+    (w), and one per ORDERED in-window pair (w_a, w_b) built per row
+    from the word array (an indexed transform + bounded slice: each
+    token meets at most SKIPGRAM_WINDOW forward partners — never a
+    self-join)."""
+    words = docs.selectExpr(
+        r"filter(split(lower(text), '[^a-z0-9]+'), x -> x != '') AS w"
+    )
+    pairs = words.selectExpr(
+        f"""explode(flatten(transform(w, (x, i) ->
+              transform(slice(w, i + 2, {SKIPGRAM_WINDOW}),
+                        y -> struct(x AS w_a, y AS w_b))))) AS pr"""
+    ).select("pr.w_a", "pr.w_b")
+    return words.select(F.explode("w").alias("w")), pairs
+
+
+def skipgram_lift(pairs, uni, n):
+    """The collocation report: (w_a, w_b, pair_cnt) pairs clearing
+    SKIPGRAM_MIN_PAIR, joined to their (w, cnt) unigram counts and the
+    one-row token total n_tok; lift = pair_cnt·N / (cnt_a·cnt_b)."""
+    ua = uni.select(F.col("w").alias("w_a"), F.col("cnt").alias("cnt_a"))
+    ub = uni.select(F.col("w").alias("w_b"), F.col("cnt").alias("cnt_b"))
+    return (
+        pairs.filter(F.col("pair_cnt") >= SKIPGRAM_MIN_PAIR)
+        .join(F.broadcast(ua), "w_a")
+        .join(F.broadcast(ub), "w_b")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "w_a",
+            "w_b",
+            F.col("pair_cnt").cast("bigint").alias("pair_cnt"),
+            F.col("cnt_a").cast("bigint").alias("cnt_a"),
+            F.col("cnt_b").cast("bigint").alias("cnt_b"),
+            F.round(
+                F.col("pair_cnt") * 1.0 * F.col("n_tok")
+                / (F.col("cnt_a") * F.col("cnt_b")),
+                6,
+            ).alias("lift"),
+        )
+    )
+
+
 @query(
     "text_skipgram_cooccurrence",
     rf"""
@@ -59,43 +102,11 @@ def q_text_skipgram_cooccurrence(spark, sf_dir):
     self-join, never quadratic); two hash aggs + broadcast unigram
     joins are the only exchanges. The oracle keeps the readable
     positional-join SQL — it pins semantics, not plans."""
-    docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id",
-        r"filter(split(lower(text), '[^a-z0-9]+'), x -> x != '') AS w",
-    )
-    tok = docs.select(F.explode("w").alias("w"))
+    tok, pr = skipgram_tokens(_docs(spark, sf_dir))
     n = tok.agg(F.count(F.lit(1)).alias("n_tok"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    pairs = (
-        docs.selectExpr(
-            f"""explode(flatten(transform(w, (x, i) ->
-                  transform(slice(w, i + 2, {SKIPGRAM_WINDOW}),
-                            y -> struct(x AS w_a, y AS w_b))))) AS pr"""
-        )
-        .select("pr.w_a", "pr.w_b")
-        .groupBy("w_a", "w_b")
-        .agg(F.count(F.lit(1)).alias("pair_cnt"))
-        .filter(F.col("pair_cnt") >= SKIPGRAM_MIN_PAIR)
-    )
-    ua = uni.select(F.col("w").alias("w_a"), F.col("cnt").alias("cnt_a"))
-    ub = uni.select(F.col("w").alias("w_b"), F.col("cnt").alias("cnt_b"))
-    return (
-        pairs.join(F.broadcast(ua), "w_a")
-        .join(F.broadcast(ub), "w_b")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "w_a",
-            "w_b",
-            F.col("pair_cnt").cast("bigint").alias("pair_cnt"),
-            F.col("cnt_a").cast("bigint").alias("cnt_a"),
-            F.col("cnt_b").cast("bigint").alias("cnt_b"),
-            F.round(
-                F.col("pair_cnt") * 1.0 * F.col("n_tok")
-                / (F.col("cnt_a") * F.col("cnt_b")),
-                6,
-            ).alias("lift"),
-        )
-    )
+    pairs = pr.groupBy("w_a", "w_b").agg(F.count(F.lit(1)).alias("pair_cnt"))
+    return skipgram_lift(pairs, uni, n)
 
 
 # --- vocabulary growth curve (X182) -------------------------------------------
@@ -205,6 +216,45 @@ def q_text_vocab_growth_curve(spark, sf_dir):
 DRIFT_W = 50
 
 
+def drift_cells(events):
+    """(d, bucket) per event: its day and its DRIFT_W-wide value
+    bucket."""
+    return events.select(
+        F.to_date("ts").alias("d"),
+        F.floor(F.col("value") / DRIFT_W).cast("bigint").alias("bucket"),
+    )
+
+
+def drift_windows(rows, *cols):
+    """``cols`` of dated rows plus is_ref: 1 in the reference window
+    (the first half of the rows' own day span), else 0."""
+    span = rows.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
+    return rows.crossJoin(F.broadcast(span)).select(
+        *cols,
+        F.when(
+            F.datediff("d", "lo") * 2 <= F.datediff("hi", "lo"), 1
+        ).otherwise(0).alias("is_ref"),
+    )
+
+
+def drift_terms(g):
+    """Per (bucket, ref_cnt, cur_cnt) row, its chi-square term against
+    the add-one-floored reference proportions scaled to the current
+    total (the totals broadcast as one row)."""
+    tot = g.agg(
+        F.sum("ref_cnt").alias("ref_t"), F.sum("cur_cnt").alias("cur_t")
+    )
+    exp = (F.col("ref_cnt") + 1.0) * F.col("cur_t") / (F.col("ref_t") + 1.0)
+    return g.crossJoin(F.broadcast(tot)).select(
+        F.col("bucket").cast("bigint").alias("bucket"),
+        F.col("ref_cnt").cast("bigint").alias("ref_cnt"),
+        F.col("cur_cnt").cast("bigint").alias("cur_cnt"),
+        F.round(
+            (F.col("cur_cnt") - exp) * (F.col("cur_cnt") - exp) / exp, 6
+        ).alias("chi_term"),
+    )
+
+
 @query(
     "events_value_drift_chisq",
     f"""
@@ -249,33 +299,12 @@ def q_events_value_drift_chisq(spark, sf_dir):
     EVERY bucket is emitted with its term (the X173 lesson: an
     alarm-only table is vacuously green). Single scan + a grid-bounded
     aggregate; the 1-row totals broadcast."""
-    e = _t(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("d"),
-        F.floor(F.col("value") / DRIFT_W).cast("bigint").alias("bucket"),
-    )
-    span = e.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
-    tagged = e.crossJoin(F.broadcast(span)).select(
-        "bucket",
-        F.when(
-            F.datediff("d", "lo") * 2 <= F.datediff("hi", "lo"), 1
-        ).otherwise(0).alias("is_ref"),
-    )
+    tagged = drift_windows(drift_cells(_t(spark, sf_dir, "events")), "bucket")
     g = tagged.groupBy("bucket").agg(
         F.sum("is_ref").alias("ref_cnt"),
         F.sum(1 - F.col("is_ref")).alias("cur_cnt"),
     )
-    tot = g.agg(
-        F.sum("ref_cnt").alias("ref_t"), F.sum("cur_cnt").alias("cur_t")
-    )
-    exp = (F.col("ref_cnt") + 1.0) * F.col("cur_t") / (F.col("ref_t") + 1.0)
-    return g.crossJoin(F.broadcast(tot)).select(
-        F.col("bucket").cast("bigint").alias("bucket"),
-        F.col("ref_cnt").cast("bigint").alias("ref_cnt"),
-        F.col("cur_cnt").cast("bigint").alias("cur_cnt"),
-        F.round(
-            (F.col("cur_cnt") - exp) * (F.col("cur_cnt") - exp) / exp, 6
-        ).alias("chi_term"),
-    )
+    return drift_terms(g)
 
 
 # --- range-partition boundary plan (X180) -------------------------------------

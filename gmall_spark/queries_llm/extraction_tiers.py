@@ -433,6 +433,26 @@ FROM hits GROUP BY vec_id"""
     )
 
 
+def best_reference(hits):
+    """Per flagged corpus doc of verified (id_a, id_b, cos_sim) hits:
+    (doc_id, ref_id, cos_sim, n_ref_hits) — its closest reference item
+    (ties to the smaller id), that cosine, and its hit count."""
+    best = F.max(F.struct(F.col("cos_sim"), (-F.col("id_b")).alias("nr")))
+    return (
+        hits.groupBy(F.col("id_a").alias("doc_id"))
+        .agg(
+            best.alias("b"),
+            F.count(F.lit(1)).cast("bigint").alias("n_ref_hits"),
+        )
+        .select(
+            "doc_id",
+            (-F.col("b.nr")).cast("bigint").alias("ref_id"),
+            F.col("b.cos_sim").alias("cos_sim"),
+            "n_ref_hits",
+        )
+    )
+
+
 @query("llm_semantic_decontam", None)  # oracle attached below (generated SQL)
 def q_llm_semantic_decontam(spark, sf_dir):
     """Embedding-based semantic decontamination (X220): flag corpus
@@ -451,21 +471,7 @@ def q_llm_semantic_decontam(spark, sf_dir):
     items it collides with. Scale: one list_id-keyed join (the index
     is written partitioned by list_id at scale), vectorized cosine on
     candidates only, never a corpus self-join."""
-    h = _semantic_decontam_flags(spark, sf_dir)
-    best = F.max(F.struct(F.col("cos_sim"), (-F.col("id_b")).alias("nr")))
-    return (
-        h.groupBy(F.col("id_a").alias("doc_id"))
-        .agg(
-            best.alias("b"),
-            F.count(F.lit(1)).cast("bigint").alias("n_ref_hits"),
-        )
-        .select(
-            "doc_id",
-            (-F.col("b.nr")).cast("bigint").alias("ref_id"),
-            F.col("b.cos_sim").alias("cos_sim"),
-            "n_ref_hits",
-        )
-    )
+    return best_reference(_semantic_decontam_flags(spark, sf_dir))
 
 
 _ORACLES_KN["llm_semantic_decontam"] = _semantic_decontam_oracle()

@@ -692,6 +692,23 @@ def q_llm_curation_funnel(spark, sf_dir):
 # --- corpus release fingerprint (X191) ---------------------------------------------
 
 
+def corpus_fingerprint(docs):
+    """The one-row (n_docs, n_chars, content_sum, id_sum) fingerprint
+    of (doc_id, text) rows. Every field is an integer SUM, so the
+    fingerprints of disjoint parts sum to the fingerprint of the
+    whole (the streaming twin's merge)."""
+    return docs.selectExpr(
+        "cast(conv(substring(md5(concat(cast(doc_id as string), ':', text)), 1, 15), 16, 10) as decimal(38,0)) AS ch",
+        "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as decimal(38,0)) AS ih",
+        "length(text) AS len",
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("len").cast("bigint").alias("n_chars"),
+        F.sum("ch").cast("decimal(38,0)").alias("content_sum"),
+        F.sum("ih").cast("decimal(38,0)").alias("id_sum"),
+    )
+
+
 @query(
     "llm_corpus_fingerprint",
     """
@@ -715,16 +732,7 @@ def q_llm_corpus_fingerprint(spark, sf_dir):
     agree on this row iff they agree on every (doc_id, text) pair
     with overwhelming probability — the cheap 'same data?' check
     before any cross-run regression hunt. One scan, one aggregate."""
-    return _docs(spark, sf_dir).selectExpr(
-        "cast(conv(substring(md5(concat(cast(doc_id as string), ':', text)), 1, 15), 16, 10) as decimal(38,0)) AS ch",
-        "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as decimal(38,0)) AS ih",
-        "length(text) AS len",
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("len").cast("bigint").alias("n_chars"),
-        F.sum("ch").cast("decimal(38,0)").alias("content_sum"),
-        F.sum("ih").cast("decimal(38,0)").alias("id_sum"),
-    )
+    return corpus_fingerprint(_docs(spark, sf_dir))
 
 
 # --- cross-source duplicate attribution (X192) --------------------------------------
@@ -920,6 +928,60 @@ _OR4["llm_sequence_packing_unigram"] = _ffd_pack_oracle(
 # --- embedding health audit (X186) ----------------------------------------------
 
 
+def vector_flags(emb):
+    """Per vector: (width, nan_ct, nonzero_ct) — its NaN and non-zero
+    component counts, folded in-row."""
+    return emb.select(
+        F.size("embedding").alias("width"),
+        F.aggregate(
+            F.transform("embedding", lambda x: F.when(F.isnan(x.cast("double")), 1).otherwise(0)),
+            F.lit(0),
+            lambda a, x: a + x,
+        ).alias("nan_ct"),
+        F.aggregate(
+            F.transform("embedding", lambda x: F.when(x.cast("double") == 0.0, 0).otherwise(1)),
+            F.lit(0),
+            lambda a, x: a + x,
+        ).alias("nonzero_ct"),
+    )
+
+
+def dim_envelope(emb):
+    """Per dimension (1-based): (dim, dim_min, dim_max, zeros) — min,
+    max and zero count, each mergeable across any split of the
+    vectors."""
+    dims = emb.select(
+        F.posexplode(F.transform("embedding", lambda x: x.cast("double"))).alias(
+            "dim0", "x"
+        )
+    ).select((F.col("dim0") + 1).cast("bigint").alias("dim"), "x")
+    return dims.groupBy("dim").agg(
+        F.min("x").alias("dim_min"),
+        F.max("x").alias("dim_max"),
+        F.sum(F.when(F.col("x") == 0.0, 1).otherwise(0)).cast("bigint").alias("zeros"),
+    )
+
+
+def health_report(per_dim, corpus):
+    """The X186 report: the one-row corpus counters broadcast onto the
+    per-dimension envelope."""
+    return per_dim.crossJoin(F.broadcast(corpus)).select(
+        "dim", "dim_min", "dim_max", "zeros",
+        "n_vectors", "n_widths", "nan_vectors", "zero_vectors",
+    )
+
+
+def embedding_health(emb):
+    """The X186 report over (vec_id, embedding) rows."""
+    corpus = vector_flags(emb).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
+        F.countDistinct("width").cast("bigint").alias("n_widths"),
+        F.sum(F.when(F.col("nan_ct") > 0, 1).otherwise(0)).cast("bigint").alias("nan_vectors"),
+        F.sum(F.when(F.col("nonzero_ct") == 0, 1).otherwise(0)).cast("bigint").alias("zero_vectors"),
+    )
+    return health_report(dim_envelope(emb), corpus)
+
+
 @query(
     "embedding_health_audit",
     """
@@ -966,39 +1028,6 @@ def q_embedding_health_audit(spark, sf_dir):
     Scale shape: one dim-explode aggregate (64x vectors, grouped on a
     64-row grid) + one per-vector fold aggregate; the 1-row corpus
     stats broadcast onto the grid."""
-    emb = _emb(spark, sf_dir)
-    e = emb.select(
-        F.size("embedding").alias("width"),
-        F.aggregate(
-            F.transform("embedding", lambda x: F.when(F.isnan(x.cast("double")), 1).otherwise(0)),
-            F.lit(0),
-            lambda a, x: a + x,
-        ).alias("nan_ct"),
-        F.aggregate(
-            F.transform("embedding", lambda x: F.when(x.cast("double") == 0.0, 0).otherwise(1)),
-            F.lit(0),
-            lambda a, x: a + x,
-        ).alias("nonzero_ct"),
-    )
-    corpus = e.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-        F.countDistinct("width").cast("bigint").alias("n_widths"),
-        F.sum(F.when(F.col("nan_ct") > 0, 1).otherwise(0)).cast("bigint").alias("nan_vectors"),
-        F.sum(F.when(F.col("nonzero_ct") == 0, 1).otherwise(0)).cast("bigint").alias("zero_vectors"),
-    )
-    dims = emb.select(
-        F.posexplode(F.transform("embedding", lambda x: x.cast("double"))).alias(
-            "dim0", "x"
-        )
-    ).select((F.col("dim0") + 1).cast("bigint").alias("dim"), "x")
-    per_dim = dims.groupBy("dim").agg(
-        F.min("x").alias("dim_min"),
-        F.max("x").alias("dim_max"),
-        F.sum(F.when(F.col("x") == 0.0, 1).otherwise(0)).cast("bigint").alias("zeros"),
-    )
-    return per_dim.crossJoin(F.broadcast(corpus)).select(
-        "dim", "dim_min", "dim_max", "zeros",
-        "n_vectors", "n_widths", "nan_vectors", "zero_vectors",
-    )
+    return embedding_health(_emb(spark, sf_dir))
 
 

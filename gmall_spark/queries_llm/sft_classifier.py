@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from gmall_spark import fixtures_audit
+from gmall_spark.functions import text as TX
 from gmall_spark.queries import _t, query
 from gmall_spark.session import local_rows
 from gmall_spark.queries_llm.prelude import _docs
@@ -84,6 +85,16 @@ def q_sft_render_frozen_template(spark, sf_dir):
     return sft.render_records(_docs(spark, sf_dir))
 
 
+def _role_chars(role: str):
+    """A conversation's total characters over its ``role`` turns."""
+    return F.aggregate(
+        F.col("turns"),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc
+        + F.when(x["role"] == role, F.length(x["txt"])).otherwise(F.lit(0)),
+    )
+
+
 @query(
     "sft_turn_stats",
     sft.turns_oracle_cte()
@@ -107,23 +118,11 @@ def q_sft_turn_stats(spark, sf_dir):
     the balance table an SFT mix is tuned against (assistant share IS
     the fraction of rendered bytes the loss sees). Integer sums
     divide once at the end. One grid-bounded aggregate."""
-    t = sft.turns(_docs(spark, sf_dir))
-
-    def _role_sum(role):
-        return F.aggregate(
-            F.col("turns"),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + F.when(x["role"] == role, F.length(x["txt"])).otherwise(
-                F.lit(0)
-            ),
-        )
-
-    m = t.select(
+    m = sft.turns(_docs(spark, sf_dir)).select(
         "lang",
         "n_turns",
-        _role_sum("user").alias("uc"),
-        _role_sum("assistant").alias("ac"),
+        _role_chars("user").alias("uc"),
+        _role_chars("assistant").alias("ac"),
     )
     return m.groupBy("lang", "n_turns").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_convs"),
@@ -134,6 +133,35 @@ def q_sft_turn_stats(spark, sf_dir):
             / (F.sum("uc") + F.sum("ac")).cast("double"),
             6,
         ).alias("assistant_share"),
+    )
+
+
+def prompt_candidates(docs):
+    """(doc_id, prompt, asst_len) per conversation: its first user
+    turn and its total assistant characters."""
+    return sft.turns(docs).select(
+        "doc_id",
+        F.col("turns").getItem(0)["txt"].alias("prompt"),
+        _role_chars("assistant").alias("asst_len"),
+    )
+
+
+def prompt_keepers(cands):
+    """Per prompt of :func:`prompt_candidates` rows, the keeper (the
+    richest response: asst_len DESC, then min doc_id) with its group
+    size: (prompt, doc_id, asst_len, n_convs). The argmax under that
+    total order is associative over any split of the rows."""
+    w = Window.partitionBy("prompt")
+    return (
+        cands.select(
+            "*",
+            F.count(F.lit(1)).over(w).alias("n_convs"),
+            F.row_number()
+            .over(w.orderBy(F.col("asst_len").desc(), F.col("doc_id")))
+            .alias("rn"),
+        )
+        .filter(F.col("rn") == 1)
+        .select("prompt", "doc_id", "asst_len", "n_convs")
     )
 
 
@@ -169,30 +197,10 @@ def q_sft_prompt_dedup(spark, sf_dir):
     deterministic keep-best, the X6 keeper discipline upgraded from
     keep-first). Scale: one prompt-keyed window (rank inside the
     group agg's exchange) — group size bounds nothing quadratic."""
-    t = sft.turns(_docs(spark, sf_dir))
-    conv = t.select(
-        "doc_id",
-        F.col("turns").getItem(0)["txt"].alias("prompt"),
-        F.aggregate(
-            F.col("turns"),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + F.when(
-                x["role"] == "assistant", F.length(x["txt"])
-            ).otherwise(F.lit(0)),
-        ).alias("asst_len"),
-    )
-    w = Window.partitionBy("prompt")
-    ranked = conv.select(
-        "*",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.row_number()
-        .over(w.orderBy(F.col("asst_len").desc(), F.col("doc_id")))
-        .alias("rn"),
-    )
-    return ranked.filter((F.col("rn") == 1) & (F.col("n") >= 2)).select(
+    keepers = prompt_keepers(prompt_candidates(_docs(spark, sf_dir)))
+    return keepers.filter(F.col("n_convs") >= 2).select(
         F.md5("prompt").alias("prompt_md5"),
-        F.col("n").cast("bigint").alias("n_convs"),
+        "n_convs",
         F.col("doc_id").cast("bigint").alias("keeper_doc_id"),
         F.col("asst_len").cast("bigint").alias("keeper_assistant_chars"),
     )
@@ -236,19 +244,7 @@ def q_sft_preference_pairs(spark, sf_dir):
     Production shape: top-1-vs-others, LINEAR in group size — never
     the quadratic all-pairs. Scale: ONE prompt-keyed exchange shared
     by the chosen-value and count windows; no self-join."""
-    t = sft.turns(_docs(spark, sf_dir))
-    conv = t.select(
-        "doc_id",
-        F.col("turns").getItem(0)["txt"].alias("prompt"),
-        F.aggregate(
-            F.col("turns"),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + F.when(
-                x["role"] == "assistant", F.length(x["txt"])
-            ).otherwise(F.lit(0)),
-        ).alias("asst_len"),
-    )
+    conv = prompt_candidates(_docs(spark, sf_dir))
     w = (
         Window.partitionBy("prompt")
         .orderBy(F.col("asst_len").desc(), F.col("doc_id"))
@@ -668,58 +664,31 @@ def _novelty_relations_sql() -> str:
     )
 
 
-@query(
-    "sft_novelty_rougel",
-    _novelty_relations_sql()
-    + """
-SELECT c.doc_id, c.n_tok AS n_prompt_tokens,
-       coalesce(a.n_blocked_seeds, 0) AS n_blocked_seeds,
-       CAST(b.seed_id AS BIGINT) AS nearest_seed_id,
-       round(2.0 * b.l / (b.na + b.nb), 6) AS rougel_max,
-       CASE WHEN a.cand_id IS NULL THEN TRUE ELSE a.all_below = 1 END AS novel
-FROM cd c
-LEFT JOIN ag a ON a.cand_id = c.doc_id
-LEFT JOIN best b ON b.cand_id = c.doc_id
-""",
-)
-def q_sft_novelty_rougel(spark, sf_dir):
-    """Self-instruct ROUGE-L novelty gate (X257; VERDICT r11 item 2):
-    every CANDIDATE prompt with its blocked-seed count, nearest seed
-    (ratio DESC, seed_id ASC — small-integer fractions, so the double
-    ordering is exact), max ROUGE-L F1, and the novelty verdict —
-    candidates with no blocked seed are novel by construction and
-    still emitted (X173: the gate is never vacuously green). The LCS
-    is an Arrow-batched integer DP (functions/text.lcs_length —
-    row-vectorized numpy, exact integers, r13); the oracle runs the
-    identical DP as a recursive CTE whose row state rides a LIST. Scale: one prefix-keyed equi-join
-    builds the pairs (bounded per block; production adds the X4-style
-    block cap), the DP is per-pair row work, and the verdict is one
-    candidate-keyed aggregate + window."""
-    from pyspark import StorageLevel
-
-    from gmall_spark.functions import text as TX
-
-    t = sft.turns(_docs(spark, sf_dir))
-    pb = t.select(
+def prompt_token_rows(docs):
+    """(doc_id, toks, n_tok, blk) per conversation with a non-empty
+    prompt: the first user turn's lowercased whitespace tokens, their
+    count, and the 2-token prefix block key."""
+    pb = sft.turns(docs).select(
         "doc_id",
         F.filter(
             F.split(F.lower(F.col("turns").getItem(0)["txt"]), r"\s+"),
             lambda x: x != "",
         ).alias("toks"),
     ).filter(F.size("toks") > 0)
-    # persisted (r13): pb2 feeds THREE subtrees (the candidate side,
-    # the seed side, and the final candidate re-join), and each one
-    # re-ran the conversation parse + tokenization without it
-    pb2 = (
-        pb.select(
-            "doc_id",
-            "toks",
-            F.size("toks").cast("bigint").alias("n_tok"),
-            F.array_join(F.slice("toks", 1, 2), " ").alias("blk"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    return pb.select(
+        "doc_id",
+        "toks",
+        F.size("toks").cast("bigint").alias("n_tok"),
+        F.array_join(F.slice("toks", 1, 2), " ").alias("blk"),
     )
-    cd = pb2.filter(F.col("doc_id") % 10 != 0)
-    sd = pb2.filter(F.col("doc_id") % 10 == 0).select(
+
+
+def novelty_verdicts(cd, seeds):
+    """The X257 gate of candidate against seed :func:`prompt_token_rows`:
+    per candidate (doc_id, n_prompt_tokens, n_blocked_seeds,
+    nearest_seed_id, rougel_max, novel) — max-over-seeds, associative
+    over any split of the seed pool."""
+    sd = seeds.select(
         F.col("doc_id").alias("seed_id"),
         F.col("toks").alias("tb"),
         F.col("n_tok").alias("nb"),
@@ -773,6 +742,48 @@ def q_sft_novelty_rougel(spark, sf_dir):
         F.when(F.col("cand_id").isNull(), F.lit(True))
         .otherwise(F.col("all_below") == 1)
         .alias("novel"),
+    )
+
+
+@query(
+    "sft_novelty_rougel",
+    _novelty_relations_sql()
+    + """
+SELECT c.doc_id, c.n_tok AS n_prompt_tokens,
+       coalesce(a.n_blocked_seeds, 0) AS n_blocked_seeds,
+       CAST(b.seed_id AS BIGINT) AS nearest_seed_id,
+       round(2.0 * b.l / (b.na + b.nb), 6) AS rougel_max,
+       CASE WHEN a.cand_id IS NULL THEN TRUE ELSE a.all_below = 1 END AS novel
+FROM cd c
+LEFT JOIN ag a ON a.cand_id = c.doc_id
+LEFT JOIN best b ON b.cand_id = c.doc_id
+""",
+)
+def q_sft_novelty_rougel(spark, sf_dir):
+    """Self-instruct ROUGE-L novelty gate (X257; VERDICT r11 item 2):
+    every CANDIDATE prompt with its blocked-seed count, nearest seed
+    (ratio DESC, seed_id ASC — small-integer fractions, so the double
+    ordering is exact), max ROUGE-L F1, and the novelty verdict —
+    candidates with no blocked seed are novel by construction and
+    still emitted (X173: the gate is never vacuously green). The LCS
+    is an Arrow-batched integer DP (functions/text.lcs_length —
+    row-vectorized numpy, exact integers, r13); the oracle runs the
+    identical DP as a recursive CTE whose row state rides a LIST. Scale: one prefix-keyed equi-join
+    builds the pairs (bounded per block; production adds the X4-style
+    block cap), the DP is per-pair row work, and the verdict is one
+    candidate-keyed aggregate + window."""
+    from pyspark import StorageLevel
+
+    # persisted (r13): the prompt rows feed THREE subtrees (the
+    # candidate side, the seed side, and the final candidate re-join),
+    # and each one re-ran the conversation parse + tokenization
+    # without it
+    pb2 = prompt_token_rows(_docs(spark, sf_dir)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return novelty_verdicts(
+        pb2.filter(F.col("doc_id") % 10 != 0),
+        pb2.filter(F.col("doc_id") % 10 == 0),
     )
 
 

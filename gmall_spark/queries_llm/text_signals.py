@@ -477,18 +477,13 @@ FROM documents"""
     return " UNION ALL ".join(rows)
 
 
-@query("text_unicode_rollup", _un_rollup_oracle())
-def q_text_unicode_rollup(spark, sf_dir):
-    """Normalization census (X258b, the X230 mojibake-rollup shape):
-    per rule CLASS, how many documents carry at least one artifact and
-    the total artifact-char count — measured from the corrupted corpus
-    with one stacked pass (regexp_count per class, 8-row grid), while
-    the oracle states the closed form from the planted constants. The
-    'separator' class is never planted, so its zero row is genuine
-    (X173: the census is never blind to a silent class)."""
-    synth = UN.synth_unicode(_docs(spark, sf_dir))
+def rule_class_counts(docs):
+    """(rule_class, n_docs, n_hits) over ``docs.text``: one
+    regexp_count per normalization rule class, stacked into ONE pass
+    (8-row grid) — the census the batch query and its streaming twin
+    both run."""
     t = F.col("text")
-    stacked = synth.select(
+    stacked = docs.select(
         F.explode(
             F.array(
                 *[
@@ -509,6 +504,18 @@ def q_text_unicode_rollup(spark, sf_dir):
         .alias("n_docs"),
         F.sum("hits").cast("bigint").alias("n_hits"),
     )
+
+
+@query("text_unicode_rollup", _un_rollup_oracle())
+def q_text_unicode_rollup(spark, sf_dir):
+    """Normalization census (X258b, the X230 mojibake-rollup shape):
+    per rule CLASS, how many documents carry at least one artifact and
+    the total artifact-char count — measured from the corrupted corpus
+    with one stacked pass (regexp_count per class, 8-row grid), while
+    the oracle states the closed form from the planted constants. The
+    'separator' class is never planted, so its zero row is genuine
+    (X173: the census is never blind to a silent class)."""
+    return rule_class_counts(UN.synth_unicode(_docs(spark, sf_dir)))
 
 
 @query(

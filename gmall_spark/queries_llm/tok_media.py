@@ -141,6 +141,31 @@ def q_llm_tokenizer_fertility_triple(spark, sf_dir):
 EDIT_SIM_MAX_PCT = 20
 
 
+def edit_verify_rows(cand, texts):
+    """(doc_a, doc_b) candidates x (doc_id, text) rows -> every
+    candidate with its Levenshtein distance, max length, edit
+    similarity and integer near-dup verdict (doc_a, doc_b, lev,
+    max_len, edit_sim, is_near_dup)."""
+    return (
+        F.broadcast(cand)
+        .join(texts.withColumnRenamed("doc_id", "doc_a")
+                   .withColumnRenamed("text", "text_a"), "doc_a")
+        .join(texts.withColumnRenamed("doc_id", "doc_b")
+                   .withColumnRenamed("text", "text_b"), "doc_b")
+        .selectExpr(
+            "doc_a", "doc_b",
+            "cast(levenshtein(text_a, text_b) as bigint) AS lev",
+            "cast(greatest(length(text_a), length(text_b)) as bigint)"
+            " AS max_len",
+            "round(1.0D - cast(levenshtein(text_a, text_b) as double)"
+            " / greatest(length(text_a), length(text_b)), 6) AS edit_sim",
+            f"100 * levenshtein(text_a, text_b)"
+            f" <= {EDIT_SIM_MAX_PCT} * greatest(length(text_a),"
+            f" length(text_b)) AS is_near_dup",
+        )
+    )
+
+
 @query(
     "dedup_edit_distance_verify",
     SQL_MINHASH
@@ -186,25 +211,7 @@ def q_dedup_edit_distance_verify(spark, sf_dir):
     )
     sigs = llm_dedup.minhash_signatures(sh)
     cand = llm_dedup.lsh_candidate_pairs(sigs)
-    txt = docs.select("doc_id", "text")
-    return (
-        F.broadcast(cand)
-        .join(txt.withColumnRenamed("doc_id", "doc_a")
-                 .withColumnRenamed("text", "text_a"), "doc_a")
-        .join(txt.withColumnRenamed("doc_id", "doc_b")
-                 .withColumnRenamed("text", "text_b"), "doc_b")
-        .selectExpr(
-            "doc_a", "doc_b",
-            "cast(levenshtein(text_a, text_b) as bigint) AS lev",
-            "cast(greatest(length(text_a), length(text_b)) as bigint)"
-            " AS max_len",
-            "round(1.0D - cast(levenshtein(text_a, text_b) as double)"
-            " / greatest(length(text_a), length(text_b)), 6) AS edit_sim",
-            f"100 * levenshtein(text_a, text_b)"
-            f" <= {EDIT_SIM_MAX_PCT} * greatest(length(text_a),"
-            f" length(text_b)) AS is_near_dup",
-        )
-    )
+    return edit_verify_rows(cand, docs.select("doc_id", "text"))
 
 
 # FIM gating/split constants: 50% of docs transformed, mode split
@@ -439,6 +446,30 @@ def q_multimodal_shot_boundaries(spark, sf_dir):
 CANARY_PHRASES = ("data stream", "hash join", "zq9 canary zq9")
 
 
+def phrase_counts(docs, phrases, key: str):
+    """(key, docs_hit, total_hits) per phrase over ``docs.text``: the
+    docs holding it and its non-overlapping occurrences, counted with
+    the length-diff idiom (replace-diff over phrase length — no regex,
+    no explode) in ONE stack() pass, never per-phrase unions. Every
+    phrase reports, zero rows included. The canary scan, the mojibake
+    census and their streaming twins all count through this."""
+    stack_args = ", ".join(
+        f"'{p}', (length(text) - length(replace(text, '{p}', '')))"
+        f" div length('{p}')"
+        for p in phrases
+    )
+    return (
+        docs.selectExpr(f"stack({len(phrases)}, {stack_args}) AS ({key}, n)")
+        .groupBy(key)
+        .agg(
+            F.sum(F.when(F.col("n") > 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("docs_hit"),
+            F.sum("n").cast("bigint").alias("total_hits"),
+        )
+    )
+
+
 def _canary_oracle() -> str:
     vals = ", ".join(f"('{c}')" for c in CANARY_PHRASES)
     return f"""
@@ -469,24 +500,7 @@ def q_llm_canary_scan(spark, sf_dir):
     (X173: an empty alarm table would be vacuously green). Scale:
     |canaries| × corpus per-row expressions, one grid-bounded
     aggregate, zero extra shuffle."""
-    stack_args = ", ".join(
-        f"'{c}', (length(text) - length(replace(text, '{c}', '')))"
-        f" div length('{c}')"
-        for c in CANARY_PHRASES
-    )
-    return (
-        _docs(spark, sf_dir)
-        .selectExpr(
-            f"stack({len(CANARY_PHRASES)}, {stack_args}) AS (canary, n)"
-        )
-        .groupBy("canary")
-        .agg(
-            F.sum(F.when(F.col("n") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("docs_hit"),
-            F.sum("n").cast("bigint").alias("total_hits"),
-        )
-    )
+    return phrase_counts(_docs(spark, sf_dir), CANARY_PHRASES, "canary")
 
 
 # --- shot segments rollup (X214) -------------------------------------------

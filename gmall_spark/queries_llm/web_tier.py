@@ -230,6 +230,7 @@ def q_web_url_recrawl_drift(spark, sf_dir):
 # --- mojibake repair tier (X229-X230) ----------------------------------------
 
 from gmall_spark.operators import mojibake  # noqa: E402
+from gmall_spark.queries_llm.tok_media import phrase_counts  # noqa: E402
 
 
 @query(
@@ -303,24 +304,10 @@ def q_text_mojibake_rollup(spark, sf_dir):
     downstream. ONE corpus pass via stack() (the X213 canary
     discipline — never per-pattern unions), counts measured with the
     length-diff idiom. Every pattern reports even at zero hits."""
-    t = "text"
-    stack_args = ", ".join(
-        f"'{bad}', (length({t}) - length(replace({t}, '{bad}', '')))"
-        f" div length('{bad}')"
-        for bad, _ in mojibake.PATTERNS
-    )
-    return (
-        mojibake.synth_mojibake(_docs(spark, sf_dir))
-        .selectExpr(
-            f"stack({len(mojibake.PATTERNS)}, {stack_args}) AS (pattern, n)"
-        )
-        .groupBy("pattern")
-        .agg(
-            F.sum(F.when(F.col("n") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("docs_hit"),
-            F.sum("n").cast("bigint").alias("total_hits"),
-        )
+    return phrase_counts(
+        mojibake.synth_mojibake(_docs(spark, sf_dir)),
+        [bad for bad, _ in mojibake.PATTERNS],
+        "pattern",
     )
 
 
@@ -430,6 +417,19 @@ FROM r5 r LEFT JOIN dom d ON d.u = r.node_id
     )
 
 
+def link_edges(pages):
+    """(src, dst): the X237 synthetic link closed form over a (u) page
+    set — two out-links per page, self-loop- and multi-edge-free."""
+    return pages.select(
+        F.col("u").alias("src"), ((F.col("u") * 7 + 3) % 40).alias("dst")
+    ).unionAll(
+        pages.select(
+            F.col("u").alias("src"),
+            ((F.col("u") * 11 + 5) % 40).alias("dst"),
+        )
+    )
+
+
 @query("web_host_pagerank", _host_graph_oracle())
 def q_web_host_pagerank(spark, sf_dir):
     """Link-graph page centrality (X237) — the crawl-frontier quality
@@ -451,15 +451,7 @@ def q_web_host_pagerank(spark, sf_dir):
         .select((F.col("doc_id") % 40).alias("u"))
         .distinct()
     )
-    edges = pages.select(
-        F.col("u").alias("src"), ((F.col("u") * 7 + 3) % 40).alias("dst")
-    ).unionAll(
-        pages.select(
-            F.col("u").alias("src"),
-            ((F.col("u") * 11 + 5) % 40).alias("dst"),
-        )
-    )
-    ranks = graph.pagerank(edges)
+    ranks = graph.pagerank(link_edges(pages))
     dom = (
         weburl.canonicalize(weburl.synth_url(_docs(spark, sf_dir)))
         .select(
@@ -503,6 +495,24 @@ def _gate_sql() -> str:
     )
 
 
+def optout_gate(docs, passthrough: tuple[str, ...] = ()):
+    """Per document of (doc_id, text, ...) rows: (doc_id,
+    registered_domain, *passthrough, on_blocklist, opted_out, kept) —
+    the synth URL's registered domain checked against the frozen
+    lists."""
+    can = weburl.canonicalize(weburl.synth_url(docs), passthrough=passthrough)
+    on_bl = F.col("registered_domain").isin(*DOMAIN_BLOCKLIST)
+    on_oo = F.col("registered_domain").isin(*DOMAIN_OPTOUT)
+    return can.select(
+        "doc_id",
+        "registered_domain",
+        *passthrough,
+        F.when(on_bl, 1).otherwise(0).cast("bigint").alias("on_blocklist"),
+        F.when(on_oo, 1).otherwise(0).cast("bigint").alias("opted_out"),
+        F.when(~on_bl & ~on_oo, 1).otherwise(0).cast("bigint").alias("kept"),
+    )
+
+
 @query(
     "web_domain_optout_gate",
     _gate_sql()
@@ -526,16 +536,7 @@ def q_web_domain_optout_gate(spark, sf_dir):
     as literals (IN-list → per-row predicate, zero join, zero
     shuffle); a production-size PSL blocklist becomes a broadcast
     anti-join on the same key with the identical semantics."""
-    can = weburl.canonicalize(weburl.synth_url(_docs(spark, sf_dir)))
-    on_bl = F.col("registered_domain").isin(*DOMAIN_BLOCKLIST)
-    on_oo = F.col("registered_domain").isin(*DOMAIN_OPTOUT)
-    return can.select(
-        "doc_id",
-        "registered_domain",
-        F.when(on_bl, 1).otherwise(0).cast("bigint").alias("on_blocklist"),
-        F.when(on_oo, 1).otherwise(0).cast("bigint").alias("opted_out"),
-        F.when(~on_bl & ~on_oo, 1).otherwise(0).cast("bigint").alias("kept"),
-    )
+    return optout_gate(_docs(spark, sf_dir))
 
 
 @query(

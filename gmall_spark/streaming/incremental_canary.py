@@ -20,41 +20,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.queries_llm.tok_media import CANARY_PHRASES, phrase_counts
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
-
-
-def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The X213 projection over one batch — the IDENTICAL stack
-    expression the batch query runs (one pass, all canaries)."""
-    from gmall_spark.queries_llm.tok_media import CANARY_PHRASES
-
-    stack_args = ", ".join(
-        f"'{c}', (length({text_col}) - length(replace({text_col}, '{c}', '')))"
-        f" div length('{c}')"
-        for c in CANARY_PHRASES
-    )
-    return (
-        batch_docs.selectExpr(
-            f"stack({len(CANARY_PHRASES)}, {stack_args}) AS (canary, n)"
-        )
-        .groupBy("canary")
-        .agg(
-            F.sum(F.when(F.col("n") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("docs_hit"),
-            F.sum("n").cast("bigint").alias("total_hits"),
-        )
-    )
 
 
 def process_batch(
     spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Scan one micro-batch and write its per-canary counts to its
+    """Scan one micro-batch with tok_media.phrase_counts, the batch
+    query's own counting, and write its per-canary counts to its
     epoch; returns the batch's counts (the alarm view: a canary with
     total_hits > 0 in THIS batch just leaked)."""
-    counts = batch_counts(batch_docs)
+    counts = phrase_counts(batch_docs, CANARY_PHRASES, "canary")
     idempotent_parquet_write(f"{store_dir}/canary_counts")(counts, batch_id)
     return counts
 

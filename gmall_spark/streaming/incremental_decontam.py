@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from gmall_spark.operators import ivf
 from gmall_spark.operators.similarity import _verify_pairs
+from gmall_spark.queries_llm.extraction_tiers import best_reference
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -35,36 +36,6 @@ def reference_index(
     )
 
 
-def batch_flags(
-    batch_emb: DataFrame,
-    ref_emb: DataFrame,
-    ref_index: DataFrame,
-    centroids: list[list[float]],
-    threshold: float,
-) -> DataFrame:
-    """The X220 projection over one batch: assign, meet the reference
-    in-list, verify — identical expressions to the batch query."""
-    cand = (
-        ivf.build_index(batch_emb, centroids)
-        .select(F.col("vec_id").alias("id_a"), "list_id")
-        .join(F.broadcast(ref_index), "list_id")
-        .select("id_a", "id_b")
-    )
-    both = batch_emb.unionByName(ref_emb)
-    hits = _verify_pairs(cand, both, threshold, "vec_id", "embedding")
-    best = F.max(F.struct(F.col("cos_sim"), (-F.col("id_b")).alias("nr")))
-    return (
-        hits.groupBy(F.col("id_a").alias("doc_id"))
-        .agg(best.alias("b"), F.count(F.lit(1)).cast("bigint").alias("n_ref_hits"))
-        .select(
-            "doc_id",
-            (-F.col("b.nr")).cast("bigint").alias("ref_id"),
-            F.col("b.cos_sim").alias("cos_sim"),
-            "n_ref_hits",
-        )
-    )
-
-
 def process_batch(
     spark: SparkSession,
     batch_emb: DataFrame,
@@ -75,10 +46,22 @@ def process_batch(
     store_dir: str,
     batch_id: int,
 ) -> DataFrame:
-    """Flag one micro-batch against the frozen reference and write the
-    flags to its epoch; returns the batch's flags (the arrival-time
-    alarm)."""
-    flags = batch_flags(batch_emb, ref_emb, ref_index, centroids, threshold)
+    """Flag one micro-batch against the frozen reference (assign, meet
+    the reference in-list, verify, keep each doc's
+    extraction_tiers.best_reference — the batch query's own
+    aggregation) and write the flags to its epoch; returns the
+    batch's flags (the arrival-time alarm)."""
+    cand = (
+        ivf.build_index(batch_emb, centroids)
+        .select(F.col("vec_id").alias("id_a"), "list_id")
+        .join(F.broadcast(ref_index), "list_id")
+        .select("id_a", "id_b")
+    )
+    flags = best_reference(
+        _verify_pairs(
+            cand, batch_emb.unionByName(ref_emb), threshold, "vec_id", "embedding"
+        )
+    )
     idempotent_parquet_write(f"{store_dir}/decontam_flags")(flags, batch_id)
     return flags
 

@@ -28,9 +28,9 @@ from gmall_spark.streaming.store import read_epochs
 
 
 def batch_state(batch_docs: DataFrame) -> DataFrame:
-    """The per-batch fine-grain increment: the IDENTICAL synth +
-    canonicalize chain the batch query runs, aggregated to the state
-    grain."""
+    """The per-batch fine-grain increment: weburl.synth_url +
+    canonicalize, the operators the batch query runs, aggregated to
+    the state grain."""
     can = weburl.canonicalize(
         weburl.synth_url(batch_docs), passthrough=("n_chars", "lang")
     )

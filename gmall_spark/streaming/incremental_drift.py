@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.queries_llm.distribution_stats import (
+    drift_cells,
+    drift_terms,
+    drift_windows,
+)
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -30,59 +35,31 @@ def process_batch(
     batch: DataFrame,
     store_root: str,
     batch_id: int,
-    value_col: str = "value",
-    ts_col: str = "ts",
 ) -> None:
-    """Reduce one micro-batch to its (day, bucket) partial grid and
-    write it to the batch's own epoch (idempotent overwrite)."""
-    from gmall_spark.queries_llm.distribution_stats import DRIFT_W
-
+    """Reduce one micro-batch to its (day, bucket) partial grid over
+    distribution_stats.drift_cells, the batch query's own bucketing,
+    and write it to the batch's own epoch (idempotent overwrite)."""
     idempotent_parquet_write(f"{store_root}/grid")(
-        batch.select(
-            F.to_date(ts_col).alias("d"),
-            F.floor(F.col(value_col) / DRIFT_W).cast("bigint").alias("bucket"),
-        )
+        drift_cells(batch)
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
         batch_id,
     )
 
 
-def stored_grid(spark: SparkSession, store_root: str) -> DataFrame:
-    return (
+def current_drift(spark: SparkSession, store_root: str) -> DataFrame:
+    """The X183 report over ALL events seen so far — identical to the
+    batch operator on the union. The merged grid runs through the
+    batch query's own drift_windows and drift_terms: the split
+    midpoint re-derives from the merged grid's own span, so late days
+    retroactively re-split the windows."""
+    g = (
         read_epochs(spark, f"{store_root}/grid", _GRID_SCHEMA)
         .groupBy("d", "bucket")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
-
-
-def current_drift(spark: SparkSession, store_root: str) -> DataFrame:
-    """The X183 report over ALL events seen so far — identical to the
-    batch operator on the union (the split midpoint re-derives from
-    the merged grid's own span, so late days retroactively re-split
-    the windows)."""
-    g = stored_grid(spark, store_root)
-    span = g.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
-    tagged = g.crossJoin(F.broadcast(span)).select(
-        "bucket",
-        "cnt",
-        F.when(
-            F.datediff("d", "lo") * 2 <= F.datediff("hi", "lo"), 1
-        ).otherwise(0).alias("is_ref"),
-    )
-    agg = tagged.groupBy("bucket").agg(
+    agg = drift_windows(g, "bucket", "cnt").groupBy("bucket").agg(
         F.sum(F.col("cnt") * F.col("is_ref")).alias("ref_cnt"),
         F.sum(F.col("cnt") * (1 - F.col("is_ref"))).alias("cur_cnt"),
     )
-    tot = agg.agg(
-        F.sum("ref_cnt").alias("ref_t"), F.sum("cur_cnt").alias("cur_t")
-    )
-    exp = (F.col("ref_cnt") + 1.0) * F.col("cur_t") / (F.col("ref_t") + 1.0)
-    return agg.crossJoin(F.broadcast(tot)).select(
-        F.col("bucket").cast("bigint").alias("bucket"),
-        F.col("ref_cnt").cast("bigint").alias("ref_cnt"),
-        F.col("cur_cnt").cast("bigint").alias("cur_cnt"),
-        F.round(
-            (F.col("cur_cnt") - exp) * (F.col("cur_cnt") - exp) / exp, 6
-        ).alias("chi_term"),
-    )
+    return drift_terms(agg)

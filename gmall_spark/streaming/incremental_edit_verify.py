@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import llm_dedup
+from gmall_spark.queries_llm.tok_media import edit_verify_rows
 from gmall_spark.streaming.incremental_dedup import _BANDS_SCHEMA, probe_candidates
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
@@ -47,45 +48,11 @@ _TEXTS_SCHEMA = T.StructType(
 )
 
 
-def edit_verify_rows(cand: DataFrame, texts: DataFrame, max_pct: int) -> DataFrame:
-    """The X207 verify projection: candidates x texts -> flagged rows
-    (the EXACT selectExpr of the batch query, so twin and batch can
-    never drift on the verdict)."""
-    return (
-        F.broadcast(cand)
-        .join(
-            texts.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-                "text", "text_a"
-            ),
-            "doc_a",
-        )
-        .join(
-            texts.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "text", "text_b"
-            ),
-            "doc_b",
-        )
-        .selectExpr(
-            "doc_a",
-            "doc_b",
-            "cast(levenshtein(text_a, text_b) as bigint) AS lev",
-            "cast(greatest(length(text_a), length(text_b)) as bigint)"
-            " AS max_len",
-            "round(1.0D - cast(levenshtein(text_a, text_b) as double)"
-            " / greatest(length(text_a), length(text_b)), 6) AS edit_sim",
-            f"100 * levenshtein(text_a, text_b)"
-            f" <= {max_pct} * greatest(length(text_a), length(text_b))"
-            f" AS is_near_dup",
-        )
-    )
-
-
 def process_batch(
     spark: SparkSession,
     batch_docs: DataFrame,
     store_dir: str,
     batch_id: int,
-    max_pct: int | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = llm_dedup.NGRAM_N,
@@ -96,11 +63,8 @@ def process_batch(
     ``batch_id``); store the new rows and the batch's bands/texts
     under ``batch_id``; return the new rows (same schema as
     the X207 batch query: doc_a, doc_b, lev, max_len, edit_sim,
-    is_near_dup)."""
-    if max_pct is None:
-        from gmall_spark.queries_llm.tok_media import EDIT_SIM_MAX_PCT
-
-        max_pct = EDIT_SIM_MAX_PCT
+    is_near_dup), verified by tok_media.edit_verify_rows, the batch
+    query's own verify."""
     txt = batch_docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("text"),
@@ -119,7 +83,7 @@ def process_batch(
         .unionByName(probe_candidates(new_bands, old_bands))
         .distinct()
     )
-    rows = edit_verify_rows(cand, old_texts.unionByName(txt), max_pct)
+    rows = edit_verify_rows(cand, old_texts.unionByName(txt))
 
     for sub, df in (("pairs", rows), ("bands", new_bands), ("texts", txt)):
         idempotent_parquet_write(f"{store_dir}/{sub}")(df, batch_id)

@@ -20,6 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.queries_llm.packing_release import (
+    dim_envelope,
+    health_report,
+    vector_flags,
+)
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -37,89 +42,42 @@ def process_batch(
 ) -> None:
     """Audit one micro-batch of (vec_id, embedding) rows: per-dim
     envelope partials and per-WIDTH corpus counters, each to the
-    batch's own epoch (idempotent overwrite)."""
-    e = batch_emb.select(
-        F.size("embedding").alias("width"),
-        F.aggregate(
-            F.transform(
-                "embedding",
-                lambda x: F.when(F.isnan(x.cast("double")), 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda a, x: a + x,
-        ).alias("nan_ct"),
-        F.aggregate(
-            F.transform(
-                "embedding",
-                lambda x: F.when(x.cast("double") == 0.0, 0).otherwise(1),
-            ),
-            F.lit(0),
-            lambda a, x: a + x,
-        ).alias("nonzero_ct"),
-    )
-    corpus = e.groupBy("width").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vectors"),
-        F.sum(F.when(F.col("nan_ct") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("nan_vectors"),
-        F.sum(F.when(F.col("nonzero_ct") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("zero_vectors"),
-    )
-    dims = (
-        batch_emb.select(
-            F.posexplode(
-                F.transform("embedding", lambda x: x.cast("double"))
-            ).alias("dim0", "x")
-        )
-        .select((F.col("dim0") + 1).cast("long").alias("dim"), "x")
-        .groupBy("dim")
+    batch's own epoch (idempotent overwrite). The per-vector fold and
+    the envelope are packing_release.vector_flags and dim_envelope,
+    the batch audit's own."""
+    corpus = (
+        vector_flags(batch_emb)
+        .groupBy("width")
         .agg(
-            F.min("x").alias("dim_min"),
-            F.max("x").alias("dim_max"),
-            F.sum(F.when(F.col("x") == 0.0, 1).otherwise(0))
+            F.count(F.lit(1)).cast("long").alias("n_vectors"),
+            F.sum(F.when(F.col("nan_ct") > 0, 1).otherwise(0))
             .cast("long")
-            .alias("zeros"),
+            .alias("nan_vectors"),
+            F.sum(F.when(F.col("nonzero_ct") == 0, 1).otherwise(0))
+            .cast("long")
+            .alias("zero_vectors"),
         )
     )
-    idempotent_parquet_write(f"{store_root}/dims")(dims, batch_id)
+    idempotent_parquet_write(f"{store_root}/dims")(dim_envelope(batch_emb), batch_id)
     idempotent_parquet_write(f"{store_root}/corpus")(corpus, batch_id)
-
-
-def stored_dims(spark: SparkSession, store_root: str) -> DataFrame:
-    return read_epochs(spark, f"{store_root}/dims", _DIM_SCHEMA)
-
-
-def stored_corpus(spark: SparkSession, store_root: str) -> DataFrame:
-    return read_epochs(spark, f"{store_root}/corpus", _CORPUS_SCHEMA)
 
 
 def current_health(spark: SparkSession, store_root: str) -> DataFrame:
     """The X186 report over every vector seen so far — bit-identical
     to the batch audit on the union (min/max/int-count merges only)."""
     per_dim = (
-        stored_dims(spark, store_root)
+        read_epochs(spark, f"{store_root}/dims", _DIM_SCHEMA)
         .groupBy("dim")
         .agg(
             F.min("dim_min").alias("dim_min"),
             F.max("dim_max").alias("dim_max"),
             F.sum("zeros").cast("bigint").alias("zeros"),
         )
-        .select(F.col("dim").cast("bigint").alias("dim"), "dim_min", "dim_max", "zeros")
     )
-    corpus = stored_corpus(spark, store_root).agg(
+    corpus = read_epochs(spark, f"{store_root}/corpus", _CORPUS_SCHEMA).agg(
         F.sum("n_vectors").cast("bigint").alias("n_vectors"),
         F.countDistinct("width").cast("bigint").alias("n_widths"),
         F.sum("nan_vectors").cast("bigint").alias("nan_vectors"),
         F.sum("zero_vectors").cast("bigint").alias("zero_vectors"),
     )
-    return per_dim.crossJoin(F.broadcast(corpus)).select(
-        "dim",
-        "dim_min",
-        "dim_max",
-        "zeros",
-        "n_vectors",
-        "n_widths",
-        "nan_vectors",
-        "zero_vectors",
-    )
+    return health_report(per_dim, corpus)

@@ -4,8 +4,8 @@ order-sensitive and NOT mergeable, but the (type, day) COUNT rollup
 underneath it is plain addition — so state is the sum-merged day
 grid (per-epoch deltas, idempotent overwrite: a replayed batch
 overwrites its own epoch with identical counts), and the forecast RE-DERIVES
-by folding the merged series through the exact batch operator's
-arithmetic. Consequences the tests pin:
+by folding the merged series through the batch query's own function
+(behavior_analytics.ewma_forecast). Consequences the tests pin:
 
 - streaming == batch EXACTLY after any split (same merged day grid
   ⇒ same fold, bit for bit);
@@ -24,6 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.queries_llm.behavior_analytics import (
+    ewma_day_counts,
+    ewma_forecast,
+)
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -36,13 +40,11 @@ def process_batch(
     store_root: str,
     batch_id: int,
 ) -> None:
-    """Append one micro-batch's (type, day) count delta to the
-    batch's own epoch (idempotent overwrite, replay-safe)."""
+    """Write one micro-batch's (type, day) count delta —
+    behavior_analytics.ewma_day_counts, the batch query's own rollup —
+    to the batch's own epoch (idempotent overwrite, replay-safe)."""
     idempotent_parquet_write(f"{store_root}/days")(
-        batch.groupBy(
-            "event_type", F.to_date(F.col("ts").cast("timestamp")).alias("d")
-        ).agg(F.count(F.lit(1)).cast("long").alias("cnt")),
-        batch_id,
+        ewma_day_counts(batch), batch_id
     )
 
 
@@ -56,24 +58,6 @@ def merged_days(spark: SparkSession, store_root: str) -> DataFrame:
 
 def current_forecast(spark: SparkSession, store_root: str) -> DataFrame:
     """(event_type, last_day, n_days, last_count, ewma_forecast) over
-    everything ingested so far — the exact batch fold over the merged
-    day grid (operators-side arithmetic shared by construction)."""
-    s = merged_days(spark, store_root).groupBy("event_type").agg(
-        F.expr("array_sort(collect_list(struct(d, cnt)))").alias("ser"),
-        F.max("d").alias("last_day"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    return s.select(
-        "event_type",
-        F.date_format("last_day", "yyyy-MM-dd").alias("last_day"),
-        F.col("n_days").cast("bigint").alias("n_days"),
-        F.element_at(F.col("ser"), -1)["cnt"].cast("bigint").alias("last_count"),
-        F.round(
-            F.expr(
-                "aggregate(slice(ser, 2, size(ser) - 1),"
-                " cast(ser[0].cnt as double),"
-                " (acc, x) -> (acc + x.cnt) * 0.5)"
-            ),
-            6,
-        ).alias("ewma_forecast"),
-    )
+    everything ingested so far: behavior_analytics.ewma_forecast, the
+    batch query's own fold, over the merged day grid."""
+    return ewma_forecast(merged_days(spark, store_root))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_spark.queries_llm.packing_release import corpus_fingerprint
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -28,20 +29,10 @@ def process_batch(
     batch_id: int,
 ) -> None:
     """Reduce one micro-batch of (doc_id, text) rows to its partial
-    fingerprint row (idempotent overwrite)."""
+    fingerprint row with packing_release.corpus_fingerprint, the
+    batch query's own reduction (idempotent overwrite)."""
     idempotent_parquet_write(f"{store_root}/fp")(
-        batch_docs.selectExpr(
-            "cast(conv(substring(md5(concat(cast(doc_id as string), ':', text)), 1, 15), 16, 10) as decimal(38,0)) AS ch",
-            "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as decimal(38,0)) AS ih",
-            "length(text) AS len",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("len").cast("long").alias("n_chars"),
-            F.sum("ch").cast("decimal(38,0)").alias("content_sum"),
-            F.sum("ih").cast("decimal(38,0)").alias("id_sum"),
-        ),
-        batch_id,
+        corpus_fingerprint(batch_docs), batch_id
     )
 
 

@@ -8,8 +8,9 @@ releasable mirror" case IS the exact-duplicate case). Two state
 relations, each an epoch store that merges by union:
 
   - candidates: (text_hash, doc_id, registered_domain, n_words) per
-    ingested document, derived with the IDENTICAL canonical-hash +
-    synth-url + canonicalize chain the batch queries run;
+    ingested document, derived with functions/text.canonical_hash and
+    weburl.synth_url + canonicalize, the functions the batch queries
+    run;
   - the opt-out REGISTER: registered domains added over time — the
     retroactivity axis. The frozen X241 lists are plan literals; the
     register is the part of governance that genuinely arrives late
@@ -56,8 +57,8 @@ _REG_SCHEMA = T.StructType(
 
 
 def batch_candidates(batch_docs: DataFrame) -> DataFrame:
-    """One batch's candidate rows — the identical canonical-hash +
-    URL-provenance derivation the batch queries run."""
+    """One batch's candidate rows — TX.canonical_hash and the weburl
+    provenance chain, the functions the batch queries run."""
     can = weburl.canonicalize(weburl.synth_url(batch_docs)).select(
         "doc_id", "registered_domain"
     )

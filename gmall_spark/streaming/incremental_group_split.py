@@ -19,10 +19,10 @@ the pair set after any batch split equals the batch pipeline's, the
 proven incremental_dedup theorem), then re-close the transitive
 groups over ALL pairs emitted so far (the pairs table is duplicate-
 density-bounded, never corpus-sized), re-derive every seen doc's
-split with the IDENTICAL md5 expression the batch query uses, diff
-against the previous assignment snapshot, and write the new snapshot
-plus the move log to the batch's epoch (a replay diffs against the
-same earlier snapshot and overwrites both).
+split with packing_release._SPLIT_SQL_SPARK (the batch query's own
+md5 expression), diff against the previous assignment snapshot, and
+write the new snapshot plus the move log to the batch's epoch (a
+replay diffs against the same earlier snapshot and overwrites both).
 
 Batch-equals-streaming: the final snapshot equals the batch X210
 output on the full corpus — same pairs => same components => same

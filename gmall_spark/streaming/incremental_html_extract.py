@@ -27,8 +27,9 @@ from gmall_spark.streaming.store import read_epochs
 
 
 def batch_rollup(batch_docs: DataFrame) -> DataFrame:
-    """The X216 aggregation over one batch — the IDENTICAL extraction
-    expressions the batch query runs."""
+    """The X216 aggregation over one batch of
+    markup.html_extract(markup.synth_html(...)) rows, the extraction
+    the batch query runs."""
     ext = markup.html_extract(markup.synth_html(batch_docs))
     share = F.col("n_text_chars").cast("double") / F.col("n_raw_chars").cast(
         "double"

@@ -24,10 +24,8 @@ with the same centroids.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from gmall_spark.functions.vectors import cosine
 from gmall_spark.operators import ivf
 from gmall_spark.streaming.store import read_epochs
 
@@ -64,34 +62,9 @@ def topk_from_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``ivf.ivf_topk`` semantics against the persisted store: the
-    probed list_ids reach the scan as partition filters, so only
-    nprobe/n_lists of the store's files are read."""
-    index = read_index(spark, store_dir)
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(
-            ivf._nearest_lists_udf(centroids, nprobe)(F.col(vec_col))
-        ).alias("list_id"),
-    )
-    scored = (
-        index.join(F.broadcast(probes), "list_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine("qvec", "embedding"), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
+    """``ivf.probe_topk`` — ``ivf.ivf_topk``'s own probe — against the
+    persisted store: the probed list_ids reach the scan as partition
+    filters, so only nprobe/n_lists of the store's files are read."""
+    return ivf.probe_topk(
+        read_index(spark, store_dir), queries, centroids, k, nprobe, id_col, vec_col
     )

@@ -11,8 +11,9 @@ re-score the entire already-ingested eval set (a new continuation
 char shifts the smoothing scale of every bigram). So the twin keeps
 two stores — SUM-merged training counts and the raw eval docs (the
 X209 raw-store pattern) — and the current view re-derives all scores
-from the merged counts with the IDENTICAL model algebra, giving exact
-equality with the batch query on (train ∪ eval ingested so far).
+from the merged counts through the batch query's own model algebra
+(operators/lm.kn_model_from_counts and kn_score_with_model), giving
+exact equality with the batch query on (train ∪ eval ingested so far).
 
 The per-batch return is the arrival view: the batch's eval docs
 scored under the model AS OF this batch — what an online quality

@@ -15,40 +15,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import mojibake
+from gmall_spark.queries_llm.tok_media import phrase_counts
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
-
-
-def batch_counts(batch_docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The X230 projection over one batch — the IDENTICAL stack
-    expression the batch query runs (one pass, all patterns)."""
-    stack_args = ", ".join(
-        f"'{bad}', (length({text_col}) - length(replace({text_col}, '{bad}', '')))"
-        f" div length('{bad}')"
-        for bad, _ in mojibake.PATTERNS
-    )
-    return (
-        batch_docs.selectExpr(
-            f"stack({len(mojibake.PATTERNS)}, {stack_args}) AS (pattern, n)"
-        )
-        .groupBy("pattern")
-        .agg(
-            F.sum(F.when(F.col("n") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("docs_hit"),
-            F.sum("n").cast("bigint").alias("total_hits"),
-        )
-    )
 
 
 def process_batch(
     spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Scan one micro-batch (already-corrupted text arrives on the
-    wire; the synth step belongs to the test harness) and write its
+    """Scan one micro-batch with tok_media.phrase_counts, the batch
+    query's own counting (already-corrupted text arrives on the wire;
+    the synth step belongs to the test harness), and write its
     per-pattern counts to its epoch; returns the batch's counts (the
     alarm view)."""
-    counts = batch_counts(batch_docs)
+    counts = phrase_counts(
+        batch_docs, [bad for bad, _ in mojibake.PATTERNS], "pattern"
+    )
     idempotent_parquet_write(f"{store_dir}/mojibake_counts")(counts, batch_id)
     return counts
 

@@ -23,75 +23,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_spark.operators import weburl
-from gmall_spark.queries_llm.web_tier import DOMAIN_BLOCKLIST, DOMAIN_OPTOUT
+from gmall_spark.queries_llm.web_tier import (
+    DOMAIN_BLOCKLIST,
+    DOMAIN_OPTOUT,
+    optout_gate,
+)
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
-
-
-def _gated(batch_docs: DataFrame) -> DataFrame:
-    can = weburl.canonicalize(
-        weburl.synth_url(batch_docs), passthrough=("n_chars",)
-    )
-    on_bl = F.col("registered_domain").isin(*DOMAIN_BLOCKLIST)
-    on_oo = F.col("registered_domain").isin(*DOMAIN_OPTOUT)
-    return can.select(
-        "doc_id",
-        "registered_domain",
-        "n_chars",
-        F.when(on_bl, 1).otherwise(0).alias("on_blocklist"),
-        F.when(on_oo, 1).otherwise(0).alias("opted_out"),
-    )
-
-
-def batch_state(batch_docs: DataFrame) -> DataFrame:
-    """The per-batch additive increment at domain grain — the
-    IDENTICAL synth + canonicalize + frozen-list chain the batch
-    query runs."""
-    return _state_from_gated(_gated(batch_docs))
-
-
-def _state_from_gated(g: DataFrame) -> DataFrame:
-    kept = (F.col("on_blocklist") == 0) & (F.col("opted_out") == 0)
-    return g.groupBy("registered_domain").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.when(kept, 1).otherwise(0)).cast("bigint").alias("n_kept"),
-        F.sum(F.when(~kept, 1).otherwise(0)).cast("bigint").alias("n_dropped"),
-        F.sum("on_blocklist").cast("bigint").alias("n_dropped_blocklist"),
-        F.sum(
-            F.when((F.col("on_blocklist") == 0) & (F.col("opted_out") == 1), 1)
-            .otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_dropped_optout"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
 
 
 def process_batch(
     spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Ingest one micro-batch: write its domain counters to its epoch;
-    returns the batch's per-doc verdicts (final at arrival — what a crawl gate
-    acts on immediately)."""
-    # run the synth_url + canonicalize chain ONCE per batch and derive
-    # both the written counters and the returned verdicts from the
-    # materialized result (ADVICE r11: batch_state(batch_docs) used to
-    # re-run the whole gate chain a second time for the state write)
-    g = _gated(batch_docs).localCheckpoint(eager=True)
+    """Ingest one micro-batch: gate it with web_tier.optout_gate, the
+    batch query's own gate, and write its domain counters to its
+    epoch; returns the batch's per-doc verdicts (final at arrival —
+    what a crawl gate acts on immediately). The gate runs once per
+    batch: the counters and the verdicts both read its materialized
+    result."""
+    g = optout_gate(batch_docs, passthrough=("n_chars",)).localCheckpoint(
+        eager=True
+    )
     idempotent_parquet_write(f"{store_dir}/optout_state")(
-        _state_from_gated(g), batch_id
+        g.groupBy("registered_domain").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("kept").cast("bigint").alias("n_kept"),
+            F.sum(1 - F.col("kept")).cast("bigint").alias("n_dropped"),
+            F.sum("on_blocklist").cast("bigint").alias("n_dropped_blocklist"),
+            F.sum(
+                F.when(
+                    (F.col("on_blocklist") == 0) & (F.col("opted_out") == 1), 1
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_dropped_optout"),
+            F.sum("n_chars").cast("bigint").alias("total_chars"),
+        ),
+        batch_id,
     )
-    return g.select(
-        "doc_id",
-        "registered_domain",
-        F.col("on_blocklist").cast("bigint").alias("on_blocklist"),
-        F.col("opted_out").cast("bigint").alias("opted_out"),
-        F.when((F.col("on_blocklist") == 0) & (F.col("opted_out") == 0), 1)
-        .otherwise(0)
-        .cast("bigint")
-        .alias("kept"),
-    )
+    return g.drop("n_chars")
 
 
 def _merged(spark: SparkSession, store_dir: str) -> DataFrame:

@@ -11,10 +11,10 @@ hold. Operationally this is the crawl-frontier update: a newly
 discovered page re-prioritizes pages that were already ranked.
 
 Batch-equals-streaming: pages-seen after any ingest split equals the
-batch DISTINCT, edges are a pure function of pages, and the rank
-computation is the IDENTICAL integer fixed-point operator
-(operators/graph.pagerank — BIGINT div, no float accumulation), so
-the re-derived view is bit-equal to the batch query.
+batch DISTINCT, the edges come from web_tier.link_edges and the ranks
+from operators/graph.pagerank (BIGINT div, no float accumulation) —
+the batch query's own functions — so the re-derived view is bit-equal
+to the batch query.
 
 Scale shape: state grows at page grain (bounded by distinct
 pages); each re-derivation shuffles only (node, rank) pairs; the
@@ -28,22 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_spark.operators import graph
+from gmall_spark.queries_llm.web_tier import link_edges
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
 _PAGES_SCHEMA = T.StructType([T.StructField("u", T.LongType())])
-
-
-def _edges(pages: DataFrame) -> DataFrame:
-    """The X237 synthetic link closed form over a page set."""
-    return pages.select(
-        F.col("u").alias("src"), ((F.col("u") * 7 + 3) % 40).alias("dst")
-    ).unionAll(
-        pages.select(
-            F.col("u").alias("src"),
-            ((F.col("u") * 11 + 5) % 40).alias("dst"),
-        )
-    )
 
 
 def current_ranks(
@@ -55,7 +44,7 @@ def current_ranks(
     pages = read_epochs(
         spark, f"{store_dir}/pages_seen", _PAGES_SCHEMA, before
     ).distinct()
-    return graph.pagerank(_edges(pages))
+    return graph.pagerank(link_edges(pages))
 
 
 def process_batch(

@@ -6,7 +6,7 @@ churn report: the chain depends on corpus-global state twice over —
 the k-means centroids retrain as the corpus grows, and a single new
 embedding can crack any existing document's kNN top-k — so no
 per-row merge law exists and the honest twin re-derives the chain
-table from merged raw stores with the IDENTICAL pure assembly
+table from merged raw stores with the batch query's own pure assembly
 (incontext.chain_pack on ivf.train_centroids + gemm_allpairs_topk,
 the exact calls the batch fixtures make), giving bit-equality with
 the batch query on everything ingested.
@@ -54,8 +54,8 @@ def process_batch(
 
 
 def current_packing(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The chain table over everything ingested — the identical pure
-    assembly the batch fixtures feed, so this equals the batch X244
+    """The chain table over everything ingested — incontext.chain_pack,
+    the assembly the batch fixtures feed, so this equals the batch X244
     on the union (both orderings; filter ordering='semantic' for the
     registered query's slice)."""
     docs = read_epochs(spark, f"{store_dir}/sp_docs")

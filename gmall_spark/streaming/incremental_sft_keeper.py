@@ -8,9 +8,9 @@ arrival with a RICHER response DISPLACES the current keeper, and the
 twin ships that move instead of silently keeping the stale pick
 (the X210 re-derive honesty: state merges, artifacts re-derive).
 
-Per batch: derive the batch's conversations with the IDENTICAL
-turns/fold expressions the batch query uses, reduce to per-prompt
-batch candidates, diff the keeper view before vs after the batch's
+Per batch: derive the batch's (prompt, doc_id, asst_len) candidates
+with sft_classifier.prompt_candidates (the batch query's own
+derivation), diff the keeper view before vs after the batch's
 epoch, and return the displacement log (prompt, old/new keeper + lengths).
 Batch-equals-streaming: the keeper view after any ingest split is
 row-identical to the batch query on the full corpus — argmax with
@@ -24,11 +24,14 @@ diff joins the before/after keeper tables on prompt only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gmall_spark.operators import sft
+from gmall_spark.queries_llm.sft_classifier import (
+    prompt_candidates,
+    prompt_keepers,
+)
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
 
@@ -41,47 +44,15 @@ _CAND_SCHEMA = T.StructType(
 )
 
 
-def batch_candidates(batch_docs: DataFrame) -> DataFrame:
-    """One batch's (prompt, doc_id, asst_len) rows — the identical
-    derivation the batch query runs."""
-    t = sft.turns(batch_docs)
-    return t.select(
-        F.col("turns").getItem(0)["txt"].alias("prompt"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.aggregate(
-            F.col("turns"),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + F.when(
-                x["role"] == "assistant", F.length(x["txt"])
-            ).otherwise(F.lit(0)),
-        ).alias("asst_len"),
-    )
-
-
-def _keepers(cands: DataFrame) -> DataFrame:
-    w = Window.partitionBy("prompt")
-    return (
-        cands.select(
-            "*",
-            F.count(F.lit(1)).over(w).alias("n_convs"),
-            F.row_number()
-            .over(w.orderBy(F.col("asst_len").desc(), F.col("doc_id")))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("prompt", "doc_id", "asst_len", "n_convs")
-    )
-
-
 def current_keepers(
     spark: SparkSession, store_dir: str, before: int | None = None
 ) -> DataFrame:
     """The corpus-so-far keeper view (the batches before ``before``,
-    all by default): argmax over the stored candidates —
-    row-identical (for prompts with n_convs >= 2) to the batch X233
-    on everything ingested."""
-    return _keepers(
+    all by default): sft_classifier.prompt_keepers, the batch query's
+    own election, over the stored candidates — row-identical (for
+    prompts with n_convs >= 2) to the batch X233 on everything
+    ingested."""
+    return prompt_keepers(
         read_epochs(spark, f"{store_dir}/sft_candidates", _CAND_SCHEMA, before)
     )
 
@@ -100,7 +71,7 @@ def process_batch(
         F.col("asst_len").alias("old_asst_len"),
     )
     idempotent_parquet_write(f"{store_dir}/sft_candidates")(
-        batch_candidates(batch_docs), batch_id
+        prompt_candidates(batch_docs), batch_id
     )
     after = current_keepers(spark, store_dir, before=batch_id + 1).select(
         "prompt",

@@ -838,6 +838,70 @@ def test_counter_twin_any_split_and_replay_equals_one_batch(
     assert sum(r[2] for r in want) > 0
 
 
+# --- min/max/SUM-merged twins: any split, any replayed epoch -----------------
+
+
+def _merge_twin(name, data):
+    """(rows, schema, process_batch, current view, the batch query's
+    shared function) of one merged twin, with rows drawn from
+    ``data``."""
+    import datetime
+
+    from gmall_spark.queries_llm import behavior_analytics as ba
+    from gmall_spark.queries_llm import packing_release as pr
+    from gmall_spark.streaming import incremental_embedding_health as ieh
+    from gmall_spark.streaming import incremental_ewma as iew
+    from gmall_spark.streaming import incremental_fingerprint as ifp
+
+    if name == "fingerprint":
+        texts = data.draw(st.lists(st.text("ab é", max_size=8), min_size=1, max_size=12), "texts")
+        return ([(i, t) for i, t in enumerate(texts)], "doc_id long, text string",
+                ifp.process_batch, ifp.current_fingerprint, pr.corpus_fingerprint)
+    if name == "embedding_health":
+        finite = st.floats(-1e6, 1e6, allow_nan=False, allow_infinity=False)
+        vec = st.integers(2, 3).flatmap(lambda w: st.one_of(
+            st.lists(finite, min_size=w, max_size=w), st.just([0.0] * w)))
+        vecs = data.draw(st.lists(vec, min_size=1, max_size=10), "vectors")
+        return ([(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>",
+                ieh.process_batch, ieh.current_health, pr.embedding_health)
+    day0 = datetime.datetime(2024, 1, 1)
+    events = data.draw(st.lists(st.tuples(
+        st.integers(0, 5), st.integers(0, 23), st.sampled_from(["click", "view"])),
+        min_size=1, max_size=20), "events")
+    return ([(i, day0 + datetime.timedelta(days=d, hours=h), t)
+             for i, (d, h, t) in enumerate(events)],
+            "event_id long, ts timestamp, event_type string",
+            iew.process_batch, iew.current_forecast,
+            lambda ev: ba.ewma_forecast(ba.ewma_day_counts(ev)))
+
+
+@pytest.mark.parametrize("twin", ["fingerprint", "embedding_health", "ewma"])
+@given(data=st.data())
+@settings(**_SETTINGS)
+@pytest.mark.slow
+def test_merged_twin_any_split_and_replay_equals_batch_function(
+    spark, tmpdir_factory, twin, data
+):
+    """For ANY input, ANY split into 1-3 batches and a replay of ANY
+    one epoch after all batches ran, the twin's current view equals
+    the batch query's own function over the union, row for row."""
+    rows, schema, process, current, batch_fn = _merge_twin(twin, data)
+    n = data.draw(st.integers(1, 3), "n_batches")
+    cuts = sorted(data.draw(
+        st.lists(st.integers(0, len(rows)), min_size=n - 1, max_size=n - 1), "cuts"))
+    bounds = [0, *cuts, len(rows)]
+    batches = [spark.createDataFrame(rows[lo:hi], schema) for lo, hi in zip(bounds, bounds[1:])]
+    replay = data.draw(st.integers(0, n - 1), "replayed_epoch")
+
+    store = str(tmpdir_factory.mktemp(f"{twin}_merge"))
+    for eid, b in enumerate(batches):
+        process(spark, b, store, eid)
+    process(spark, batches[replay], store, replay)  # foreachBatch replay
+    got = sorted(tuple(r) for r in current(spark, store).collect())
+    want = sorted(tuple(r) for r in batch_fn(spark.createDataFrame(rows, schema)).collect())
+    assert got == want
+
+
 # --- systematic resampling (X158) ----------------------------------------------
 
 weights_strategy = st.lists(st.integers(1, 50), min_size=1, max_size=30)

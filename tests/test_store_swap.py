@@ -1,10 +1,13 @@
 """The streaming state layout (streaming/store.py): the
-``epoch=<batch_id>`` partitions every twin keeps its state in."""
+``epoch=<batch_id>`` partitions every twin keeps its state in, and
+what a twin module may hold at all."""
 
 from __future__ import annotations
 
 import ast
+import io
 import pathlib
+import tokenize
 
 import pytest
 from pyspark.sql import types as T
@@ -115,4 +118,63 @@ def test_streaming_state_uses_the_epoch_layout():
                 f"{path.name}:{c.lineno} os.listdir"
                 for c in _calls(path, "listdir", exempt)
             ]
+    assert not offenders, offenders
+
+
+# the longest run of code lines a twin may share with another module:
+# the longest shared run left (8) is boilerplate, the imports plus a
+# process_batch signature
+COPY_RUN = 9
+
+
+def _code_lines(path: pathlib.Path) -> list[tuple[int, str]]:
+    """(line number, whitespace-normalized code) for every line of
+    ``path`` that is not blank, a comment or a docstring."""
+    src = path.read_text()
+    doc = set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Module | ast.ClassDef | ast.FunctionDef):
+            first = node.body[0] if node.body else None
+            if (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Constant)
+                and isinstance(first.value.value, str)
+            ):
+                doc.update(range(first.lineno, first.end_lineno + 1))
+    cut = {
+        tok.start[0]: tok.start[1]
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+        if tok.type == tokenize.COMMENT
+    }
+    lines = []
+    for no, line in enumerate(src.splitlines(), 1):
+        code = " ".join(line[: cut.get(no, len(line))].split())
+        if code and no not in doc:
+            lines.append((no, code))
+    return lines
+
+
+def test_twins_call_their_batch_functions_instead_of_copying():
+    """Spark-free lint: a twin's increment and view call the batch
+    query's functions; a run of COPY_RUN or more consecutive code
+    lines (comments and docstrings dropped, whitespace normalized) in
+    a streaming/incremental_*.py module that also appears in another
+    module is a copy that only the equality tests keep in step."""
+    lines = {p: _code_lines(p) for p in sorted(STREAMING.parent.rglob("*.py"))}
+    seen: dict[tuple[str, ...], set[pathlib.Path]] = {}
+    for path, code in lines.items():
+        texts = [t for _, t in code]
+        for i in range(len(texts) - COPY_RUN + 1):
+            seen.setdefault(tuple(texts[i : i + COPY_RUN]), set()).add(path)
+    offenders = []
+    for path in sorted(STREAMING.glob("incremental_*.py")):
+        code = lines[path]
+        texts = [t for _, t in code]
+        for i in range(len(texts) - COPY_RUN + 1):
+            others = seen[tuple(texts[i : i + COPY_RUN])] - {path}
+            if others:
+                offenders.append(
+                    f"{path.name}:{code[i][0]} also in "
+                    + ", ".join(sorted(o.name for o in others))
+                )
     assert not offenders, offenders
