@@ -111,6 +111,14 @@ def q_text_html_extract_rollup(spark, sf_dir):
     engines compute identically from exact integers. One scan, one
     grid-bounded aggregate."""
     ext = markup.html_extract(markup.synth_html(_docs(spark, sf_dir)))
+    return html_rollup_view(html_rollup_partial(ext))
+
+
+def html_rollup_partial(ext):
+    """markup.html_extract rows -> one row of X216's additive partials
+    (n_docs, total_raw_chars, total_text_chars, min_share_raw,
+    max_share_raw): sums add and the per-doc text-share envelope
+    merges by min/max, unrounded."""
     share = F.col("n_text_chars").cast("double") / F.col(
         "n_raw_chars"
     ).cast("double")
@@ -118,13 +126,25 @@ def q_text_html_extract_rollup(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_raw_chars").cast("bigint").alias("total_raw_chars"),
         F.sum("n_text_chars").cast("bigint").alias("total_text_chars"),
+        F.min(share).alias("min_share_raw"),
+        F.max(share).alias("max_share_raw"),
+    )
+
+
+def html_rollup_view(partial):
+    """X216's output from its partials: the corpus share divides the
+    integer sums once, the envelope rounds once."""
+    return partial.select(
+        "n_docs",
+        "total_raw_chars",
+        "total_text_chars",
         F.round(
-            F.sum("n_text_chars").cast("double")
-            / F.sum("n_raw_chars").cast("double"),
+            F.col("total_text_chars").cast("double")
+            / F.col("total_raw_chars").cast("double"),
             6,
         ).alias("corpus_text_share"),
-        F.round(F.min(share), 6).alias("min_text_share"),
-        F.round(F.max(share), 6).alias("max_text_share"),
+        F.round("min_share_raw", 6).alias("min_text_share"),
+        F.round("max_share_raw", 6).alias("max_text_share"),
     )
 
 

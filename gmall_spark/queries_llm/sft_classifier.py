@@ -815,22 +815,9 @@ def q_sft_novelty_audit(spark, sf_dir):
     release notes read it). One aggregate over the gate's verdicts +
     two tiny pool counts crossed in."""
     g = q_sft_novelty_rougel(spark, sf_dir)
-    t = sft.turns(_docs(spark, sf_dir))
     seeds = (
-        t.filter(
-            (F.col("doc_id") % 10 == 0)
-            & (
-                F.size(
-                    F.filter(
-                        F.split(
-                            F.lower(F.col("turns").getItem(0)["txt"]), r"\s+"
-                        ),
-                        lambda x: x != "",
-                    )
-                )
-                > 0
-            )
-        )
+        prompt_token_rows(_docs(spark, sf_dir))
+        .filter(F.col("doc_id") % 10 == 0)
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_seeds"))
     )
     agg = g.agg(

@@ -582,6 +582,21 @@ def q_web_domain_optout_audit(spark, sf_dir):
     )
 
 
+def drop_counts():
+    """Aggregates over optout_gate rows: n_dropped_blocklist and
+    n_dropped_optout. A domain on both lists counts as blocklisted, so
+    the two counts partition the drops."""
+    return [
+        F.sum("on_blocklist").cast("bigint").alias("n_dropped_blocklist"),
+        F.sum(
+            F.when((F.col("on_blocklist") == 0) & (F.col("opted_out") == 1), 1)
+            .otherwise(0)
+        )
+        .cast("bigint")
+        .alias("n_dropped_optout"),
+    ]
+
+
 @query(
     "web_optout_release_delta",
     _gate_sql()
@@ -613,13 +628,7 @@ def q_web_optout_release_delta(spark, sf_dir):
     return gate.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs_before"),
         F.sum("kept").cast("bigint").alias("n_docs_after"),
-        F.sum("on_blocklist").cast("bigint").alias("n_dropped_blocklist"),
-        F.sum(
-            F.when((F.col("on_blocklist") == 0) & (F.col("opted_out") == 1), 1)
-            .otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_dropped_optout"),
+        *drop_counts(),
         F.countDistinct(
             F.when(dropped, F.col("registered_domain"))
         )

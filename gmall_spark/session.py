@@ -18,6 +18,18 @@ Design notes for the 100 TB deployment (tested on local[32]):
 - Python workers get the package root on their ``PYTHONPATH``, so a
   program started outside the repo root (with only ``sys.path``
   pointing at it) can run Python/Arrow UDFs.
+- Streaming checkpoints (offsets, commits, state deltas, file-source
+  logs) go through Spark's ``FileSystemBasedCheckpointFileManager``,
+  the manager Spark itself falls back to for filesystems without a
+  FileContext. Spark's default, the FileContext-based manager, gains
+  nothing on the local FS: its no-overwrite rename there is the
+  generic ``AbstractFileSystem.renameInternal``, a
+  ``getFileLinkStatus`` check and then a rename, the same
+  check-then-rename the FileSystem-based manager does. Without
+  Hadoop's native library that link check forks a ``readlink`` for
+  every checkpoint file. On HDFS, ``FileSystem.rename`` refuses an
+  existing destination, so a commit still cannot overwrite one. A
+  caller's own ``extra_conf`` setting of the key wins.
 """
 
 from __future__ import annotations
@@ -38,6 +50,11 @@ DEFAULT_SHUFFLE_PARTITIONS = int(_CPUS)
 _HOST_MIB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
 DEFAULT_DRIVER_MEMORY = f"{min(48 << 10, _HOST_MIB // 2)}m"
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_session(
@@ -73,6 +90,7 @@ def get_session(
         )
         # At 100 TB: ~128 MB split targets keep scan tasks balanced.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config(CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,32 +22,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.operators import markup
+from gmall_spark.queries_llm.extraction_tiers import (
+    html_rollup_partial,
+    html_rollup_view,
+)
 from gmall_spark.streaming.runner import idempotent_parquet_write
 from gmall_spark.streaming.store import read_epochs
-
-
-def batch_rollup(batch_docs: DataFrame) -> DataFrame:
-    """The X216 aggregation over one batch of
-    markup.html_extract(markup.synth_html(...)) rows, the extraction
-    the batch query runs."""
-    ext = markup.html_extract(markup.synth_html(batch_docs))
-    share = F.col("n_text_chars").cast("double") / F.col("n_raw_chars").cast(
-        "double"
-    )
-    return ext.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_raw_chars").cast("bigint").alias("total_raw_chars"),
-        F.sum("n_text_chars").cast("bigint").alias("total_text_chars"),
-        F.min(share).alias("min_share_raw"),
-        F.max(share).alias("max_share_raw"),
-    )
 
 
 def process_batch(
     spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
-    """Extract one micro-batch and write its rollup row to its epoch."""
-    roll = batch_rollup(batch_docs)
+    """Extract one micro-batch and write its X216 partial
+    (extraction_tiers.html_rollup_partial) to its epoch."""
+    roll = html_rollup_partial(markup.html_extract(markup.synth_html(batch_docs)))
     idempotent_parquet_write(f"{store_dir}/html_rollup")(roll, batch_id)
     return roll
 
@@ -55,27 +43,14 @@ def process_batch(
 def current_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged corpus-so-far view — column-identical to the batch
     X216 output on the union of everything ingested (sums add, the
-    envelope is min-of-mins / max-of-maxes, the share divides once
-    at the end)."""
-    return (
-        read_epochs(spark, f"{store_dir}/html_rollup")
-        .agg(
+    envelope is min-of-mins / max-of-maxes, and the batch query's
+    html_rollup_view divides and rounds once at the end)."""
+    return html_rollup_view(
+        read_epochs(spark, f"{store_dir}/html_rollup").agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
             F.sum("total_raw_chars").cast("bigint").alias("total_raw_chars"),
             F.sum("total_text_chars").cast("bigint").alias("total_text_chars"),
-            F.min("min_share_raw").alias("mn"),
-            F.max("max_share_raw").alias("mx"),
-        )
-        .select(
-            "n_docs",
-            "total_raw_chars",
-            "total_text_chars",
-            F.round(
-                F.col("total_text_chars").cast("double")
-                / F.col("total_raw_chars").cast("double"),
-                6,
-            ).alias("corpus_text_share"),
-            F.round(F.col("mn"), 6).alias("min_text_share"),
-            F.round(F.col("mx"), 6).alias("max_text_share"),
+            F.min("min_share_raw").alias("min_share_raw"),
+            F.max("max_share_raw").alias("max_share_raw"),
         )
     )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from gmall_spark.queries_llm.web_tier import (
     DOMAIN_BLOCKLIST,
     DOMAIN_OPTOUT,
+    drop_counts,
     optout_gate,
 )
 from gmall_spark.streaming.runner import idempotent_parquet_write
@@ -36,7 +37,8 @@ def process_batch(
     spark: SparkSession, batch_docs: DataFrame, store_dir: str, batch_id: int
 ) -> DataFrame:
     """Ingest one micro-batch: gate it with web_tier.optout_gate, the
-    batch query's own gate, and write its domain counters to its
+    batch query's own gate, and write its domain counters (the drop
+    counts are web_tier.drop_counts, as in the release delta) to its
     epoch; returns the batch's per-doc verdicts (final at arrival —
     what a crawl gate acts on immediately). The gate runs once per
     batch: the counters and the verdicts both read its materialized
@@ -49,14 +51,7 @@ def process_batch(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("kept").cast("bigint").alias("n_kept"),
             F.sum(1 - F.col("kept")).cast("bigint").alias("n_dropped"),
-            F.sum("on_blocklist").cast("bigint").alias("n_dropped_blocklist"),
-            F.sum(
-                F.when(
-                    (F.col("on_blocklist") == 0) & (F.col("opted_out") == 1), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_dropped_optout"),
+            *drop_counts(),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         ),
         batch_id,

@@ -1,7 +1,7 @@
 """The session-memo registry (gmall_spark.fixtures_audit): one memo
 behind every per-session reuse, build timing, and release; plus the
-Python-worker environment get_session sets up and its scoped conf
-flip."""
+Python-worker environment get_session sets up, its checkpoint-manager
+rule and its scoped conf flip."""
 
 from __future__ import annotations
 
@@ -203,6 +203,59 @@ def test_default_driver_heap_fits_the_host():
     host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert 0 < heap <= host // 2
     assert heap == min(48 << 30, host // 2 >> 20 << 20)
+
+
+class _RecordingBuilder:
+    """SparkSession.builder stand-in: keeps the last value set per
+    conf key, as Spark's builder does, and builds nothing."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, _):
+        return self
+
+    def appName(self, _):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return types.SimpleNamespace(
+            conf=self.conf,
+            sparkContext=types.SimpleNamespace(setLogLevel=lambda _: None),
+        )
+
+
+def test_checkpoint_manager_rule(monkeypatch):
+    """Spark-free: get_session selects the FileSystem-based checkpoint
+    manager; a manager the caller sets in extra_conf wins."""
+    from gmall_spark import session
+    from gmall_spark.session import CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER
+
+    def built_conf(**kw):
+        fake = types.SimpleNamespace(builder=_RecordingBuilder())
+        monkeypatch.setattr(session, "SparkSession", fake)
+        return session.get_session(**kw).conf
+
+    assert built_conf()[CHECKPOINT_MANAGER_KEY] == LOCAL_CHECKPOINT_MANAGER
+    mine = {CHECKPOINT_MANAGER_KEY: "my.Manager"}
+    assert built_conf(extra_conf=mine)[CHECKPOINT_MANAGER_KEY] == "my.Manager"
+
+
+def test_session_checkpoints_through_the_filesystem_manager(spark, tmp_path):
+    """The live session's streaming checkpoints, which Spark opens with
+    CheckpointFileManager.create over the session's Hadoop conf, go
+    through the FileSystem-based manager."""
+    from gmall_spark.session import LOCAL_CHECKPOINT_MANAGER
+
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    ckpt = jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}/ckpt")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    assert manager.create(ckpt, hadoop_conf).getClass().getName() == LOCAL_CHECKPOINT_MANAGER
 
 
 class _FakeJsc:

@@ -5,6 +5,7 @@ what a twin module may hold at all."""
 from __future__ import annotations
 
 import ast
+import inspect
 import io
 import pathlib
 import tokenize
@@ -121,17 +122,29 @@ def test_streaming_state_uses_the_epoch_layout():
     assert not offenders, offenders
 
 
-# the longest run of code lines a twin may share with another module:
-# the longest shared run left (8) is boilerplate, the imports plus a
-# process_batch signature
-COPY_RUN = 9
+# the longest run of code tokens a twin may share with another module,
+# about nine lines of code. The longest shared runs left (45-51 tokens)
+# are imports plus a process_batch signature, two image twins' one-line
+# store readers, and the column names incremental_domain_rollup's merge
+# shares with web_domain_rollup
+COPY_TOKENS = 60
+
+_LAYOUT = {
+    tokenize.COMMENT,
+    tokenize.NL,
+    tokenize.NEWLINE,
+    tokenize.INDENT,
+    tokenize.DEDENT,
+    tokenize.ENCODING,
+    tokenize.ENDMARKER,
+}
 
 
-def _code_lines(path: pathlib.Path) -> list[tuple[int, str]]:
-    """(line number, whitespace-normalized code) for every line of
-    ``path`` that is not blank, a comment or a docstring."""
-    src = path.read_text()
-    doc = set()
+def _code_tokens(src: str) -> list[tuple[int, str]]:
+    """(line number, text) of every code token of ``src``: comments,
+    docstrings and layout (line breaks, indentation) dropped, so a copy
+    wrapped or indented differently has its original's token stream."""
+    docs = set()
     for node in ast.walk(ast.parse(src)):
         if isinstance(node, ast.Module | ast.ClassDef | ast.FunctionDef):
             first = node.body[0] if node.body else None
@@ -140,41 +153,70 @@ def _code_lines(path: pathlib.Path) -> list[tuple[int, str]]:
                 and isinstance(first.value, ast.Constant)
                 and isinstance(first.value.value, str)
             ):
-                doc.update(range(first.lineno, first.end_lineno + 1))
-    cut = {
-        tok.start[0]: tok.start[1]
+                docs.add((first.lineno, first.col_offset))
+    return [
+        (tok.start[0], tok.string)
         for tok in tokenize.generate_tokens(io.StringIO(src).readline)
-        if tok.type == tokenize.COMMENT
-    }
-    lines = []
-    for no, line in enumerate(src.splitlines(), 1):
-        code = " ".join(line[: cut.get(no, len(line))].split())
-        if code and no not in doc:
-            lines.append((no, code))
-    return lines
+        if tok.type not in _LAYOUT and tok.start not in docs
+    ]
+
+
+def _copies(sources: dict[str, str], twins: list[str]) -> list[str]:
+    """"<twin>:<line> also in <modules>" for every window of COPY_TOKENS
+    consecutive code tokens of a twin in ``twins`` that also appears in
+    another of ``sources`` (module name -> source text)."""
+    tokens = {name: _code_tokens(src) for name, src in sources.items()}
+    seen: dict[tuple[str, ...], set[str]] = {}
+    for name, code in tokens.items():
+        texts = [t for _, t in code]
+        for i in range(len(texts) - COPY_TOKENS + 1):
+            seen.setdefault(tuple(texts[i : i + COPY_TOKENS]), set()).add(name)
+    offenders = []
+    for name in twins:
+        code = tokens[name]
+        texts = [t for _, t in code]
+        for i in range(len(texts) - COPY_TOKENS + 1):
+            others = seen[tuple(texts[i : i + COPY_TOKENS])] - {name}
+            if others:
+                offenders.append(f"{name}:{code[i][0]} also in " + ", ".join(sorted(others)))
+    return offenders
 
 
 def test_twins_call_their_batch_functions_instead_of_copying():
     """Spark-free lint: a twin's increment and view call the batch
-    query's functions; a run of COPY_RUN or more consecutive code
-    lines (comments and docstrings dropped, whitespace normalized) in
-    a streaming/incremental_*.py module that also appears in another
+    query's functions; a run of COPY_TOKENS code tokens in a
+    streaming/incremental_*.py module that also appears in another
     module is a copy that only the equality tests keep in step."""
-    lines = {p: _code_lines(p) for p in sorted(STREAMING.parent.rglob("*.py"))}
-    seen: dict[tuple[str, ...], set[pathlib.Path]] = {}
-    for path, code in lines.items():
-        texts = [t for _, t in code]
-        for i in range(len(texts) - COPY_RUN + 1):
-            seen.setdefault(tuple(texts[i : i + COPY_RUN]), set()).add(path)
-    offenders = []
-    for path in sorted(STREAMING.glob("incremental_*.py")):
-        code = lines[path]
-        texts = [t for _, t in code]
-        for i in range(len(texts) - COPY_RUN + 1):
-            others = seen[tuple(texts[i : i + COPY_RUN])] - {path}
-            if others:
-                offenders.append(
-                    f"{path.name}:{code[i][0]} also in "
-                    + ", ".join(sorted(o.name for o in others))
-                )
+    pkg = STREAMING.parent
+    sources = {str(p.relative_to(pkg)): p.read_text() for p in sorted(pkg.rglob("*.py"))}
+    twins = [n for n in sources if n.startswith("streaming/incremental_")]
+    assert len(twins) > 30
+    offenders = _copies(sources, twins)
     assert not offenders, offenders
+
+
+def test_copy_lint_sees_a_rewrapped_copy():
+    """Spark-free: a copy of tok_media.edit_verify_rows with every
+    statement on one line and its tokens respaced shares no code line
+    with the original, so no run of lines matches, yet the token
+    windows flag it."""
+    from gmall_spark.queries_llm import tok_media
+
+    pkg = STREAMING.parent
+    original = (pkg / "queries_llm" / "tok_media.py").read_text()
+    func = inspect.getsource(tok_media.edit_verify_rows)
+    doc = ast.parse(func).body[0].body[0]
+    copy = tokenize.untokenize(
+        (t.type, t.string)
+        for t in tokenize.generate_tokens(io.StringIO(func).readline)
+        if t.type not in (tokenize.NL, tokenize.COMMENT)
+        and t.start != (doc.lineno, doc.col_offset)
+    )
+    compile(copy, "planted", "exec")
+
+    def lines(src):
+        return {" ".join(line.split()) for line in src.splitlines()} - {""}
+
+    assert not lines(copy) & lines(original), lines(copy) & lines(original)
+    sources = {"queries_llm/tok_media.py": original, "streaming/incremental_planted.py": copy}
+    assert _copies(sources, ["streaming/incremental_planted.py"])

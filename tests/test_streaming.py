@@ -7,6 +7,7 @@ asserts equality with the batch-core formulation on the same rows.
 
 from __future__ import annotations
 
+import pathlib
 import shutil
 import tempfile
 
@@ -82,6 +83,12 @@ def test_streaming_window_agg_equals_batch(spark, sf_dir, tmpdir):
     missing = set(expected) - set(got)
     # only the tail windows (within watermark of max ts) may be unemitted
     assert len(missing) < 5, f"{len(missing)} windows missing from append output"
+    # under the session's checkpoint manager each state version is still
+    # <n>.delta with Spark's own <n>.delta.crc beside it
+    names = {p.name for p in pathlib.Path(tmpdir, "ckpt_win", "state").rglob("*.delta*")}
+    deltas = {n for n in names if n.endswith(".delta") and not n.startswith(".")}
+    assert deltas, names
+    assert {f"{n}.crc" for n in deltas} <= names, names
 
 
 def test_streaming_dedup_equals_batch(spark, sf_dir, tmpdir):
