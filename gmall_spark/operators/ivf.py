@@ -4,12 +4,14 @@ The second scale path for similarity search next to the hyperplane
 LSH in :mod:`gmall_spark.operators.similarity` (BASELINE extension
 mandate: "an IVF or LSH-bucketed variant as the scale path"):
 
-1. **Train**: k-means over a deterministic, CONSTANT-BOUNDED sample
-   of the corpus (smallest-md5 rows, never more than ``IVF_SAMPLE``),
-   fetched to the driver in one job and iterated locally in float64 —
-   the faiss coarse-quantizer recipe. The driver never sees more than
-   the fixed sample regardless of corpus size; everything that scales
-   with the corpus stays distributed.
+1. **Train**: k-means (:func:`lloyd`) over a deterministic,
+   CONSTANT-BOUNDED sample of the corpus (:func:`md5_sample`:
+   smallest-md5 rows, never more than ``IVF_SAMPLE``), fetched to the
+   driver in one job and iterated locally in float64 — the faiss
+   coarse-quantizer recipe, which the PQ codebooks (operators/pq.py)
+   train with too. The driver never sees more than the fixed sample
+   regardless of corpus size; everything that scales with the corpus
+   stays distributed.
 2. **Index**: every corpus vector is assigned to its nearest centroid
    (one codegen'd argmin over centroid literals, no shuffle) — the
    "inverted list" is just a ``list_id`` column, so at 100 TB the
@@ -18,8 +20,9 @@ mandate: "an IVF or LSH-bucketed variant as the scale path"):
 3. **Search**: each query scores the centroids (k of them, driver-
    side literals), keeps its ``nprobe`` nearest lists, and scores
    only corpus vectors in those lists: an equi-join on ``list_id``
-   (queries broadcast) followed by exact cosine + per-query top-k.
-   Expected cost per query ~ nprobe/k of the corpus.
+   (queries broadcast) followed by exact cosine + per-query top-k
+   (:func:`similarity.rank_topk`). Expected cost per query ~ nprobe/k
+   of the corpus.
 
 Determinism: centroid init picks the sample rows with the k smallest
 md5(vec_id) values — no RNG, stable across runs/engines. Lloyd
@@ -37,11 +40,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
 from gmall_spark.functions.vectors import cosine
+from gmall_spark.operators.similarity import rank_topk
 
 IVF_LISTS = 16
 # 12/16: the first sweep point clearing recall@10 >= 0.9 on the
@@ -88,44 +92,45 @@ def _nearest_lists_udf(centroids: list[list[float]], n: int = 1):
     def _nn(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
-        v = np.array(vs.tolist(), dtype=np.float64)
-        norms = np.sqrt((v * v).sum(axis=1, keepdims=True))
-        norms[norms == 0.0] = 1.0
-        score = (v / norms) @ c.T - half_sq  # maximize
+        score = unit_rows(vs) @ c.T - half_sq  # maximize
         order = np.argsort(-score, axis=1, kind="stable")[:, :n]
         return pd.Series([row.astype(np.int32) for row in order])
 
     return _nn
 
 
-def train_centroids(
+def unit_rows(vs: pd.Series) -> np.ndarray:
+    """An Arrow batch of vectors as L2-normalized float64 rows; a zero
+    vector stays zero (the :func:`_unit` guard, numpy-side)."""
+    v = np.array(vs.tolist(), dtype=np.float64)
+    norms = np.sqrt((v * v).sum(axis=1, keepdims=True))
+    norms[norms == 0.0] = 1.0
+    return v / norms
+
+
+def nearest(u: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid: argmax of u·c − |c|²/2
+    (argmin of ||u−c||² for unit u), the first maximum winning, so
+    ties go to the lower id."""
+    return np.argmax(u @ cents.T - (cents * cents).sum(axis=1) / 2.0, axis=1)
+
+
+def _renorm_row(v: np.ndarray) -> np.ndarray:
+    n = float(np.sqrt((v * v).sum()))
+    return v / n if n > 0 else v
+
+
+def md5_sample(
     embeddings: DataFrame,
-    n_lists: int = IVF_LISTS,
-    iters: int = IVF_ITERS,
-    sample: int = IVF_SAMPLE,
+    sample: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Deterministic spherical-k-means centroids.
-
-    Sampling: the ``sample`` rows with the smallest md5(vec_id) — an
-    unbiased deterministic subset; k-means quality needs a sample,
-    not the corpus. The sample is BOUNDED BY A CONSTANT (not by
-    corpus size), so it is fetched to the driver in one job and the
-    Lloyd iterations run as local float64 matrix ops — the way faiss
-    trains an IVF coarse quantizer on a sampled subset. (An earlier
-    formulation ran each iteration as a distributed assignment +
-    64-column avg aggregate: 2+ Spark jobs per iteration over a
-    2048-row relation, ~10 s of pure scheduling latency at any SF;
-    the index build, probe joins and verification — the parts that
-    actually scale with the corpus — remain fully distributed.)
-
-    Semantics are unchanged and oracle-checked: init = the k
-    smallest-digest sample rows, assignment by argmax of
-    u·c − |c|²/2 with ties to the lower list id (numpy argmax takes
-    the first maximum), per-list mean then re-normalization, empty
-    lists keeping their previous centroid.
-    """
+) -> np.ndarray:
+    """The training sample every quantizer here shares: the ``sample``
+    rows with the smallest md5(id), unit-normalized, collected as an
+    (n, dim) float64 matrix in md5 order. The sample is BOUNDED BY A
+    CONSTANT, not by corpus size, so it crosses to the driver in one
+    job — the way faiss trains on a sampled subset."""
     rows = (
         embeddings.select(
             F.md5(F.col(id_col).cast("string")).alias("__h"),
@@ -136,27 +141,50 @@ def train_centroids(
         .collect()
     )
     if not rows:
-        raise ValueError("cannot train IVF centroids on an empty corpus")
-    u = np.array([list(map(float, r["__v"])) for r in rows], dtype=np.float64)
-    # Tiny corpora: fewer sampled rows than requested lists -> clamp
-    # (ADVICE r2: the empty-list fallback must never index past init).
-    n_lists = min(n_lists, len(rows))
+        raise ValueError("cannot train a quantizer on an empty corpus")
+    return np.array([list(map(float, r["__v"])) for r in rows], dtype=np.float64)
 
-    def _renorm_row(v: np.ndarray) -> np.ndarray:
-        n = float(np.sqrt((v * v).sum()))
-        return v / n if n > 0 else v
 
-    cents = np.stack([_renorm_row(u[i]) for i in range(n_lists)])
+def lloyd(u: np.ndarray, k: int, iters: int, spherical: bool) -> np.ndarray:
+    """Lloyd k-means over the rows of ``u`` as local float64 matrix
+    ops. Init = the first ``k`` rows (md5 order); each iteration
+    assigns by :func:`nearest` and moves every centroid to its
+    members' mean; an empty cluster keeps its previous centroid.
+    ``spherical`` re-normalizes the init and every mean onto the unit
+    sphere (the IVF coarse quantizer); without it the loop is plain
+    Euclidean k-means (PQ sub-spaces). ``k`` is clamped to the sample
+    size, so the empty-cluster fallback never indexes past the init
+    (ADVICE r2)."""
+    k = min(k, len(u))
+    cents = np.stack([_renorm_row(r) for r in u[:k]]) if spherical else u[:k].copy()
     for _ in range(iters):
-        score = u @ cents.T - (cents * cents).sum(axis=1) / 2.0
-        assign = np.argmax(score, axis=1)  # first max == lower list id
+        assign = nearest(u, cents)
         nxt = cents.copy()
-        for i in range(n_lists):
+        for i in range(k):
             members = u[assign == i]
-            if len(members):  # empty lists keep their previous centroid
-                nxt[i] = _renorm_row(members.mean(axis=0))
+            if len(members):
+                mean = members.mean(axis=0)
+                nxt[i] = _renorm_row(mean) if spherical else mean
         cents = nxt
-    return [list(map(float, c)) for c in cents]
+    return cents
+
+
+def train_centroids(
+    embeddings: DataFrame,
+    n_lists: int = IVF_LISTS,
+    iters: int = IVF_ITERS,
+    sample: int = IVF_SAMPLE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[float]]:
+    """Deterministic spherical-k-means centroids: :func:`lloyd` over
+    :func:`md5_sample`, re-normalizing every centroid (oracle-checked).
+    The iterations run driver-side on the bounded sample; an earlier
+    formulation ran each as a distributed assignment + avg aggregate,
+    2+ Spark jobs per iteration over a 2048-row relation, ~10 s of
+    pure scheduling latency at any SF."""
+    u = md5_sample(embeddings, sample, id_col, vec_col)
+    return [list(map(float, c)) for c in lloyd(u, n_lists, iters, spherical=True)]
 
 
 def _source_fingerprint(paths: list[str]) -> dict[str, float | int]:
@@ -182,33 +210,30 @@ def _source_fingerprint(paths: list[str]) -> dict[str, float | int]:
     return {"size": size, "mtime": mtime}
 
 
-def save_centroids(
-    path: str, centroids: list[list[float]], source_paths: list[str]
-) -> None:
-    """Publish the trained coarse quantizer as an on-disk artifact
-    (VERDICT r3 stretch): curation runs spanning several sessions —
-    or IVF + SemDeDup jobs sharing one model — reuse one training run
-    instead of re-collecting the sample. Atomic write; the artifact
-    embeds a fingerprint of the training files so a regenerated
-    corpus invalidates it. (On a cluster this would live on the
-    shared FS / a model registry; the centroid payload is k·dim
-    floats — trivially small either way.)"""
+def save_artifact(path: str, key: str, value: list, source_paths: list[str]) -> None:
+    """Publish a trained quantizer (IVF centroids under ``centroids``,
+    PQ codebooks under ``codebooks``) as an on-disk artifact (VERDICT
+    r3 stretch): curation runs spanning several sessions — or IVF +
+    SemDeDup + PQ jobs sharing one model — reuse one training run
+    instead of re-collecting the sample. Atomic write; the payload
+    ``{"fingerprint": ..., key: value}`` embeds a fingerprint of the
+    training files so a regenerated corpus invalidates it. (On a
+    cluster this would live on the shared FS / a model registry; the
+    payload is a few thousand floats — trivially small either way.)"""
     import json
     import os
 
-    payload = {
-        "fingerprint": _source_fingerprint(source_paths),
-        "centroids": centroids,
-    }
+    payload = {"fingerprint": _source_fingerprint(source_paths), key: value}
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
         json.dump(payload, f)
     os.replace(tmp, path)
 
 
-def load_centroids(path: str, source_paths: list[str]) -> list[list[float]] | None:
-    """Load a published centroid artifact, or None when it is absent
-    or its fingerprint no longer matches the training files."""
+def load_artifact(path: str, key: str, source_paths: list[str]) -> list | None:
+    """Load the ``key`` payload of a published artifact, or None when
+    it is absent, unreadable, empty, or its fingerprint no longer
+    matches the training files."""
     import json
     import os
 
@@ -221,8 +246,8 @@ def load_centroids(path: str, source_paths: list[str]) -> list[list[float]] | No
         return None
     if payload.get("fingerprint") != _source_fingerprint(source_paths):
         return None
-    cents = payload.get("centroids")
-    return cents if isinstance(cents, list) and cents else None
+    value = payload.get(key)
+    return value if isinstance(value, list) and value else None
 
 
 def build_index(
@@ -251,19 +276,10 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    hint_broadcast_probes: bool = True,
 ) -> DataFrame:
     """IVF ANN top-k: train -> index -> probe nprobe lists -> exact
     cosine + per-query top-k. Schema matches ``brute_force_topk``:
-    (query_id, neighbor_id, rank, cos_sim).
-
-    ``hint_broadcast_probes``: the default (a handful of point
-    queries probing a big index) broadcasts the exploded probe set.
-    Pass False when QUERIES are corpus-scale too (bitext mining maps
-    a whole language side through the index) — the probe join then
-    shuffles both sides on ``list_id``, the partitioning the index
-    is stored under anyway, instead of forcing a corpus-sized
-    broadcast."""
+    (query_id, neighbor_id, rank, cos_sim)."""
     centroids = centroids or train_centroids(
         embeddings, n_lists, iters, id_col=id_col, vec_col=vec_col
     )
@@ -275,7 +291,6 @@ def ivf_topk(
         nprobe,
         id_col,
         vec_col,
-        hint_broadcast_probes,
     )
 
 
@@ -287,12 +302,12 @@ def probe_topk(
     nprobe: int = IVF_NPROBE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hint_broadcast_probes: bool = True,
 ) -> DataFrame:
     """Probe a (vec_id, embedding, list_id) ``index`` built under
     ``centroids``: each query's nprobe nearest lists, exact cosine
     against their members, per-query top-k (query_id, neighbor_id,
-    rank, cos_sim)."""
+    rank, cos_sim). The exploded probe set (a handful of point
+    queries) is broadcast."""
     # Each query ranks the k centroids in one Arrow-batched gemm and
     # keeps its nprobe nearest lists.
     probes = queries.select(
@@ -302,11 +317,8 @@ def probe_topk(
             _nearest_lists_udf(centroids, nprobe)(F.col(vec_col))
         ).alias("list_id"),
     )
-
     scored = (
-        index.join(
-            F.broadcast(probes) if hint_broadcast_probes else probes, "list_id"
-        )
+        index.join(F.broadcast(probes), "list_id")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select(
             "query_id",
@@ -314,14 +326,4 @@ def probe_topk(
             F.round(cosine("qvec", "embedding"), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
-    )
+    return rank_topk(scored, k)

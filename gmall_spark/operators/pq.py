@@ -7,11 +7,12 @@ VECTOR (the faiss ``PQ8x8`` design — m=8 sub-spaces, 256 centroids
 each = one byte/sub-space, an 8x compression of a 64-dim float32
 vector). Approximate scores are computed ADC-style (query exact,
 corpus reconstructed from codebook entries), the top ``refine``·k
-candidates per query are re-scored against the exact vectors.
+candidates per query are re-scored against the exact vectors
+(:func:`similarity.refine_topk`, shared with SQ).
 
-Training follows the ivf.py precedent exactly: the md5-smallest
-``sample`` rows (a CONSTANT-bounded, deterministic subset) cross the
-driver once and Lloyd iterations run as local float64 matrix ops per
+Training is the IVF coarse quantizer's own: :func:`ivf.md5_sample`
+(the md5-smallest ``sample`` rows, a CONSTANT-bounded deterministic
+subset, crossing the driver once) and one :func:`ivf.lloyd` per
 sub-space — Euclidean k-means on unit-normalized sub-vectors (the
 metric is cosine, so vectors are normalized FIRST and the codebooks
 quantize directions; within a sub-space argmin ||s−c||² ==
@@ -35,19 +36,37 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-from gmall_spark.functions.vectors import cosine, dot
-from gmall_spark.operators.ivf import _unit
-from gmall_spark.operators.similarity import infer_dim
+from gmall_spark.functions.vectors import dot
+from gmall_spark.operators import ivf
+from gmall_spark.operators.ivf import _unit, lloyd, md5_sample, nearest, unit_rows
+from gmall_spark.operators.similarity import infer_dim, refine_topk
 
 PQ_M = 8  # sub-spaces
 PQ_K = 256  # centroids per sub-space (8-bit codes)
 PQ_ITERS = 2
 PQ_SAMPLE = 2048
 PQ_REFINE = 4
+
+
+def _books(u: np.ndarray, dim: int, m: int, k: int, iters: int) -> list[list[list[float]]]:
+    """One Euclidean :func:`ivf.lloyd` per sub-space of the sample
+    rows ``u``: init = the k smallest-digest rows' sub-vectors (the
+    same rows for every sub-space, mirroring the oracle's shared
+    ``pool`` CTE), NO re-normalization of sub-centroids (only the
+    full vector lives on the unit sphere)."""
+    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
+    sub = dim // m
+    return [
+        [
+            list(map(float, c))
+            for c in lloyd(u[:, j * sub : (j + 1) * sub], k, iters, spherical=False)
+        ]
+        for j in range(m)
+    ]
 
 
 def train_codebooks(
@@ -61,82 +80,79 @@ def train_codebooks(
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """``m`` codebooks of ``k`` sub-centroids each (shape m×k×(dim/m))
-    from the md5-ordered sample. Init per sub-space = the k
-    smallest-digest rows' sub-vectors (the same rows for every
-    sub-space, mirroring the oracle's shared ``pool`` CTE); empty
-    clusters keep their previous centroid; NO re-normalization of
-    sub-centroids (Euclidean k-means in sub-space — only the full
-    vector lives on the unit sphere)."""
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    sub = dim // m
-    rows = (
-        embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            _unit(F.col(vec_col)).alias("__v"),
-        )
-        .orderBy("__h")
-        .limit(sample)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("cannot train PQ codebooks on an empty corpus")
-    u = np.array([list(map(float, r["__v"])) for r in rows], dtype=np.float64)
-    k = min(k, len(rows))
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        s = u[:, j * sub : (j + 1) * sub]
-        cents = s[:k].copy()
-        for _ in range(iters):
-            score = s @ cents.T - (cents * cents).sum(axis=1) / 2.0
-            assign = np.argmax(score, axis=1)  # first max == lower code
-            nxt = cents.copy()
-            for c in range(k):
-                members = s[assign == c]
-                if len(members):
-                    nxt[c] = members.mean(axis=0)
-            cents = nxt
-        books.append([list(map(float, c)) for c in cents])
-    return books
+    from the md5-ordered sample (:func:`ivf.md5_sample`)."""
+    return _books(md5_sample(embeddings, sample, id_col, vec_col), dim, m, k, iters)
 
 
-def _encode_batch(books, vs: pd.Series) -> np.ndarray:
-    """(n, m) int32 code matrix for a batch of vectors: one gemm per
-    sub-space, stable first-max tie rule, on unit-normalized rows."""
-    mats = [np.array(b, dtype=np.float64) for b in books]
-    halves = [(c * c).sum(axis=1) / 2.0 for c in mats]
+def train_codebooks_residual(
+    embeddings: DataFrame,
+    centroids: list[list[float]],
+    dim: int,
+    m: int = PQ_M,
+    k: int = PQ_K,
+    iters: int = PQ_ITERS,
+    sample: int = PQ_SAMPLE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[list[float]]]:
+    """Codebooks over RESIDUALS u − c_coarse(u) (faiss by_residual):
+    the same md5-ordered sample, coarse-assigned with the index's own
+    rule (:func:`ivf.nearest`), residual-subtracted, then the same
+    per-sub-space training as :func:`train_codebooks`. Residuals
+    have far lower variance than raw directions, so the same code
+    budget reconstructs tighter."""
+    u = md5_sample(embeddings, sample, id_col, vec_col)
+    cents = np.array(centroids, dtype=np.float64)
+    return _books(u - cents[nearest(u, cents)], dim, m, k, iters)
+
+
+def _decode(mats: list[np.ndarray], r: np.ndarray) -> np.ndarray:
+    """Encode-then-reconstruct the rows of ``r``: each sub-vector's
+    nearest codebook entry (stable first-max tie rule), concatenated."""
     sub = mats[0].shape[1]
-    v = np.array(vs.tolist(), dtype=np.float64)
-    norms = np.sqrt((v * v).sum(axis=1, keepdims=True))
-    norms[norms == 0.0] = 1.0
-    v = v / norms
-    out = np.empty((len(v), len(mats)), dtype=np.int32)
-    for j, (c, h) in enumerate(zip(mats, halves)):
-        score = v[:, j * sub : (j + 1) * sub] @ c.T - h
-        out[:, j] = np.argmax(score, axis=1)
-    return out
+    return np.concatenate(
+        [c[nearest(r[:, j * sub : (j + 1) * sub], c)] for j, c in enumerate(mats)],
+        axis=1,
+    )
 
 
 def _recon_udf(books: list[list[list[float]]]):
     """Arrow-batched encode-and-reconstruct: dq = concat of the m
-    codebook entries the vector encodes to — a vectorized numpy
-    gather. An earlier formulation reconstructed JVM-side by slicing
-    m LITERAL k·(dim/m)-float arrays per row; at k=256 that is a
-    16k-literal expression tree, which drops out of codegen and
-    interprets per-row (the ivf._nearest_lists_udf pathology, ~6 s
-    of pure expression overhead at sf0.1). The gather emits float64
-    values IDENTICAL to the literal-slice version, so the oracle
-    parity is unchanged."""
+    codebook entries the (unit-normalized) vector encodes to — a
+    vectorized numpy gather. An earlier formulation reconstructed
+    JVM-side by slicing m LITERAL k·(dim/m)-float arrays per row; at
+    k=256 that is a 16k-literal expression tree, which drops out of
+    codegen and interprets per-row (the ivf._nearest_lists_udf
+    pathology, ~6 s of pure expression overhead at sf0.1). The gather
+    emits float64 values IDENTICAL to the literal-slice version, so
+    the oracle parity is unchanged."""
     mats = [np.array(b, dtype=np.float64) for b in books]
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _recon(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
-        codes = _encode_batch(books, vs)
-        dq = np.concatenate(
-            [mats[j][codes[:, j]] for j in range(len(mats))], axis=1
-        )
-        return pd.Series([row for row in dq])
+        return pd.Series(list(_decode(mats, unit_rows(vs))))
+
+    return _recon
+
+
+def _recon_residual_udf(
+    books: list[list[list[float]]], centroids: list[list[float]]
+):
+    """Arrow-batched residual encode-and-reconstruct:
+    dq = c_coarse + concat(cb_j[code_j(residual)]) — the faiss
+    by_residual decode, vectorized like :func:`_recon_udf`."""
+    mats = [np.array(b, dtype=np.float64) for b in books]
+    cents = np.array(centroids, dtype=np.float64)
+
+    @F.pandas_udf(ArrayType(DoubleType()))
+    def _recon(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype=object)
+        v = unit_rows(vs)
+        coarse = cents[nearest(v, cents)]
+        return pd.Series(list(coarse + _decode(mats, v - coarse)))
 
     return _recon
 
@@ -156,8 +172,8 @@ def pq_topk(
     books: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors per query: PQ-coded corpus scan (ADC)
-    + exact rescore. Output matches the other ANN tiers:
-    (query_id, neighbor_id, rank, cos_sim)."""
+    + exact rescore (:func:`similarity.refine_topk`). Output matches
+    the other ANN tiers: (query_id, neighbor_id, rank, cos_sim)."""
     dim = dim or infer_dim(embeddings, vec_col)
     if books is None:
         books = train_codebooks(
@@ -173,44 +189,9 @@ def pq_topk(
     approx = (
         recon.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot("qu", "dq"), 6).alias("approx_sim"),
-        )
+        .select("query_id", "neighbor_id", F.round(dot("qu", "dq"), 6).alias("approx_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    nv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "nvec"), 6).alias("cos_sim"),
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
-    )
+    return refine_topk(approx, queries, embeddings, k, refine, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -243,8 +224,6 @@ def ivfpq_topk(
     reconstructs tighter; dq = c_coarse + residual reconstruction.
     Schema matches the other ANN tiers: (query_id, neighbor_id,
     rank, cos_sim)."""
-    from gmall_spark.operators import ivf
-
     dim = dim or infer_dim(embeddings, vec_col)
     nprobe = nprobe or ivf.IVF_NPROBE
     if centroids is None:
@@ -283,174 +262,4 @@ def ivfpq_topk(
             F.round(dot("qu", "dq"), 6).alias("approx_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    nv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "nvec"), 6).alias("cos_sim"),
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
-    )
-
-
-def _coarse_assign(centroids: list[list[float]], v: np.ndarray) -> np.ndarray:
-    """Nearest coarse list per unit row — the _nearest_lists_udf rule
-    (argmax of u·c − |c|²/2, first max == lower list id)."""
-    c = np.array(centroids, dtype=np.float64)
-    score = v @ c.T - (c * c).sum(axis=1) / 2.0
-    return np.argmax(score, axis=1)
-
-
-def train_codebooks_residual(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    dim: int,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    sample: int = PQ_SAMPLE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Codebooks over RESIDUALS u − c_coarse(u) (faiss by_residual):
-    the same md5-ordered sample, coarse-assigned with the index's own
-    rule, residual-subtracted, then the per-sub-space Lloyd loop of
-    :func:`train_codebooks` verbatim. Residuals have far lower
-    variance than raw directions, so the same code budget
-    reconstructs tighter."""
-    assert dim % m == 0
-    sub = dim // m
-    rows = (
-        embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            _unit(F.col(vec_col)).alias("__v"),
-        )
-        .orderBy("__h")
-        .limit(sample)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("cannot train residual codebooks on an empty corpus")
-    u = np.array([list(map(float, r["__v"])) for r in rows], dtype=np.float64)
-    cents = np.array(centroids, dtype=np.float64)
-    resid = u - cents[_coarse_assign(centroids, u)]
-    k = min(k, len(rows))
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        s = resid[:, j * sub : (j + 1) * sub]
-        cb = s[:k].copy()
-        for _ in range(iters):
-            score = s @ cb.T - (cb * cb).sum(axis=1) / 2.0
-            assign = np.argmax(score, axis=1)
-            nxt = cb.copy()
-            for c in range(k):
-                members = s[assign == c]
-                if len(members):
-                    nxt[c] = members.mean(axis=0)
-            cb = nxt
-        books.append([list(map(float, c)) for c in cb])
-    return books
-
-
-def _recon_residual_udf(
-    books: list[list[list[float]]], centroids: list[list[float]]
-):
-    """Arrow-batched residual encode-and-reconstruct:
-    dq = c_coarse + concat(cb_j[code_j(residual)]) — the faiss
-    by_residual decode, vectorized like :func:`_recon_udf`."""
-    mats = [np.array(b, dtype=np.float64) for b in books]
-    cents = np.array(centroids, dtype=np.float64)
-    halves = [(c * c).sum(axis=1) / 2.0 for c in mats]
-    sub = mats[0].shape[1]
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _recon(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        v = np.array(vs.tolist(), dtype=np.float64)
-        norms = np.sqrt((v * v).sum(axis=1, keepdims=True))
-        norms[norms == 0.0] = 1.0
-        v = v / norms
-        assign = _coarse_assign([list(c) for c in cents], v)
-        resid = v - cents[assign]
-        codes = np.empty((len(v), len(mats)), dtype=np.int64)
-        for j, (c, h) in enumerate(zip(mats, halves)):
-            score = resid[:, j * sub : (j + 1) * sub] @ c.T - h
-            codes[:, j] = np.argmax(score, axis=1)
-        dq = cents[assign] + np.concatenate(
-            [mats[j][codes[:, j]] for j in range(len(mats))], axis=1
-        )
-        return pd.Series([row for row in dq])
-
-    return _recon
-
-
-def save_codebooks(
-    path: str, books: list[list[list[float]]], source_paths: list[str]
-) -> None:
-    """Publish trained PQ codebooks as an on-disk artifact — the PQ
-    half of the index-as-artifact story (ivf.save_centroids is the
-    coarse half): curation runs spanning sessions, or PQ + IVF-PQ
-    jobs sharing one training, reuse a single run. Atomic write with
-    a training-file fingerprint so a regenerated corpus invalidates
-    the artifact; payload is m·k·(dim/m) floats — trivially small."""
-    import json
-    import os
-
-    from gmall_spark.operators.ivf import _source_fingerprint
-
-    payload = {
-        "fingerprint": _source_fingerprint(source_paths),
-        "codebooks": books,
-    }
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, path)
-
-
-def load_codebooks(
-    path: str, source_paths: list[str]
-) -> list[list[list[float]]] | None:
-    """Load a published codebook artifact, or None when absent or its
-    fingerprint no longer matches the training files."""
-    import json
-    import os
-
-    from gmall_spark.operators.ivf import _source_fingerprint
-
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            payload = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if payload.get("fingerprint") != _source_fingerprint(source_paths):
-        return None
-    books = payload.get("codebooks")
-    return books if isinstance(books, list) and books else None
+    return refine_topk(approx, queries, embeddings, k, refine, id_col, vec_col)

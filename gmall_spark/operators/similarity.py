@@ -19,9 +19,12 @@ into literal arrays so the per-row work is ONE zip_with fold per
 plane instead of `dim` chained expression terms. Reproducible across
 runs and engines without storing plane matrices.
 
-Ranking ties are broken by vec_id so results are deterministic; the
-score is rounded before ranking so Spark's and the oracle's float
-folds agree.
+Every top-k tier here and in ivf/sq/pq ends in one rank tail,
+:func:`rank_topk`: ties are broken by neighbor id so results are
+deterministic, and the score is rounded before ranking so Spark's and
+the oracle's float folds agree. Candidate tiers rescore exactly
+through :func:`rescore_topk`; the quantized tiers first cut to
+refine·k by approximate score in :func:`refine_topk`.
 """
 
 from __future__ import annotations
@@ -175,6 +178,14 @@ def brute_force_topk(
             F.round(cosine("qvec", "nvec"), 6).alias("cos_sim"),
         )
     )
+    return rank_topk(scored, k)
+
+
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The rank tail every top-k tier ends in: per query, order
+    (query_id, neighbor_id, cos_sim) rows by ``cos_sim`` desc then
+    ``neighbor_id`` asc, keep rank <= k, and return (query_id,
+    neighbor_id, rank bigint, cos_sim)."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -190,6 +201,57 @@ def brute_force_topk(
     )
 
 
+def rescore_topk(
+    cand: DataFrame,
+    queries: DataFrame,
+    embeddings: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine of each (query_id, neighbor_id) candidate pair
+    (queries broadcast, vectors re-attached by id), then
+    :func:`rank_topk`."""
+    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    nv = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
+    )
+    scored = (
+        cand.join(F.broadcast(qv), "query_id")
+        .join(nv, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine("qvec", "nvec"), 6).alias("cos_sim"),
+        )
+    )
+    return rank_topk(scored, k)
+
+
+def refine_topk(
+    approx: DataFrame,
+    queries: DataFrame,
+    embeddings: DataFrame,
+    k: int,
+    refine: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The quantized tiers' (SQ, PQ, IVF-PQ) refinement: keep each
+    query's top ``refine``·k (query_id, neighbor_id, approx_sim)
+    candidates by approximate score (ties to the lower id), then
+    :func:`rescore_topk` ranks them by exact cosine."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("approx_sim"), F.asc("neighbor_id")
+    )
+    cand = (
+        approx.withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= refine * k)
+        .select("query_id", "neighbor_id")
+    )
+    return rescore_topk(cand, queries, embeddings, k, id_col, vec_col)
+
+
 def lsh_bucketed_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -197,7 +259,6 @@ def lsh_bucketed_topk(
     n_planes: int = ANN_PLANES,
     n_tables: int = ANN_TABLES,
     dim: int | None = None,
-    multi_probe: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -226,50 +287,21 @@ def lsh_bucketed_topk(
     q_base = _table_buckets(
         queries, "query_id", n_tables, n_planes, dim, id_col, vec_col
     )
-    if multi_probe:
-        # own bucket + every 1-bit-flip neighbor, expanded JVM-side
-        flips = F.concat(
-            F.array(F.col("bucket")),
-            F.array(
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(2**p))
-                    for p in range(n_planes)
-                ]
-            ),
-        )
-        q = q_base.select(
-            "query_id", "tbl", F.explode(flips).alias("bucket")
-        )
-    else:
-        q = q_base
+    # own bucket + every 1-bit-flip neighbor, expanded JVM-side
+    flips = F.concat(
+        F.array(F.col("bucket")),
+        F.array(
+            *[F.col("bucket").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)]
+        ),
+    )
+    q = q_base.select("query_id", "tbl", F.explode(flips).alias("bucket"))
     cand = (
         c.join(F.broadcast(q), ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    nv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "nvec"), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
-    )
+    return rescore_topk(cand, queries, embeddings, k, id_col, vec_col)
 
 
 def _cos_pairs_udf():
@@ -626,19 +658,7 @@ def gemm_allpairs_topk(
         # each query meets exactly one candidate block: local order IS
         # the global order, no merge window needed
         return local.select("query_id", "neighbor_id", "rank", "cos_sim")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
-    )
+    return rank_topk(local, k)
 
 
 # ---------------------------------------------------------------------------
@@ -764,20 +784,26 @@ def bitext_margin_top1(
     sy = topk_sum(pairs, "tgt_id", "src_id").withColumnRenamed(
         "nn_sum", "sum_y"
     ).withColumnRenamed("nn_k", "k_y")
-    scored = (
-        pairs.join(F.broadcast(sx), "src_id")
-        .join(F.broadcast(sy), "tgt_id")
-        .select(
-            "src_id",
-            "tgt_id",
-            F.col("cos6").alias("cos_sim"),
-            F.round(
-                2.0
-                * F.col("cos6")
-                / (F.col("sum_x") / F.col("k_x") + F.col("sum_y") / F.col("k_y")),
-                6,
-            ).alias("margin"),
-        )
+    return _margin_top1(
+        pairs.join(F.broadcast(sx), "src_id").join(F.broadcast(sy), "tgt_id")
+    )
+
+
+def _margin_top1(joined: DataFrame) -> DataFrame:
+    """Both bitext passes' tail: over (src_id, tgt_id, cos6, sum_x,
+    k_x, sum_y, k_y) rows, the ratio margin divided once on
+    bit-identical doubles, then the best margin per source (ties:
+    higher cosine, then lower target id)."""
+    scored = joined.select(
+        "src_id",
+        "tgt_id",
+        F.col("cos6").alias("cos_sim"),
+        F.round(
+            2.0
+            * F.col("cos6")
+            / (F.col("sum_x") / F.col("k_x") + F.col("sum_y") / F.col("k_y")),
+            6,
+        ).alias("margin"),
     )
     w = Window.partitionBy("src_id").orderBy(
         F.desc("margin"), F.desc("cos_sim"), F.asc("tgt_id")
@@ -868,13 +894,7 @@ def bitext_margin_top1_ann(
             F.col("vec_id").alias("neighbor_id"),
             F.round(cosine("qvec", "embedding"), 6).alias("cos_sim"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        return rank_topk(scored, k)
 
     # x -> tgt top-k: these pairs ARE the candidate set, and x's
     # neighborhood; y -> src top-k supplies y's neighborhood. cand is
@@ -899,7 +919,7 @@ def bitext_margin_top1_ann(
 
     sx = _nn_sum(cand, "src_id", "sum_x", "k_x")
     sy = _nn_sum(back, "tgt_id", "sum_y", "k_y")
-    scored = (
+    return _margin_top1(
         cand.select(
             F.col("query_id").alias("src_id"),
             F.col("neighbor_id").alias("tgt_id"),
@@ -907,23 +927,4 @@ def bitext_margin_top1_ann(
         )
         .join(sx, "src_id")
         .join(sy, "tgt_id")
-        .select(
-            "src_id",
-            "tgt_id",
-            F.col("cos6").alias("cos_sim"),
-            F.round(
-                2.0
-                * F.col("cos6")
-                / (F.col("sum_x") / F.col("k_x") + F.col("sum_y") / F.col("k_y")),
-                6,
-            ).alias("margin"),
-        )
-    )
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("margin"), F.desc("cos_sim"), F.asc("tgt_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
     )

@@ -22,11 +22,11 @@ engines' float folds agree (the similarity.py convention).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gmall_spark.functions.vectors import cosine
-from gmall_spark.operators.similarity import infer_dim
+from gmall_spark.operators.similarity import infer_dim, refine_topk
 
 SQ_LEVELS = 255
 SQ_REFINE = 4
@@ -80,14 +80,15 @@ def sq_topk(
     stats: tuple[list[float], list[float]] | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors per query via quantized scan + exact
-    rescore. Output matches the other ANN tiers:
-    (query_id, neighbor_id, rank, cos_sim). Pass ``stats`` (mins,
-    steps — e.g. a cached earlier training) to skip retraining."""
+    rescore (:func:`similarity.refine_topk`). Output matches the
+    other ANN tiers: (query_id, neighbor_id, rank, cos_sim). Pass
+    ``stats`` (mins, steps — e.g. a cached earlier training) to skip
+    retraining."""
     dim = dim or infer_dim(embeddings, vec_col)
     # the trained quantizer is ONE bounded row (2*dim doubles) — pull
     # it to the driver and inline it as literals, so encoding is a
     # pure per-row expression and the stats aggregate runs ONCE
-    # instead of once per consuming branch (the ivf.py:164 precedent:
+    # instead of once per consuming branch (as with ivf.md5_sample:
     # constant-bounded model state, not data, crosses the driver)
     if stats is not None:
         row = {"mins": stats[0], "steps": stats[1]}
@@ -112,40 +113,4 @@ def sq_topk(
             F.round(cosine("qdq", "dq"), 6).alias("approx_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    # exact rescore of the surviving candidates only
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    nv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "nvec"), 6).alias("cos_sim"),
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "cos_sim",
-        )
-    )
+    return refine_topk(approx, queries, embeddings, k, refine, id_col, vec_col)

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from gmall_spark.operators import (
@@ -95,6 +97,28 @@ def q_dedup_lsh_band_plan(spark, sf_dir):
     )
 
 
+def _recall_rows(bf: DataFrame, key: str, arms: list) -> DataFrame:
+    """The recall@10 table every eval here reports: one row per
+    ``(value, arm)`` in ``arms`` — ``value`` under the ``key`` column,
+    then the ground-truth pair count, the arm's hits among them and
+    their rounded ratio, from ``bf`` ⋈ arm (left, on query_id and
+    neighbor_id). A caller wanting the arm broadcast passes it
+    wrapped in ``F.broadcast``."""
+    hits = F.coalesce(F.sum("hit"), F.lit(0))
+    rows = []
+    for value, arm in arms:
+        hit = arm.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+        rows.append(
+            bf.join(hit, ["query_id", "neighbor_id"], "left").agg(
+                F.lit(value).cast("bigint").alias(key),
+                F.count(F.lit(1)).cast("bigint").alias("bf_pairs"),
+                hits.cast("bigint").alias("hits"),
+                F.round(hits / F.count(F.lit(1)), 6).alias("recall_at_10"),
+            )
+        )
+    return functools.reduce(DataFrame.unionByName, rows)
+
+
 # --- embedding dimension-truncation eval (X138) -----------------------------
 
 TRUNC_DIMS = (32, 16, 8)
@@ -171,26 +195,10 @@ def q_similarity_eval_dim_truncation(spark, sf_dir):
     for d in TRUNC_DIMS:
         te = emb.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
         tq = qs.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
-        arm = similarity.brute_force_topk(te, tq, k=10).select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
         # both sides are ≤ 5·k rows; broadcast the arm so the join
         # never sort-merge-shuffles two 50-row relations (r13)
-        j = bf.join(F.broadcast(arm), ["query_id", "neighbor_id"], "left")
-        arms.append(
-            j.agg(
-                F.lit(d).cast("bigint").alias("dims"),
-                F.count(F.lit(1)).cast("bigint").alias("bf_pairs"),
-                F.coalesce(F.sum("hit"), F.lit(0)).cast("bigint").alias("hits"),
-                F.round(
-                    F.coalesce(F.sum("hit"), F.lit(0)) / F.count(F.lit(1)), 6
-                ).alias("recall_at_10"),
-            )
-        )
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+        arms.append((d, F.broadcast(similarity.brute_force_topk(te, tq, k=10))))
+    return _recall_rows(bf, "dims", arms)
 
 
 # --- JL random-projection recall eval (X190) ----------------------------------
@@ -347,24 +355,9 @@ def q_similarity_eval_jl_projection(spark, sf_dir):
                 "vec_id", F.slice("embedding", 1, d).alias("embedding")
             )
         )
-        arm = similarity.brute_force_topk(
-            proj, proj.filter(F.col("vec_id") < 5), k=10
-        ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-        j = bf.join(F.broadcast(arm), ["query_id", "neighbor_id"], "left")
-        arms.append(
-            j.agg(
-                F.lit(d).cast("bigint").alias("dims"),
-                F.count(F.lit(1)).cast("bigint").alias("bf_pairs"),
-                F.coalesce(F.sum("hit"), F.lit(0)).cast("bigint").alias("hits"),
-                F.round(
-                    F.coalesce(F.sum("hit"), F.lit(0)) / F.count(F.lit(1)), 6
-                ).alias("recall_at_10"),
-            )
-        )
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+        arm = similarity.brute_force_topk(proj, proj.filter(F.col("vec_id") < 5), k=10)
+        arms.append((d, F.broadcast(arm)))
+    return _recall_rows(bf, "dims", arms)
 
 
 # --- JL two-stage retrieval eval (X204) ---------------------------------------
@@ -484,28 +477,7 @@ def q_similarity_eval_jl_rerank(spark, sf_dir):
                 ).alias("cos_sim"),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id")
-        )
-        rr = (
-            rerank.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10)
-            .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-        )
-        j = bf.join(rr, ["query_id", "neighbor_id"], "left")
-        arms.append(
-            j.agg(
-                F.lit(c).cast("bigint").alias("cand_depth"),
-                F.count(F.lit(1)).cast("bigint").alias("bf_pairs"),
-                F.coalesce(F.sum("hit"), F.lit(0)).cast("bigint").alias("hits"),
-                F.round(
-                    F.coalesce(F.sum("hit"), F.lit(0)) / F.count(F.lit(1)), 6
-                ).alias("recall_at_10"),
-            )
-        )
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+        arms.append((c, similarity.rank_topk(rerank, 10)))
+    return _recall_rows(bf, "cand_depth", arms)
 
 

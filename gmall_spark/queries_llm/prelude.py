@@ -148,12 +148,13 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "embeddings")
 
 
-def _artifact(kind: str, sf_dir: str, load, save, train):
+def _artifact(kind: str, key: str, sf_dir: str, train):
     """Cross-session reuse (VERDICT r3 stretch): with
     $SPARK_GRAFT_CENTROID_DIR set, a trained quantizer is published as
-    the fingerprinted artifact ``<kind>_<sf tag>.json`` and later
-    sessions (or parallel jobs) load it instead of retraining. Only
-    training is timed (under ``kind``)."""
+    the fingerprinted artifact ``<kind>_<sf tag>.json`` (payload under
+    ``key``, :func:`ivf.save_artifact`) and later sessions (or
+    parallel jobs) load it instead of retraining. Only training is
+    timed (under ``kind``)."""
     import os
 
     art_dir = os.environ.get("SPARK_GRAFT_CENTROID_DIR")
@@ -162,14 +163,14 @@ def _artifact(kind: str, sf_dir: str, load, save, train):
     if art_dir:
         tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
         art = os.path.join(art_dir, f"{kind}_{tag}.json")
-        loaded = load(art, src)
+        loaded = ivf.load_artifact(art, key, src)
         if loaded is not None:
             return loaded
     with fixtures_audit.timer(kind):
         value = train()
     if art is not None:
         os.makedirs(art_dir, exist_ok=True)
-        save(art, value, src)
+        ivf.save_artifact(art, key, value, src)
     return value
 
 
@@ -182,9 +183,8 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     _oracle_dim_check(spark, sf_dir)
     return _artifact(
         "centroids",
+        "centroids",
         sf_dir,
-        ivf.load_centroids,
-        ivf.save_centroids,
         lambda: ivf.train_centroids(_emb(spark, sf_dir)),
     )
 
@@ -204,9 +204,8 @@ def _trained_books(spark: SparkSession, sf_dir: str) -> list:
 
     return _artifact(
         "pq_codebooks",
+        "codebooks",
         sf_dir,
-        _pq.load_codebooks,
-        _pq.save_codebooks,
         lambda: _pq.train_codebooks(
             _emb(spark, sf_dir), _oracle_dim_check(spark, sf_dir)
         ),

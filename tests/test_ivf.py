@@ -129,15 +129,15 @@ def test_centroid_artifact_round_trip_and_invalidation(spark, sf_dir, tmp_path):
     cents = ivf.train_centroids(emb)
     src = [f"{sf_dir}/embeddings.parquet"]
     path = str(tmp_path / "centroids.json")
-    ivf.save_centroids(path, cents, src)
-    assert ivf.load_centroids(path, src) == cents
+    ivf.save_artifact(path, "centroids", cents, src)
+    assert ivf.load_artifact(path, "centroids", src) == cents
     # missing artifact -> None
-    assert ivf.load_centroids(str(tmp_path / "nope.json"), src) is None
+    assert ivf.load_artifact(str(tmp_path / "nope.json"), "centroids", src) is None
     # fingerprint drift -> None (not stale centroids)
     payload = json.load(open(path))
     payload["fingerprint"]["size"] += 1
     json.dump(payload, open(path, "w"))
-    assert ivf.load_centroids(path, src) is None
+    assert ivf.load_artifact(path, "centroids", src) is None
 
 
 def test_trained_centroids_reuses_published_artifact(spark, sf_dir, tmp_path, monkeypatch):
@@ -169,20 +169,20 @@ def test_codebook_artifact_roundtrip_and_fingerprint(spark, sf_dir, tmp_path):
     absent artifact -> None, fingerprint drift -> None."""
     import json
 
-    from gmall_spark.operators import pq
+    from gmall_spark.operators import ivf, pq
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = len(emb.select("embedding").first()[0])
     books = pq.train_codebooks(emb, dim)
     src = [f"{sf_dir}/embeddings.parquet"]
     path = str(tmp_path / "books.json")
-    pq.save_codebooks(path, books, src)
-    assert pq.load_codebooks(path, src) == books
-    assert pq.load_codebooks(str(tmp_path / "nope.json"), src) is None
+    ivf.save_artifact(path, "codebooks", books, src)
+    assert ivf.load_artifact(path, "codebooks", src) == books
+    assert ivf.load_artifact(str(tmp_path / "nope.json"), "codebooks", src) is None
     payload = json.load(open(path))
     payload["fingerprint"]["size"] += 1
     json.dump(payload, open(path, "w"))
-    assert pq.load_codebooks(path, src) is None
+    assert ivf.load_artifact(path, "codebooks", src) is None
 
 
 def test_trained_books_reuses_published_artifact(spark, sf_dir, tmp_path, monkeypatch):

@@ -161,25 +161,44 @@ def _code_tokens(src: str) -> list[tuple[int, str]]:
     ]
 
 
+def _windows(sources: dict[str, str]) -> dict[tuple[str, ...], list[tuple[str, int]]]:
+    """Every window of COPY_TOKENS consecutive code tokens of
+    ``sources`` (module name -> source text), keyed by its tokens, with
+    the (module, line) of each place it starts."""
+    places: dict[tuple[str, ...], list[tuple[str, int]]] = {}
+    for name, src in sources.items():
+        code = _code_tokens(src)
+        texts = [t for _, t in code]
+        for i in range(len(texts) - COPY_TOKENS + 1):
+            places.setdefault(tuple(texts[i : i + COPY_TOKENS]), []).append((name, code[i][0]))
+    return places
+
+
 def _copies(sources: dict[str, str], twins: list[str]) -> list[str]:
     """"<twin>:<line> also in <modules>" for every window of COPY_TOKENS
     consecutive code tokens of a twin in ``twins`` that also appears in
     another of ``sources`` (module name -> source text)."""
-    tokens = {name: _code_tokens(src) for name, src in sources.items()}
-    seen: dict[tuple[str, ...], set[str]] = {}
-    for name, code in tokens.items():
-        texts = [t for _, t in code]
-        for i in range(len(texts) - COPY_TOKENS + 1):
-            seen.setdefault(tuple(texts[i : i + COPY_TOKENS]), set()).add(name)
     offenders = []
-    for name in twins:
-        code = tokens[name]
-        texts = [t for _, t in code]
-        for i in range(len(texts) - COPY_TOKENS + 1):
-            others = seen[tuple(texts[i : i + COPY_TOKENS])] - {name}
-            if others:
-                offenders.append(f"{name}:{code[i][0]} also in " + ", ".join(sorted(others)))
+    for places in _windows(sources).values():
+        names = {name for name, _ in places}
+        offenders += [
+            f"{name}:{line} also in " + ", ".join(sorted(names - {name}))
+            for name, line in places
+            if name in twins and names - {name}
+        ]
     return offenders
+
+
+def _repeats(sources: dict[str, str]) -> list[str]:
+    """"<module>:<line> also at <module>:<line>, ..." for every window
+    of COPY_TOKENS code tokens that starts at two or more places of
+    ``sources``, inside one module or across them."""
+    return [
+        f"{name}:{line} also at " + ", ".join(f"{n}:{k}" for n, k in places if (n, k) != (name, line))
+        for places in _windows(sources).values()
+        if len(places) > 1
+        for name, line in places
+    ]
 
 
 def test_twins_call_their_batch_functions_instead_of_copying():
@@ -199,7 +218,7 @@ def test_copy_lint_sees_a_rewrapped_copy():
     """Spark-free: a copy of tok_media.edit_verify_rows with every
     statement on one line and its tokens respaced shares no code line
     with the original, so no run of lines matches, yet the token
-    windows flag it."""
+    windows flag it, in another module and in the same one."""
     from gmall_spark.queries_llm import tok_media
 
     pkg = STREAMING.parent
@@ -220,3 +239,28 @@ def test_copy_lint_sees_a_rewrapped_copy():
     assert not lines(copy) & lines(original), lines(copy) & lines(original)
     sources = {"queries_llm/tok_media.py": original, "streaming/incremental_planted.py": copy}
     assert _copies(sources, ["streaming/incremental_planted.py"])
+    # pasted into the same module, the copy is a repeat the twin lint
+    # (across modules only) does not report
+    assert _repeats({"queries_llm/tok_media.py": original + "\n" + copy})
+
+
+# the vector top-k tiers and their queries; ann_oracles.py is the
+# reference SQL the parity tests compare against, so it stays out
+ANN_MODULES = [
+    "operators/similarity.py",
+    "operators/ivf.py",
+    "operators/pq.py",
+    "operators/sq.py",
+    "queries_llm/ann_topk.py",
+    "queries_llm/ann_eval.py",
+]
+
+
+def test_ann_tiers_share_one_search_core():
+    """Spark-free lint: every ANN tier ranks through
+    similarity.rank_topk/refine_topk and trains through ivf.md5_sample
+    and ivf.lloyd, so no run of COPY_TOKENS code tokens appears twice
+    in or across the ANN modules."""
+    pkg = STREAMING.parent
+    offenders = _repeats({name: (pkg / name).read_text() for name in ANN_MODULES})
+    assert not offenders, offenders
